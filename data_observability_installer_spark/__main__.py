@@ -295,6 +295,7 @@ def cmd_drift(args) -> int:
     between the two slices."""
     from pyspark.sql import functions as F
 
+    from .functions.pin import pin
     from .operators.drift import (
         changepoint,
         cusum_screen,
@@ -316,7 +317,7 @@ def cmd_drift(args) -> int:
         F.col(args.key).alias("k"),
         F.date_format(F.date_trunc("day", args.ts), "yyyy-MM-dd").alias("o"),
     ).agg(F.count(F.lit(1)).cast("long").alias("v"))
-    daily = daily.localCheckpoint(eager=True)  # 3 consumers, one rollup scan
+    daily = pin(daily)  # 3 consumers, one rollup scan
     print(f"== daily volume per {args.key}: trend / level shift / change point ==")
     mann_kendall(daily, ord_col="o").show(truncate=False)
     cusum_screen(daily).show(truncate=False)

@@ -134,6 +134,10 @@ class Cron:
             off_hi = (
                 (chunk_end - minute).replace(tzinfo=utc).astimezone(zone).utcoffset()
             )
+            # INVARIANT: equal offsets at both ends mean one offset for the
+            # whole chunk, i.e. no zone changes its offset and reverts it
+            # within a single hour. No tzdata zone does; one that did would
+            # get wrong wall times here for the minutes in between.
             if off_lo == off_hi:
                 while t < chunk_end:
                     wall = t + off_lo

@@ -1,19 +1,36 @@
-"""Multi-consumer frame pinning — the lost-executor-safety seam.
+"""The materialization seam: the only module that pins, persists or
+releases a DataFrame.
 
-Several operators compute a small intermediate once and feed it to two
-or more downstream consumers (the qsketch leaf histogram feeds three
-scans; semdedup's batch assignment feeds the witness join AND the
-store commit). Re-executing the producing plan per consumer would be
-wrong twice over: it re-pays the corpus pass, and for nondeterministic
-producers the consumers could see DIFFERENT rows. The frame must be
-pinned.
+Three entry points, one per ownership shape:
+
+- :func:`pin` — for a frame that OUTLIVES its builder or must cut
+  lineage: a small intermediate fed to two or more downstream consumers
+  (the qsketch leaf histogram feeds three scans; semdedup's batch
+  assignment feeds the witness join AND the store commit), a BFS
+  frontier, a result-sized pair list returned to the caller.
+  Re-executing the producer per consumer would re-pay the scan and, for
+  nondeterministic producers, hand consumers DIFFERENT rows. The pin
+  strategy is a run-time knob (below).
+- :class:`pinned` — a scope for an OWNED transient persist: a
+  corpus-sized frame read by several subtrees of ONE computation (a
+  shingle index feeding both self-join sides, a table feeding a
+  profile's chunk passes). It persists ``MEMORY_AND_DISK`` only when
+  the caller has not already persisted the frame (``eager`` also fills
+  it with a count), and on every exit path — exceptions included —
+  releases exactly what it persisted, never the caller's cache. Pin
+  the result-sized output with :func:`pin` INSIDE the scope when it is
+  returned lazily, or the release leaves it re-reading the source.
+- :func:`unpin` — release a pinned or cached frame once its last
+  consumer is done (a ``persist``-mode pin, a ``DFCache`` eviction).
+
+Pin modes, selected per session::
+
+    spark.conf.set("spark.dataobs.pin.mode", "persist")
 
 ``localCheckpoint(eager=True)`` is the cheapest pin and the right
 local-mode default, but it stores its blocks on NON-reliable executor
 storage and TRUNCATES lineage: on a real cluster a lost/preempted
-executor fails the job instead of recomputing (round-11 verdict,
-What's wrong #3). This module makes the trade an explicit, run-time
-knob instead of a hard-coded call:
+executor fails the job instead of recomputing. Hence:
 
 - ``local`` (default) — ``localCheckpoint``: fastest, no redundancy;
   fine for single-node and short-lived jobs.
@@ -26,10 +43,6 @@ knob instead of a hard-coded call:
   loss at the cost of a write; set ``spark.dataobs.pin.dir`` (or call
   ``sparkContext.setCheckpointDir`` yourself) first.
 
-Select per session::
-
-    spark.conf.set("spark.dataobs.pin.mode", "persist")
-
 Nondeterminism note: ``persist`` pins are best-effort snapshots — a
 recomputed partition re-runs the producer, so for NONdeterministic
 producers only ``local``/``reliable`` (which materialize) give
@@ -39,7 +52,10 @@ their call sites.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+__all__ = ["PIN_DIR_CONF", "PIN_MODE_CONF", "pin", "pinned", "unpin"]
 
 #: runtime conf key selecting the pin strategy: local|persist|reliable
 PIN_MODE_CONF = "spark.dataobs.pin.mode"
@@ -55,8 +71,6 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     if mode == "local":
         return df.localCheckpoint(eager=eager)
     if mode == "persist":
-        from pyspark import StorageLevel
-
         out = df.persist(StorageLevel.MEMORY_AND_DISK)
         if eager:
             out.count()
@@ -77,13 +91,42 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     )
 
 
+class pinned:  # noqa: N801 — used as a function-style context manager
+    """``with pinned(df) as d:`` — an owned transient persist of ``df``
+    (see module docstring). A class, not a generator, so an entered
+    scope handed to a long-lived owner (a ``DFCache`` entry) stays
+    open until that owner releases the frame with :func:`unpin`."""
+
+    def __init__(self, df: DataFrame, eager: bool = False):
+        self._df = df
+        self._eager = eager
+        self._owned = False
+
+    def __enter__(self) -> DataFrame:
+        if self._df.storageLevel == StorageLevel.NONE:
+            self._df.persist(StorageLevel.MEMORY_AND_DISK)
+            self._owned = True
+            if self._eager:
+                try:
+                    self._df.count()
+                except BaseException:
+                    unpin(self._df)
+                    raise
+        return self._df
+
+    def __exit__(self, *exc) -> None:
+        if self._owned:
+            unpin(self._df)
+
+
 def unpin(df: DataFrame) -> None:
     """Release a pinned frame once its last consumer finished. Only
-    ``persist`` pins hold releasable state tied to the frame; for the
-    other modes this is a safe no-op (local/reliable checkpoint blocks
-    are owned by their RDDs and die with the session, or are cleaned
-    by the checkpoint dir's lifecycle)."""
+    persisted frames hold releasable state tied to the frame; for
+    ``local``/``reliable`` pins this is a safe no-op (their checkpoint
+    blocks are owned by their RDDs and die with the session, or are
+    cleaned by the checkpoint dir's lifecycle). Never raises: a release
+    must not fail a query, and the session may already be stopped."""
     try:
         df.unpersist()
-    except Exception:  # noqa: BLE001 — release must never fail a query
+    except Exception:  # noqa: BLE001
         pass

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.pin import pin
+
 # key material for FK candidates: classes whose string cast is
 # bit-stable and identical across engines (floats/decimals/timestamps
 # are not key material and their repr can drift in the last digit)
@@ -354,7 +356,7 @@ def discover_fks(
 ) -> DataFrame:
     """End-to-end FK discovery over a set of tables. ONE scan per
     table builds a per-column value-count frame (stack unpivot +
-    groupBy — cardinality-sized, pinned with localCheckpoint); stats
+    groupBy — cardinality-sized, pinned); stats
     for the candidate rule AND the containment verification both read
     that frame, so no table is scanned twice and the containment join
     shuffles distinct values, never rows. Output shape matches
@@ -388,7 +390,7 @@ def discover_fks(
     vc = frames[0]
     for f in frames[1:]:
         vc = vc.unionByName(f)
-    vc = vc.localCheckpoint(eager=True)  # Σ cardinalities, not Σ rows
+    vc = pin(vc)  # Σ cardinalities, not Σ rows
     stats = (
         vc.groupBy("tbl", "col")
         .agg(

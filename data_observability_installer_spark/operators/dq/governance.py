@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.pin import pin
+
 
 def entity_footprint(
     frames: list[tuple[str, DataFrame, str]], keys: DataFrame
@@ -32,11 +34,7 @@ def entity_footprint(
     # request-sized and read by 2 consumers PER TABLE (semi-join probe +
     # zero-fill left join) — pin it once or every union branch re-scans
     # the key source (the fd_check lesson)
-    k = (
-        keys.select(F.col("entity_key").cast("long").alias("entity_key"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    k = pin(keys.select(F.col("entity_key").cast("long").alias("entity_key")).distinct())
     parts = []
     for name, df, key_col in frames:
         counts = (

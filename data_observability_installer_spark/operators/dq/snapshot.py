@@ -32,6 +32,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ...functions.pin import pin
+
 
 def snapshot_diff(
     old: DataFrame,
@@ -234,14 +236,11 @@ def apply_cdc(
     lakehouse MERGE implementations schedule it.
     """
     w = Window.partitionBy(*key_cols).orderBy(F.desc(seq_col))
-    latest = (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        # batch-sized; consumed by BOTH the upsert projection and the
-        # touched-key anti-join side — pin so the changelog (and its
-        # window) is computed once per merge
-        .localCheckpoint(eager=True)
+    # batch-sized; consumed by BOTH the upsert projection and the
+    # touched-key anti-join side — pin so the changelog (and its window)
+    # is computed once per merge
+    latest = pin(
+        changes.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     )
     upserts = latest.filter(F.col(op_col).isin("I", "U")).select(*key_cols, *payload_cols)
     touched = latest.select(*key_cols)

@@ -415,8 +415,10 @@ def _outlier(col: str, p: dict, above: bool) -> Lowered:
         cond_s, cond_q = (lambda: F.col(col) > avg + 2 * sd), f"{col} > {avg + 2 * sd!r}"
     else:
         cond_s, cond_q = (lambda: F.col(col) < avg - 2 * sd), f"{col} < {avg - 2 * sd!r}"
+    # NULL values count in the denominator as non-outliers on BOTH
+    # engines (a NULL-able cast would drop them from the Spark average)
     return Lowered(
-        lambda: F.avg(cond_s().cast("int")) * 100.0,
+        lambda: F.avg(F.when(cond_s(), 1).otherwise(0)) * 100.0,
         f"avg(CASE WHEN {cond_q} THEN 1 ELSE 0 END) * 100.0",
         ">",
         t,

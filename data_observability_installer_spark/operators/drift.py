@@ -28,6 +28,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pin import pin
+
 EPS = 1e-6
 
 
@@ -476,7 +478,6 @@ def mad_outliers(
             )
             .orderBy("flag")
         )
-    from ..functions.pin import pin
     from ..functions.quantiles import exact_percentiles
 
     # EXACT mode: the two medians come from the distributed
@@ -628,9 +629,11 @@ def mann_kendall(
     hundreds-to-thousands of points, so the self-join is metadata-sized
     after the daily pre-aggregation the caller does; everything
     shuffles on the key only."""
-    s = series.select(
-        F.col(key_col).alias("k"), F.col(ord_col).alias("o"), F.col(val_col).alias("v")
-    ).localCheckpoint(eager=True)  # keys x days rows; read by 4 consumers
+    s = pin(  # keys x days rows; read by 4 consumers
+        series.select(
+            F.col(key_col).alias("k"), F.col(ord_col).alias("o"), F.col(val_col).alias("v")
+        )
+    )
     # (pairs a/b, base, ties) — pinning makes the upstream aggregation
     # run ONCE instead of once per consumer (the fd_check lesson)
     a, b = s.alias("a"), s.alias("b")
@@ -741,11 +744,13 @@ def p_chart(
     ``rate_bp``/``pbar_bp`` are floor-division basis points for
     reporting. One pass over the subgroup frame plus a broadcast
     scalar."""
-    s = counts.select(
-        F.col(key_col).alias("k"),
-        F.col(n_col).cast("long").alias("n"),
-        F.col(x_col).cast("long").alias("x"),
-    ).localCheckpoint(eager=True)  # subgroup-sized; feeds totals + verdicts
+    s = pin(  # subgroup-sized; feeds totals + verdicts
+        counts.select(
+            F.col(key_col).alias("k"),
+            F.col(n_col).cast("long").alias("n"),
+            F.col(x_col).cast("long").alias("x"),
+        )
+    )
     tot = s.agg(
         F.sum("n").cast("long").alias("nt"), F.sum("x").cast("long").alias("xt")
     )

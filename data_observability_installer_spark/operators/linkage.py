@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pin import pin
+
 
 def _pair_score_sql(
     cat_cols: list[str],
@@ -338,7 +340,6 @@ def entity_match_incremental(
     Returns the pair frame (id_a, id_b, name_sim_bp, score_bp, blk)."""
     import os as _os
 
-    from ..functions.pin import pin
     from ..sources import txtable as _tx
 
     cat_cols = cat_cols or []

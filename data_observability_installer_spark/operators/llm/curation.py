@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.pin import pin, pinned
+
 BUCKETS = 10_000
 
 # PII patterns — RE2/Java-compatible (no backrefs/lookaround) so the
@@ -417,7 +419,6 @@ def corpus_funnel(
     3x, the fingerprint aggregate 2x); the id-sets are the lightweight
     proxy, the document payloads are never pinned.
     """
-    from ...functions.pin import pin
     from .decontam import decontaminate
     from .text import fingerprint_col
 
@@ -1038,9 +1039,6 @@ def dsir_weights(
     n_buckets integers per side, the shipped-constants shape at
     100 TB (train once on a sample, broadcast everywhere).
     """
-    from pyspark import StorageLevel
-
-    from ...functions.pin import pin
     from .lm import _bucket_col
 
     # ONE explode pass feeds BOTH halves: the model's bucket counts and
@@ -1055,15 +1053,13 @@ def dsir_weights(
     # OCCURRENCE — several times corpus size, the largest intermediate
     # in the query — so it must not outlive this call. The bounded
     # downstream result (one (id, n_feats, logw_micro) row per doc) is
-    # pinned instead, and the explode frame is unpersisted before
-    # returning: after this function no CacheManager entry holds
-    # token-stream state, matching the docstring's claim.
-    feats = (
-        _dsir_feats(df, text_col, id_col, target_pred)
-        .select("doc", "is_t", (_bucket_col(F.col("sh")) % n_buckets).alias("bucket"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # pinned inside the scope, and the explode frame is released on
+    # exit: after this function no CacheManager entry holds token-stream
+    # state, matching the docstring's claim.
+    feats = _dsir_feats(df, text_col, id_col, target_pred).select(
+        "doc", "is_t", (_bucket_col(F.col("sh")) % n_buckets).alias("bucket")
     )
-    try:
+    with pinned(feats):
         model = pin(
             feats.groupBy("bucket").agg(
                 F.count(F.lit(1)).cast("long").alias("n_r"),
@@ -1076,8 +1072,6 @@ def dsir_weights(
                 feats=feats.select("doc", "bucket"),
             )
         )
-    finally:
-        feats.unpersist()
 
 
 def dsir_model(

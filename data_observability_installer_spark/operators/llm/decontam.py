@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.pin import pin
 from .dedup import _shingles_sql, exploded_shingles
 
 
@@ -144,8 +145,6 @@ def decontaminate_fuzzy(
     b_bands = band_keys(
         minhash_signatures(bench, text_col, id_col, n, num_hashes), "bench_doc"
     )
-    from ...functions.pin import pin
-
     # candidate pairs are result-sized and feed THREE consumers (the
     # doc-side distinct, the verify semi-join, and transitively the
     # sizes below) — pin them so the signature+banding pipeline runs

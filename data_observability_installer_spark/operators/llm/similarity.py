@@ -22,14 +22,14 @@ DuckDB oracle (``::DOUBLE[]`` + list_inner_product) matches to 1e-4.
 from __future__ import annotations
 
 import math
+from contextlib import nullcontext
 
 import numpy as np
 from pyspark.errors import AnalysisException
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ...functions.pin import pin
+from ...functions.pin import pin, pinned
 
 N_PLANES = 8
 _DIM = 64
@@ -434,14 +434,8 @@ def train_ivf_kmeans(
     # — guide §5: reused AND expensive to recompute). Unpersisted on
     # every exit path; driver state stays centroid-sized.
     eq = embeddings.select(F.expr(_quant_sql("embedding")).alias("eq"))
-    if iters > 1:
-        eq = eq.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        cents = _lloyd_iters(eq, cents, n_clusters, dim, iters)
-    finally:
-        if iters > 1:
-            eq.unpersist()
-    return cents
+    with pinned(eq) if iters > 1 else nullcontext():
+        return _lloyd_iters(eq, cents, n_clusters, dim, iters)
 
 
 def _lloyd_iters(
@@ -2179,15 +2173,9 @@ def _train_pq_lloyd(
     # Persist the input column across iterations: for the residual
     # trainer eqa embeds quantize + coarse argmin + zip_with residual,
     # re-derived on every pass without this (guide §5). Unpersisted on
-    # every exit path below.
-    persisted = iters > 1
-    if persisted:
-        eqall = eqall.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    # every exit path.
+    with pinned(eqall) if iters > 1 else nullcontext():
         return _pq_lloyd_iters(eqall, books, m, d, k, iters)
-    finally:
-        if persisted:
-            eqall.unpersist()
 
 
 def _pq_lloyd_iters(
@@ -2411,7 +2399,7 @@ def pq_near_dups(
     # per consumer multiplied the corpus scans; in production the code
     # table is a PERSISTED artifact (pq_encode is the ingest pass), so
     # materializing it here mirrors the deployment shape
-    codes = pq_encode(embeddings, books, id_col).localCheckpoint(eager=True)
+    codes = pin(pq_encode(embeddings, books, id_col))
     bands = codes.select(
         "vid",
         F.explode(
@@ -2598,8 +2586,6 @@ def topk_ivfpq(
     # instead of m*k literal distance expressions — the literal plan
     # cost ~1.2 s of driver time per query just to parse/analyze
     # (measured round 14; values proven identical).
-    from ...functions.pin import pin
-
     assigned = pin(
         embeddings.selectExpr(f"{id_col} AS vid", f"{eq} AS eq")
         .selectExpr(
@@ -2980,12 +2966,10 @@ def pq_near_dups_incremental(
 
     books = books or pq_codebooks()
     m = len(books)
-    new = (
-        pq_encode(batch, books, id_col)
-        .join(
+    new = pin(  # one encode; feeds join + commit
+        pq_encode(batch, books, id_col).join(
             batch.select(F.col(id_col).alias("vid"), "embedding"), "vid"
         )
-        .localCheckpoint(eager=True)  # one encode; feeds join + commit
     )
     have_store = bool(_os.path.isdir(_os.path.join(code_store, "_commits")))
     # A crash-replay can present a batch whose codes ALREADY landed (crash
@@ -3043,7 +3027,9 @@ def pq_near_dups_incremental(
         F.col("nrm").alias("nrm_b"),
     )
     thr_bp = int(math.floor(threshold * 10000 + 0.5))
-    pairs = (
+    # pin BEFORE the commit moves the store head (the store read is
+    # manifest-pinned, so a persist-mode recompute re-reads the same files)
+    pairs = pin(
         cand.join(fa, "id_a")
         .join(fb, "id_b")
         .select(
@@ -3057,7 +3043,6 @@ def pq_near_dups_incremental(
         )
         .filter(F.col("score_bp") >= thr_bp)
         .orderBy("id_a", "id_b")
-        .localCheckpoint(eager=True)  # pin BEFORE the commit moves the store head
     )
     if batch_id is not None:
         _tx.commit_stream_batch(code_store, new, batch_id)
@@ -3143,8 +3128,6 @@ def semdedup(
     # nrm, cell) row per vector — the same frame the within-cell join
     # carries on each side anyway, and the incremental variant already
     # pins its batch assignment for the witness join + store commit.
-    from ...functions.pin import pin
-
     assigned = pin(_semdedup_assigned(embeddings, n_clusters, cents, id_col))
     pool = assigned
     if max_cell is not None:

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.pin import pin
+
 # tiny function-word profiles; enough signal for coarse routing
 LANG_MARKERS: dict[str, str] = {
     "en": r"\b(the|and|of|to|is|in|that|with)\b",
@@ -445,7 +447,7 @@ def bpe_train(
     empty winner CTE contributes no row and NULLs out later rounds),
     so the two engines stay hash-equal on degenerate inputs too."""
     spark = df.sparkSession
-    vocab = _bpe_word_freq(df, text_col).localCheckpoint(eager=True)
+    vocab = pin(_bpe_word_freq(df, text_col))
     merges = []
     for rnd in range(1, n_merges + 1):
         top = (
@@ -458,14 +460,16 @@ def bpe_train(
             break
         l, r, pct = top[0]["l"], top[0]["r"], top[0]["pct"]
         merges.append((rnd, l, r, pct))
-        vocab = vocab.withColumn(
-            "toks",
-            F.replace(
-                F.col("toks"),
-                F.lit(_BPE_SEP + l + _BPE_D + r + _BPE_SEP),
-                F.lit(_BPE_SEP + l + r + _BPE_SEP),
-            ),
-        ).localCheckpoint(eager=True)
+        vocab = pin(
+            vocab.withColumn(
+                "toks",
+                F.replace(
+                    F.col("toks"),
+                    F.lit(_BPE_SEP + l + _BPE_D + r + _BPE_SEP),
+                    F.lit(_BPE_SEP + l + r + _BPE_SEP),
+                ),
+            )
+        )
     return spark.createDataFrame(
         merges, "merge_round int, left_tok string, right_tok string, pair_ct long"
     )

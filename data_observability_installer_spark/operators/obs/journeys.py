@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ...functions.pin import pin
+
 
 def journey_instances(run_rollup: DataFrame, conditions: DataFrame) -> DataFrame:
     """Instance windows per journey from {action: START|END} conditions
@@ -235,8 +237,6 @@ def out_of_sequence(assigned: DataFrame, closure: DataFrame) -> DataFrame:
     day-explode, two joins — executes once, not once per side.
     ``assigned`` is runs-sized, the same size class the callers already
     checkpoint for the rollup."""
-    from ...functions.pin import pin
-
     assigned = pin(
         assigned.select(
             "journey_id", "instance_id", "pipeline_key", "run_key", "start_ts", "end_ts"
@@ -303,7 +303,7 @@ def critical_path(assigned: DataFrame, edges: list[tuple[str, str]]) -> DataFram
     enumerates all root-to-node paths with a recursive CTE and takes
     the same max."""
     spark = assigned.sparkSession
-    dur = (
+    dur = pin(  # instances x components rows
         assigned.select(
             "instance_id",
             "pipeline_key",
@@ -313,7 +313,6 @@ def critical_path(assigned: DataFrame, edges: list[tuple[str, str]]) -> DataFram
         )
         .groupBy("instance_id", "pipeline_key")
         .agg(F.max("dur_s").alias("dur_s"))
-        .localCheckpoint(eager=True)  # instances x components rows
     )
     e = spark.createDataFrame(edges, "up_key string, down_key string")
     dist = dur.withColumn("path_s", F.col("dur_s"))

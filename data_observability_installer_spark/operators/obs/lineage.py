@@ -21,14 +21,14 @@ Everything here is DataFrame -> DataFrame and shuffle-lean:
   reads-per-run x writes-per-run, not |events|²) followed by a
   distinct. Both are one shuffle each on keys Spark hash-partitions.
 - ``transitive_closure`` — iterative frontier BFS (semi-naive
-  evaluation: only NEW pairs join the edge table each round, never the
-  whole closure). Lineage graphs are metadata-sized even for 100 TB
+  evaluation: only the pairs first reached in the previous round are
+  extended by an edge). Lineage graphs are metadata-sized even for 100 TB
   warehouses (edges ~ #tables x avg-degree, not data volume), so each
-  iteration is a small hash join; ``localCheckpoint`` truncates the
+  iteration is a small hash join; a per-round pin truncates the
   logical plan so 10 iterations don't compile a 10-deep join tree.
-  At cluster scale swap ``localCheckpoint`` for a reliable
-  ``checkpoint`` dir — the executor-local blocks are lost on executor
-  failure.
+  At cluster scale set ``spark.dataobs.pin.mode`` to ``persist`` or
+  ``reliable`` — the default ``localCheckpoint`` blocks are lost on
+  executor failure.
 - ``impact_downstream`` — broadcast semi-join of the (tiny) seed set
   against the closure.
 """
@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ...functions.pin import pin
 
 
 def io_records(
@@ -116,72 +118,55 @@ def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     """Reachability with minimum hop count: (src, dst, depth) for every
     pair connected by a path of <= max_depth edges, depth = shortest.
 
-    Semi-naive BFS: the frontier at depth d is only the pairs FIRST
-    reached at depth d, so each iteration joins |frontier| x edges —
-    never the whole closure. Equivalent to ANSI ``WITH RECURSIVE``
-    with a depth cap + min(depth) rollup (the DuckDB oracle twin in
-    plans/registry.py states it exactly).
+    Semi-naive BFS: only the frontier — the pairs FIRST reached at the
+    previous depth — is extended by an edge each round. Equivalent to
+    ANSI ``WITH RECURSIVE`` with a depth cap + min(depth) rollup (the
+    DuckDB oracle twin in plans/registry.py states it exactly).
 
-    Termination: frontier empties (graph exhausted, incl. cycles —
-    the left-anti against known pairs kills revisits) or depth cap.
-    ``localCheckpoint(eager=True)`` per round truncates plan lineage;
-    the per-round ``limit(1).count()`` emptiness probe is metadata-
-    sized work against the just-checkpointed frontier.
+    Termination: no pair is first reached at the new depth (graph
+    exhausted, incl. cycles — the min(depth) rollup folds revisits into
+    the pairs already known) or depth cap. The pinned (src, dst, depth)
+    table is the round's ONLY input: the hop join keeps every known row
+    (extending those at the frontier depth) and one min(depth) rollup
+    yields the next table. One reference per round keeps the plan
+    linear in rounds under every pin mode: ``persist`` keeps lineage,
+    and a second reference (a separate frontier and known set) grows
+    that plan ~2.6x per round. In the default mode each round's eager
+    pin (``localCheckpoint``) truncates lineage, so the returned closure
+    is the last round's pin, a leaf; the per-round ``limit(1).count()``
+    emptiness probe is metadata-sized work against it.
     """
-    def fresh(df: DataFrame) -> DataFrame:
-        # re-alias every column to a NEW expression id: unioning two
-        # checkpointed plans that share attribute ids trips Union's
-        # constraint rewrite in Spark 4 ("key not found: src#N")
-        return df.select(*[F.col(c).alias(c) for c in df.columns])
-
-    # Spark 4's Union.rewriteConstraints crashes on checkpointed child
-    # plans whose preserved constraints reference pruned attributes
-    # ("key not found: src#N"). Constraints buy nothing here (every
-    # round is already a checkpointed leaf), so turn propagation off
-    # for the build and restore after — the returned plan is a leaf,
-    # so callers never re-trigger the rewrite.
-    spark = edges.sparkSession
-    saved = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        return _closure_rounds(edges, max_depth, fresh)
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", saved)
-
-
-def _closure_rounds(edges: DataFrame, max_depth: int, fresh) -> DataFrame:
-    # r14 (guide §2.6 / §1.2): each round used to run THREE materializing
-    # jobs — frontier checkpoint, emptiness probe, and a re-checkpoint of
-    # the whole known set (union). The known re-checkpoint is redundant:
-    # the anti-join only needs the PAIRS seen so far, and those are
-    # exactly the union of the per-round frontier checkpoints — a lazy
-    # union of already-materialized leaves (same rows, zero extra jobs).
-    # Two jobs per round remain; the result is the same union of
-    # frontiers (bit-identical rows, one union either way).
-    e = edges.select("src", "dst").distinct().localCheckpoint()
-    frontiers = [e.withColumn("depth", F.lit(1)).localCheckpoint()]
-    frontier = frontiers[0]
-    known_pairs = frontier.select("src", "dst")
+    e = pin(edges.select("src", "dst").distinct())
+    known = pin(e.withColumn("depth", F.lit(1)))
     for depth in range(2, max_depth + 1):
-        grown = (
-            frontier.alias("f")
-            .join(e.alias("e"), F.col("f.dst") == F.col("e.src"))
-            .select(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
-            .distinct()
-            .join(known_pairs, ["src", "dst"], "left_anti")
-            .withColumn("depth", F.lit(depth))
+        hop = known.alias("k").join(
+            e.alias("e"),
+            (F.col("k.depth") == depth - 1) & (F.col("k.dst") == F.col("e.src")),
+            "left",
         )
-        frontier = grown.localCheckpoint()
-        if frontier.limit(1).count() == 0:
+        pairs = F.explode(
+            F.array(
+                F.struct("k.src", "k.dst", "k.depth"),
+                F.when(
+                    F.col("e.dst").isNotNull(),
+                    F.struct(
+                        F.col("k.src").alias("src"),
+                        F.col("e.dst").alias("dst"),
+                        F.lit(depth).alias("depth"),
+                    ),
+                ),
+            )
+        )
+        grown = pin(
+            hop.select(pairs.alias("p"))
+            .filter(F.col("p").isNotNull())
+            .groupBy("p.src", "p.dst")
+            .agg(F.min("p.depth").alias("depth"))
+        )
+        if grown.filter(F.col("depth") == depth).limit(1).count() == 0:
             break
-        frontiers.append(frontier)
-        known_pairs = fresh(known_pairs).unionByName(
-            fresh(frontier.select("src", "dst"))
-        )
-    out = frontiers[0]
-    for f in frontiers[1:]:
-        out = fresh(out).unionByName(fresh(f))
-    return out
+        known = grown
+    return known
 
 
 def impact_downstream(closure: DataFrame, seeds: DataFrame) -> DataFrame:
@@ -244,7 +229,7 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping: float = 0.85) -> Da
     # the edge list is graph-sized but its lineage is the full
     # event-scan extraction; every iteration (plus nodes/outdeg) is a
     # consumer, so pin it — events scan once, not 2+2*iterations times
-    edges = edges.localCheckpoint(eager=True)
+    edges = pin(edges)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -367,14 +352,11 @@ def rebuild_plan(
     a cycle has no topological order).
 
     Each round is one broadcast-sized frontier join against the edge
-    list + a max rollup; ``localCheckpoint`` caps lineage like the
-    closure BFS."""
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    known = (
-        seeds.select(F.col("dataset_key").alias("node"))
-        .distinct()
-        .withColumn("wave", F.lit(0))
-        .localCheckpoint(eager=True)
+    list + a max rollup; per-round pins cap lineage like the closure
+    BFS."""
+    e = pin(edges.select("src", "dst").distinct())
+    known = pin(
+        seeds.select(F.col("dataset_key").alias("node")).distinct().withColumn("wave", F.lit(0))
     )
     frontier = known
     for depth in range(1, max_depth + 1):
@@ -383,15 +365,14 @@ def rebuild_plan(
             .select(F.col("dst").alias("node"), F.lit(depth).alias("wave"))
             .distinct()
         )
-        frontier = grown.localCheckpoint(eager=True)
+        frontier = pin(grown)
         if frontier.limit(1).count() == 0:
             break
-        known = (
+        known = pin(
             known.select(F.col("node").alias("node"), F.col("wave").alias("wave"))
             .unionByName(frontier)
             .groupBy("node")
             .agg(F.max("wave").alias("wave"))
-            .localCheckpoint(eager=True)
         )
     return known.select(
         F.col("node").alias("dataset_key"), F.col("wave").cast("int").alias("wave")

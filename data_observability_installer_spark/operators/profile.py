@@ -40,12 +40,14 @@ At 100 TB: ``exact=False`` swaps ``count(DISTINCT)`` for HLL
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.pin import pinned
 from .dq.testtypes import EMAIL_RE, US_STATES, _sql_quote
 
 # Share one persisted scan across profile chunks only when the input is
@@ -365,20 +367,15 @@ def profile(
     # test_plans.py when an earlier version let the entry outlive the
     # call).
     # The caller may hand us an ALREADY-persisted input (cached_profile
-    # caches the pruned table before profiling it); persisting again
+    # pins the table before profiling it); persisting a pruned copy
     # would hold a second copy of the whole table for zero benefit.
-    caller_persisted = df.storageLevel.useMemory or df.storageLevel.useDisk
     transient_src = (
         materialize
-        and not caller_persisted
+        and df.storageLevel == StorageLevel.NONE
         and len(chunks) > 1
         and _est_bytes(df) >= SHARE_SCAN_MIN_BYTES
     )
-    if transient_src:
-        src = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
-        src.count()
-    else:
-        src = df
+    src = df.select(*cols) if transient_src else df
 
     def chunk_agg(batch: list[tuple[str, Metric]]) -> DataFrame:
         aggs = []
@@ -426,7 +423,10 @@ def profile(
             return cost
 
         order = sorted(range(len(chunks)), key=lambda i: -chunk_cost(chunks[i]))
-        with ThreadPoolExecutor(max_workers=min(3, len(chunks))) as pool:
+        with (
+            pinned(src, eager=True) if transient_src else nullcontext(),
+            ThreadPoolExecutor(max_workers=min(3, len(chunks))) as pool,
+        ):
             res = list(pool.map(run_chunk, [(i, chunks[i]) for i in order]))
         chunk_rows: list = [None] * len(chunks)
         for i, row in zip(order, res):
@@ -439,10 +439,7 @@ def profile(
                     (table_name, c, met.name, v if met.kind == "d" else None,
                      v if met.kind == "s" else None)
                 )
-        out = df.sparkSession.createDataFrame(data, schema=_PROFILE_RESULT_SCHEMA)
-        if transient_src:
-            src.unpersist()
-        return out
+        return df.sparkSession.createDataFrame(data, schema=_PROFILE_RESULT_SCHEMA)
 
     parts: list[DataFrame] = []
     for batch in chunks:

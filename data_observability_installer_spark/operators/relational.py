@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.pin import pin
+
 
 def asof_join(
     left: DataFrame,
@@ -209,11 +211,11 @@ def skew_diagnosis(
     big join. NULL keys count too: a NULL-heavy foreign key is the
     most common real-world skew (unmatched rows all hash together).
     """
-    counts = (
+    # key-cardinality rows; feeds both the total and the top-k from ONE
+    # input scan
+    counts = pin(
         df.groupBy(F.col(key_col).cast("string").alias("key"))
         .agg(F.count(F.lit(1)).cast("long").alias("ct"))
-        .localCheckpoint(eager=True)  # key-cardinality rows; feeds both
-        # the total and the top-k from ONE input scan
     )
     total = counts.agg(F.sum("ct").cast("long").alias("n"))
     return (

@@ -30,7 +30,7 @@ candidate-set size + one row per task and the threshold verdict never
 compares counts and totals taken from different snapshots of a
 recomputed source. (Candidate NOMINATION still assumes the two passes
 scan the same rows — the standard multi-pass precondition; pin a
-nondeterministic input with localCheckpoint before calling.)
+nondeterministic input before calling.)
 """
 
 from __future__ import annotations
@@ -112,9 +112,9 @@ def heavy_hitters(
             )
 
     # the sketch is metadata-sized (<= capacity x partitions rows) —
-    # checkpoint it eagerly so the map-only pass 1 runs exactly once and
-    # no cache entry outlives the query (dedup's label-frame idiom)
-    sketch = src.mapInPandas(summarize, "w string, est long").localCheckpoint(eager=True)
+    # pin it eagerly so the map-only pass 1 runs exactly once and no
+    # cache entry outlives the query
+    sketch = pin(src.mapInPandas(summarize, "w string, est long"))
     cands = sketch.filter(F.col("w").isNotNull()).select("w").distinct()
     # Pass 2 derives BOTH the exact candidate counts AND the total from
     # ONE scan: a broadcast LEFT join marks candidate rows, the groupBy
@@ -124,13 +124,12 @@ def heavy_hitters(
     # verdict never mixes two snapshots of a recomputed source. The
     # Misra–Gries NOMINATION still assumes pass 1 and pass 2 scan the
     # same rows (the standard multi-pass Spark precondition — true for
-    # any deterministic frame; localCheckpoint a nondeterministic input
-    # before calling).
-    counts = (
+    # any deterministic frame; pin a nondeterministic input before
+    # calling).
+    counts = pin(
         src.join(F.broadcast(cands.withColumn("_hit", F.lit(1))), "w", "left")
         .groupBy(F.when(F.col("_hit") == 1, F.col("w")).alias("w"))
         .agg(F.count(F.lit(1)).cast("long").alias("ct"))
-        .localCheckpoint(eager=True)
     )
     total = counts.agg(F.sum("ct").cast("long").alias("total"))
     out = (

@@ -6,7 +6,8 @@ module dict would pin those frames in executor memory for the life of
 the process — fine in a one-shot harness, a leak in a long-lived
 service. This cache bounds entries per key-space (LRU eviction with
 ``unpersist``) and exposes ``clear()`` so a service can drop everything
-at session teardown (``registry.clear_caches()``).
+at session teardown (``registry.clear_caches()``). Entries are released
+through the materialization seam (``functions.pin.unpin``).
 """
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+from ..functions.pin import pinned, unpin
 
 
 class DFCache:
@@ -39,20 +42,20 @@ class DFCache:
         self._entries[key] = df
         while len(self._entries) > self._capacity:
             _, old = self._entries.popitem(last=False)
-            _safe_unpersist(old)
+            unpin(old)
         return df
 
     def clear(self) -> None:
         while self._entries:
             _, old = self._entries.popitem(last=False)
-            _safe_unpersist(old)
+            unpin(old)
 
     def __len__(self) -> int:
         return len(self._entries)
 
 
-def _safe_unpersist(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:  # noqa: BLE001 — session already stopped; nothing to free
-        pass
+def pinned_entry(df: DataFrame) -> DataFrame:
+    """Persist ``df`` as a cache entry through the materialization seam:
+    a ``pinned`` scope that stays open while the entry lives and ends
+    with the cache's eviction or ``clear()`` (``unpin``)."""
+    return pinned(df).__enter__()

@@ -13,9 +13,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.pin import pin, pinned
 from ..functions.time import epoch_seconds
 from ..operators.dq.compiler import compile_suite, compile_suite_sql
-from .cache import DFCache
+from .cache import DFCache, pinned_entry
 from ..operators.hygiene import hygiene, hygiene_sql
 from ..operators.profile import column_metrics, profile, profile_sql
 from ..sources.tables import STATIC_SCHEMAS, load_table
@@ -76,10 +77,8 @@ def cached_profile(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # profile's ~5 chunked agg passes; profile() sees the persisted
         # input and returns a driver-assembled LocalRelation (metric-
         # sized, self-contained — nothing left to cache or checkpoint)
-        src = load_table(spark, sf_dir, table).cache()
-        prof = profile(src, table, AS_OF)
-        src.unpersist()
-        return prof
+        with pinned(load_table(spark, sf_dir, table)) as src:
+            return profile(src, table, AS_OF)
 
     return _PROFILE_CACHE.get_or_build(
         (spark.sparkContext.applicationId, sf_dir, table), build
@@ -133,26 +132,19 @@ def profile_delta_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chunked profile passes (4 aggregate jobs total) — without it each
     # pass re-scanned and re-repartitioned the parquet source
     li = load_table(spark, sf_dir, "lineitem").select(*_DELTA_COLS, "l_orderkey")
-    cached = [False]
-
-    def _src():
-        if not cached[0]:
-            li.persist().count()
-            cached[0] = True
-        return li
 
     # the two sides are independent job chains over the same persisted
     # input — run them from two driver threads so the new side's stages
-    # back-fill the old side's tails (guide §2.6)
+    # back-fill the old side's tails (guide §2.6); the input is filled
+    # eagerly once, outside the racing threads
     from concurrent.futures import ThreadPoolExecutor
 
-    _src()  # persist eagerly once, outside the racing threads
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with pinned(li, eager=True), ThreadPoolExecutor(max_workers=2) as pool:
         f_old = pool.submit(
             lambda: _PROFILE_CACHE.get_or_build(
                 (app, sf_dir, "lineitem#delta-old"),
                 lambda: profile(
-                    _src().filter(F.col("l_orderkey") % 2 == 0), "lineitem", AS_OF,
+                    li.filter(F.col("l_orderkey") % 2 == 0), "lineitem", AS_OF,
                     columns=_DELTA_COLS,
                 ),
             )
@@ -160,12 +152,10 @@ def profile_delta_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         f_new = pool.submit(
             lambda: _PROFILE_CACHE.get_or_build(
                 (app, sf_dir, "lineitem#delta-new"),
-                lambda: profile(_src(), "lineitem", AS_OF, columns=_DELTA_COLS),
+                lambda: profile(li, "lineitem", AS_OF, columns=_DELTA_COLS),
             )
         )
         old, new = f_old.result(), f_new.result()
-    if cached[0]:
-        li.unpersist()
     return profile_delta(old, new)
 
 
@@ -216,7 +206,7 @@ def profile_delta_stored_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame
     app = spark.sparkContext.applicationId
     new = _PROFILE_CACHE.get_or_build(
         (app, sf_dir, "lineitem#delta-new"),
-        lambda: profile(li, "lineitem", AS_OF, columns=_DELTA_COLS).cache(),
+        lambda: pinned_entry(profile(li, "lineitem", AS_OF, columns=_DELTA_COLS)),
     )
     return profile_delta(read_profile(spark, store), new)
 
@@ -1044,7 +1034,7 @@ def gapfill_hourly_signups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers (bounds + join probe) would each recompute the
     # rollup from the source scan; checkpointing the metadata-sized
     # frame (≤ hours-in-retention rows) pins it to ONE events scan
-    hourly = hourly.localCheckpoint(eager=False)
+    hourly = pin(hourly, eager=False)
     bounds = hourly.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hr")
@@ -1547,10 +1537,9 @@ def a4_run_state_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # pinned: evaluate_rules fans out one filter branch per rule over
     # the same rollup
-    runs = (
+    runs = pin(
         _events_run_rollup(load_table(spark, sf_dir, "events"))
         .withColumn("end_ts", F.date_format("end_ts", _TS_FMT_SPARK))
-        .localCheckpoint(eager=True)
     )
     rules = [
         {"rule_id": "r-failed-runs", "action": "SEND_EMAIL",
@@ -1605,9 +1594,7 @@ def a6_out_of_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rollup feeds instance derivation AND run assignment — pin it
     # so events scan once (measured ~20-50% at sf0.1; rollup rows =
     # runs, far below the event count)
-    runs = _events_run_rollup(load_table(spark, sf_dir, "events")).localCheckpoint(
-        eager=True
-    )
+    runs = pin(_events_run_rollup(load_table(spark, sf_dir, "events")))
     conditions = spark.createDataFrame(
         [("j-events", "START", "pipeline-0")], "journey_id string, action string, batch_pipeline string"
     )
@@ -1674,9 +1661,7 @@ def critical_path_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # pinned: the rollup feeds instance derivation AND run assignment
-    runs = _events_run_rollup(load_table(spark, sf_dir, "events")).localCheckpoint(
-        eager=True
-    )
+    runs = pin(_events_run_rollup(load_table(spark, sf_dir, "events")))
     conditions = spark.createDataFrame(
         [("j-events", "START", "pipeline-0")],
         "journey_id string, action string, batch_pipeline string",
@@ -1729,7 +1714,7 @@ def a2_payload_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # pinned: payload_instances consumes the rollup on both sides of
     # its boundary/assignment joins
-    runs = _events_run_rollup(ev).localCheckpoint(eager=True)
+    runs = pin(_events_run_rollup(ev))
     payloads = ev.select(
         F.concat(
             F.col("user_id").cast("string"), F.lit(":"), F.date_format("ts", "yyyy-MM-dd")
@@ -2292,7 +2277,6 @@ def decile_report_orders(
             )
             .orderBy("decile")
         )
-    from ..functions.pin import pin
     from ..functions.quantiles import exact_percentiles
 
     # EXACT mode: the nine edges come from the distributed value-counts
@@ -2842,11 +2826,9 @@ _SHINGLE_CACHE = DFCache(capacity=4)
 
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
-        from pyspark import StorageLevel
-
-        return _dedup.exploded_shingles(
-            load_table(spark, sf_dir, "documents"), "text", "doc_id", 3
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        return pinned_entry(
+            _dedup.exploded_shingles(load_table(spark, sf_dir, "documents"), "text", "doc_id", 3)
+        )
 
     return _SHINGLE_CACHE.get_or_build((spark.sparkContext.applicationId, sf_dir), build)
 
@@ -2861,15 +2843,9 @@ _CAPPED_SHINGLE_CACHE = DFCache(capacity=4)
 
 def _shared_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
-        from pyspark import StorageLevel
-
-        sh0 = _shared_shingles(spark, sf_dir)
-        keep = (
-            sh0.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df_ct"))
-            .filter(F.col("df_ct") <= _JACCARD_ARGS["max_df"])
+        return pinned_entry(
+            _dedup.capped_index(_shared_shingles(spark, sf_dir), _JACCARD_ARGS["max_df"])
         )
-        return sh0.join(keep.select("sh"), "sh").persist(StorageLevel.MEMORY_AND_DISK)
 
     return _CAPPED_SHINGLE_CACHE.get_or_build(
         (spark.sparkContext.applicationId, sf_dir), build
@@ -3320,13 +3296,11 @@ def lang_mix_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # language-set-sized; feeds the share denominator AND the report
     # from ONE corpus scan
-    per_lang = (
-        j.groupBy("pred_lang")
-        .agg(
+    per_lang = pin(
+        j.groupBy("pred_lang").agg(
             F.count(F.lit(1)).cast("long").alias("doc_ct"),
             F.sum("qbp").cast("long").alias("qsum"),
         )
-        .localCheckpoint(eager=True)
     )
     total = per_lang.agg(F.sum("doc_ct").alias("n"))
     return (
@@ -3985,7 +3959,7 @@ def _shared_emb_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = _sim.embedding_near_dups_lsh(
             load_table(spark, sf_dir, "embeddings"), threshold=0.35
         )
-        return pairs.localCheckpoint(eager=True)
+        return pin(pairs)
 
     return _EMB_PAIRS_CACHE.get_or_build(
         (spark.sparkContext.applicationId, sf_dir), build
@@ -4743,20 +4717,19 @@ def monitor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch consume it); both pins are metadata-sized. Screen operators
     and twins unchanged, so every screen's rows are identical to its
     standalone query."""
-    from ..functions.pin import pin
     from ..operators.sketch import qsketch_by, qsketch_quantiles_by
 
-    ev = load_table(spark, sf_dir, "events").persist()
-    daily_ts = pin(
-        ev.groupBy(
-            F.col("event_type").alias("k"), F.date_trunc("day", "ts").alias("day")
-        ).agg(F.count(F.lit(1)).cast("long").alias("v"))
-    )
+    # both pins are materialized inside the scope; nothing reads ev after
+    with pinned(load_table(spark, sf_dir, "events")) as ev:
+        daily_ts = pin(
+            ev.groupBy(
+                F.col("event_type").alias("k"), F.date_trunc("day", "ts").alias("day")
+            ).agg(F.count(F.lit(1)).cast("long").alias("v"))
+        )
+        runs = pin(_events_run_rollup(ev))
     daily_str = daily_ts.select(
         "k", F.date_format("day", "yyyy-MM-dd").alias("o"), "v"
     )
-    runs = pin(_events_run_rollup(ev))
-    ev.unpersist()  # both pins are materialized; nothing reads ev now
     mk = mann_kendall(daily_ts).selectExpr(
         "'mk_trend' AS screen",
         "k AS entity",

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.pin import pinned
+
 
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
@@ -127,20 +129,14 @@ def guarded_write(
     different, contract-violating one. MEMORY_AND_DISK spills rather
     than evicts, so partitions are not recomputed between the two
     actions on a healthy cluster (executor loss still recomputes — for
-    a hard guarantee on nondeterministic frames, checkpoint upstream)."""
-    from pyspark import StorageLevel
+    a hard guarantee on nondeterministic frames, checkpoint upstream).
 
+    A caller-persisted frame is left as it is: ``pinned`` neither
+    re-persists nor evicts it, so later caller actions keep reading the
+    rows that were just validated."""
     from ..operators.dq.compiler import compile_suite
 
-    # pin only if the caller hasn't: persist() on an already-cached
-    # frame is a no-op, but an unconditional unpersist() in finally
-    # would EVICT the caller's cache entry and silently force later
-    # caller actions to recompute (for a nondeterministic frame, onto
-    # different rows than were just validated)
-    pinned_here = df.storageLevel == StorageLevel.NONE
-    if pinned_here:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with pinned(df):
         outcomes = compile_suite(df, specs, as_of).collect()
         bad_states = {"FAILED"} | ({"WARNING"} if fail_on_warning else set())
         failures = [r.asDict() for r in outcomes if r["result"] in bad_states]
@@ -148,9 +144,6 @@ def guarded_write(
             raise ContractViolation(failures)
         df.write.mode(mode).parquet(path)
         return [r.asDict() for r in outcomes]
-    finally:
-        if pinned_here:
-            df.unpersist()
 
 
 def backfill_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:

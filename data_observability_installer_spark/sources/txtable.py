@@ -131,6 +131,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.pin import pin
+
 _COMMITS = "_commits"
 _DATA = "data"
 _DV = "_dv"
@@ -1317,8 +1319,6 @@ def delete_rows(
                 (hits["__file"] == old["file"]) & (hits["__pos"] == old["pos"]),
                 "left_anti",
             )
-        from ..functions.pin import pin
-
         # ONE materialization feeds the per-file count AND the sidecar
         # write: a nondeterministic condition re-evaluated per consumer
         # would desync the manifest dv count from the actual sidecar
@@ -1709,8 +1709,6 @@ def merge_dv(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    from ..functions.pin import pin
-
     survivors = updates
     if deleted_col is not None:
         survivors = updates.filter(
@@ -1961,8 +1959,6 @@ def update_rows(
                 & (matched["__pos"] == old["pos"]),
                 "left_anti",
             )
-        from ..functions.pin import pin
-
         # ONE materialization feeds the position sidecar AND the
         # updated-row write — the two halves of the atomic swap must
         # come from the same snapshot of the match

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..functions.pin import pin
+
 
 def decontam_sink(
     stream: DataFrame,
@@ -51,7 +53,6 @@ def decontam_sink(
     ``id_col`` dedup (removes only replay artifacts).
 
     Returns the started StreamingQuery."""
-    from ..functions.pin import pin
     from ..operators.llm.decontam import fingerprint_verdicts
     from ..operators.llm.dedup import exploded_shingles
     from ..operators.profile import retain_runs

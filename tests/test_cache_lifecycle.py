@@ -1,6 +1,12 @@
-"""Shared-intermediate cache lifecycle: LRU bound + clear()."""
+"""Shared-intermediate cache lifecycle (LRU bound + clear()) and the
+materialization seam: every owned persist is released."""
 
 from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import pytest
 
 from data_observability_installer_spark.plans import registry
 from data_observability_installer_spark.plans.cache import DFCache
@@ -72,14 +78,24 @@ def _persisted_rdd_count(spark) -> int:
     return 0 if jcm.isEmpty() else 1
 
 
-def test_operator_persists_released(spark, sf_smoke):
+def test_operator_persists_released(spark, sf_smoke, tmp_path, monkeypatch):
     """Round-14 (verdict What's wrong #1-2): every operator that
     persists a corpus-sized intermediate must release it before
     returning — the CacheManager must hold NO entries after the
     operator's result is materialized."""
     from pyspark.sql import functions as F
 
+    from data_observability_installer_spark.operators import profile as profile_mod
+    from data_observability_installer_spark.operators.dq.testtypes import (
+        TABLE_LEVEL,
+        TestSpec,
+    )
     from data_observability_installer_spark.operators.llm import curation, dedup
+    from data_observability_installer_spark.plans.suites import AS_OF
+    from data_observability_installer_spark.sources.sinks import (
+        ContractViolation,
+        guarded_write,
+    )
 
     docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
     # clearCache() unpersists frames the registry DFCaches still hold;
@@ -107,3 +123,92 @@ def test_operator_persists_released(spark, sf_smoke):
     out = curation.dsir_weights(docs, F.col("lang") == "en")
     out.collect()
     assert _persisted_rdd_count(spark) == 0, "dsir_weights leaked a persist"
+
+    out = dedup.jaccard_threshold_sweep(docs)
+    out.collect()
+    assert _persisted_rdd_count(spark) == 0, "jaccard_threshold_sweep leaked a persist"
+
+    # the contract gate releases its pin on the publish path AND when
+    # the suite rejects the frame
+    specs = [TestSpec("t", TABLE_LEVEL, "Row_Ct", {"Baseline_Ct": "2"}, severity="FAILED")]
+    guarded_write(docs, str(tmp_path / "ok"), specs, AS_OF)
+    assert _persisted_rdd_count(spark) == 0, "guarded_write leaked a persist"
+    with pytest.raises(ContractViolation):
+        guarded_write(docs.limit(1), str(tmp_path / "rejected"), specs, AS_OF)
+    assert _persisted_rdd_count(spark) == 0, "guarded_write leaked a persist on failure"
+
+    # multi-chunk profile over a transient shared scan (forced on at
+    # smoke size by dropping the size threshold)
+    scopes = []
+    real_pinned = profile_mod.pinned
+    monkeypatch.setattr(profile_mod, "SHARE_SCAN_MIN_BYTES", 0)
+    monkeypatch.setattr(
+        profile_mod, "pinned", lambda df, eager=False: scopes.append(df) or real_pinned(df, eager)
+    )
+    lineitem = spark.read.parquet(f"{sf_smoke}/lineitem.parquet")
+    assert profile_mod.profile(lineitem, "lineitem", AS_OF).count() > 0
+    assert scopes, "profile did not take the transient shared-scan path"
+    assert _persisted_rdd_count(spark) == 0, "profile leaked its transient scan"
+
+
+def test_pinned_releases_only_what_it_persisted(spark):
+    """``pinned`` releases its own persist on every exit path, an
+    exception included, and never evicts a caller's persist."""
+    from pyspark import StorageLevel
+
+    from data_observability_installer_spark.functions.pin import pinned
+
+    registry.clear_caches()
+    spark.catalog.clearCache()
+    df = spark.range(100).selectExpr("id * 3 AS v")
+    with pytest.raises(RuntimeError, match="boom"):
+        with pinned(df, eager=True) as d:
+            assert d.storageLevel != StorageLevel.NONE
+            raise RuntimeError("boom")
+    assert _persisted_rdd_count(spark) == 0, "pinned leaked on an exception"
+
+    own = spark.range(50).persist()
+    try:
+        with pinned(own) as d:
+            assert d.count() == 50
+        assert own.storageLevel != StorageLevel.NONE, "pinned evicted the caller's persist"
+    finally:
+        own.unpersist()
+
+
+def test_dedup_groups_distributed_branch(spark, sf_smoke):
+    """The distributed min-label propagation (forced with
+    ``driver_threshold=0``) yields the union-find path's groups and
+    releases every per-round label persist."""
+    from data_observability_installer_spark.operators.llm import dedup
+
+    registry.clear_caches()
+    spark.catalog.clearCache()
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
+    pairs = dedup.ngram_jaccard_pairs(docs, **registry._JACCARD_ARGS)
+    local = sorted(map(tuple, dedup.dedup_groups(pairs).collect()))
+    dist = sorted(map(tuple, dedup.dedup_groups(pairs, driver_threshold=0).collect()))
+    assert local, "no near-dup pairs at smoke scale"
+    assert dist == local
+    assert _persisted_rdd_count(spark) == 0, "dedup_groups leaked a label persist"
+
+
+_PKG = Path(__file__).resolve().parent.parent / "data_observability_installer_spark"
+_RAW_MATERIALIZE = re.compile(
+    r"\.(localCheckpoint|checkpoint|persist|unpersist)\(|\.cache\(\)"
+)
+
+
+def test_materialization_goes_through_pin_seam():
+    """functions/pin.py is the only module that checkpoints, persists,
+    caches or unpersists a frame, so the pin-mode knob reaches every
+    pin and every owned persist has one release idiom."""
+    seam = _PKG / "functions" / "pin.py"
+    hits = [
+        f"{path.relative_to(_PKG)}:{n}: {line.strip()}"
+        for path in sorted(_PKG.rglob("*.py"))
+        if path != seam
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _RAW_MATERIALIZE.search(line)
+    ]
+    assert not hits, "raw materialization outside functions/pin.py:\n" + "\n".join(hits)

@@ -131,10 +131,14 @@ def test_numeric_shift_family(spark):
                   {"Baseline_Avg": "10", "Baseline_SD": "1", "Threshold_Value": "5"})
     assert run_one(spark, [(10.0,)] * 99 + [(13.0,)], "v double", oa).result == "PASSED"
     assert run_one(spark, [(10.0,)] * 9 + [(13.0,)], "v double", oa).result == "WARNING"
+    # NULLs stay in the denominator as non-outliers (the DuckDB twin's
+    # CASE ... ELSE 0): 1 outlier in 20 rows is 5%, not 1 in 1
+    assert run_one(spark, [(13.0,)] + [(None,)] * 19, "v double", oa).result == "PASSED"
 
     ob = TestSpec("t", "v", "Outlier_Pct_Below",
                   {"Baseline_Avg": "10", "Baseline_SD": "1", "Threshold_Value": "5"})
     assert run_one(spark, [(10.0,)] * 9 + [(7.0,)], "v double", ob).result == "WARNING"
+    assert run_one(spark, [(7.0,)] + [(None,)] * 19, "v double", ob).result == "PASSED"
 
 
 def test_date_family(spark):

@@ -544,3 +544,39 @@ def test_pin_seam_modes_agree_and_release(spark, tmp_path):
             pin(df)
     finally:
         spark.conf.unset(PIN_MODE_CONF)
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "lineage_closure",
+        "dedup_groups_documents",
+        "minhash_pairs_documents",
+        "a4_run_state_alerts",
+    ],
+)
+def test_pin_seam_modes_agree_on_registry_queries(spark, sf_smoke, tmp_path, query):
+    """Sites that pin through functions/pin.py (BFS frontiers, pair
+    lists, the run rollup) return the ``local`` default's rows under
+    the ``persist`` and ``reliable`` modes too."""
+    from data_observability_installer_spark.functions.pin import PIN_DIR_CONF, PIN_MODE_CONF
+    from data_observability_installer_spark.plans import registry
+
+    def run():
+        registry.clear_caches()  # a cached frame would skip the pins
+        rows = registry.QUERIES[query](spark, sf_smoke).collect()
+        return sorted(repr(tuple(r)) for r in rows)
+
+    base = run()
+    assert base
+    try:
+        spark.conf.set(PIN_MODE_CONF, "persist")
+        assert run() == base
+        spark.conf.set(PIN_MODE_CONF, "reliable")
+        spark.conf.set(PIN_DIR_CONF, str(tmp_path / "ckpt"))
+        assert run() == base
+    finally:
+        spark.conf.unset(PIN_MODE_CONF)
+        spark.conf.unset(PIN_DIR_CONF)
+        registry.clear_caches()
+        spark.catalog.clearCache()  # persist-mode pins are held until unpinned

@@ -179,10 +179,10 @@ def main() -> None:
             out[name] = None
             print(f"{name} FAILED: {exc}", file=sys.stderr)
     res = {"cpus": CPUS, "k": K, "base_sf": SF_DIR, "queries": out}
-    path = f"plans/r14/SCALE_CORES_{CPUS}.json"
+    path = Path(__file__).resolve().parent.parent / "plans" / "r14" / f"SCALE_CORES_{CPUS}.json"
     with open(path, "w") as fh:
         json.dump(res, fh, indent=1)
-    print(json.dumps({"wrote": path, **{k: v for k, v in res.items() if k != 'queries'}}))
+    print(json.dumps({"wrote": str(path), **{k: v for k, v in res.items() if k != 'queries'}}))
 
 
 if __name__ == "__main__":
