@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ...functions.pin import pin
-
 # tiny function-word profiles; enough signal for coarse routing
 LANG_MARKERS: dict[str, str] = {
     "en": r"\b(the|and|of|to|is|in|that|with)\b",
@@ -369,120 +367,36 @@ def bpe_pair_counts_sql(
 # ---------------------------------------------------------------------------
 # Full BPE merge-rule training (Sennrich et al.): N deterministic
 # merge rounds over the word-frequency table. bpe_pair_counts exposes
-# the scan of ONE round; this runs the whole loop. The iteration state
-# is the VOCABULARY (distinct words + counts + current tokenization),
-# not the corpus — one corpus-sized shuffle up front, then N rounds of
-# vocabulary-sized jobs, each collecting exactly one winning pair to
-# the driver (the same metadata-sized-iteration idiom as
-# similarity.train_ivf_kmeans). Everything is exact string/int64
-# arithmetic with (count DESC, left, right) tie-breaks, so a DuckDB
-# twin unrolling the same rounds reproduces the merge table
-# bit-for-bit.
+# the scan of ONE round; bpe_train runs the whole loop. The only
+# corpus-scale work is one distributed word-frequency aggregation; the
+# merge loop then runs driver-local over the collected VOCABULARY
+# (distinct words + counts), so a merge round is a dict update, not a
+# Spark job. Everything is exact string/int64 arithmetic with
+# (count DESC, left, right) tie-breaks, so a DuckDB twin unrolling the
+# same rounds as CTEs reproduces the merge table bit-for-bit.
 # ---------------------------------------------------------------------------
 
-# unit separator: cannot appear in whitespace-split tokens. Tokens are
-# DOUBLE-SEP delimited ("⟂⟂a⟂⟂b⟂⟂") and a merge of (l, r) replaces the
-# SINGLE-SEP-padded pattern "⟂l⟂⟂r⟂" with "⟂lr⟂": each match consumes
-# one separator from each boundary pair, so the double-SEP form is
-# restored around the merged token AND the scan position after a match
-# still sits on a valid left boundary — a run like [a,a,a,a] merges to
-# [aa,aa], exactly greedy leftmost BPE. (A single-SEP encoding eats the
-# shared boundary and skips every other overlapping occurrence.)
+# unit separator: cannot appear in whitespace-split tokens. The merge
+# APPLIERS (bpe_encode_tokens, bpe_compression and every DuckDB twin)
+# tokenize text as strings: tokens are DOUBLE-SEP delimited
+# ("⟂⟂a⟂⟂b⟂⟂") and a merge of (l, r) replaces the SINGLE-SEP-padded
+# pattern "⟂l⟂⟂r⟂" with "⟂lr⟂": each match consumes one separator from
+# each boundary pair, so the double-SEP form is restored around the
+# merged token AND the scan position after a match still sits on a
+# valid left boundary — a run like [a,a,a,a] merges to [aa,aa], exactly
+# greedy leftmost BPE. (A single-SEP encoding eats the shared boundary
+# and skips every other overlapping occurrence.)
 _BPE_SEP = "\x1f"
 _BPE_D = _BPE_SEP * 2
+_BPE_SEP_SQL = "e'\\x1F'"
+_BPE_D_SQL = "e'\\x1F\\x1F'"
 
 
-def _bpe_word_freq(df: DataFrame, text_col: str) -> DataFrame:
-    """(word, ct, toks): the word-frequency table with each word's
-    tokenization as a double-SEP-delimited string — initially one
-    character per token."""
-    words = F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word")
-    return (
-        df.select(words)
-        .filter(F.length("word") >= 1)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("ct"))
-        .withColumn(
-            "toks",
-            F.concat(
-                F.lit(_BPE_D),
-                F.regexp_replace(F.col("word"), "(.)", "$1" + _BPE_D),
-            ),
-        )
-    )
-
-
-def _bpe_pair_counts_round(vocab: DataFrame) -> DataFrame:
-    """Adjacent-pair frequencies of the CURRENT tokenization, weighted
-    by word count. Vocabulary-sized input; map-side explode + one
-    bounded groupBy."""
-    arr = F.filter(F.split(F.col("toks"), _BPE_SEP), lambda x: x != "")
-    n1 = F.greatest(F.size(arr) - 1, F.lit(0))
-    zipped = F.zip_with(
-        F.slice(arr, 1, n1),
-        F.slice(arr, 2, n1),
-        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-    )
-    return (
-        vocab.select("ct", F.explode(zipped).alias("p"))
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.sum("ct").cast("long").alias("pct"))
-    )
-
-
-def bpe_train(
-    df: DataFrame, n_merges: int = 12, text_col: str = "text"
-) -> DataFrame:
-    """Learn ``n_merges`` BPE merge rules from the corpus; returns
-    ``(merge_round, left_tok, right_tok, pair_ct)`` in training order.
-    Each round: count adjacent pairs in the current tokenization
-    (weighted by word frequency), pick the winner by (count DESC,
-    left, right), and apply it as a boundary-safe string replace —
-    Spark's ``replace`` and the twin's are both single left-to-right
-    non-overlapping passes, i.e. exactly BPE's leftmost-greedy merge.
-
-    If the vocabulary runs out of pairs before ``n_merges`` (tiny or
-    empty corpus), training stops and the merges learned so far are
-    returned — the same truncation the fixed-round twin produces (an
-    empty winner CTE contributes no row and NULLs out later rounds),
-    so the two engines stay hash-equal on degenerate inputs too."""
-    spark = df.sparkSession
-    vocab = pin(_bpe_word_freq(df, text_col))
-    merges = []
-    for rnd in range(1, n_merges + 1):
-        top = (
-            _bpe_pair_counts_round(vocab)
-            .orderBy(F.desc("pct"), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        l, r, pct = top[0]["l"], top[0]["r"], top[0]["pct"]
-        merges.append((rnd, l, r, pct))
-        vocab = pin(
-            vocab.withColumn(
-                "toks",
-                F.replace(
-                    F.col("toks"),
-                    F.lit(_BPE_SEP + l + _BPE_D + r + _BPE_SEP),
-                    F.lit(_BPE_SEP + l + r + _BPE_SEP),
-                ),
-            )
-        )
-    return spark.createDataFrame(
-        merges, "merge_round int, left_tok string, right_tok string, pair_ct long"
-    )
-
-
-def _bpe_train_ctes(
-    table: str, n_merges: int, text_col: str, keep_last_vocab: bool = False
-) -> list[str]:
+def _bpe_train_ctes(table: str, n_merges: int, text_col: str) -> list[str]:
     """The unrolled training CTE triples shared by :func:`bpe_train_sql`
-    and :func:`bpe_encode_tokens_sql` (pair counts p{i}, winner t{i},
+    and :func:`_bpe_tokens_sql` (pair counts p{i}, winner t{i},
     re-tokenized vocabulary w{i})."""
-    sep = "e'\\x1F'"
-    dsep = "e'\\x1F\\x1F'"
+    sep, dsep = _BPE_SEP_SQL, _BPE_D_SQL
     ctes = [
         f"""w0 AS MATERIALIZED (
       SELECT word, count(*) AS ct,
@@ -504,7 +418,7 @@ def _bpe_train_ctes(
         ctes.append(
             f"t{i} AS (SELECT l, r, pct FROM p{i} ORDER BY pct DESC, l, r LIMIT 1)"
         )
-        if i < n_merges or keep_last_vocab:
+        if i < n_merges:
             ctes.append(
                 f"""w{i} AS MATERIALIZED (
       SELECT word, ct,
@@ -516,9 +430,10 @@ def _bpe_train_ctes(
 
 
 def bpe_train_sql(table: str, n_merges: int = 12, text_col: str = "text") -> str:
-    """DuckDB twin: the same rounds unrolled as CTE triples (pair
-    counts p{i}, winner t{i}, re-tokenized vocabulary w{i}) from the
-    same character-level start — the IVF-Lloyd unrolling idiom."""
+    """DuckDB twin of :func:`bpe_train`: the rounds unrolled as CTE
+    triples (pair counts p{i}, winner t{i}, re-tokenized vocabulary
+    w{i}) from the same character-level start — the IVF-Lloyd
+    unrolling idiom."""
     ctes = _bpe_train_ctes(table, n_merges, text_col)
     rows = "\n    UNION ALL ".join(
         f"SELECT {i} AS merge_round, l AS left_tok, r AS right_tok, pct AS pair_ct FROM t{i}"
@@ -534,8 +449,8 @@ def bpe_train_sql(table: str, n_merges: int = 12, text_col: str = "text") -> str
 
 def _bpe_merge_word(toks: tuple, l: str, r: str) -> tuple:
     """One leftmost-greedy non-overlapping merge pass over a token
-    tuple — the same semantics as the engine's single left-to-right
-    string ``replace`` in :func:`bpe_train` ([a,a,a,a] -> [aa,aa])."""
+    tuple — the same semantics as the appliers' single left-to-right
+    string ``replace`` ([a,a,a,a] -> [aa,aa])."""
     out = []
     i, n = 0, len(toks)
     while i < n:
@@ -548,35 +463,37 @@ def _bpe_merge_word(toks: tuple, l: str, r: str) -> tuple:
     return tuple(out)
 
 
-def bpe_train_local(
+def bpe_train(
     df: DataFrame,
-    n_merges: int = 256,
+    n_merges: int = 12,
     text_col: str = "text",
     vocab_cap: int = 1_000_000,
 ) -> DataFrame:
-    """Vocabulary-local BPE training — the production-merge-count mode.
+    """Learn ``n_merges`` BPE merge rules from the corpus; returns
+    ``(merge_round, left_tok, right_tok, pair_ct)`` in training order.
 
-    :func:`bpe_train` runs one Spark job per merge round, which is the
-    right shape to *verify* (each round is oracle-checkable) but
-    impractical at a real tokenizer's ~30k merges. This mode keeps the
-    ONE distributed pass that touches the corpus (the word-frequency
-    aggregation — the only row-scale work in BPE training) and runs
-    the merge loop driver-local over the collected vocabulary with the
+    ONE distributed pass touches the corpus: the word-frequency
+    aggregation, the only row-scale work in BPE training. The merge
+    loop runs driver-local over the collected vocabulary with the
     classic incremental pair index (only words containing the winning
-    pair are retokenized per round), so 30k merges are 30k dict
-    updates, not 30k Spark jobs.
+    pair are retokenized per round), so a ~30k-merge tokenizer costs
+    30k dict updates, not 30k Spark jobs. Each round counts adjacent
+    pairs of the current tokenization (weighted by word frequency),
+    picks the winner by (count DESC, left, right) and merges it
+    leftmost-greedy — round for round the table of the unrolled DuckDB
+    twin :func:`bpe_train_sql` and of a token-wise pure-Python trainer
+    (tests/test_bpe.py).
 
     ``vocab_cap`` bounds driver memory: the vocabulary is collected in
-    (count DESC, word) order and truncated. With the cap above the
-    true vocabulary size the result is EXACTLY :func:`bpe_train` on
-    the same corpus for every shared round (pinned by a parity
-    pytest); a binding cap is the standard max-vocab truncation
-    tokenizer trainers apply, and drops only the rarest words.
+    (count DESC, word) order and truncated. A cap above the true
+    vocabulary size changes nothing; a binding cap is the standard
+    max-vocab truncation tokenizer trainers apply, and drops only the
+    rarest words.
 
-    Winner selection, tie-breaks (count DESC, left, right) and the
-    leftmost-greedy merge are identical to the distributed mode, so
-    the merge tables agree round for round.
-    """
+    If the vocabulary runs out of pairs before ``n_merges`` (tiny or
+    empty corpus), training stops and the merges learned so far are
+    returned — the same truncation the fixed-round twin produces (an
+    empty winner CTE contributes no row and NULLs out later rounds)."""
     from collections import Counter, defaultdict
 
     spark = df.sparkSession
@@ -624,31 +541,21 @@ def bpe_train_local(
     )
 
 
-def bpe_encode_tokens(
+def _bpe_tokens(
     df: DataFrame,
-    n_merges: int = 32,
-    text_col: str = "text",
-    top_n: int = 30,
-    merges: list[tuple[str, str]] | None = None,
-) -> DataFrame:
-    """Tokenize the corpus with a trained BPE merge table and return
-    the top-``top_n`` token histogram — the CONSUMER side of BPE
-    training (the pass a tokenizer runs over 100 TB after training
-    once).
-
-    Application is map-only: the merge table is metadata (one
-    vocabulary-sized training job via :func:`bpe_train_local` when
-    ``merges`` is not supplied), applied in training order as
-    ``n_merges`` nested boundary-safe string replaces inside a single
-    whole-stage-codegen projection — no UDFs, no per-merge jobs, and
-    the only shuffle is the final histogram groupBy (key space =
-    learned vocabulary). Pass ``merges`` to reuse an offline-trained
-    table and skip training entirely (the train-once/apply-many seam,
-    like similarity.topk_ivf's ``cents``)."""
+    merges: list[tuple[str, str]] | None,
+    n_merges: int,
+    text_col: str,
+) -> Column:
+    """Each document's BPE tokens as an array column: the merge table
+    (trained by :func:`bpe_train` when ``merges`` is None) applied in
+    training order as nested boundary-safe string replaces over the
+    double-SEP character encoding — one projection, no UDFs, no
+    per-merge jobs."""
     if merges is None:
         merges = [
             (r["left_tok"], r["right_tok"])
-            for r in bpe_train_local(df, n_merges, text_col).collect()
+            for r in bpe_train(df, n_merges, text_col).collect()
         ]
     col = F.array_join(
         F.transform(
@@ -665,9 +572,50 @@ def bpe_encode_tokens(
             F.lit(_BPE_SEP + l + _BPE_D + r + _BPE_SEP),
             F.lit(_BPE_SEP + l + r + _BPE_SEP),
         )
-    tok = F.explode(
-        F.filter(F.split(col, _BPE_SEP), lambda x: (x != "") & (x != " "))
+    return F.filter(F.split(col, _BPE_SEP), lambda x: (x != "") & (x != " "))
+
+
+def _bpe_tokens_sql(table: str, n_merges: int, text_col: str) -> tuple[str, str]:
+    """Twin of :func:`_bpe_tokens` (train-in-call form): the joined
+    unrolled training CTEs and the nested-replace expression over
+    ``text_col`` that applies their winners in round order. An
+    exhausted round's empty winner CTE degrades to a chr(1)-pattern
+    no-op — matching the Spark side's shorter merge list."""
+    sep, dsep = _BPE_SEP_SQL, _BPE_D_SQL
+    ctes = _bpe_train_ctes(table, n_merges, text_col)
+    expr = (
+        f"array_to_string(list_transform(regexp_split_to_array(lower({text_col}),"
+        f" '\\s+'), w -> {dsep} || regexp_replace(w, '(.)', '\\1' || {dsep}, 'g')), ' ')"
     )
+    for i in range(1, n_merges + 1):
+        pat = f"coalesce((SELECT {sep} || l || {dsep} || r || {sep} FROM t{i}), chr(1))"
+        rep = f"coalesce((SELECT {sep} || l || r || {sep} FROM t{i}), chr(1))"
+        expr = f"replace({expr},\n      {pat},\n      {rep})"
+    return ",\n    ".join(ctes), expr
+
+
+def bpe_encode_tokens(
+    df: DataFrame,
+    n_merges: int = 32,
+    text_col: str = "text",
+    top_n: int = 30,
+    merges: list[tuple[str, str]] | None = None,
+) -> DataFrame:
+    """Tokenize the corpus with a trained BPE merge table and return
+    the top-``top_n`` token histogram — the CONSUMER side of BPE
+    training (the pass a tokenizer runs over 100 TB after training
+    once).
+
+    Application is map-only: the merge table is metadata (one
+    vocabulary-sized training job via :func:`bpe_train` when
+    ``merges`` is not supplied), applied in training order as
+    ``n_merges`` nested boundary-safe string replaces inside a single
+    whole-stage-codegen projection — no UDFs, no per-merge jobs, and
+    the only shuffle is the final histogram groupBy (key space =
+    learned vocabulary). Pass ``merges`` to reuse an offline-trained
+    table and skip training entirely (the train-once/apply-many seam,
+    like similarity.topk_ivf's ``cents``)."""
+    tok = F.explode(_bpe_tokens(df, merges, n_merges, text_col))
     return (
         df.select(tok.alias("token"))
         .groupBy("token")
@@ -682,26 +630,13 @@ def bpe_encode_tokens_sql(
 ) -> str:
     """DuckDB twin of :func:`bpe_encode_tokens` (train-in-call form):
     the shared unrolled training CTEs learn the same merge table, then
-    the same nested-replace chain tokenizes the corpus. An exhausted
-    round's empty winner CTE degrades to a chr(1)-pattern no-op —
-    matching the Spark side's shorter merge list."""
-    sep = "e'\\x1F'"
-    dsep = "e'\\x1F\\x1F'"
-    ctes = _bpe_train_ctes(table, n_merges, text_col)
-    expr = (
-        f"array_to_string(list_transform(regexp_split_to_array(lower({text_col}),"
-        f" '\\s+'), w -> {dsep} || regexp_replace(w, '(.)', '\\1' || {dsep}, 'g')), ' ')"
-    )
-    for i in range(1, n_merges + 1):
-        pat = f"coalesce((SELECT {sep} || l || {dsep} || r || {sep} FROM t{i}), chr(1))"
-        rep = f"coalesce((SELECT {sep} || l || r || {sep} FROM t{i}), chr(1))"
-        expr = f"replace({expr},\n      {pat},\n      {rep})"
-    joined = ",\n    ".join(ctes)
+    the same nested-replace chain tokenizes the corpus."""
+    joined, expr = _bpe_tokens_sql(table, n_merges, text_col)
     return f"""
     WITH {joined},
     applied AS (SELECT {expr} AS a FROM {table})
     SELECT token, CAST(count(*) AS BIGINT) AS token_ct FROM (
-      SELECT unnest(list_filter(string_split(a, {sep}),
+      SELECT unnest(list_filter(string_split(a, {_BPE_SEP_SQL}),
                                 x -> x <> '' AND x <> ' ')) AS token
       FROM applied)
     GROUP BY token ORDER BY token_ct DESC, token LIMIT {top_n}
@@ -723,34 +658,12 @@ def bpe_compression(
 
     Same map-only nested-replace application as
     :func:`bpe_encode_tokens`, but the per-doc token count is just the
-    SIZE of the split array — no explode, so the corpus pass emits one
+    SIZE of the token array — no explode, so the corpus pass emits one
     row per doc and the only shuffle is the tiny per-slice rollup.
     chars_per_token_bp is an exact integer floor division of summed
     integer counts (no float ratios). Pass ``merges`` to reuse an
     offline-trained table (the train-once/apply-many seam)."""
-    if merges is None:
-        merges = [
-            (r["left_tok"], r["right_tok"])
-            for r in bpe_train_local(df, n_merges, text_col).collect()
-        ]
-    col = F.array_join(
-        F.transform(
-            F.split(F.lower(F.col(text_col)), r"\s+"),
-            lambda w: F.concat(
-                F.lit(_BPE_D), F.regexp_replace(w, "(.)", "$1" + _BPE_D)
-            ),
-        ),
-        " ",
-    )
-    for l, r in merges:
-        col = F.replace(
-            col,
-            F.lit(_BPE_SEP + l + _BPE_D + r + _BPE_SEP),
-            F.lit(_BPE_SEP + l + r + _BPE_SEP),
-        )
-    tok_ct = F.size(
-        F.filter(F.split(col, _BPE_SEP), lambda x: (x != "") & (x != " "))
-    ).cast("long")
+    tok_ct = F.size(_bpe_tokens(df, merges, n_merges, text_col)).cast("long")
     per_doc = df.select(
         F.col(by_col).alias("slice_key"),
         F.length(text_col).cast("long").alias("chars"),
@@ -775,25 +688,15 @@ def bpe_compression_sql(
     table: str, n_merges: int = 32, text_col: str = "text", by_col: str = "source"
 ) -> str:
     """DuckDB twin of :func:`bpe_compression` (train-in-call form —
-    shares the unrolled training CTEs with bpe_encode_tokens_sql)."""
-    sep = "e'\\x1F'"
-    dsep = "e'\\x1F\\x1F'"
-    ctes = _bpe_train_ctes(table, n_merges, text_col)
-    expr = (
-        f"array_to_string(list_transform(regexp_split_to_array(lower({text_col}),"
-        f" '\\s+'), w -> {dsep} || regexp_replace(w, '(.)', '\\1' || {dsep}, 'g')), ' ')"
-    )
-    for i in range(1, n_merges + 1):
-        pat = f"coalesce((SELECT {sep} || l || {dsep} || r || {sep} FROM t{i}), chr(1))"
-        rep = f"coalesce((SELECT {sep} || l || r || {sep} FROM t{i}), chr(1))"
-        expr = f"replace({expr},\n      {pat},\n      {rep})"
-    joined = ",\n    ".join(ctes)
+    shares the training CTEs and replace chain with
+    bpe_encode_tokens_sql)."""
+    joined, expr = _bpe_tokens_sql(table, n_merges, text_col)
     return f"""
     WITH {joined},
     per_doc AS (
       SELECT {by_col} AS slice_key,
              CAST(length({text_col}) AS BIGINT) AS chars,
-             CAST(length(list_filter(string_split({expr}, {sep}),
+             CAST(length(list_filter(string_split({expr}, {_BPE_SEP_SQL}),
                                      x -> x <> '' AND x <> ' ')) AS BIGINT) AS tokens
       FROM {table})
     SELECT slice_key,

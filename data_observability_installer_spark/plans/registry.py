@@ -3367,13 +3367,14 @@ def bpe_pair_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("bpe_train_documents", _text.bpe_train_sql("documents", n_merges=12))
 def bpe_train_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full BPE tokenizer training, 12 merge rounds: the iteration
-    state is the word-frequency table (vocabulary-sized, one corpus
-    shuffle up front), each round is a bounded pair-count agg plus one
-    driver-collected winner — the metadata-sized-iteration idiom. The
-    boundary-safe double-separator merge makes Spark, DuckDB, and
-    reference token-wise greedy BPE agree bit-for-bit (property-tested
-    against a pure-Python trainer in tests/test_bpe.py)."""
+    """Full BPE tokenizer training, 12 merge rounds: ONE distributed
+    word-frequency pass (the only corpus-scale work in BPE), then the
+    merge loop runs driver-local over the collected vocabulary — a
+    fixed handful of Spark jobs, not one per round. The boundary-safe
+    double-separator merge makes Spark, DuckDB, and reference
+    token-wise greedy BPE agree bit-for-bit (property-tested against a
+    pure-Python trainer in tests/test_bpe.py; job budget pinned
+    there)."""
     return _text.bpe_train(load_table(spark, sf_dir, "documents"), n_merges=12)
 
 
@@ -3382,15 +3383,11 @@ def bpe_train_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bpe_train_local_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE training at production merge counts (256 rounds — the mode
-    a ~30k-merge tokenizer uses): ONE distributed word-frequency pass
-    (the only corpus-scale work in BPE), then the merge loop runs
-    driver-local over the collected vocabulary with an incremental
-    pair index — 256 merges cost 256 dict updates, not 256 Spark jobs.
-    Bit-equal to the per-round distributed trainer (parity pytest) and
-    to the 256-round unrolled DuckDB twin."""
-    return _text.bpe_train_local(
-        load_table(spark, sf_dir, "documents"), n_merges=256
-    )
+    a ~30k-merge tokenizer uses): the same trainer as
+    bpe_train_documents, whose driver-local loop with an incremental
+    pair index makes 256 merges cost 256 dict updates, not 256 Spark
+    jobs. Bit-equal to the 256-round unrolled DuckDB twin."""
+    return _text.bpe_train(load_table(spark, sf_dir, "documents"), n_merges=256)
 
 
 @register(

@@ -140,7 +140,9 @@ def _distribute(
     dataset variant must drop its entry rather than ship a hot key)."""
     rowgroups, nbytes = _parquet_layout(path)
     parallelism = spark.sparkContext.defaultParallelism
-    if rowgroups < max(parallelism // 4, 1) and nbytes > 1 << 20:
+    # a single row group is one task on any multi-core session; from 8
+    # cores up, files with fewer than cores/4 row groups distribute too
+    if rowgroups < max(parallelism // 4, min(parallelism, 2)) and nbytes > 1 << 20:
         if key is not None and key in df.columns:
             return df.repartition(parallelism, key)
         return df.repartition(parallelism)

@@ -103,50 +103,79 @@ def test_bpe_deterministic(spark):
 
 
 def test_bpe_local_equals_distributed(spark, sf_smoke):
-    """bpe_train(local_vocab path) reproduces the distributed trainer
-    round-for-round on real documents — same winners, same counts."""
-    from data_observability_installer_spark.operators.llm.text import bpe_train_local
+    """The trainer reproduces the unrolled DuckDB twin round-for-round
+    on real documents — same winners, same counts."""
+    import duckdb
+
+    from data_observability_installer_spark.operators.llm.text import bpe_train_sql
     from data_observability_installer_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_smoke, "documents")
-    dist = _rows(bpe_train(docs, n_merges=12))
-    local = _rows(bpe_train_local(docs, n_merges=12))
-    assert local == dist
+    got = _rows(bpe_train(docs, n_merges=12))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_smoke}/documents.parquet')"
+    )
+    twin = [tuple(r) for r in con.execute(bpe_train_sql("documents", 12)).fetchall()]
+    assert len(got) == 12
+    assert got == twin
 
 
 def test_bpe_local_prefix_property(spark):
-    """Running local mode DEEPER than the distributed mode agrees on
-    the shared prefix of rounds (training is prefix-stable)."""
-    from data_observability_installer_spark.operators.llm.text import bpe_train_local
-
+    """Training DEEPER than the token-wise reference agrees with it on
+    the shared prefix of rounds (training is prefix-stable), and the
+    reference run to the same depth matches every round."""
     texts = ["the cat sat on the mat", "the bat and the cat", "mat cat bat"] * 4
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    dist = _rows(bpe_train(df, n_merges=6))
-    local = _rows(bpe_train_local(df, n_merges=20))
-    assert local[: len(dist)] == dist
-    assert _python_bpe(texts, min(20, len(local))) == local[: min(20, len(local))]
+    shallow = _python_bpe(texts, 6)
+    deep = _rows(bpe_train(df, n_merges=20))
+    assert len(deep) > len(shallow)
+    assert deep[: len(shallow)] == shallow
+    assert _python_bpe(texts, min(20, len(deep))) == deep[: min(20, len(deep))]
 
 
 def test_bpe_local_exhaustion_and_empty(spark):
-    from data_observability_installer_spark.operators.llm.text import bpe_train_local
-
     df = spark.createDataFrame([("a b c",)], "text string")
-    assert _rows(bpe_train_local(df, n_merges=5)) == []
+    assert _rows(bpe_train(df, n_merges=5)) == []
     empty = spark.createDataFrame([], "text string")
-    assert _rows(bpe_train_local(empty, n_merges=3)) == []
+    assert _rows(bpe_train(empty, n_merges=3)) == []
 
 
 def test_bpe_local_vocab_cap_keeps_frequent_words(spark):
     """A binding cap trains on the most frequent words only — the
     merge table from the capped vocabulary equals training on the
     frequent subset."""
-    from data_observability_installer_spark.operators.llm.text import bpe_train_local
-
     texts = ["zz zz zz zz yy yy qq"]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    capped = _rows(bpe_train_local(df, n_merges=3, vocab_cap=2))
+    capped = _rows(bpe_train(df, n_merges=3, vocab_cap=2))
     subset = _python_bpe(["zz zz zz zz yy yy"], 3)
     assert capped == subset
+
+
+# measured: 6 jobs (vocabulary aggregation + collect, result
+# materialization); a job per merge round would be 12 or more
+BPE_TRAIN_DOCUMENTS_JOB_BUDGET = 6
+
+
+def test_bpe_train_documents_job_budget(spark, sf_smoke):
+    """Job tripwire for the registry query: training is one
+    word-frequency pass plus the result materialization — a fixed
+    handful of Spark jobs, never one (or three) per merge round."""
+    from data_observability_installer_spark.plans import registry
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bpe_train_documents_budget", "job-budget run")
+    try:
+        rows = registry.queries()["bpe_train_documents"](spark, sf_smoke).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("bpe_train_documents_budget")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(rows) == 12
+    assert len(jobs) <= BPE_TRAIN_DOCUMENTS_JOB_BUDGET, (
+        f"bpe_train_documents ran {len(jobs)} Spark jobs "
+        f"(budget {BPE_TRAIN_DOCUMENTS_JOB_BUDGET})"
+    )
 
 
 def test_bpe_encode_applies_merges(spark):
@@ -219,16 +248,12 @@ def test_bpe_local_merge_table_prefix_property(spark, sf_correct):
     bit-for-bit (the 30k-merge SCALE_BENCH row is trustworthy iff its
     prefix equals the oracle-verified 256-round table) — and training
     must stay a BOUNDED number of Spark jobs, never one per round."""
-    from data_observability_installer_spark.operators.llm.text import (
-        bpe_train_local,
-    )
-
     docs = spark.read.parquet(f"{sf_correct}/documents.parquet")
-    small = [tuple(r) for r in bpe_train_local(docs, n_merges=64).collect()]
+    small = [tuple(r) for r in bpe_train(docs, n_merges=64).collect()]
 
     sc = spark.sparkContext
     sc.setJobGroup("bpe512", "prefix-property run")
-    big_df = bpe_train_local(docs, n_merges=512)
+    big_df = bpe_train(docs, n_merges=512)
     big = [tuple(r) for r in big_df.collect()]
     jobs = sc.statusTracker().getJobIdsForGroup("bpe512")
     sc.setJobGroup(None, None)

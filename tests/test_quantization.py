@@ -417,3 +417,69 @@ def test_argmin_bucket_forms_agree_and_sample_init_covers(spark):
     finally:
         sim._ARGMIN_UNROLL_MAX = old
     assert all(r["b"] != 29 for r in got)
+
+
+def test_pq_encode_codes_match_numpy_reference(spark, sf_smoke):
+    """pq_encode's code VALUES: for every sf_smoke vector and every
+    subspace, the argmin over exact int64 squared distances to the
+    codebook, ties to the lowest code, recomputed in numpy. A planted
+    row sits exactly equidistant from two centroids of subspace 0 (the
+    higher code is the reflection of the lower one through the row's
+    quantized subvector), so the tie rule is checked, not assumed."""
+    import numpy as np
+
+    from data_observability_installer_spark.operators.llm.similarity import (
+        IVF_SCALE,
+        PQ_M,
+        pq_codebooks,
+        pq_encode,
+    )
+
+    def reference(rows, books):
+        q = np.floor(
+            np.array([r["embedding"] for r in rows], dtype=np.float64) * IVF_SCALE
+            + 0.5
+        ).astype(np.int64)
+        d = len(books[0][0])
+        codes = []
+        for j, book in enumerate(books):
+            sub = q[:, j * d : (j + 1) * d]
+            cb = np.array(book, dtype=np.int64)
+            dist = ((sub[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
+            codes.append(dist.argmin(axis=1))  # first minimum = lowest code
+        return {
+            r["vec_id"]: tuple(int(c[i]) for c in codes) for i, r in enumerate(rows)
+        }
+
+    def encoded(frame, books):
+        return {
+            r["vid"]: tuple(r["codes"]) for r in pq_encode(frame, books=books).collect()
+        }
+
+    emb = load_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
+    rows = emb.collect()
+    books = pq_codebooks()
+    got = encoded(emb, None)  # the default books
+    assert len(got) == len(rows) and all(len(c) == PQ_M for c in got.values())
+    assert got == reference(rows, books)
+
+    # planted tie in subspace 0 between codes lo < hi
+    lo, hi = 3, 9
+    d = len(books[0][0])
+    a = np.array(books[0][lo], dtype=np.int64)
+    vec = np.zeros(PQ_M * d, dtype=np.float32)
+    vec[:d] = (a + np.arange(1, d + 1) * 1000) / IVF_SCALE
+    x = np.floor(vec[:d].astype(np.float64) * IVF_SCALE + 0.5).astype(np.int64)
+    tied = [list(b) for b in books]
+    tied[0][hi] = [int(v) for v in 2 * x - a]
+    dist0 = ((x[None, :] - np.array(tied[0], dtype=np.int64)) ** 2).sum(axis=1)
+    assert dist0[lo] == dist0[hi] == dist0.min()
+    assert sorted(dist0)[2] > dist0[lo]  # exactly a two-way tie
+
+    planted = spark.createDataFrame(
+        [(-1, [float(v) for v in vec])], "vec_id long, embedding array<float>"
+    )
+    with_tie = emb.unionByName(planted)
+    got_t = encoded(with_tie, tied)
+    assert got_t[-1][0] == lo
+    assert got_t == reference(with_tie.collect(), tied)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """BPE training at a PRODUCTION merge count (round-7 verdict item 5).
 
-``bpe_train_local`` is driver-green at 256 merges; a real tokenizer is
+``bpe_train`` is driver-green at 256 merges; a real tokenizer is
 ~30k. This tool runs the vocabulary-local trainer once at 30,000
 merges over the sf0.1 documents corpus and records to SCALE_BENCH.json:
 
@@ -31,7 +31,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from data_observability_installer_spark.operators.llm.text import (  # noqa: E402
-    bpe_train_local,
+    bpe_train,
 )
 from data_observability_installer_spark.session import get_spark  # noqa: E402
 
@@ -50,7 +50,7 @@ def _measure(spark, docs, n_merges: int, vocab_cap: int) -> dict:
     spark_pass_s = time.monotonic() - t0
 
     t0 = time.monotonic()
-    merges = bpe_train_local(docs, n_merges=n_merges, vocab_cap=vocab_cap)
+    merges = bpe_train(docs, n_merges=n_merges, vocab_cap=vocab_cap)
     merges_done = merges.count()
     total_s = time.monotonic() - t0
     peak_rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0

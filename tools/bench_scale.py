@@ -208,9 +208,9 @@ def bpe_local_op(spark, path: str) -> None:
     """Round-7 production-merge-count claim: one distributed word-freq
     pass + a driver-local 256-merge loop — the curve must track the
     corpus scan, with the local loop constant-ish (vocabulary-sized)."""
-    from data_observability_installer_spark.operators.llm.text import bpe_train_local
+    from data_observability_installer_spark.operators.llm.text import bpe_train
 
-    bpe_train_local(spark.read.parquet(path), n_merges=256).count()
+    bpe_train(spark.read.parquet(path), n_merges=256).count()
 
 
 def fd_confidence_op(spark, path: str) -> None:
