@@ -22,8 +22,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ...functions.pin import pin
-from .dedup import _shingles_sql, exploded_shingles
+from ...functions.pin import pin, pinned
+from .dedup import (
+    _shingles_sql,
+    band_keys,
+    band_keys_sql,
+    exploded_shingles,
+    jaccard_score,
+    minhash_sig_sql,
+    minhash_signatures,
+    shingle_overlap,
+)
 
 
 def decontaminate(
@@ -113,75 +122,32 @@ def decontaminate_fuzzy(
     treat anything below ~0.25 as out of scope rather than silently
     half-covered.
     """
-    from .dedup import exploded_shingles, minhash_signatures
-
     rows_per_band = num_hashes // bands
-
-    def band_keys(sig: DataFrame, label: str) -> DataFrame:
-        return sig.select(
-            F.col("doc").alias(label),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat_ws(
-                                ":",
-                                *[
-                                    F.col(f"sig_{b * rows_per_band + r}").cast("string")
-                                    for r in range(rows_per_band)
-                                ],
-                            ).alias("key"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(label, "bk.band", "bk.key")
-
-    t_bands = band_keys(
-        minhash_signatures(docs, text_col, id_col, n, num_hashes), "doc"
-    )
-    b_bands = band_keys(
-        minhash_signatures(bench, text_col, id_col, n, num_hashes), "bench_doc"
-    )
-    # candidate pairs are result-sized and feed THREE consumers (the
-    # doc-side distinct, the verify semi-join, and transitively the
-    # sizes below) — pin them so the signature+banding pipeline runs
-    # once, not once per consumer (same fix as minhash_pairs)
-    cand = pin(
-        t_bands.join(F.broadcast(b_bands), ["band", "key"])
-        .select("doc", "bench_doc")
-        .distinct()
-    )
-
+    # each side shingles ONCE: the persisted shingle frame feeds its
+    # signatures and the exact verify; the result-sized pairs are pinned
+    # inside the scopes and both sides released on exit
     t_sh = exploded_shingles(docs, text_col, id_col, n)
-    b_sh = exploded_shingles(bench, text_col, id_col, n).withColumnRenamed(
-        "doc", "bench_doc"
-    )
-    cdocs = cand.select("doc").distinct()
-    t_shc = t_sh.join(cdocs, "doc", "semi")
-    t_sizes = t_shc.groupBy("doc").agg(F.count(F.lit(1)).alias("sz_t"))
-    b_sizes = b_sh.groupBy("bench_doc").agg(F.count(F.lit(1)).alias("sz_b"))
-    inter = (
-        t_shc.join(F.broadcast(b_sh), "sh")
-        .groupBy("doc", "bench_doc")
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(cand, ["doc", "bench_doc"], "semi")
-    )
-    jac = F.round(
-        F.col("inter") / (F.col("sz_t") + F.col("sz_b") - F.col("inter")), 4
-    )
-    return (
-        inter.join(t_sizes, "doc")
-        .join(F.broadcast(b_sizes), "bench_doc")
-        .select(
-            F.col("doc").alias(id_col),
-            "bench_doc",
-            jac.alias("jaccard"),
+    b_sh = exploded_shingles(bench, text_col, id_col, n)
+    with pinned(t_sh) as t, pinned(b_sh) as b:
+        t_bands = band_keys(minhash_signatures(t, num_hashes), rows_per_band, bands)
+        b_bands = band_keys(
+            minhash_signatures(b, num_hashes), rows_per_band, bands
+        ).withColumnRenamed("doc", "bench_doc")
+        # candidate pairs are result-sized and feed the doc-side distinct
+        # and the verify semi-join — pin them so the signature+banding
+        # pipeline runs once, not once per consumer
+        cand = pin(
+            t_bands.join(F.broadcast(b_bands), ["band", "key"])
+            .select("doc", "bench_doc")
+            .distinct()
         )
-        .filter(F.col("jaccard") >= threshold)
-    )
+        t_shc = t.join(cand.select("doc").distinct(), "doc", "semi")
+        out = (
+            shingle_overlap(t_shc, F.broadcast(b), None, "doc", "bench_doc", cand=cand)
+            .select(F.col("doc").alias(id_col), "bench_doc", jaccard_score().alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold)
+        )
+        return pin(out)
 
 
 def decontaminate_fuzzy_sql(
@@ -196,22 +162,8 @@ def decontaminate_fuzzy_sql(
 ) -> str:
     """DuckDB twin of :func:`decontaminate_fuzzy` (same md5-derived
     signatures, same banding, same exact verify)."""
-    from .dedup import minhash_sig_sql
-
     rows_per_band = num_hashes // bands
     sig_cols = minhash_sig_sql(num_hashes)
-
-    def band_union(src: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT doc, {b} AS band, "
-            + " || ':' || ".join(
-                f"CAST(sig_{b * rows_per_band + r} AS VARCHAR)"
-                for r in range(rows_per_band)
-            )
-            + f" AS key FROM {src}"
-            for b in range(bands)
-        )
-
     return f"""
     WITH t_sh AS MATERIALIZED (
       SELECT {id_col} AS doc, unnest({_shingles_sql(text_col, n)}) AS sh
@@ -222,8 +174,8 @@ def decontaminate_fuzzy_sql(
     t_sig AS MATERIALIZED (SELECT doc, {sig_cols} FROM t_sh GROUP BY doc),
     b_sig AS MATERIALIZED (
       SELECT bench_doc AS doc, {sig_cols} FROM b_sh GROUP BY bench_doc),
-    t_bk AS MATERIALIZED ({band_union("t_sig")}),
-    b_bk AS MATERIALIZED ({band_union("b_sig")}),
+    t_bk AS MATERIALIZED ({band_keys_sql("t_sig", rows_per_band, bands)}),
+    b_bk AS MATERIALIZED ({band_keys_sql("b_sig", rows_per_band, bands)}),
     cand AS MATERIALIZED (
       SELECT DISTINCT t.doc, b.doc AS bench_doc
       FROM t_bk t JOIN b_bk b ON t.band = b.band AND t.key = b.key),

@@ -60,7 +60,7 @@ def dedup_exact_sql(table: str, text_col: str = "text", id_col: str = "doc_id") 
 
 
 # ---------------------------------------------------------------------------
-# shingling (shared by jaccard + minhash)
+# shingling and the exact-overlap kernel (shared by the near-dup family)
 # ---------------------------------------------------------------------------
 
 
@@ -117,6 +117,50 @@ def capped_index(sh: DataFrame, max_df: int) -> DataFrame:
     return sh.join(keep.select("sh"), "sh")
 
 
+def _ordered_pair() -> Column:
+    """The symmetric screens' pair condition over the two overlap sides
+    ``x``/``y``: each unordered pair once, lower id first."""
+    return F.col("x.doc") < F.col("y.doc")
+
+
+def shingle_overlap(
+    x: DataFrame,
+    y: DataFrame,
+    pair: Column | None,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    cand: DataFrame | None = None,
+) -> DataFrame:
+    """The exact-overlap kernel every shingle-set score is built on:
+    (a, b, inter, sz_a, sz_b) for each pair of an ``x`` doc and a ``y``
+    doc that share at least one shingle, where ``inter`` is the shared
+    shingle count and ``sz_*`` each doc's set size. ``x``/``y`` are
+    (doc, sh) frames (pass the same frame twice for a self-join) and
+    ``pair`` an extra join condition over ``x.doc``/``y.doc``;
+    ``cand`` (columns a, b) semi-joins the pairs down to candidates
+    before the size joins. The self-join on shingle is the inverted-
+    index join: cost is Σ df(shingle)², never n²."""
+    sizes_x = x.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
+    sizes_y = sizes_x if y is x else y.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
+    on = F.col("x.sh") == F.col("y.sh")
+    inter = (
+        x.alias("x")
+        .join(y.alias("y"), on if pair is None else on & pair)
+        .groupBy(F.col("x.doc").alias(a), F.col("y.doc").alias(b))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    if cand is not None:
+        inter = inter.join(cand, [a, b], "semi")
+    return inter.join(
+        sizes_x.withColumnRenamed("doc", a).withColumnRenamed("sz", "sz_a"), a
+    ).join(sizes_y.withColumnRenamed("doc", b).withColumnRenamed("sz", "sz_b"), b)
+
+
+def jaccard_score() -> Column:
+    """Jaccard of an overlap row, rounded to 4 places in both engines."""
+    return F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4)
+
+
 # ---------------------------------------------------------------------------
 # n-gram Jaccard
 # ---------------------------------------------------------------------------
@@ -129,37 +173,25 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.4,
     max_df: int = 1000,
-    shingles: DataFrame | None = None,
     capped_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by n-gram Jaccard via inverted-index join.
-    ``shingles`` lets callers share one (persisted) exploded-shingle
-    frame across dedup operators instead of re-shingling the corpus;
-    ``capped_shingles`` goes further and shares the df-capped index
-    itself (skipping this function's own cap pass — the caller owns
-    that frame's persist lifecycle and must have applied the SAME
-    max_df)."""
-    # The capped index feeds THREE subtrees (sizes + both self-join
-    # sides); without persist Spark re-shingles the corpus for each.
-    # LIFECYCLE: when this call builds the index it owns the persist, so
-    # the result-sized pair list is pinned inside the scope and the
-    # corpus-sized index released on exit — callers sharing an index
-    # own its lifecycle themselves.
+    ``capped_shingles`` shares a caller-owned df-capped index (same
+    max_df) across dedup operators instead of re-shingling the corpus;
+    the caller owns that frame's persist lifecycle."""
+    # The index feeds THREE subtrees (sizes + both self-join sides). An
+    # owned index is persisted for the scope and released on exit, with
+    # the result-sized pair list pinned inside it.
     owned = capped_shingles is None
-    if owned:
-        sh0 = shingles if shingles is not None else exploded_shingles(df, text_col, id_col, n)
-    with pinned(capped_index(sh0, max_df)) if owned else nullcontext(capped_shingles) as sh:
-        sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+    index = (
+        capped_index(exploded_shingles(df, text_col, id_col, n), max_df)
+        if owned
+        else capped_shingles
+    )
+    with pinned(index) if owned else nullcontext(index) as sh:
         out = (
-            inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-            .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-            .withColumn("jaccard", F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4))
+            shingle_overlap(sh, sh, _ordered_pair())
+            .withColumn("jaccard", jaccard_score())
             .filter(F.col("jaccard") >= threshold)
             .select("doc_a", "doc_b", "jaccard")
         )
@@ -238,63 +270,18 @@ def minhash_sig_sql(num_hashes: int, sh_col: str = "sh") -> str:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, n: int, num_hashes: int
-) -> DataFrame:
-    """(doc, sig_0..sig_{H-1}): per-doc minima of H affine rehashes of
-    one md5 per shingle. One explode + one groupBy — the signature agg
-    is map-side partial."""
-    sh = exploded_shingles(df, text_col, id_col, n)
+def minhash_signatures(sh: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc, sig_0..sig_{H-1}) of a (doc, sh) shingle frame: per-doc
+    minima of H affine rehashes of one md5 per shingle. One groupBy —
+    the signature agg is map-side partial."""
     return sh.groupBy("doc").agg(*minhash_sig_cols(num_hashes))
 
 
-def minhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 12,
-    bands: int = 4,
-    threshold: float = 0.4,
-    max_df: int = 1000,
-    shingles: DataFrame | None = None,
-    capped_shingles: DataFrame | None = None,
-) -> DataFrame:
-    """LSH-banded candidate pairs, verified with exact Jaccard.
-
-    num_hashes/bands = rows-per-band r; P(candidate) = 1-(1-j^r)^bands.
-    Only same-band buckets join, so candidate generation is linear in
-    collisions; the exact verify touches candidates only.
-    ``capped_shingles`` shares a caller-owned df-capped index (same
-    max_df) so the verify skips its own cap pass.
-    """
-    rows_per_band = num_hashes // bands
-    # ONE shingling pass feeds signatures, the df-cap, and the exact
-    # verify — persisted so the corpus is shingled exactly once (or
-    # shared across operators when the caller passes ``shingles``).
-    # LIFECYCLE: when this call owns the persist, the result-sized
-    # verified pairs are pinned inside the scope and the corpus-sized
-    # shingle frame released on exit.
-    owned = shingles is None
-    scope = pinned(exploded_shingles(df, text_col, id_col, n)) if owned else nullcontext(shingles)
-    with scope as sh0:
-        out = _minhash_pairs_body(
-            sh0, rows_per_band, num_hashes, bands, threshold, max_df, capped_shingles
-        )
-        return pin(out) if owned else out
-
-
-def _minhash_pairs_body(
-    sh0: DataFrame,
-    rows_per_band: int,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-    max_df: int,
-    capped_shingles: DataFrame | None,
-) -> DataFrame:
-    sig = sh0.groupBy("doc").agg(*minhash_sig_cols(num_hashes))
-    band_keys = sig.select(
+def band_keys(sig: DataFrame, rows_per_band: int, bands: int) -> DataFrame:
+    """(doc, band, key): a (doc, sig_*) frame split into ``bands`` LSH
+    bands of ``rows_per_band`` signature values each; ``key`` joins a
+    band's values with ':' (bit-equal to :func:`band_keys_sql`)."""
+    return sig.select(
         "doc",
         F.explode(
             F.array(
@@ -314,49 +301,95 @@ def _minhash_pairs_body(
             )
         ).alias("bk"),
     ).select("doc", "bk.band", "bk.key")
-    a, b = band_keys.alias("a"), band_keys.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
+
+
+def band_keys_sql(src: str, rows_per_band: int, bands: int) -> str:
+    """DuckDB twin of :func:`band_keys` over the signature relation
+    ``src``: one ``UNION ALL`` branch per band."""
+    return " UNION ALL ".join(
+        f"SELECT doc, {b} AS band, "
+        + " || ':' || ".join(
+            f"CAST(sig_{b * rows_per_band + r} AS VARCHAR)" for r in range(rows_per_band)
         )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
+        + f" AS key FROM {src}"
+        for b in range(bands)
     )
+
+
+def minhash_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    num_hashes: int = 12,
+    bands: int = 4,
+    threshold: float = 0.4,
+    max_df: int = 1000,
+    shingles: DataFrame | None = None,
+    capped_shingles: DataFrame | None = None,
+) -> DataFrame:
+    """LSH-banded candidate pairs, verified with exact Jaccard.
+
+    num_hashes/bands = rows-per-band r; P(candidate) = 1-(1-j^r)^bands.
+    Only same-band buckets join, so candidate generation is linear in
+    collisions; the exact verify touches candidates only.
+    ``shingles`` shares a caller-owned shingle frame and
+    ``capped_shingles`` a caller-owned df-capped index (same max_df), so
+    the verify skips its own cap pass.
+    """
+    # ONE shingling pass feeds signatures, the df-cap, and the exact
+    # verify. An owned shingle frame is persisted for the scope, with
+    # the result-sized verified pairs pinned inside it.
+    owned = shingles is None
+    sh = exploded_shingles(df, text_col, id_col, n) if owned else shingles
+    with pinned(sh) if owned else nullcontext(sh) as sh0:
+        verify = capped_shingles if capped_shingles is not None else capped_index(sh0, max_df)
+        out = _minhash_verified(sh0, verify, num_hashes, bands, threshold, _ordered_pair())
+        return pin(out) if owned else out
+
+
+def _minhash_verified(
+    sh0: DataFrame,
+    verify: DataFrame,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    pair: Column,
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """The MinHash screen over one shingle frame: signatures from
+    ``sh0``, band collisions that satisfy ``pair`` (over ``x.doc`` /
+    ``y.doc``) as candidates (a, b), each verified with exact Jaccard on
+    the ``verify`` index. Returns (a, b, jaccard) at >= threshold."""
+    bk = band_keys(minhash_signatures(sh0, num_hashes), num_hashes // bands, bands)
     # cand is RESULT-sized (LSH collisions only) but feeds THREE
     # subtrees (both cdocs union branches + the verify semi-join);
     # without a pin the signature+banding+self-join pipeline re-runs
     # per consumer past whatever exchanges happen to be reused.
-    cand = pin(cand)
-    # Exact verify scoped to CANDIDATES ONLY: semi-join the df-capped
-    # shingle index down to docs that appear in some candidate pair, so
-    # the pair self-join is bounded by LSH collisions, never Σ df².
-    sh = capped_shingles if capped_shingles is not None else capped_index(sh0, max_df)
-    cdocs = (
-        cand.select(F.col("doc_a").alias("doc"))
-        .union(cand.select(F.col("doc_b").alias("doc")))
+    cand = pin(
+        bk.alias("x")
+        .join(
+            bk.alias("y"),
+            (F.col("x.band") == F.col("y.band")) & (F.col("x.key") == F.col("y.key")) & pair,
+        )
+        .select(F.col("x.doc").alias(a), F.col("y.doc").alias(b))
         .distinct()
     )
-    shc = sh.join(cdocs, "doc", "semi")
-    sizes = shc.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    x, y = shc.alias("x"), shc.alias("y")
-    inter = (
-        x.join(y, (F.col("x.sh") == F.col("y.sh")) & (F.col("x.doc") < F.col("y.doc")))
-        .groupBy(F.col("x.doc").alias("doc_a"), F.col("y.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(cand, ["doc_a", "doc_b"], "semi")
+    # Exact verify scoped to CANDIDATES ONLY: semi-join the index down
+    # to docs that appear in some candidate pair, so the overlap join is
+    # bounded by LSH collisions, never Σ df².
+    cdocs = (
+        cand.select(F.col(a).alias("doc"))
+        .union(cand.select(F.col(b).alias("doc")))
+        .distinct()
     )
+    shc = verify.join(cdocs, "doc", "semi")
     return (
-        inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4),
-        )
+        shingle_overlap(shc, shc, pair, a, b, cand=cand)
+        .withColumn("jaccard", jaccard_score())
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .select(a, b, "jaccard")
     )
 
 
@@ -370,21 +403,12 @@ def minhash_pairs_sql(
     threshold: float = 0.4,
     max_df: int = 1000,
 ) -> str:
-    rows_per_band = num_hashes // bands
     sig_cols = minhash_sig_sql(num_hashes)
-    band_selects = " UNION ALL ".join(
-        f"SELECT doc, {b} AS band, "
-        + " || ':' || ".join(
-            f"CAST(sig_{b * rows_per_band + r} AS VARCHAR)" for r in range(rows_per_band)
-        )
-        + " AS key FROM sig"
-        for b in range(bands)
-    )
     return f"""
     WITH shx AS MATERIALIZED (
       SELECT {id_col} AS doc, unnest({_shingles_sql(text_col, n)}) AS sh FROM {table}),
     sig AS MATERIALIZED (SELECT doc, {sig_cols} FROM shx GROUP BY doc),
-    bk AS MATERIALIZED ({band_selects}),
+    bk AS MATERIALIZED ({band_keys_sql("sig", num_hashes // bands, bands)}),
     cand AS MATERIALIZED (
       SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
       FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key AND a.doc < b.doc),
@@ -937,91 +961,13 @@ def minhash_incremental(
     Returns (new_id, dup_of, jaccard): the new doc, an existing doc it
     collides with at >= threshold.
     """
-    rows_per_band = num_hashes // bands
-    # ONE shingling pass feeds signatures AND the exact verify — same
-    # persist contract as minhash_pairs (without it the shingle
-    # pipeline re-executed under every downstream consumer: 22 corpus
-    # scans in the bench plan vs 1 table). LIFECYCLE: the result-sized
-    # pair list is pinned inside the scope and the corpus-sized shingle
-    # frame released on exit.
+    # the one-batch case of minhash_pairs: a new x old candidate
+    # predicate, and the verify reads the raw (uncapped) shingles
+    newer = (F.col("x.doc") >= new_min_id) & (F.col("y.doc") < new_min_id)
     with pinned(exploded_shingles(df, text_col, id_col, n)) as sh0:
         return pin(
-            _minhash_incremental_body(sh0, new_min_id, rows_per_band, num_hashes, bands, threshold)
+            _minhash_verified(sh0, sh0, num_hashes, bands, threshold, newer, "new_id", "dup_of")
         )
-
-
-def _minhash_incremental_body(
-    sh0: DataFrame,
-    new_min_id: int,
-    rows_per_band: int,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-) -> DataFrame:
-    sig = sh0.groupBy("doc").agg(*minhash_sig_cols(num_hashes))
-    band_keys = sig.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"sig_{b * rows_per_band + r}").cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "bk.band", "bk.key")
-    new_b = band_keys.filter(F.col("doc") >= new_min_id).alias("nb")
-    old_b = band_keys.filter(F.col("doc") < new_min_id).alias("ob")
-    cand = (
-        new_b.join(
-            old_b,
-            (F.col("nb.band") == F.col("ob.band")) & (F.col("nb.key") == F.col("ob.key")),
-        )
-        .select(F.col("nb.doc").alias("new_id"), F.col("ob.doc").alias("dup_of"))
-        .distinct()
-    )
-    # cand is RESULT-sized (LSH collisions only) but feeds THREE
-    # subtrees (both cdocs union branches + the verify semi-join) —
-    # pin it like minhash_pairs does, so banding runs once.
-    cand = pin(cand)
-    cdocs = (
-        cand.select(F.col("new_id").alias("doc"))
-        .union(cand.select(F.col("dup_of").alias("doc")))
-        .distinct()
-    )
-    shc = sh0.join(cdocs, "doc", "semi")
-    sizes = shc.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    x, y = shc.alias("x"), shc.alias("y")
-    inter = (
-        x.join(
-            y,
-            (F.col("x.sh") == F.col("y.sh"))
-            & (F.col("x.doc") >= new_min_id)
-            & (F.col("y.doc") < new_min_id),
-        )
-        .groupBy(F.col("x.doc").alias("new_id"), F.col("y.doc").alias("dup_of"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(cand, ["new_id", "dup_of"], "semi")
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc", "new_id").withColumnRenamed("sz", "sz_n"), "new_id")
-        .join(sizes.withColumnRenamed("doc", "dup_of").withColumnRenamed("sz", "sz_o"), "dup_of")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz_n") + F.col("sz_o") - F.col("inter")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "dup_of", "jaccard")
-    )
 
 
 def minhash_incremental_sql(
@@ -1034,21 +980,12 @@ def minhash_incremental_sql(
     bands: int = 4,
     threshold: float = 0.4,
 ) -> str:
-    rows_per_band = num_hashes // bands
     sig_cols = minhash_sig_sql(num_hashes)
-    band_selects = " UNION ALL ".join(
-        f"SELECT doc, {b} AS band, "
-        + " || ':' || ".join(
-            f"CAST(sig_{b * rows_per_band + r} AS VARCHAR)" for r in range(rows_per_band)
-        )
-        + " AS key FROM sig"
-        for b in range(bands)
-    )
     return f"""
     WITH shx AS MATERIALIZED (
       SELECT {id_col} AS doc, unnest({_shingles_sql(text_col, n)}) AS sh FROM {table}),
     sig AS MATERIALIZED (SELECT doc, {sig_cols} FROM shx GROUP BY doc),
-    bk AS MATERIALIZED ({band_selects}),
+    bk AS MATERIALIZED ({band_keys_sql("sig", num_hashes // bands, bands)}),
     cand AS MATERIALIZED (
       SELECT DISTINCT nb.doc AS new_id, ob.doc AS dup_of
       FROM bk nb JOIN bk ob ON nb.band = ob.band AND nb.key = ob.key
@@ -1261,25 +1198,14 @@ def ngram_containment_pairs(
     hash-exact with no float-rounding hazard."""
     # LIFECYCLE: an owned index is released on exit, the result pinned
     owned = capped_shingles is None
-    if owned:
-        sh0 = exploded_shingles(df, text_col, id_col, n)
-    with pinned(capped_index(sh0, max_df)) if owned else nullcontext(capped_shingles) as sh:
-        sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count(F.lit(1)).cast("long").alias("inter"))
-        )
+    index = (
+        capped_index(exploded_shingles(df, text_col, id_col, n), max_df)
+        if owned
+        else capped_shingles
+    )
+    with pinned(index) if owned else nullcontext(index) as sh:
         out = (
-            inter.join(
-                sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("sz", "sz_a"),
-                "doc_a",
-            )
-            .join(
-                sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("sz", "sz_b"),
-                "doc_b",
-            )
+            shingle_overlap(sh, sh, _ordered_pair())
             .withColumn(
                 "containment_bp",
                 F.expr("CAST(inter * 10000L DIV least(sz_a, sz_b) AS BIGINT)"),
@@ -1361,63 +1287,43 @@ def jaccard_threshold_sweep(
     with the shared index the plan is returned lazily and cache
     ownership stays with the caller (the registry's plan gate pins
     this path to the shared cache)."""
-    spark = df.sparkSession
     floor_bp = min(int(t) for t in thresholds_bp)
     owned = capped_shingles is None
-    sh = capped_shingles
-    if owned:
-        sh = capped_index(exploded_shingles(df, text_col, id_col, n), max_df)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .selectExpr(
+    index = (
+        capped_index(exploded_shingles(df, text_col, id_col, n), max_df)
+        if owned
+        else capped_shingles
+    )
+    with pinned(index) if owned else nullcontext(index) as sh:
+        pairs = shingle_overlap(sh, sh, _ordered_pair()).selectExpr(
             "doc_a",
             "doc_b",
             "CAST(inter * 10000 DIV (sz_a + sz_b - inter) AS BIGINT) AS j_bp",
+        ).filter(F.col("j_bp") >= floor_bp)
+        th = df.sparkSession.sql(
+            "SELECT * FROM VALUES "
+            + ", ".join(f"({int(t)})" for t in sorted(set(thresholds_bp)))
+            + " AS t(threshold_bp)"
         )
-        .filter(F.col("j_bp") >= floor_bp)
-    )
-    th = spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(f"({int(t)})" for t in sorted(set(thresholds_bp)))
-        + " AS t(threshold_bp)"
-    )
-    hits = pairs.join(
-        F.broadcast(th), F.col("j_bp") >= F.col("threshold_bp")
-    )
-    agg = (
-        hits.select(
-            "threshold_bp", F.explode(F.array("doc_a", "doc_b")).alias("doc")
+        hits = pairs.join(F.broadcast(th), F.col("j_bp") >= F.col("threshold_bp"))
+        agg = (
+            hits.select("threshold_bp", F.explode(F.array("doc_a", "doc_b")).alias("doc"))
+            .groupBy("threshold_bp")
+            .agg(
+                F.expr("CAST(count(1) DIV 2 AS BIGINT)").alias("n_pairs"),
+                F.countDistinct("doc").cast("long").alias("n_docs"),
+            )
         )
-        .groupBy("threshold_bp")
-        .agg(
-            F.expr("CAST(count(1) DIV 2 AS BIGINT)").alias("n_pairs"),
-            F.countDistinct("doc").cast("long").alias("n_docs"),
+        out = (
+            th.join(agg, "threshold_bp", "left")
+            .selectExpr(
+                "threshold_bp",
+                "coalesce(n_pairs, 0L) AS n_pairs",
+                "coalesce(n_docs, 0L) AS n_docs",
+            )
+            .orderBy("threshold_bp")
         )
-    )
-    out = (
-        th.join(agg, "threshold_bp", "left")
-        .selectExpr(
-            "threshold_bp",
-            "coalesce(n_pairs, 0L) AS n_pairs",
-            "coalesce(n_docs, 0L) AS n_docs",
-        )
-        .orderBy("threshold_bp")
-    )
-    if not owned:
-        return out  # shared index: lazy plan, cache owned by the caller
-    with pinned(sh):  # the owned index feeds sizes + both self-join sides
-        rows = out.collect()  # threshold-count-sized by construction
-    return (
-        spark.createDataFrame(rows, out.schema)
-        .coalesce(1)
-        .orderBy("threshold_bp")
-    )
+        return pin(out) if owned else out
 
 
 def jaccard_threshold_sweep_sql(

@@ -557,11 +557,13 @@ def _bpe_tokens(
             (r["left_tok"], r["right_tok"])
             for r in bpe_train(df, n_merges, text_col).collect()
         ]
+    # (?s): without it Java's '.' skips the line terminators (U+2028,
+    # U+2029, U+0085) that the trainer and the RE2 twin treat as characters
     col = F.array_join(
         F.transform(
             F.split(F.lower(F.col(text_col)), r"\s+"),
             lambda w: F.concat(
-                F.lit(_BPE_D), F.regexp_replace(w, "(.)", "$1" + _BPE_D)
+                F.lit(_BPE_D), F.regexp_replace(w, "(?s)(.)", "$1" + _BPE_D)
             ),
         ),
         " ",

@@ -204,6 +204,28 @@ def test_bpe_encode_applies_merges(spark):
     assert "b" not in got2  # every b was consumed by the merge
 
 
+def test_bpe_encode_line_terminator_matches_twin(spark):
+    """A line terminator the whitespace split leaves inside a word
+    (U+2028 here) is one character to the trainer and both appliers:
+    the Spark tokens equal the DuckDB twin's."""
+    import duckdb
+
+    from data_observability_installer_spark.operators.llm.text import (
+        bpe_encode_tokens,
+        bpe_encode_tokens_sql,
+    )
+
+    text = "x\u2028y x\u2028y zz"
+    df = spark.createDataFrame([(text,)], "text string")
+    got = sorted(tuple(r) for r in bpe_encode_tokens(df, n_merges=1).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE planted AS SELECT ? AS text", [text])
+    twin = sorted(
+        tuple(r) for r in con.execute(bpe_encode_tokens_sql("planted", n_merges=1)).fetchall()
+    )
+    assert got == twin
+
+
 def test_bpe_compression_counts_are_exact_and_merges_compress(spark):
     """Token counts must equal the pure-Python tokenizer's, and more
     merges can only reduce (never raise) a slice's token count."""

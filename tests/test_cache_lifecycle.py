@@ -90,7 +90,7 @@ def test_operator_persists_released(spark, sf_smoke, tmp_path, monkeypatch):
         TABLE_LEVEL,
         TestSpec,
     )
-    from data_observability_installer_spark.operators.llm import curation, dedup
+    from data_observability_installer_spark.operators.llm import curation, decontam, dedup
     from data_observability_installer_spark.plans.suites import AS_OF
     from data_observability_installer_spark.sources.sinks import (
         ContractViolation,
@@ -127,6 +127,11 @@ def test_operator_persists_released(spark, sf_smoke, tmp_path, monkeypatch):
     out = dedup.jaccard_threshold_sweep(docs)
     out.collect()
     assert _persisted_rdd_count(spark) == 0, "jaccard_threshold_sweep leaked a persist"
+
+    train, bench = docs.filter(F.col("doc_id") % 20 != 0), docs.filter(F.col("doc_id") % 20 == 0)
+    out = decontam.decontaminate_fuzzy(train, bench, n=3, threshold=0.3)
+    out.collect()
+    assert _persisted_rdd_count(spark) == 0, "decontaminate_fuzzy leaked a persist"
 
     # the contract gate releases its pin on the publish path AND when
     # the suite rejects the frame

@@ -93,6 +93,52 @@ def test_minhash_verify_is_candidate_scoped(docs):
     assert "LeftSemi" in plan
 
 
+def test_minhash_incremental_is_one_batch_minhash_pairs(spark, sf_smoke):
+    """With no shingle above the df cap, the incremental screen is the
+    full screen restricted to old x new pairs: (b, a, j) for every
+    (a, b, j) of minhash_pairs with a < m <= b."""
+    from data_observability_installer_spark.operators.llm.dedup import minhash_incremental
+    from data_observability_installer_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_smoke, "documents")
+    m = 250
+    full = minhash_pairs(docs, threshold=0.3, max_df=docs.count() + 1).collect()
+    want = {(b, a, j) for a, b, j in map(tuple, full) if a < m <= b}
+    got = set(map(tuple, minhash_incremental(docs, new_min_id=m, threshold=0.3).collect()))
+    assert want, "no old x new near-dup pairs at smoke scale"
+    assert got == want
+
+
+# measured at sf_smoke, shared shingle caches built inside the call: 25
+# or 26 jobs. The verify plan is fixed; which one runs depends on AQE's
+# runtime re-planning racing concurrent query stages (whether the
+# candidate-docs semi-join reads a coalesced shuffle or a broadcast
+# depends on which stage finishes first), so the budget is the maximum.
+MINHASH_PAIRS_DOCUMENTS_JOB_BUDGET = 26
+
+
+def test_minhash_pairs_documents_job_budget(spark, sf_smoke):
+    """Job tripwire for the registry query: signatures, band
+    collisions, the candidate pin and the candidate-scoped verify run
+    a fixed handful of Spark jobs."""
+    from data_observability_installer_spark.plans import registry
+
+    registry.clear_caches()
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash_pairs_documents_budget", "job-budget run")
+    try:
+        rows = registry.queries()["minhash_pairs_documents"](spark, sf_smoke).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("minhash_pairs_documents_budget")
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows
+    assert len(jobs) <= MINHASH_PAIRS_DOCUMENTS_JOB_BUDGET, (
+        f"minhash_pairs_documents ran {len(jobs)} Spark jobs "
+        f"(budget {MINHASH_PAIRS_DOCUMENTS_JOB_BUDGET})"
+    )
+
+
 def test_dedup_groups_connected_components(spark):
     from data_observability_installer_spark.operators.llm.dedup import dedup_groups
 

@@ -777,3 +777,44 @@ def test_decontam_fuzzy_candidates_pinned(spark, sf_smoke):
     final = plan.split("== Initial Plan ==")[0]
     assert "Scan ExistingRDD" in final
     assert final.count("FileScan parquet") <= 14, final.count("FileScan parquet")
+
+
+def _documents_scans(df) -> int:
+    """documents.parquet scans among the leaves of ``df``'s executed
+    plan. A persisted frame is an InMemoryTableScan leaf and a pin a
+    checkpoint-scan leaf, so scans that feed a cache are not counted
+    again in every consumer."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    # a leaf's own line: its toString would also print a cached plan
+    heads = [leaves.apply(i).simpleString(25) for i in range(leaves.size())]
+    return sum(h.startswith("FileScan parquet") and "documents.parquet" in h for h in heads)
+
+
+def test_decontam_fuzzy_reads_each_side_once(spark, sf_smoke, monkeypatch):
+    """Each side of the fuzzy decontamination shingles ONCE: over every
+    frame the operator executes (its persisted shingle sides, its pins
+    and the returned frame), documents.parquet is scanned twice in all —
+    train once, bench once. Re-shingling each side for the signatures,
+    the overlap join and the sizes read it three times per side."""
+    from data_observability_installer_spark.operators.llm import decontam
+
+    scans = []
+
+    def spy(name, real):
+        def wrapper(df, *args, **kwargs):
+            scans.append((name, _documents_scans(df)))
+            return real(df, *args, **kwargs)
+
+        return wrapper
+
+    for name in ("pin", "pinned"):
+        if hasattr(decontam, name):
+            monkeypatch.setattr(decontam, name, spy(name, getattr(decontam, name)))
+    out = registry.QUERIES["decontam_fuzzy_documents"](spark, sf_smoke)
+    scans.append(("result", _documents_scans(out)))
+    assert out.count() > 0
+    assert sum(n for _, n in scans) == 2, scans
+    assert [n for name, n in scans if name == "pinned"] == [1, 1], scans

@@ -196,12 +196,13 @@ def test_minhash_signature_range_and_determinism(spark, texts):
     [0, p) and recomputation is bit-identical (no per-run salt)."""
     from data_observability_installer_spark.operators.llm.dedup import (
         _MINHASH_PRIME,
+        exploded_shingles,
         minhash_signatures,
     )
 
     df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
-    a = minhash_signatures(df, "text", "doc_id", n=2, num_hashes=4).collect()
-    b = minhash_signatures(df, "text", "doc_id", n=2, num_hashes=4).collect()
+    a = minhash_signatures(exploded_shingles(df, "text", "doc_id", 2), num_hashes=4).collect()
+    b = minhash_signatures(exploded_shingles(df, "text", "doc_id", 2), num_hashes=4).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     for row in a:
         for i in range(4):
