@@ -70,6 +70,11 @@ def zvalue_expr(
     return F.expr(_interleave_sql(ranks, bits))
 
 
+# z-value prefix width of the file-boundary histogram: at most 2^16
+# (prefix, count) rows reach the driver, whatever the table size
+_ZORDER_HIST_BITS = 16
+
+
 def zorder_by(
     df: DataFrame,
     cols: list[str],
@@ -81,7 +86,14 @@ def zorder_by(
     curve segment) and sort within partitions (so row groups inside a
     file are compact too). Write the result with a plain
     ``.write.parquet`` and every ``cols`` dimension prunes on footer
-    stats. Bounds come from one metadata-sized min/max pass."""
+    stats. Bounds come from one metadata-sized min/max pass.
+
+    The file boundaries are a function of the data only: one histogram
+    pass over the z-value prefixes gives exact equal-count cut points,
+    and each row is routed to its segment's partition by a hash key
+    chosen to land there. (``repartitionByRange`` samples with a seed
+    derived from the RDD id, so its boundaries — and which rows share a
+    file — moved with how many RDDs the session had created before.)"""
     row = df.agg(
         *[F.min(c).cast("double").alias(f"lo_{c}") for c in cols],
         *[F.max(c).cast("double").alias(f"hi_{c}") for c in cols],
@@ -94,11 +106,37 @@ def zorder_by(
         for c in cols
     }
     z = df.withColumn("_z", zvalue_expr(bounds, bits))
-    parts = n_files or df.sparkSession.sparkContext.defaultParallelism
+    spark = df.sparkSession
+    parts = n_files or spark.sparkContext.defaultParallelism
+    prefix = F.shiftright("_z", max(0, bits * len(cols) - _ZORDER_HIST_BITS))
+    hist = sorted(
+        (r[0], r[1]) for r in z.groupBy(prefix.alias("p")).count().collect()
+    )
+    # cut i = the prefix where the running count first reaches i/parts
+    # of the rows; file i then holds the prefixes in (cut[i-1], cut[i]]
+    total, run, cuts = sum(ct for _, ct in hist), 0, []
+    for p, ct in hist:
+        run += ct
+        while len(cuts) < parts - 1 and run * parts >= (len(cuts) + 1) * total:
+            cuts.append(p)
+    # the smallest id whose hash partition (pmod(hash(id), parts), the
+    # rule repartition(parts, col) applies) is i routes segment i to
+    # partition i — one key per partition, no collisions
+    keys = dict(
+        spark.range(64 * parts)
+        .groupBy(F.expr(f"pmod(hash(id), {parts})"))
+        .agg(F.min("id"))
+        .collect()
+    )
+    seg = F.size(F.filter(F.array(*[F.lit(c) for c in cuts]), lambda c: c < prefix))
+    route = F.element_at(
+        F.array(*[F.lit(keys[i]).cast("long") for i in range(parts)]), seg + 1
+    )
     return (
-        z.repartitionByRange(parts, F.col("_z"))
+        z.withColumn("_k", route)
+        .repartition(parts, "_k")
         .sortWithinPartitions("_z")
-        .drop("_z")
+        .drop("_z", "_k")
     )
 
 

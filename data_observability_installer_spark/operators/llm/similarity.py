@@ -72,6 +72,15 @@ def _cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
+def _cos_bp(a: str, b: str, na: str, nb: str) -> Column:
+    """floor(cosine * 1e4 + 0.5) of vector columns ``a``/``b`` with
+    norm columns ``na``/``nb``: the rounded score every exact rescore
+    and near-dup verdict ranks on (bit-stable across engines)."""
+    return F.floor(
+        _dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)) * 10000 + F.lit(0.5)
+    )
+
+
 def _cosine_sql(a: str, b: str) -> str:
     return (
         f"list_inner_product({a}::DOUBLE[], {b}::DOUBLE[]) / "
@@ -288,15 +297,16 @@ def ivf_index(
 IVF_SCALE = 1_000_000
 
 
+# Engine-portable component quantizer: floor(x*scale + 0.5) (the
+# documented bit-stable idiom — round() to integer can differ between
+# Spark's shortest-decimal and DuckDB's binary rounding at half-ulp
+# boundaries). The same lambda body is valid Spark SQL and DuckDB SQL.
+_QUANT_X = f"CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)"
+
+
 def _quant_sql(emb_sql: str) -> str:
-    """Engine-portable embedding quantizer: floor(x*scale + 0.5) (the
-    documented bit-stable idiom — round() to integer can differ between
-    Spark's shortest-decimal and DuckDB's binary rounding at half-ulp
-    boundaries), as Spark-SQL text."""
-    return (
-        f"transform({emb_sql}, x -> "
-        f"CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT))"
-    )
+    """The embedding quantizer as Spark-SQL text."""
+    return f"transform({emb_sql}, x -> {_QUANT_X})"
 
 
 def _int_arr_sql(values: list[int]) -> str:
@@ -420,62 +430,84 @@ def train_ivf_kmeans(
                 f"{len(seeds)}"
             )
         cents = {b: [int(v) for v in r["eq"]] for b, r in enumerate(seeds)}
-        dim = len(cents[0])
     else:
-        lits = ivf_centroids(n_clusters=n_clusters)
-        dim = len(lits[0])
-        cents = {
-            b: [int(math.floor(v * IVF_SCALE + 0.5)) for v in row]
-            for b, row in enumerate(lits)
-        }
-    # Quantize ONCE and persist across the Lloyd iterations: each
-    # iteration's assignment pass otherwise re-scans the corpus and
-    # re-runs the quantize transform (iters full scans instead of one
-    # — guide §5: reused AND expensive to recompute). Unpersisted on
-    # every exit path; driver state stays centroid-sized.
+        cents = _ivf_init(n_clusters)
     eq = embeddings.select(F.expr(_quant_sql("embedding")).alias("eq"))
-    with pinned(eq) if iters > 1 else nullcontext():
-        return _lloyd_iters(eq, cents, n_clusters, dim, iters)
+    return _lloyd(eq, [cents], iters, keep_dead=False)[0]
 
 
-def _lloyd_iters(
-    eq: DataFrame,
-    cents: dict[int, list[int]],
-    n_clusters: int,
-    dim: int,
+def _ivf_init(n_clusters: int) -> dict[int, list[int]]:
+    """The fixed literal init (:func:`ivf_centroids`) on the IVF_SCALE
+    integer grid: the cells every fixed-init trainer and twin starts
+    from."""
+    return {
+        b: [int(math.floor(v * IVF_SCALE + 0.5)) for v in row]
+        for b, row in enumerate(ivf_centroids(n_clusters=n_clusters))
+    }
+
+
+def _lloyd(
+    vecs: DataFrame,
+    books: list[dict[int, list[int]]],
     iters: int,
-) -> dict[int, list[int]]:
-    for _ in range(iters):
-        assigned = eq.select(
-            "eq", F.expr(_argmin_bucket_sql("eq", cents, n_clusters)).alias("bucket")
-        )
-        rows = (
-            assigned.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.sum(F.element_at("eq", d + 1)).alias(f"s{d}") for d in range(dim)],
+    keep_dead: bool,
+) -> list[dict[int, list[int]]]:
+    """The one deterministic Lloyd loop behind :func:`train_ivf_kmeans`,
+    :func:`train_pq` and :func:`train_pq_residuals`: ``vecs``' ``eq``
+    int-array column splits into ``len(books)`` equal subspaces, each
+    with its own {id: integer centroid} book (IVF is the one-subspace
+    case). One Spark pass per iteration covers ALL subspaces: every row
+    explodes into (j, bucket, sub) entries, bucket = the exact int64
+    argmin of :func:`_argmin_bucket_sql` (ties to the lowest id), and a
+    single groupBy((j, bucket)) folds int64 component sums (order-
+    independent) — the shuffle count is ``iters``, not ``iters * m``.
+
+    The update mirrors the DuckDB twins' CAST(sum AS DOUBLE) / count(*)
+    EXACTLY (int->double conversion of the sum first, then one double
+    division — Python's one-rounding int/int true division differs by
+    an ulp once |sum| > 2^53), then floor(x+0.5), which is bit-stable.
+    Bit-parity therefore holds while every component sum stays within
+    2^53. Driver state is centroid-sized per round.
+
+    ``keep_dead``: a centroid that loses all members keeps its previous
+    row (PQ — codes index book POSITIONS, so a book stays k-long), or
+    is dropped (IVF — the SQL twin's empty cell simply has no centroid
+    row)."""
+    # ids stay below the initial book size, so it is the argmin's encode
+    # base in every round, whichever centroids die
+    n_enc, d = len(books[0]), len(next(iter(books[0].values())))
+    # Persist the input across iterations: every assignment pass would
+    # otherwise re-scan the corpus and re-derive ``eq`` (quantize, and
+    # for residual training the coarse argmin + zip_with residual) —
+    # guide §5: reused AND expensive to recompute. Unpersisted on every
+    # exit path.
+    with pinned(vecs) if iters > 1 else nullcontext():
+        for _ in range(iters):
+            entries = []
+            for j, book in enumerate(books):
+                sub = f"slice(eq, {j * d + 1}, {d})"
+                argmin = _argmin_bucket_sql(sub, book, n_enc)
+                entries.append(
+                    f"named_struct('j', {j}, 'bucket', {argmin}, 'sub', {sub})"
+                )
+            rows = (
+                vecs.selectExpr(f"inline(array({', '.join(entries)}))")
+                .groupBy("j", "bucket")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    *[F.sum(F.element_at("sub", i + 1)).alias(f"s{i}") for i in range(d)],
+                )
+                .collect()
             )
-            .collect()
-        )
-        if not rows:
-            break  # empty table: nothing to train on, keep current cells
-        cents = {
-            int(r["bucket"]): [
-                # mirror the twin's arithmetic EXACTLY: the DuckDB CTE
-                # computes CAST(sum AS DOUBLE) / count(*) — int->double
-                # conversion of the sum first, then a double division —
-                # so convert here too rather than using Python's
-                # one-rounding int/int true division (they differ by an
-                # ulp once |sum| > 2^53). Bit-parity therefore holds
-                # while every bucket's component sum stays within 2^53
-                # (|component| <= IVF_SCALE => safe below ~9e8 rows per
-                # bucket at IVF_SCALE=1e4); floor(x+0.5) is bit-stable
-                int(math.floor(float(r[f"s{d}"]) / r["n"] + 0.5))
-                for d in range(dim)
-            ]
-            for r in rows
-        }
-    return cents
+            if not rows:
+                break  # empty table: nothing to train on, keep current books
+            books = [dict(book) if keep_dead else {} for book in books]
+            for r in rows:
+                books[int(r["j"])][int(r["bucket"])] = [
+                    int(math.floor(float(r[f"s{i}"]) / r["n"] + 0.5))
+                    for i in range(d)
+                ]
+    return books
 
 
 def topk_ivf(
@@ -553,58 +585,196 @@ def topk_ivf(
     )
 
 
-def _ivf_train_ctes(
-    table: str, id_col: str, n_clusters: int, iters: int
-) -> tuple[list[str], str, str]:
-    """Shared trainer unrolling for the learned-centroid DuckDB twins:
-    CTEs c0 (literal integer init), e (quantized + normed corpus),
-    a{i}/c{i} (one Lloyd assignment/update per iteration), and af (the
-    final trained assignment carrying vid/embedding/nrm/bucket).
-    Returns (ctes, final_centroid_cte_name, dist_sql). Every step is
-    exact int64 arithmetic or the identical IEEE double division, so
-    the learned centroids match train_ivf_kmeans bit-for-bit."""
-    init = ivf_centroids(n_clusters=n_clusters)
-    cvalues = ", ".join(
-        f"({b}, [{', '.join(str(int(math.floor(v * IVF_SCALE + 0.5))) for v in row)}]::BIGINT[])"
-        for b, row in enumerate(init)
-    )
-    dist = (
-        "CAST(list_sum(list_transform(list_zip(e.eq, c.cq), "
+# DuckDB twin builders shared by the IVF/PQ family: every trained twin
+# unrolls the same quantize, squared-distance, argmin and mean-update
+# text, so each is written once here and the twins only compose them.
+_QUANT_DUCK = f"list_transform(embedding, x -> {_QUANT_X})"
+_COS_Q_DUCK = (
+    "list_inner_product(e.embedding::DOUBLE[], q.q_emb::DOUBLE[]) / (e.nrm * q.q_nrm)"
+)
+
+
+def _e_cte_sql(table: str, id_col: str) -> str:
+    """CTE ``e``: the corpus with its quantized vector and float norm."""
+    return f"""e AS MATERIALIZED (
+      SELECT {id_col} AS vid, embedding, {_QUANT_DUCK} AS eq,
+             sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+      FROM {table})"""
+
+
+def _bigint_lit_sql(c: list[int]) -> str:
+    return "[" + ", ".join(str(v) for v in c) + "]::BIGINT[]"
+
+
+def _sqd_sql(a: str, b: str) -> str:
+    """Exact int64 squared distance between two BIGINT[] expressions."""
+    return (
+        f"CAST(list_sum(list_transform(list_zip({a}, {b}), "
         "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
     )
-    enc = n_clusters
-    ctes = [
-        f"c0(bucket, cq) AS (VALUES {cvalues})",
-        f"""e AS MATERIALIZED (
-      SELECT {id_col} AS vid, embedding,
-             list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)) AS eq,
-             sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM {table})""",
-    ]
-    prev = "c0"
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"""a{i} AS (
-      SELECT e.vid, any_value(e.eq) AS eq,
-             CAST(min({dist} * {enc} + c.bucket) % {enc} AS INT) AS bucket
-      FROM e, {prev} c GROUP BY e.vid)"""
-        )
-        ctes.append(
-            f"""c{i} AS (
-      SELECT bucket, list(cv ORDER BY idx) AS cq FROM (
-        SELECT bucket, idx, CAST(floor(CAST(sum(v) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS cv
-        FROM (SELECT bucket, unnest(eq) AS v, generate_subscripts(eq, 1) AS idx FROM a{i})
-        GROUP BY bucket, idx)
-      GROUP BY bucket)"""
-        )
-        prev = f"c{i}"
-    ctes.append(
-        f"""af AS (
-      SELECT e.vid, any_value(e.embedding) AS embedding, any_value(e.nrm) AS nrm,
-             CAST(min({dist} * {enc} + c.bucket) % {enc} AS INT) AS bucket
-      FROM e, {prev} c GROUP BY e.vid)"""
+
+
+def _res_sql(a: str, b: str) -> str:
+    """Elementwise residual a - b of two BIGINT[] expressions."""
+    return f"list_transform(list_zip({a}, {b}), z -> z[1] - z[2])"
+
+
+def _cells_values_sql(cells: dict[int, list[int]]) -> str:
+    return ", ".join(f"({b}, {_bigint_lit_sql(c)})" for b, c in cells.items())
+
+
+def _books_values_sql(books: list[list[list[int]]]) -> str:
+    return ", ".join(
+        f"({j}, {b}, {_bigint_lit_sql(c)})"
+        for j, book in enumerate(books)
+        for b, c in enumerate(book)
     )
-    return ctes, prev, dist
+
+
+def _code_cols_sql(col: str, books: list[list[list[int]]]) -> str:
+    """code{j} columns: the min-encode argmin of each subvector of
+    ``col`` over literal book j (ties to the lowest code)."""
+    kc, d = len(books[0]), len(books[0][0])
+    cols = []
+    for j, book in enumerate(books):
+        sub = f"{col}[{j * d + 1}:{(j + 1) * d}]"
+        terms = ", ".join(
+            f"({_sqd_sql(sub, _bigint_lit_sql(c))} * {kc} + {i})"
+            for i, c in enumerate(book)
+        )
+        cols.append(f"CAST(least({terms}) % {kc} AS INT) AS code{j}")
+    return ", ".join(cols)
+
+
+def _lut_cols_sql(books: list[list[list[int]]]) -> str:
+    """lut{j} columns: the ADC table of ``eq`` — its subvector j's exact
+    squared distance to every centroid of literal book j."""
+    d = len(books[0][0])
+    return ", ".join(
+        "[" + ", ".join(
+            _sqd_sql(f"eq[{j * d + 1}:{(j + 1) * d}]", _bigint_lit_sql(c))
+            for c in book
+        ) + f"] AS lut{j}"
+        for j, book in enumerate(books)
+    )
+
+
+_IVF_DIST_SQL = _sqd_sql("e.eq", "c.cq")
+_PQ_DIST_SQL = _sqd_sql("s.sub", "b.cq")
+
+
+def _ivf_assign_sql(
+    name: str, cols: str, cells: str, n_enc: int, mat: str = ""
+) -> str:
+    """``name``: each ``e`` row's nearest cell of ``cells`` (min-encode)."""
+    return f"""{name} AS {mat}(
+      SELECT e.vid, {cols},
+             CAST(min({_IVF_DIST_SQL} * {n_enc} + c.bucket) % {n_enc} AS INT) AS bucket
+      FROM e, {cells} c GROUP BY e.vid)"""
+
+
+def _pq_assign_sql(
+    name: str, cols: str, books: str, kc: int, out: str = "bucket"
+) -> str:
+    """``name``: each ``s`` (vid, j, sub) row's nearest centroid of
+    book j in ``books`` (min-encode), ``cols`` carried along."""
+    return f"""{name} AS (
+      SELECT s.vid, s.j, {cols}CAST(min({_PQ_DIST_SQL} * {kc} + b.bucket) % {kc} AS INT) AS {out}
+      FROM s JOIN {books} b ON b.j = s.j GROUP BY s.vid, s.j)"""
+
+
+def _mean_update_sql(name: str, keys: str, vec: str, src: str) -> str:
+    """``name``: the Lloyd update — per-``keys`` component means of
+    ``vec`` as floor(CAST(sum AS DOUBLE) / count(*) + 0.5), the
+    arithmetic :func:`_lloyd` mirrors."""
+    return f"""{name} AS (
+      SELECT {keys}, list(cv ORDER BY idx) AS cq FROM (
+        SELECT {keys}, idx, CAST(floor(CAST(sum(v) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS cv
+        FROM (SELECT {keys}, unnest({vec}) AS v, generate_subscripts({vec}, 1) AS idx FROM {src})
+        GROUP BY {keys}, idx)
+      GROUP BY {keys})"""
+
+
+def _ivf_lloyd_ctes(n_enc: int, iters: int) -> list[str]:
+    """The coarse Lloyd unrolled over ``e`` from cells ``c0``: a{i}
+    assigns, c{i} updates; a cell with no members has no c{i} row (it
+    dies, as in :func:`train_ivf_kmeans`). Final cells: c{iters}."""
+    ctes = []
+    for i in range(1, iters + 1):
+        ctes.append(_ivf_assign_sql(f"a{i}", "any_value(e.eq) AS eq", f"c{i - 1}", n_enc))
+        ctes.append(_mean_update_sql(f"c{i}", "bucket", "eq", f"a{i}"))
+    return ctes
+
+
+def _pq_lloyd_ctes(p: str, kc: int, iters: int) -> list[str]:
+    """The per-subspace Lloyd unrolled over ``s`` (vid, j, sub) from
+    books ``{p}b0``: {p}a{i} assigns, {p}u{i} updates, and {p}b{i}
+    inherits every centroid that lost its members from the previous
+    round (as :func:`train_pq` keeps it). Final books: {p}b{iters}."""
+    ctes = []
+    for i in range(1, iters + 1):
+        prev = f"{p}b{i - 1}"
+        ctes.append(_pq_assign_sql(f"{p}a{i}", "any_value(s.sub) AS sub, ", prev, kc))
+        ctes.append(_mean_update_sql(f"{p}u{i}", "j, bucket", "sub", f"{p}a{i}"))
+        ctes.append(
+            f"""{p}b{i} AS (
+      SELECT * FROM {p}u{i}
+      UNION ALL
+      SELECT p.* FROM {prev} p
+      WHERE NOT EXISTS (SELECT 1 FROM {p}u{i} n
+                        WHERE n.j = p.j AND n.bucket = p.bucket))"""
+        )
+    return ctes
+
+
+def _subspaces_sql(
+    name: str, cols: str, vec: str, src: str, m: int, d: int, mat: str = ""
+) -> str:
+    """``name``: one (``cols``, j, sub) row per subvector j of ``vec``."""
+    return f"""{name} AS {mat}(
+      SELECT {cols}js.j, list_slice({vec}, js.j * {d} + 1, (js.j + 1) * {d}) AS sub
+      FROM {src}, (SELECT unnest(generate_series(0, {m - 1})) AS j) js)"""
+
+
+def _rescored_topk_sql(ctes: list[str], query_id: int, k: int, id_col: str) -> str:
+    """The exact-rescore tail of the compressed-scan twins: the
+    ``cands`` CTE's vids re-ranked on the rounded float cosine to the
+    query (ties to the lowest id) — :func:`_exact_topk` in SQL."""
+    joined = ",\n    ".join(
+        [*ctes, f"q AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM e"
+                f" WHERE vid = {query_id} AND nrm > 0)"]
+    )
+    return f"""
+    WITH {joined}
+    SELECT e.vid AS {id_col},
+           floor(({_COS_Q_DUCK}) * 10000 + 0.5) / 10000 AS score
+    FROM e JOIN cands USING (vid), q
+    WHERE e.nrm > 0
+    ORDER BY score DESC, e.vid ASC LIMIT {k}
+    """
+
+
+def _ivf_train_ctes(
+    table: str, id_col: str, n_clusters: int, iters: int
+) -> tuple[list[str], str]:
+    """Shared trainer unrolling for the learned-centroid DuckDB twins:
+    CTEs c0 (literal integer init), e (quantized + normed corpus),
+    a{i}/c{i} (:func:`_ivf_lloyd_ctes`), and af (the final trained
+    assignment carrying vid/embedding/nrm/bucket). Returns (ctes,
+    final_centroid_cte_name). Every step is exact int64 arithmetic or
+    the identical IEEE double division, so the learned centroids match
+    train_ivf_kmeans bit-for-bit."""
+    prev = f"c{iters}"
+    ctes = [
+        f"c0(bucket, cq) AS (VALUES {_cells_values_sql(_ivf_init(n_clusters))})",
+        _e_cte_sql(table, id_col),
+        *_ivf_lloyd_ctes(n_clusters, iters),
+        _ivf_assign_sql(
+            "af", "any_value(e.embedding) AS embedding, any_value(e.nrm) AS nrm",
+            prev, n_clusters,
+        ),
+    ]
+    return ctes, prev
 
 
 def topk_ivf_sql(
@@ -620,22 +790,19 @@ def topk_ivf_sql(
     iterations, unrolled as CTE pairs via :func:`_ivf_train_ctes`, so
     the learned centroids — and therefore the probe set and result —
     match the Spark path bit-for-bit."""
-    ctes, prev, dist = _ivf_train_ctes(table, id_col, n_clusters, iters)
+    ctes, prev = _ivf_train_ctes(table, id_col, n_clusters, iters)
     ctes.append(
         f"""probes AS (
       SELECT c.bucket FROM e, {prev} c WHERE e.vid = {query_id}
-      ORDER BY {dist}, c.bucket LIMIT {nprobe})"""
+      ORDER BY {_IVF_DIST_SQL}, c.bucket LIMIT {nprobe})"""
     )
     ctes.append(
         f"q AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM e WHERE vid = {query_id})"
     )
-    cos_q = (
-        "list_inner_product(e.embedding::DOUBLE[], q.q_emb::DOUBLE[]) / (e.nrm * q.q_nrm)"
-    )
     joined = ",\n    ".join(ctes)
     return f"""
     WITH {joined}
-    SELECT e.vid AS {id_col}, floor(({cos_q}) * 10000 + 0.5) / 10000 AS score
+    SELECT e.vid AS {id_col}, floor(({_COS_Q_DUCK}) * 10000 + 0.5) / 10000 AS score
     FROM af e JOIN probes USING (bucket), q
     WHERE e.vid <> {query_id}
     ORDER BY score DESC, e.vid LIMIT {k}
@@ -713,15 +880,7 @@ def topk_ivf_fixed(
     return (
         probed.select(
             F.col("vid").alias(id_col),
-            (
-                F.floor(
-                    _dot(F.col("embedding"), F.col("q_emb"))
-                    / (F.col("nrm") * F.col("q_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("score"),
+            (_cos_bp("embedding", "q_emb", "nrm", "q_nrm") / 10000).alias("score"),
         )
         .orderBy(F.desc("score"), id_col)
         .limit(k)
@@ -741,7 +900,6 @@ def topk_ivf_fixed_sql(
         f"({i}, [{', '.join(repr(v) for v in ctr)}]::DOUBLE[])" for i, ctr in enumerate(centroids)
     )
     cos_c = "list_inner_product(e.embedding::DOUBLE[], c.vec) / (e.nrm * sqrt(list_inner_product(c.vec, c.vec)))"
-    cos_q = "list_inner_product(e.embedding::DOUBLE[], q.q_emb::DOUBLE[]) / (e.nrm * q.q_nrm)"
     return f"""
     WITH c(cid, vec) AS (VALUES {values}),
     e AS MATERIALIZED (
@@ -760,7 +918,7 @@ def topk_ivf_fixed_sql(
       ORDER BY cs DESC, cid LIMIT {nprobe}),
     q AS (
       SELECT embedding AS q_emb, nrm AS q_nrm FROM e WHERE vid = {query_id})
-    SELECT e.vid AS {id_col}, floor(({cos_q}) * 10000 + 0.5) / 10000 AS score
+    SELECT e.vid AS {id_col}, floor(({_COS_Q_DUCK}) * 10000 + 0.5) / 10000 AS score
     FROM assigned e JOIN probes USING (bucket), q
     WHERE e.vid <> {query_id}
     ORDER BY score DESC, e.vid LIMIT {k}
@@ -969,15 +1127,7 @@ def topk_batch(
             # rank on the ROUNDED score (ties then break on vid): raw
             # doubles can differ in the last ulp between engines'
             # summation orders and flip the k-th row
-            (
-                F.floor(
-                    _dot(F.col("embedding"), F.col("q_emb"))
-                    / (F.col("nrm") * F.col("q_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("cos"),
+            (_cos_bp("embedding", "q_emb", "nrm", "q_nrm") / 10000).alias("cos"),
         )
     )
 
@@ -1127,15 +1277,7 @@ def knn_graph(
             # value, so a boundary cosine could flip the last digit (and
             # the rank order) between engines. floor of the identical
             # IEEE product is bit-stable on both.
-            (
-                F.floor(
-                    _dot(F.col("a_emb"), F.col("b_emb"))
-                    / (F.col("a_nrm") * F.col("b_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("score"),
+            (_cos_bp("a_emb", "b_emb", "a_nrm", "b_nrm") / 10000).alias("score"),
         )
     )
     w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
@@ -1259,32 +1401,35 @@ def topk_int8(
         .limit(rescore * k)
         .select("vid")
     )
-    full = embeddings.select(
-        F.col(id_col).alias("vid"),
+    return _exact_topk(
+        embeddings.select(F.col(id_col).alias("vid"), "embedding"),
+        cands, query_id, k, id_col,
+    )
+
+
+def _exact_topk(
+    vecs: DataFrame, cands: DataFrame, query_id: int, k: int, id_col: str
+) -> DataFrame:
+    """The exact-rescore tail of every compressed-scan top-k: the
+    ``cands`` vids' full-precision vectors (``vecs``: vid, embedding —
+    at rest a point-lookup, ``rescore * k`` rows, broadcast) scored by
+    the rounded cosine to the query, top ``k`` by (score desc, vid).
+    Zero vectors have no cosine and never rank (ANSI mode makes the
+    0-norm division an error, not a NULL)."""
+    full = vecs.select(
+        "vid",
         "embedding",
         F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
     )
     qfull = full.filter((F.col("vid") == query_id) & (F.col("nrm") > 0)).select(
         F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
     )
-    exact = (
-        full.join(F.broadcast(cands), "vid")
-        .crossJoin(F.broadcast(qfull))
-        .select(
-            "vid",
-            (
-                F.floor(
-                    _dot(F.col("embedding"), F.col("q_emb"))
-                    / (F.col("nrm") * F.col("q_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("score"),
-        )
-    )
     return (
-        exact.orderBy(F.desc("score"), F.asc("vid"))
+        full.filter(F.col("nrm") > 0)
+        .join(F.broadcast(cands), "vid")
+        .crossJoin(F.broadcast(qfull))
+        .select("vid", (_cos_bp("embedding", "q_emb", "nrm", "q_nrm") / 10000).alias("score"))
+        .orderBy(F.desc("score"), F.asc("vid"))
         .limit(k)
         .select(F.col("vid").alias(id_col), "score")
     )
@@ -1794,6 +1939,19 @@ def _pq_code_exprs(eq_sql: str, books: list[list[list[int]]]) -> list[str]:
     return out
 
 
+def _lut_exprs(books: list[list[list[int]]]) -> list[str]:
+    """Per-subspace ADC lookup tables of the quantized ``eq`` column as
+    literal arrays lut{j}: exact int64 squared distances from subvector
+    j to every centroid of book j (one query row's work)."""
+    d = len(books[0][0])
+    return [
+        "array("
+        + ", ".join(_sqdist_lits_sql(f"slice(eq, {j * d + 1}, {d})", c) for c in book)
+        + f") AS lut{j}"
+        for j, book in enumerate(books)
+    ]
+
+
 def pq_encode(
     embeddings: DataFrame,
     books: list[list[list[int]]] | None = None,
@@ -1852,35 +2010,9 @@ def topk_pq(
         .limit(rescore * k)
         .select("vid")
     )
-    full = embeddings.select(
-        F.col(id_col).alias("vid"),
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    qfull = full.filter((F.col("vid") == query_id) & (F.col("nrm") > 0)).select(
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
-    )
-    exact = (
-        full.filter(F.col("nrm") > 0)
-        .join(F.broadcast(cands), "vid")
-        .crossJoin(F.broadcast(qfull))
-        .select(
-            "vid",
-            (
-                F.floor(
-                    _dot(F.col("embedding"), F.col("q_emb"))
-                    / (F.col("nrm") * F.col("q_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("score"),
-        )
-    )
-    return (
-        exact.orderBy(F.desc("score"), F.asc("vid"))
-        .limit(k)
-        .select(F.col("vid").alias(id_col), "score")
+    return _exact_topk(
+        embeddings.select(F.col(id_col).alias("vid"), "embedding"),
+        cands, query_id, k, id_col,
     )
 
 
@@ -1896,54 +2028,18 @@ def topk_pq_sql(
     min-encoded argmin assignment, LUT build on the query row, ADC
     sum, and rounded-cosine rescore."""
     books = books or pq_codebooks()
-    m, d = len(books), len(books[0][0])
-    kc = len(books[0])
-
-    def lit(c: list[int]) -> str:
-        return "[" + ", ".join(str(v) for v in c) + "]::BIGINT[]"
-
-    def sqd(sub: str, c: list[int]) -> str:
-        return (
-            f"CAST(list_sum(list_transform(list_zip({sub}, {lit(c)}), "
-            "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
-        )
-
-    code_cols = []
-    for j in range(m):
-        sub = f"eq[{j * d + 1}:{(j + 1) * d}]"
-        terms = ", ".join(
-            f"({sqd(sub, c)} * {kc} + {i})" for i, c in enumerate(books[j])
-        )
-        code_cols.append(f"CAST(least({terms}) % {kc} AS INT) AS code{j}")
-    lut_cols = []
-    for j in range(m):
-        sub = f"eq[{j * d + 1}:{(j + 1) * d}]"
-        dists = ", ".join(sqd(sub, c) for c in books[j])
-        lut_cols.append(f"[{dists}] AS lut{j}")
-    adist = " + ".join(f"lut.lut{j}[c.code{j} + 1]" for j in range(m))
-    cos_q = (
-        "list_inner_product(e.embedding::DOUBLE[], q.q_emb::DOUBLE[])"
-        " / (e.nrm * q.q_nrm)"
-    )
-    return f"""
-    WITH e AS MATERIALIZED (
-      SELECT {id_col} AS vid, embedding,
-             list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)) AS eq,
-             sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM {table}),
-    c AS (SELECT vid, {', '.join(code_cols)} FROM e),
-    lut AS (SELECT {', '.join(lut_cols)} FROM e WHERE vid = {query_id}),
-    cands AS (
+    adist = " + ".join(f"lut.lut{j}[c.code{j} + 1]" for j in range(len(books)))
+    return _rescored_topk_sql(
+        [
+            _e_cte_sql(table, id_col),
+            f"c AS (SELECT vid, {_code_cols_sql('eq', books)} FROM e)",
+            f"lut AS (SELECT {_lut_cols_sql(books)} FROM e WHERE vid = {query_id})",
+            f"""cands AS (
       SELECT c.vid FROM c, lut WHERE c.vid <> {query_id}
-      ORDER BY ({adist}) ASC, c.vid ASC LIMIT {rescore * k}),
-    q AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM e
-          WHERE vid = {query_id} AND nrm > 0)
-    SELECT e.vid AS {id_col},
-           floor(({cos_q}) * 10000 + 0.5) / 10000 AS score
-    FROM e JOIN cands USING (vid), q
-    WHERE e.nrm > 0
-    ORDER BY score DESC, e.vid ASC LIMIT {k}
-    """
+      ORDER BY ({adist}) ASC, c.vid ASC LIMIT {rescore * k})""",
+        ],
+        query_id, k, id_col,
+    )
 
 
 def topk_pq_batch(
@@ -1971,7 +2067,7 @@ def topk_pq_batch(
     import pandas as pd
 
     books = books or pq_codebooks()
-    m, d = len(books), len(books[0][0])
+    m = len(books)
     eq = _quant_sql("embedding")
     code_exprs = _pq_code_exprs("eq", books)
     corpus = embeddings.selectExpr(
@@ -1980,15 +2076,10 @@ def topk_pq_batch(
         "vid",
         *[f"{ce} AS code{j}" for j, ce in enumerate(code_exprs)],
     )
-    lut_exprs = []
-    for j in range(m):
-        sub = f"slice(eq, {j * d + 1}, {d})"
-        dists = ", ".join(_sqdist_lits_sql(sub, c) for c in books[j])
-        lut_exprs.append(f"array({dists}) AS lut{j}")
     qluts = (
         embeddings.filter(F.col(id_col).isin(query_ids))
         .selectExpr(f"{id_col} AS query_id", f"{eq} AS eq")
-        .selectExpr("query_id", *lut_exprs)
+        .selectExpr("query_id", *_lut_exprs(books))
     )
     adist = " + ".join(f"element_at(lut{j}, code{j} + 1)" for j in range(m))
     scored = (
@@ -2036,15 +2127,7 @@ def topk_pq_batch(
         .select(
             "query_id",
             "vid",
-            (
-                F.floor(
-                    _dot(F.col("embedding"), F.col("q_emb"))
-                    / (F.col("nrm") * F.col("q_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("score"),
+            (_cos_bp("embedding", "q_emb", "nrm", "q_nrm") / 10000).alias("score"),
         )
     )
     wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vid"))
@@ -2067,45 +2150,13 @@ def topk_pq_batch_sql(
     LUTs, per-query min-int candidate windows, rounded-cosine rescore
     windows."""
     books = books or pq_codebooks()
-    m, d = len(books), len(books[0][0])
-    kc = len(books[0])
-
-    def lit(c: list[int]) -> str:
-        return "[" + ", ".join(str(v) for v in c) + "]::BIGINT[]"
-
-    def sqd(sub: str, c: list[int]) -> str:
-        return (
-            f"CAST(list_sum(list_transform(list_zip({sub}, {lit(c)}), "
-            "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
-        )
-
-    code_cols = []
-    for j in range(m):
-        sub = f"eq[{j * d + 1}:{(j + 1) * d}]"
-        terms = ", ".join(
-            f"({sqd(sub, c)} * {kc} + {i})" for i, c in enumerate(books[j])
-        )
-        code_cols.append(f"CAST(least({terms}) % {kc} AS INT) AS code{j}")
-    lut_cols = []
-    for j in range(m):
-        sub = f"eq[{j * d + 1}:{(j + 1) * d}]"
-        dists = ", ".join(sqd(sub, c) for c in books[j])
-        lut_cols.append(f"[{dists}] AS lut{j}")
-    adist = " + ".join(f"lut.lut{j}[c.code{j} + 1]" for j in range(m))
+    adist = " + ".join(f"lut.lut{j}[c.code{j} + 1]" for j in range(len(books)))
     ids = ", ".join(str(i) for i in query_ids)
-    cos_q = (
-        "list_inner_product(e.embedding::DOUBLE[], q.q_emb::DOUBLE[])"
-        " / (e.nrm * q.q_nrm)"
-    )
     return f"""
-    WITH e AS MATERIALIZED (
-      SELECT {id_col} AS vid, embedding,
-             list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)) AS eq,
-             sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM {table}),
-    c AS MATERIALIZED (SELECT vid, {', '.join(code_cols)} FROM e),
+    WITH {_e_cte_sql(table, id_col)},
+    c AS MATERIALIZED (SELECT vid, {_code_cols_sql('eq', books)} FROM e),
     lut AS MATERIALIZED (
-      SELECT vid AS query_id, {', '.join(lut_cols)}
+      SELECT vid AS query_id, {_lut_cols_sql(books)}
       FROM e WHERE vid IN ({ids})),
     cands AS (
       SELECT query_id, vid FROM (
@@ -2118,7 +2169,7 @@ def topk_pq_batch_sql(
           FROM e WHERE vid IN ({ids}) AND nrm > 0),
     rescored AS (
       SELECT q.query_id, e.vid,
-             floor(({cos_q}) * 10000 + 0.5) / 10000 AS score
+             floor(({_COS_Q_DUCK}) * 10000 + 0.5) / 10000 AS score
       FROM e
       JOIN cands ON cands.vid = e.vid
       JOIN q ON q.query_id = cands.query_id
@@ -2145,77 +2196,25 @@ def train_pq(
     division + floor per centroid component), applied independently
     in each subspace.
 
-    One Spark pass per ITERATION covers ALL subspaces: every row
-    explodes into m (subspace, assigned-centroid, subvector) entries
-    and a single groupBy((j, bucket)) folds the component sums — the
-    shuffle count is `iters`, not `iters * m`. Driver state is
-    m x k x d integers (the offline-trained constants a 100 TB
-    deployment ships to its query layer). A centroid that loses all
-    members keeps its INIT row — PQ codes index codebook POSITIONS,
-    so the book must stay k-long (unlike IVF, where an empty cluster
-    can simply drop)."""
-    init = pq_codebooks(m=m, k=k)
-    eqall = embeddings.select(F.expr(_quant_sql("embedding")).alias("eqa"))
-    return _train_pq_lloyd(eqall, init, k, iters)
+    The loop is :func:`_lloyd` with m subspaces: one Spark pass per
+    ITERATION covers all of them. Driver state is m x k x d integers
+    (the offline-trained constants a 100 TB deployment ships to its
+    query layer). A centroid that loses all members keeps its previous
+    row — PQ codes index codebook POSITIONS, so the book must stay
+    k-long (unlike IVF, where an empty cluster can simply drop)."""
+    eq = embeddings.select(F.expr(_quant_sql("embedding")).alias("eq"))
+    return _train_books(eq, pq_codebooks(m=m, k=k), iters)
 
 
-def _train_pq_lloyd(
-    eqall: DataFrame, init: list[list[list[int]]], k: int, iters: int
+def _train_books(
+    eq: DataFrame, init: list[list[list[int]]], iters: int
 ) -> list[list[list[int]]]:
-    """The shared per-subspace Lloyd loop over an ``eqa`` int-array
-    column (raw quantized vectors for :func:`train_pq`, coarse-cell
-    residuals for :func:`train_pq_residuals`). One Spark pass per
-    iteration covers ALL subspaces; dead centroids keep their previous
-    row (codes index codebook positions)."""
-    m = len(init)
-    d = len(init[0][0])
-    books = [[list(c) for c in init[j]] for j in range(m)]
-    # Persist the input column across iterations: for the residual
-    # trainer eqa embeds quantize + coarse argmin + zip_with residual,
-    # re-derived on every pass without this (guide §5). Unpersisted on
-    # every exit path.
-    with pinned(eqall) if iters > 1 else nullcontext():
-        return _pq_lloyd_iters(eqall, books, m, d, k, iters)
-
-
-def _pq_lloyd_iters(
-    eqall: DataFrame,
-    books: list[list[list[int]]],
-    m: int,
-    d: int,
-    k: int,
-    iters: int,
-) -> list[list[list[int]]]:
-    for _ in range(iters):
-        entries = []
-        for j in range(m):
-            sub = f"slice(eqa, {j * d + 1}, {d})"
-            argmin = _argmin_bucket_sql(
-                sub, {i: c for i, c in enumerate(books[j])}, k
-            )
-            entries.append(
-                f"named_struct('j', {j}, 'bucket', {argmin}, 'sub', {sub})"
-            )
-        exploded = eqall.selectExpr(f"inline(array({', '.join(entries)}))")
-        rows = (
-            exploded.groupBy("j", "bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(F.element_at("sub", i + 1)).alias(f"s{i}")
-                    for i in range(d)
-                ],
-            )
-            .collect()
-        )
-        for r in rows:
-            # mirror train_ivf_kmeans: CAST(sum AS DOUBLE)/n then
-            # floor(x+0.5) — bit-stable while |sum| < 2^53
-            books[int(r["j"])][int(r["bucket"])] = [
-                int(math.floor(float(r[f"s{i}"]) / r["n"] + 0.5))
-                for i in range(d)
-            ]
-    return books
+    """:func:`_lloyd` over PQ books (position-indexed, dead rows kept)."""
+    books = [dict(enumerate(book)) for book in init]
+    return [
+        list(book.values())
+        for book in _lloyd(eq, books, iters, keep_dead=True)
+    ]
 
 
 def _cents_map_sql(cents: dict[int, list[int]]) -> str:
@@ -2247,16 +2246,16 @@ def train_pq_residuals(
     division + floor per component, so the DuckDB twin
     (:func:`topk_ivfpq_trained_sql`) unrolls to bit-equal books."""
     cbm = _cents_map_sql(cents)
-    eqall = (
+    res = (
         embeddings.selectExpr(f"{_quant_sql('embedding')} AS eq")
         .selectExpr(
             "eq", f"{_argmin_bucket_sql('eq', cents, n_cells)} AS bucket"
         )
         .selectExpr(
-            f"zip_with(eq, element_at({cbm}, bucket), (x, y) -> x - y) AS eqa"
+            f"zip_with(eq, element_at({cbm}, bucket), (x, y) -> x - y) AS eq"
         )
     )
-    return _train_pq_lloyd(eqall, pq_codebooks(m=m, k=k, seed=321), k, iters)
+    return _train_books(res, pq_codebooks(m=m, k=k, seed=321), iters)
 
 
 def topk_pq_trained_sql(
@@ -2272,98 +2271,31 @@ def topk_pq_trained_sql(
     """DuckDB twin of ``topk_pq(books=train_pq(df, iters=...))`` — the
     LEARNED-codebook PQ value-checked end to end, the same move
     topk_ivf_sql makes for the IVF trainer: the per-subspace Lloyd
-    iterations unroll as CTE pairs from the identical integer init,
-    every step exact int64 or the one shared double-division idiom,
-    dead centroids inherited from the previous round (train_pq keeps
-    them — codes index positions). ADC here is a JOIN of the code
+    iterations unroll via :func:`_pq_lloyd_ctes` from the identical
+    integer init, every step exact int64 or the one shared
+    double-division idiom, dead centroids inherited from the previous
+    round (train_pq keeps them — codes index positions). ADC here is a JOIN of the code
     table against the query's (subspace, centroid) distance rows —
     set-equivalent to the Spark side's literal-LUT lookups."""
-    init = pq_codebooks(m=m, k=kc)
-    d = len(init[0][0])
-    bvalues = ", ".join(
-        f"({j}, {b}, [{', '.join(str(v) for v in c)}]::BIGINT[])"
-        for j in range(m)
-        for b, c in enumerate(init[j])
-    )
-    dist = (
-        "CAST(list_sum(list_transform(list_zip(s.sub, b.cq), "
-        "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
-    )
+    d = _DIM // m
     ctes = [
-        f"b0(j, bucket, cq) AS (VALUES {bvalues})",
-        f"""e AS MATERIALIZED (
-      SELECT {id_col} AS vid, embedding,
-             list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)) AS eq,
-             sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM {table})""",
-        f"""s AS MATERIALIZED (
-      SELECT vid, js.j, list_slice(eq, js.j * {d} + 1, (js.j + 1) * {d}) AS sub
-      FROM e, (SELECT unnest(generate_series(0, {m - 1})) AS j) js)""",
-    ]
-    prev = "b0"
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"""a{i} AS (
-      SELECT s.vid, s.j, any_value(s.sub) AS sub,
-             CAST(min({dist} * {kc} + b.bucket) % {kc} AS INT) AS bucket
-      FROM s JOIN {prev} b ON b.j = s.j GROUP BY s.vid, s.j)"""
-        )
-        ctes.append(
-            f"""u{i} AS (
-      SELECT j, bucket, list(cv ORDER BY idx) AS cq FROM (
-        SELECT j, bucket, idx,
-               CAST(floor(CAST(sum(v) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS cv
-        FROM (SELECT j, bucket, unnest(sub) AS v,
-                     generate_subscripts(sub, 1) AS idx FROM a{i})
-        GROUP BY j, bucket, idx)
-      GROUP BY j, bucket)"""
-        )
-        ctes.append(
-            f"""b{i} AS (
-      SELECT * FROM u{i}
-      UNION ALL
-      SELECT p.* FROM {prev} p
-      WHERE NOT EXISTS (SELECT 1 FROM u{i} n
-                        WHERE n.j = p.j AND n.bucket = p.bucket))"""
-        )
-        prev = f"b{i}"
-    ctes.append(
-        f"""codes AS (
-      SELECT s.vid, s.j,
-             CAST(min({dist} * {kc} + b.bucket) % {kc} AS INT) AS bucket
-      FROM s JOIN {prev} b ON b.j = s.j GROUP BY s.vid, s.j)"""
-    )
-    ctes.append(
+        f"b0(j, bucket, cq) AS (VALUES {_books_values_sql(pq_codebooks(m=m, k=kc))})",
+        _e_cte_sql(table, id_col),
+        _subspaces_sql("s", "vid, ", "eq", "e", m, d, "MATERIALIZED "),
+        *_pq_lloyd_ctes("", kc, iters),
+        _pq_assign_sql("codes", "", f"b{iters}", kc),
         f"""lq AS (
-      SELECT b.j, b.bucket, {dist} AS qdist
-      FROM s JOIN {prev} b ON b.j = s.j WHERE s.vid = {query_id})"""
-    )
-    ctes.append(
+      SELECT b.j, b.bucket, {_PQ_DIST_SQL} AS qdist
+      FROM s JOIN b{iters} b ON b.j = s.j WHERE s.vid = {query_id})""",
         f"""cands AS (
       SELECT c.vid FROM codes c
       JOIN lq ON lq.j = c.j AND lq.bucket = c.bucket
       WHERE c.vid <> {query_id}
       GROUP BY c.vid
       ORDER BY CAST(sum(qdist) AS BIGINT) ASC, c.vid ASC
-      LIMIT {rescore * k})"""
-    )
-    ctes.append(
-        f"q AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM e"
-        f" WHERE vid = {query_id} AND nrm > 0)"
-    )
-    cos_q = (
-        "list_inner_product(e.embedding::DOUBLE[], q.q_emb::DOUBLE[])"
-        " / (e.nrm * q.q_nrm)"
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT e.vid AS {id_col},
-           floor(({cos_q}) * 10000 + 0.5) / 10000 AS score
-    FROM e JOIN cands USING (vid), q
-    WHERE e.nrm > 0
-    ORDER BY score DESC, e.vid ASC LIMIT {k}
-    """
+      LIMIT {rescore * k})""",
+    ]
+    return _rescored_topk_sql(ctes, query_id, k, id_col)
 
 
 def pq_near_dups(
@@ -2452,14 +2384,7 @@ def pq_near_dups(
             "id_a",
             "id_b",
             "n_bands",
-            (
-                F.floor(
-                    _dot(F.col("emb_a"), F.col("emb_b"))
-                    / (F.col("nrm_a") * F.col("nrm_b"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-            ).cast("long").alias("score_bp"),
+            _cos_bp("emb_a", "emb_b", "nrm_a", "nrm_b").cast("long").alias("score_bp"),
         )
         .filter(F.col("score_bp") >= thr_bp)
         .orderBy("id_a", "id_b")
@@ -2477,25 +2402,7 @@ def pq_near_dups_sql(
     (min-encode argmin on literal integer codebooks), identical band
     join + collision count, identical rounded-cosine verification."""
     books = books or pq_codebooks()
-    m, kc = len(books), len(books[0])
-    d = len(books[0][0])
-
-    def lit(c: list[int]) -> str:
-        return "[" + ", ".join(str(v) for v in c) + "]::BIGINT[]"
-
-    def sqd(sub: str, c: list[int]) -> str:
-        return (
-            f"CAST(list_sum(list_transform(list_zip({sub}, {lit(c)}), "
-            "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
-        )
-
-    code_cols = []
-    for j in range(m):
-        sub = f"eq[{j * d + 1}:{(j + 1) * d}]"
-        terms = ", ".join(
-            f"({sqd(sub, c)} * {kc} + {i})" for i, c in enumerate(books[j])
-        )
-        code_cols.append(f"CAST(least({terms}) % {kc} AS INT) AS code{j}")
+    m = len(books)
     band_rows = " UNION ALL ".join(
         f"SELECT vid, {j} AS j, code{j} AS code FROM c" for j in range(m)
     )
@@ -2505,12 +2412,8 @@ def pq_near_dups_sql(
         " / (fa.nrm * fb.nrm)"
     )
     return f"""
-    WITH e AS MATERIALIZED (
-      SELECT {id_col} AS vid, embedding,
-             list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)) AS eq,
-             sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM {table}),
-    c AS MATERIALIZED (SELECT vid, {', '.join(code_cols)} FROM e),
+    WITH {_e_cte_sql(table, id_col)},
+    c AS MATERIALIZED (SELECT vid, {_code_cols_sql('eq', books)} FROM e),
     bands AS MATERIALIZED ({band_rows}),
     cand AS (
       SELECT a.vid AS id_a, b.vid AS id_b, CAST(count(*) AS BIGINT) AS n_bands
@@ -2568,13 +2471,7 @@ def topk_ivfpq(
     the fully TRAINED configuration; omitted, both fall back to the
     fixed shipped-constants index."""
     books = books or pq_codebooks(seed=321)
-    m, d = len(books), len(books[0][0])
-    kc = len(books[0])
-    if cents is None:
-        cents = {
-            b: [int(math.floor(v * IVF_SCALE + 0.5)) for v in row]
-            for b, row in enumerate(ivf_centroids(n_clusters=n_cells))
-        }
+    cents = _ivf_init(n_cells) if cents is None else cents
     cb = _cents_map_sql(cents)
     eq = _quant_sql("embedding")
     res = f"zip_with(eq, element_at({cb}, bucket), (x, y) -> x - y)"
@@ -2619,35 +2516,9 @@ def topk_ivfpq(
         .limit(rescore * k)
         .select("vid")
     )
-    full = embeddings.select(
-        F.col(id_col).alias("vid"),
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    qfull = full.filter((F.col("vid") == query_id) & (F.col("nrm") > 0)).select(
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
-    )
-    exact = (
-        full.filter(F.col("nrm") > 0)
-        .join(F.broadcast(cand), "vid")
-        .crossJoin(F.broadcast(qfull))
-        .select(
-            "vid",
-            (
-                F.floor(
-                    _dot(F.col("embedding"), F.col("q_emb"))
-                    / (F.col("nrm") * F.col("q_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("score"),
-        )
-    )
-    return (
-        exact.orderBy(F.desc("score"), F.asc("vid"))
-        .limit(k)
-        .select(F.col("vid").alias(id_col), "score")
+    return _exact_topk(
+        embeddings.select(F.col(id_col).alias("vid"), "embedding"),
+        cand, query_id, k, id_col,
     )
 
 
@@ -2667,90 +2538,45 @@ def topk_ivfpq_sql(
     rounded-cosine rescore."""
     books = books or pq_codebooks(seed=321)
     m, d = len(books), len(books[0][0])
-    kc = len(books[0])
-    cents = [
-        [int(math.floor(v * IVF_SCALE + 0.5)) for v in row]
-        for row in ivf_centroids(n_clusters=n_cells)
-    ]
-
-    def lit(c: list[int]) -> str:
-        return "[" + ", ".join(str(v) for v in c) + "]::BIGINT[]"
-
-    def sqd(sub: str, c: list[int]) -> str:
-        return (
-            f"CAST(list_sum(list_transform(list_zip({sub}, {lit(c)}), "
-            "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
-        )
-
-    cvalues = ", ".join(f"({b}, {lit(c)})" for b, c in enumerate(cents))
-    dist_e = (
-        "CAST(list_sum(list_transform(list_zip(e.eq, cb.cq), "
-        "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
-    )
-    code_cols = []
-    for j in range(m):
-        sub = f"res[{j * d + 1}:{(j + 1) * d}]"
-        terms = ", ".join(
-            f"({sqd(sub, c)} * {kc} + {i})" for i, c in enumerate(books[j])
-        )
-        code_cols.append(f"CAST(least({terms}) % {kc} AS INT) AS code{j}")
     band_rows = " UNION ALL ".join(
         f"SELECT vid, bucket, {j} AS j, code{j} AS code FROM enc" for j in range(m)
     )
-    lut_rows = []
-    for j in range(m):
-        sub = f"qres[{j * d + 1}:{(j + 1) * d}]"
-        for c, cvec in enumerate(books[j]):
-            lut_rows.append(
-                f"SELECT bucket, {j} AS j, {c} AS code, {sqd(sub, cvec)} AS qdist"
-                " FROM qr"
-            )
-    cos_q = (
-        "list_inner_product(e.embedding::DOUBLE[], q.q_emb::DOUBLE[])"
-        " / (e.nrm * q.q_nrm)"
+    lut_rows = " UNION ALL ".join(
+        f"SELECT bucket, {j} AS j, {c} AS code, "
+        f"{_sqd_sql(f'qres[{j * d + 1}:{(j + 1) * d}]', _bigint_lit_sql(cvec))} AS qdist"
+        " FROM qr"
+        for j, book in enumerate(books)
+        for c, cvec in enumerate(book)
     )
-    return f"""
-    WITH cb(bucket, cq) AS (VALUES {cvalues}),
-    e AS MATERIALIZED (
-      SELECT {id_col} AS vid, embedding,
-             list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)) AS eq,
-             sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM {table}),
-    a AS MATERIALIZED (
+    ctes = [
+        f"cb(bucket, cq) AS (VALUES {_cells_values_sql(_ivf_init(n_cells))})",
+        _e_cte_sql(table, id_col),
+        f"""a AS MATERIALIZED (
       SELECT e.vid, any_value(e.eq) AS eq,
-             CAST(min({dist_e} * {n_cells} + cb.bucket) % {n_cells} AS INT) AS bucket
-      FROM e, cb GROUP BY e.vid),
-    r AS MATERIALIZED (
-      SELECT a.vid, a.bucket,
-             list_transform(list_zip(a.eq, cb.cq), z -> z[1] - z[2]) AS res
-      FROM a JOIN cb USING (bucket)),
-    enc AS MATERIALIZED (SELECT vid, bucket, {', '.join(code_cols)} FROM r),
-    bands AS ({band_rows}),
-    probes AS (
+             CAST(min({_sqd_sql('e.eq', 'cb.cq')} * {n_cells} + cb.bucket) % {n_cells} AS INT) AS bucket
+      FROM e, cb GROUP BY e.vid)""",
+        f"""r AS MATERIALIZED (
+      SELECT a.vid, a.bucket, {_res_sql('a.eq', 'cb.cq')} AS res
+      FROM a JOIN cb USING (bucket))""",
+        f"enc AS MATERIALIZED (SELECT vid, bucket, {_code_cols_sql('res', books)} FROM r)",
+        f"bands AS ({band_rows})",
+        f"""probes AS (
       SELECT cb.bucket, a.eq FROM a, cb WHERE a.vid = {query_id}
-      ORDER BY CAST(list_sum(list_transform(list_zip(a.eq, cb.cq),
-                    z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT), cb.bucket
-      LIMIT {nprobe}),
-    qr AS MATERIALIZED (
-      SELECT p.bucket,
-             list_transform(list_zip(p.eq, cb.cq), z -> z[1] - z[2]) AS qres
-      FROM probes p JOIN cb USING (bucket)),
-    lut AS MATERIALIZED ({' UNION ALL '.join(lut_rows)}),
-    cands AS (
+      ORDER BY {_sqd_sql('a.eq', 'cb.cq')}, cb.bucket
+      LIMIT {nprobe})""",
+        f"""qr AS MATERIALIZED (
+      SELECT p.bucket, {_res_sql('p.eq', 'cb.cq')} AS qres
+      FROM probes p JOIN cb USING (bucket))""",
+        f"lut AS MATERIALIZED ({lut_rows})",
+        f"""cands AS (
       SELECT b.vid FROM bands b
       JOIN lut ON lut.bucket = b.bucket AND lut.j = b.j AND lut.code = b.code
       WHERE b.vid <> {query_id}
       GROUP BY b.vid
       ORDER BY CAST(sum(qdist) AS BIGINT) ASC, b.vid ASC
-      LIMIT {rescore * k}),
-    q AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM e
-          WHERE vid = {query_id} AND nrm > 0)
-    SELECT e.vid AS {id_col},
-           floor(({cos_q}) * 10000 + 0.5) / 10000 AS score
-    FROM e JOIN cands USING (vid), q
-    WHERE e.nrm > 0
-    ORDER BY score DESC, e.vid ASC LIMIT {k}
-    """
+      LIMIT {rescore * k})""",
+    ]
+    return _rescored_topk_sql(ctes, query_id, k, id_col)
 
 
 def topk_ivfpq_trained_sql(
@@ -2770,162 +2596,50 @@ def topk_ivfpq_trained_sql(
     configuration of the canonical billion-scale layout:
     ``topk_ivfpq(cents=train_ivf_kmeans(...),
     books=train_pq_residuals(...))`` value-checked end to end. Composes
-    the two unrolled-CTE trainers this module already proves
-    separately: the coarse Lloyd pairs from :func:`topk_ivf_sql`
-    (empty cells DROP — no centroid row) feed residual computation,
-    the per-subspace residual Lloyd pairs from
-    :func:`topk_pq_trained_sql` (dead book centroids INHERIT — codes
-    index positions) feed a relational join-ADC (books live in a CTE,
-    not literals — set-equivalent to the Spark side's literal LUT).
+    the two shared Lloyd unrollers: the coarse pairs of
+    :func:`_ivf_lloyd_ctes` (empty cells DROP — no centroid row) feed
+    residual computation, and the per-subspace triples of
+    :func:`_pq_lloyd_ctes` over the residuals (dead book centroids
+    INHERIT — codes index positions) feed a relational join-ADC (books
+    live in a CTE, not literals — set-equivalent to the Spark side's
+    literal LUT).
     Every training step is exact int64 or the one shared
     double-division idiom, so cells, books, codes, probe set and
     result all match the Spark path bit-for-bit."""
     d = _DIM // m
-    coarse_init = ivf_centroids(n_clusters=n_cells)
-    cvalues = ", ".join(
-        f"({b}, [{', '.join(str(int(math.floor(v * IVF_SCALE + 0.5))) for v in row)}]::BIGINT[])"
-        for b, row in enumerate(coarse_init)
-    )
-    book_init = pq_codebooks(m=m, k=kc, seed=321)
-    bvalues = ", ".join(
-        f"({j}, {b}, [{', '.join(str(v) for v in c)}]::BIGINT[])"
-        for j in range(m)
-        for b, c in enumerate(book_init[j])
-    )
-    dist_c = (
-        "CAST(list_sum(list_transform(list_zip(e.eq, c.cq), "
-        "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
-    )
-    dist_b = (
-        "CAST(list_sum(list_transform(list_zip(s.sub, b.cq), "
-        "z -> (z[1] - z[2]) * (z[1] - z[2]))) AS BIGINT)"
-    )
+    cells, books = f"c{coarse_iters}", f"pb{book_iters}"
     ctes = [
-        f"c0(bucket, cq) AS (VALUES {cvalues})",
-        f"pb0(j, bucket, cq) AS (VALUES {bvalues})",
-        f"""e AS MATERIALIZED (
-      SELECT {id_col} AS vid, embedding,
-             list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)) AS eq,
-             sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM {table})""",
-    ]
-    prev_c = "c0"
-    for i in range(1, coarse_iters + 1):
-        ctes.append(
-            f"""a{i} AS (
-      SELECT e.vid, any_value(e.eq) AS eq,
-             CAST(min({dist_c} * {n_cells} + c.bucket) % {n_cells} AS INT) AS bucket
-      FROM e, {prev_c} c GROUP BY e.vid)"""
-        )
-        ctes.append(
-            f"""c{i} AS (
-      SELECT bucket, list(cv ORDER BY idx) AS cq FROM (
-        SELECT bucket, idx, CAST(floor(CAST(sum(v) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS cv
-        FROM (SELECT bucket, unnest(eq) AS v, generate_subscripts(eq, 1) AS idx FROM a{i})
-        GROUP BY bucket, idx)
-      GROUP BY bucket)"""
-        )
-        prev_c = f"c{i}"
-    ctes.append(
-        f"""af AS MATERIALIZED (
-      SELECT e.vid, any_value(e.eq) AS eq,
-             CAST(min({dist_c} * {n_cells} + c.bucket) % {n_cells} AS INT) AS bucket
-      FROM e, {prev_c} c GROUP BY e.vid)"""
-    )
-    ctes.append(
+        f"c0(bucket, cq) AS (VALUES {_cells_values_sql(_ivf_init(n_cells))})",
+        f"pb0(j, bucket, cq) AS (VALUES {_books_values_sql(pq_codebooks(m=m, k=kc, seed=321))})",
+        _e_cte_sql(table, id_col),
+        *_ivf_lloyd_ctes(n_cells, coarse_iters),
+        _ivf_assign_sql("af", "any_value(e.eq) AS eq", cells, n_cells, "MATERIALIZED "),
         f"""r AS MATERIALIZED (
-      SELECT af.vid, af.bucket AS cell,
-             list_transform(list_zip(af.eq, c.cq), z -> z[1] - z[2]) AS res
-      FROM af JOIN {prev_c} c USING (bucket))"""
-    )
-    ctes.append(
-        f"""s AS MATERIALIZED (
-      SELECT vid, cell, js.j,
-             list_slice(res, js.j * {d} + 1, (js.j + 1) * {d}) AS sub
-      FROM r, (SELECT unnest(generate_series(0, {m - 1})) AS j) js)"""
-    )
-    prev_b = "pb0"
-    for i in range(1, book_iters + 1):
-        ctes.append(
-            f"""pa{i} AS (
-      SELECT s.vid, s.j, any_value(s.sub) AS sub,
-             CAST(min({dist_b} * {kc} + b.bucket) % {kc} AS INT) AS bucket
-      FROM s JOIN {prev_b} b ON b.j = s.j GROUP BY s.vid, s.j)"""
-        )
-        ctes.append(
-            f"""pu{i} AS (
-      SELECT j, bucket, list(cv ORDER BY idx) AS cq FROM (
-        SELECT j, bucket, idx,
-               CAST(floor(CAST(sum(v) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS cv
-        FROM (SELECT j, bucket, unnest(sub) AS v,
-                     generate_subscripts(sub, 1) AS idx FROM pa{i})
-        GROUP BY j, bucket, idx)
-      GROUP BY j, bucket)"""
-        )
-        ctes.append(
-            f"""pb{i} AS (
-      SELECT * FROM pu{i}
-      UNION ALL
-      SELECT p.* FROM {prev_b} p
-      WHERE NOT EXISTS (SELECT 1 FROM pu{i} n
-                        WHERE n.j = p.j AND n.bucket = p.bucket))"""
-        )
-        prev_b = f"pb{i}"
-    ctes.append(
-        f"""codes AS (
-      SELECT s.vid, s.j, any_value(s.cell) AS cell,
-             CAST(min({dist_b} * {kc} + b.bucket) % {kc} AS INT) AS code
-      FROM s JOIN {prev_b} b ON b.j = s.j GROUP BY s.vid, s.j)"""
-    )
-    ctes.append(
+      SELECT af.vid, af.bucket AS cell, {_res_sql('af.eq', 'c.cq')} AS res
+      FROM af JOIN {cells} c USING (bucket))""",
+        _subspaces_sql("s", "vid, cell, ", "res", "r", m, d, "MATERIALIZED "),
+        *_pq_lloyd_ctes("p", kc, book_iters),
+        _pq_assign_sql("codes", "any_value(s.cell) AS cell, ", books, kc, out="code"),
         f"""probes AS (
-      SELECT c.bucket FROM e, {prev_c} c WHERE e.vid = {query_id}
-      ORDER BY {dist_c}, c.bucket LIMIT {nprobe})"""
-    )
-    ctes.append(
+      SELECT c.bucket FROM e, {cells} c WHERE e.vid = {query_id}
+      ORDER BY {_IVF_DIST_SQL}, c.bucket LIMIT {nprobe})""",
         f"""qr AS MATERIALIZED (
-      SELECT p.bucket AS cell,
-             list_transform(list_zip(e.eq, c.cq), z -> z[1] - z[2]) AS res
-      FROM probes p JOIN {prev_c} c ON c.bucket = p.bucket, e
-      WHERE e.vid = {query_id})"""
-    )
-    ctes.append(
-        f"""qs AS (
-      SELECT cell, js.j,
-             list_slice(res, js.j * {d} + 1, (js.j + 1) * {d}) AS sub
-      FROM qr, (SELECT unnest(generate_series(0, {m - 1})) AS j) js)"""
-    )
-    ctes.append(
+      SELECT p.bucket AS cell, {_res_sql('e.eq', 'c.cq')} AS res
+      FROM probes p JOIN {cells} c ON c.bucket = p.bucket, e
+      WHERE e.vid = {query_id})""",
+        _subspaces_sql("qs", "cell, ", "res", "qr", m, d),
         f"""lut AS MATERIALIZED (
-      SELECT s.cell, s.j, b.bucket AS code, {dist_b} AS qdist
-      FROM qs s JOIN {prev_b} b ON b.j = s.j)"""
-    )
-    ctes.append(
+      SELECT s.cell, s.j, b.bucket AS code, {_PQ_DIST_SQL} AS qdist
+      FROM qs s JOIN {books} b ON b.j = s.j)""",
         f"""cands AS (
       SELECT c.vid FROM codes c
       JOIN lut ON lut.cell = c.cell AND lut.j = c.j AND lut.code = c.code
       WHERE c.vid <> {query_id}
       GROUP BY c.vid
       ORDER BY CAST(sum(qdist) AS BIGINT) ASC, c.vid ASC
-      LIMIT {rescore * k})"""
-    )
-    ctes.append(
-        f"q AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM e"
-        f" WHERE vid = {query_id} AND nrm > 0)"
-    )
-    cos_q = (
-        "list_inner_product(e.embedding::DOUBLE[], q.q_emb::DOUBLE[])"
-        " / (e.nrm * q.q_nrm)"
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT e.vid AS {id_col},
-           floor(({cos_q}) * 10000 + 0.5) / 10000 AS score
-    FROM e JOIN cands USING (vid), q
-    WHERE e.nrm > 0
-    ORDER BY score DESC, e.vid ASC LIMIT {k}
-    """
+      LIMIT {rescore * k})""",
+    ]
+    return _rescored_topk_sql(ctes, query_id, k, id_col)
 
 
 def pq_near_dups_incremental(
@@ -3034,12 +2748,7 @@ def pq_near_dups_incremental(
         .join(fb, "id_b")
         .select(
             "id_a", "id_b", "n_bands",
-            F.floor(
-                _dot(F.col("emb_a"), F.col("emb_b"))
-                / (F.col("nrm_a") * F.col("nrm_b"))
-                * 10000
-                + F.lit(0.5)
-            ).cast("long").alias("score_bp"),
+            _cos_bp("emb_a", "emb_b", "nrm_a", "nrm_b").cast("long").alias("score_bp"),
         )
         .filter(F.col("score_bp") >= thr_bp)
         .orderBy("id_a", "id_b")
@@ -3150,15 +2859,7 @@ def semdedup(
     witnesses = (
         a.join(b, "cell")
         .filter(F.col("vid_a") < F.col("vid_b"))
-        .filter(
-            F.floor(
-                _dot(F.col("emb_a"), F.col("emb_b"))
-                / (F.col("nrm_a") * F.col("nrm_b"))
-                * 10000
-                + F.lit(0.5)
-            ).cast("long")
-            >= thr_bp
-        )
+        .filter(_cos_bp("emb_a", "emb_b", "nrm_a", "nrm_b").cast("long") >= thr_bp)
         .groupBy(F.col("vid_b").alias("vid"))
         .agg(F.min("vid_a").alias("dup_of"))
     )
@@ -3300,15 +3001,7 @@ def semdedup_incremental(
     witnesses = (
         x.join(y, "cell")
         .filter(F.col("vid_x") != F.col("vid_y"))
-        .filter(
-            F.floor(
-                _dot(F.col("emb_x"), F.col("emb_y"))
-                / (F.col("nrm_x") * F.col("nrm_y"))
-                * 10000
-                + F.lit(0.5)
-            ).cast("long")
-            >= thr_bp
-        )
+        .filter(_cos_bp("emb_x", "emb_y", "nrm_x", "nrm_y").cast("long") >= thr_bp)
         .select(
             F.greatest("vid_x", "vid_y").alias("vid"),
             F.least("vid_x", "vid_y").alias("dup_of"),
@@ -3483,15 +3176,7 @@ def topk_hamming(
         .select(
             F.col("vid").alias(id_col),
             "hamming",
-            (
-                F.floor(
-                    _dot(F.col("embedding"), F.col("q_emb"))
-                    / (F.col("nrm") * F.col("q_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("score"),
+            (_cos_bp("embedding", "q_emb", "nrm", "q_nrm") / 10000).alias("score"),
         )
         .orderBy(F.desc("score"), id_col)
         .limit(k)
@@ -3546,7 +3231,7 @@ def semdedup_trained_sql(
     import math as _math
 
     thr_bp = int(_math.floor(threshold * 10000 + 0.5))
-    ctes, _prev, _dist = _ivf_train_ctes(table, id_col, n_clusters, iters)
+    ctes, _prev = _ivf_train_ctes(table, id_col, n_clusters, iters)
     cos_ab = (
         "list_inner_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) / "
         "(a.nrm * b.nrm)"
@@ -3590,20 +3275,15 @@ def topk_pq_store(
     from ...sources import txtable as _tx
 
     books = books or pq_codebooks()
-    m, d = len(books), len(books[0][0])
     store = _tx.read_table(spark, code_store)
-    eq = _quant_sql("embedding")
-    lut_exprs = []
-    for j in range(m):
-        sub = f"slice(eq, {j * d + 1}, {d})"
-        dists = ", ".join(_sqdist_lits_sql(sub, c) for c in books[j])
-        lut_exprs.append(f"array({dists}) AS lut{j}")
     qlut = (
         store.filter(F.col("vid") == query_id)
-        .selectExpr(f"{eq} AS eq")
-        .selectExpr(*lut_exprs)
+        .selectExpr(f"{_quant_sql('embedding')} AS eq")
+        .selectExpr(*_lut_exprs(books))
     )
-    adist = " + ".join(f"element_at(lut{j}, codes[{j}] + 1)" for j in range(m))
+    adist = " + ".join(
+        f"element_at(lut{j}, codes[{j}] + 1)" for j in range(len(books))
+    )
     cands = (
         store.filter(F.col("vid") != query_id)
         .crossJoin(F.broadcast(qlut))
@@ -3612,34 +3292,7 @@ def topk_pq_store(
         .limit(rescore * k)
         .select("vid")
     )
-    full = store.select(
-        "vid",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    qfull = full.filter((F.col("vid") == query_id) & (F.col("nrm") > 0)).select(
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
-    )
-    return (
-        full.filter(F.col("nrm") > 0)
-        .join(F.broadcast(cands), "vid")
-        .crossJoin(F.broadcast(qfull))
-        .select(
-            "vid",
-            (
-                F.floor(
-                    _dot(F.col("embedding"), F.col("q_emb"))
-                    / (F.col("nrm") * F.col("q_nrm"))
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vid"))
-        .limit(k)
-        .select(F.col("vid").alias("vec_id"), "score")
-    )
+    return _exact_topk(store, cands, query_id, k, "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -3711,9 +3364,7 @@ def pq_perm_table_sql(table: str, m: int = PQ_M, id_col: str = "vec_id") -> str:
     so the learned permutation is value-checked end to end."""
     return f"""(
     WITH e0 AS MATERIALIZED (
-      SELECT {id_col}, embedding,
-             list_transform(embedding, x ->
-               CAST(floor(CAST(x AS DOUBLE) * {IVF_SCALE}.0 + 0.5) AS BIGINT)) AS eq
+      SELECT {id_col}, embedding, {_QUANT_DUCK} AS eq
       FROM {table}),
     st AS (
       SELECT idx, CAST(count(*) AS BIGINT) AS n,

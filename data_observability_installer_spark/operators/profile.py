@@ -399,6 +399,8 @@ def profile(
         # entry) — the returned frame is a LocalRelation.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         sc = df.sparkSession.sparkContext
 
         def run_chunk(ib: tuple[int, list[tuple[str, Metric]]]):
@@ -423,11 +425,21 @@ def profile(
             return cost
 
         order = sorted(range(len(chunks)), key=lambda i: -chunk_cost(chunks[i]))
+        # each chunk job carries the caller's local properties (job
+        # group, scheduler pool) and job tags: wrapped per chunk, so
+        # every worker gets its own copy and the per-chunk descriptions
+        # never race
         with (
             pinned(src, eager=True) if transient_src else nullcontext(),
             ThreadPoolExecutor(max_workers=min(3, len(chunks))) as pool,
         ):
-            res = list(pool.map(run_chunk, [(i, chunks[i]) for i in order]))
+            futs = [
+                pool.submit(
+                    inheritable_thread_target(df.sparkSession)(run_chunk), (i, chunks[i])
+                )
+                for i in order
+            ]
+            res = [f.result() for f in futs]
         chunk_rows: list = [None] * len(chunks)
         for i, row in zip(order, res):
             chunk_rows[i] = row

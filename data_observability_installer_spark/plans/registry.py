@@ -139,21 +139,24 @@ def profile_delta_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eagerly once, outside the racing threads
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # each side's jobs carry the caller's job group and tags
     with pinned(li, eager=True), ThreadPoolExecutor(max_workers=2) as pool:
         f_old = pool.submit(
-            lambda: _PROFILE_CACHE.get_or_build(
+            inheritable_thread_target(spark)(lambda: _PROFILE_CACHE.get_or_build(
                 (app, sf_dir, "lineitem#delta-old"),
                 lambda: profile(
                     li.filter(F.col("l_orderkey") % 2 == 0), "lineitem", AS_OF,
                     columns=_DELTA_COLS,
                 ),
-            )
+            ))
         )
         f_new = pool.submit(
-            lambda: _PROFILE_CACHE.get_or_build(
+            inheritable_thread_target(spark)(lambda: _PROFILE_CACHE.get_or_build(
                 (app, sf_dir, "lineitem#delta-new"),
                 lambda: profile(li, "lineitem", AS_OF, columns=_DELTA_COLS),
-            )
+            ))
         )
         old, new = f_old.result(), f_new.result()
     return profile_delta(old, new)

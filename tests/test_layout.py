@@ -119,6 +119,35 @@ def test_compact_plan_is_metadata_only(spark, tmp_path):
     assert plan["files"] >= 1 and plan["bytes"] > 0 and plan["target_files"] == 1
 
 
+def test_zorder_layout_independent_of_rdd_ids(spark, tmp_path):
+    """zorder_by's file boundaries are a function of the data only: the
+    same input written after a varying number of throwaway RDDs (which
+    shift the RDD ids a sampled range partitioner seeds from) lands in
+    the same files, row for row, and the files hold equal counts."""
+    df = spark.range(1 << 12).select(
+        (F.col("id") % 1000).cast("double").alias("a"),
+        ((F.col("id") * 7919) % 1000).cast("double").alias("b"),
+    )
+    part = F.regexp_extract(F.input_file_name(), r"part-(\d+)", 1)
+    layouts = []
+    for shift in (0, 1, 3, 7, 12, 20):
+        for _ in range(shift):
+            spark.sparkContext.parallelize([0])
+        out = str(tmp_path / f"z{shift}")
+        zorder_by(df, ["a", "b"], bits=10, n_files=8).write.parquet(out)
+        layouts.append(
+            sorted(
+                tuple(r)
+                for r in spark.read.parquet(out)
+                .groupBy(part.alias("file"))
+                .agg(F.count(F.lit(1)), F.sum(F.hash("a", "b")))
+                .collect()
+            )
+        )
+    assert all(lay == layouts[0] for lay in layouts), layouts
+    assert [r[1] for r in layouts[0]] == [512] * 8, layouts[0]
+
+
 def test_zorder_locality_report_shape(spark):
     df = spark.range(1024).select(
         (F.col("id") % 100).cast("double").alias("a"),

@@ -34,6 +34,36 @@ def test_profile_shape_and_values(spark, sf_smoke):
                 "distinct_ct", "distinct_pct", "duplicate_ct"} <= ms, c
 
 
+def test_profile_chunk_jobs_inherit_job_group(spark, sf_smoke):
+    """A multi-chunk profile runs its chunk jobs on pool threads; each
+    one must still carry the caller's job group, so a group-scoped
+    count (or cancel) covers the whole profile. Jobs are bracketed by
+    marker jobs in their own groups: every job id between the markers
+    belongs to the profile and must be listed under its group."""
+    sc = spark.sparkContext
+    df = spark.read.parquet(f"{sf_smoke}/lineitem.parquet")
+
+    def marker(group: str) -> list[int]:
+        sc.setJobGroup(group, "marker")
+        try:
+            spark.range(1).collect()
+            return sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(None, None)
+
+    lo = max(marker("profile_group_pre"))
+    sc.setJobGroup("profile_group_g", "multi-chunk profile")
+    try:
+        profile(df, "lineitem", AS_OF).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    hi = min(marker("profile_group_post"))
+    launched = set(range(lo + 1, hi))
+    grouped = set(sc.statusTracker().getJobIdsForGroup("profile_group_g"))
+    assert len(launched) > 1, launched  # the pooled multi-chunk path ran
+    assert launched == grouped, (sorted(launched), sorted(grouped))
+
+
 def test_profile_approx_mode_runs(spark, sf_smoke):
     df = spark.read.parquet(f"{sf_smoke}/lineitem.parquet")
     prof = profile(df, "lineitem", AS_OF, columns=["l_partkey"], exact=False)

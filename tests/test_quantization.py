@@ -4,8 +4,11 @@ compression claim, and edge guards (zero vectors)."""
 from __future__ import annotations
 
 import glob
+import math
 import os
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from data_observability_installer_spark.operators.llm.similarity import (
@@ -483,3 +486,127 @@ def test_pq_encode_codes_match_numpy_reference(spark, sf_smoke):
     got_t = encoded(with_tie, tied)
     assert got_t[-1][0] == lo
     assert got_t == reference(with_tie.collect(), tied)
+
+
+def _lloyd_reference(points, init, iters, keep_dead):
+    """Pure-Python exact-integer Lloyd over quantized points: assign to
+    the nearest centroid by squared distance (ties to the lowest id),
+    update each live centroid to floor(float(sum) / n + 0.5) per
+    component. Returns the final {id: centroid} and, per iteration, the
+    set of ids that had members."""
+    cents, live = dict(init), []
+    for _ in range(iters):
+        members: dict[int, list[list[int]]] = {}
+        for p in points:
+            b = min(cents, key=lambda c: (sum((x - y) ** 2 for x, y in zip(p, cents[c])), c))
+            members.setdefault(b, []).append(p)
+        new = dict(cents) if keep_dead else {}
+        for b, ps in members.items():
+            new[b] = [math.floor(float(sum(col)) / len(ps) + 0.5) for col in zip(*ps)]
+        cents = new
+        live.append(set(members))
+    return cents, live
+
+
+def _planted_dying_centroid(a, b, c):
+    """Four points around centroids a, b, c (float vectors) where the
+    cell of ``a`` is live in iteration 1 and loses all members in
+    iteration 2: two points sit just on a's side of its borders with b
+    and with c, each next to a point just on the other side. After
+    iteration 1 a's centroid is their midpoint, which is farther from
+    both than the neighbours' new centroids are."""
+    a, b, c = (np.array(v, dtype=np.float64) for v in (a, b, c))
+    pts = []
+    for o in (b, c):
+        mid, step = (a + o) / 2, 0.05 * (a - o)
+        pts += [mid + step, mid - step]
+    return [[float(x) for x in p] for p in pts]
+
+
+def _quantized(points):
+    # the engines' quantizer: CAST(float AS DOUBLE) * scale, floor(+0.5)
+    from data_observability_installer_spark.operators.llm.similarity import IVF_SCALE
+
+    return [
+        [math.floor(float(np.float32(x)) * IVF_SCALE + 0.5) for x in p] for p in points
+    ]
+
+
+def test_trainers_match_exact_lloyd_reference_on_dead_centroids(spark):
+    """The Lloyd trainers' values, pinned against a pure-Python
+    exact-integer reference on a planted frame where one IVF cell and
+    one PQ centroid are live in iteration 1 and lose every member in
+    iteration 2. The two dead-centroid rules differ on purpose: IVF
+    DROPS the dead cell (the SQL twin's empty cell has no row), PQ
+    KEEPS the dead centroid's previous row (codes index book
+    positions, so the book stays k-long)."""
+    from data_observability_installer_spark.operators.llm.similarity import (
+        IVF_SCALE,
+        ivf_centroids,
+        pq_codebooks,
+        train_ivf_kmeans,
+        train_pq,
+    )
+
+    schema = "vec_id long, embedding array<float>"
+
+    # IVF: 3 fixed-init cells, cell 0 dies in iteration 2
+    init = ivf_centroids(n_clusters=3)
+    pts = _planted_dying_centroid(*init)
+    q_init = dict(enumerate(_quantized(init)))
+    ref, live = _lloyd_reference(_quantized(pts), q_init, 2, keep_dead=False)
+    assert live == [{0, 1, 2}, {1, 2}]  # the planted death happens
+    df = spark.createDataFrame(list(enumerate(pts)), schema)
+    got = train_ivf_kmeans(df, n_clusters=3, iters=2)
+    assert got == ref
+    assert set(got) == {1, 2}  # the dead cell is dropped
+
+    # PQ: m=8 books of 3; in subspace 0 centroid 0 dies in iteration 2,
+    # every other subspace sees only zero subvectors
+    books = pq_codebooks(m=8, k=3)
+    d = len(books[0][0])
+    sub0 = _planted_dying_centroid(*[[v / IVF_SCALE for v in c] for c in books[0]])
+    pts = [p + [0.0] * (7 * d) for p in sub0]
+    qpts = _quantized(pts)
+    got = train_pq(spark.createDataFrame(list(enumerate(pts)), schema), m=8, k=3, iters=2)
+    for j, book in enumerate(books):
+        subs = [p[j * d : (j + 1) * d] for p in qpts]
+        ref, live = _lloyd_reference(subs, dict(enumerate(book)), 2, keep_dead=True)
+        assert got[j] == [ref[c] for c in range(3)], j
+        if j == 0:
+            assert live == [{0, 1, 2}, {1, 2}]  # the planted death happens
+            after_one, _ = _lloyd_reference(subs, dict(enumerate(book)), 1, keep_dead=True)
+            # the dead centroid keeps its iteration-1 row, not its init row
+            assert got[0][0] == after_one[0] != book[0]
+
+
+# Spark jobs per call (build + collect) of the trained ANN registry
+# queries at sf0.001: each budget is the maximum observed over 12
+# repetitions when IVF and PQ still trained in separate loops (every
+# repetition gave the same count). Training must stay one pass per
+# Lloyd iteration for all subspaces together.
+TRAINED_ANN_JOB_BUDGET = {
+    "topk_ivf_embeddings": 11,
+    "topk_pq_trained_embeddings": 14,
+    "topk_ivfpq_trained_embeddings": 20,
+    "semdedup_trained_embeddings": 14,
+}
+
+
+@pytest.mark.parametrize("name", sorted(TRAINED_ANN_JOB_BUDGET))
+def test_trained_ann_job_budget(spark, sf_smoke, name):
+    from data_observability_installer_spark.plans import registry
+
+    sc = spark.sparkContext
+    registry.clear_caches()
+    group = f"{name}_budget"
+    sc.setJobGroup(group, "job-budget run")
+    try:
+        rows = registry.queries()[name](spark, sf_smoke).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows
+    assert len(jobs) <= TRAINED_ANN_JOB_BUDGET[name], (
+        f"{name} ran {len(jobs)} Spark jobs (budget {TRAINED_ANN_JOB_BUDGET[name]})"
+    )
