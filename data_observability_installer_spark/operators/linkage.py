@@ -434,6 +434,17 @@ def entity_match_incremental(
     return pairs
 
 
+def fold_match_pairs(parts: list[DataFrame]) -> DataFrame:
+    """The pairs store's merge: union with an (id_a, id_b) dedup.
+    Each unordered pair is generated exactly once, in the batch of its
+    later member, so the dedup only ever removes replay artifacts — a
+    micro-batch replayed AFTER a retention rollup absorbed its
+    partition re-creates identical rows next to the rollup's copy."""
+    from functools import reduce
+
+    return reduce(DataFrame.unionByName, parts).dropDuplicates(["id_a", "id_b"])
+
+
 def entity_match_pairs(
     spark,
     pairs_store: str,
@@ -452,12 +463,7 @@ def entity_match_pairs(
     (parity-tested); pass the SAME ``max_block`` the sink used."""
     from ..sources import txtable as _tx
 
-    # (id_a, id_b) is unique by construction (each unordered pair is
-    # generated exactly once, in the batch of its later member); the
-    # dedup only ever removes replay artifacts — a micro-batch replayed
-    # AFTER a retention rollup absorbed its partition re-creates
-    # identical rows next to the rollup's copy
-    pairs = spark.read.parquet(pairs_store).dropDuplicates(["id_a", "id_b"])
+    pairs = fold_match_pairs([spark.read.parquet(pairs_store)])
     if max_block is not None:
         if store is None:
             raise ValueError("max_block= needs store= for the block sizes")

@@ -1416,18 +1416,20 @@ def _exact_topk(
     the rounded cosine to the query, top ``k`` by (score desc, vid).
     Zero vectors have no cosine and never rank (ANSI mode makes the
     0-norm division an error, not a NULL)."""
-    full = vecs.select(
-        "vid",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    qfull = full.filter((F.col("vid") == query_id) & (F.col("nrm") > 0)).select(
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
+    nrm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+    qfull = (
+        vecs.filter(F.col("vid") == query_id)
+        .select(F.col("embedding").alias("q_emb"), nrm.alias("q_nrm"))
+        .filter(F.col("q_nrm") > 0)
     )
     return (
-        full.filter(F.col("nrm") > 0)
-        .join(F.broadcast(cands), "vid")
+        vecs.join(F.broadcast(cands), "vid")
         .crossJoin(F.broadcast(qfull))
+        .withColumn("nrm", nrm)
+        # q_nrm > 0 already holds; a predicate over both join sides is
+        # not pushed below the candidate join, so only the candidates
+        # pay the norm
+        .filter(F.least("nrm", "q_nrm") > 0)
         .select("vid", (_cos_bp("embedding", "q_emb", "nrm", "q_nrm") / 10000).alias("score"))
         .orderBy(F.desc("score"), F.asc("vid"))
         .limit(k)
@@ -3021,6 +3023,13 @@ def semdedup_incremental(
     return witnesses
 
 
+def fold_witnesses(parts: list[DataFrame]) -> DataFrame:
+    """The SemDeDup witness store's merge: min(dup_of) per vid."""
+    from ..sketch import fold_keyed
+
+    return fold_keyed(parts, ["vid"], {"dup_of": "min"})
+
+
 def semdedup_verdicts(
     spark,
     store: str,
@@ -3053,7 +3062,7 @@ def semdedup_verdicts(
         if "PATH_NOT_FOUND" not in msg and "UNABLE_TO_INFER_SCHEMA" not in msg:
             raise
         w = spark.createDataFrame([], "vid long, dup_of long")
-    verd = w.groupBy("vid").agg(F.min("dup_of").alias("dup_of"))
+    verd = fold_witnesses([w])
     if max_cell is not None:
         hot = (
             pool.groupBy("cell")

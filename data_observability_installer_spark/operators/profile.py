@@ -1007,11 +1007,15 @@ def write_profile(prof: DataFrame, store: str, run_id: str) -> str:
     pruning).
 
     Returns the written run path."""
-    import os
-
-    path = os.path.join(store, f"run_id={run_id}")
+    path = _run_dir(store, run_id)
     prof.coalesce(1).write.mode("overwrite").parquet(path)
     return path
+
+
+def _run_dir(store: str, run_id: str) -> str:
+    import os
+
+    return os.path.join(store, f"run_id={run_id}")
 
 
 def read_profile(spark: SparkSession, store: str, run_id: str | None = None) -> DataFrame:
@@ -1081,7 +1085,6 @@ def vacuum_profile_store(
     delete, so a crash never loses state.
 
     Returns ``{"dropped": [...], "kept": [...], "rollup": ...}``."""
-    import os
     import shutil
 
     policies = [keep_last_n is not None, keep_days is not None, keep_before is not None]
@@ -1115,7 +1118,7 @@ def vacuum_profile_store(
                 f"retained run (oldest kept: {min(kept)!r})"
             )
         parts = [
-            spark.read.parquet(os.path.join(store, f"run_id={r}")) for r in drop
+            spark.read.parquet(_run_dir(store, r)) for r in drop
         ]
         for p in parts:
             if set(p.columns) != _PARTIAL_COLS:
@@ -1125,7 +1128,7 @@ def vacuum_profile_store(
                 )
         write_profile(merge_partials(*parts), store, rollup_run_id)
     for r in drop:
-        shutil.rmtree(os.path.join(store, f"run_id={r}"))
+        shutil.rmtree(_run_dir(store, r))
     return {"dropped": drop, "kept": kept, "rollup": rollup_run_id}
 
 
@@ -1163,14 +1166,14 @@ def retain_runs(
 
     if keep_last_n < 1:
         raise ValueError("keep_last_n must be >= 1")
-    rdir = os.path.join(store, f"run_id={rollup_run_id}")
+    rdir = _run_dir(store, rollup_run_id)
     side = os.path.join(rdir, "_sources.json")
     if os.path.isdir(rdir):
         if os.path.exists(side):
             # completed rollup from a crashed attempt: finish deletes
             with open(side) as fh:
                 for r in _json.load(fh):
-                    p = os.path.join(store, f"run_id={r}")
+                    p = _run_dir(store, r)
                     if os.path.isdir(p):
                         shutil.rmtree(p)
         else:
@@ -1188,12 +1191,12 @@ def retain_runs(
             "sources deleted; use a fresh id per retention attempt"
         )
     merged = merge_fn(
-        [spark.read.parquet(os.path.join(store, f"run_id={r}")) for r in drop]
+        [spark.read.parquet(_run_dir(store, r)) for r in drop]
     )
     write_profile(merged, store, rollup_run_id)
     with open(side, "w") as fh:
         _json.dump(drop, fh)
     for r in drop:
-        shutil.rmtree(os.path.join(store, f"run_id={r}"))
+        shutil.rmtree(_run_dir(store, r))
     return {"dropped": drop, "kept": runs[len(runs) - keep_last_n:],
             "rollup": rollup_run_id}

@@ -247,16 +247,24 @@ def cm_sketch(
     )
 
 
+def fold_keyed(parts, keys: list[str], folds: dict[str, str]) -> DataFrame:
+    """Union ``parts`` and fold each column per ``keys`` group by its
+    merge op in ``folds`` (column -> 'sum' | 'min' | 'max'). Every op
+    is associative and commutative, so folding any split of the
+    partials gives the same rows as folding them all at once: the one
+    merge algebra of the mergeable sketches and aggregate stores."""
+    from functools import reduce
+
+    return reduce(DataFrame.unionByName, parts).groupBy(*keys).agg(
+        *[getattr(F, op)(c).alias(c) for c, op in folds.items()]
+    )
+
+
 def cm_merge(*sketches: DataFrame) -> DataFrame:
     """Merge sketches built with the same (width, depth, params):
     plain summation per cell — the associative algebra that lets every
     partition/day build its own sketch independently."""
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return u.groupBy("row_id", "bucket").agg(
-        F.sum("ct").cast("long").alias("ct")
-    )
+    return fold_keyed(sketches, ["row_id", "bucket"], {"ct": "sum"})
 
 
 def cm_estimate(
@@ -389,10 +397,7 @@ def hll_merge(*sketches: DataFrame) -> DataFrame:
     double-counted input (replays, overlapping windows) changes
     nothing, the property that makes the streaming sink's store
     trivially exactly-once."""
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return u.groupBy("register").agg(F.max("max_rank").alias("max_rank"))
+    return fold_keyed(sketches, ["register"], {"max_rank": "max"})
 
 
 def hll_estimate(sketch: DataFrame, m: int = HLL_M) -> DataFrame:
@@ -676,10 +681,7 @@ def qsketch_merge(*sketches: DataFrame) -> DataFrame:
     the merged sketch answers rank queries within the same error bound
     at n = sum(n_i); size is bounded by the union of kept nodes
     (re-tighten with :func:`qsketch_rethin` when parts accumulate)."""
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return u.groupBy("level", "idx").agg(F.sum("cnt").cast("long").alias("cnt"))
+    return fold_keyed(sketches, ["level", "idx"], {"cnt": "sum"})
 
 
 def qsketch_rethin(sketch: DataFrame, k: int = 64, log_u: int = 16) -> DataFrame:

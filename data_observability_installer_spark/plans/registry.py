@@ -162,6 +162,21 @@ def profile_delta_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile_delta(old, new)
 
 
+def _profile_store(sf_dir: str, name: str) -> str:
+    """The registry's profile store for table ``name`` of the data at
+    ``sf_dir``: one store per data directory, so stored baselines from
+    different scale factors never mix."""
+    import os
+    import re
+
+    return os.path.join(
+        "spark-warehouse",
+        "profile_store",
+        re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
+        name,
+    )
+
+
 @register(
     "profile_delta_stored_lineitem",
     profile_delta_sql(
@@ -186,21 +201,11 @@ def profile_delta_stored_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame
     state plan is ONE lineitem scan (the new side, shared through the
     profile cache) plus one tiny parquet read — the round-7 verdict's
     fix for profile_delta's two-full-profile cold cost."""
-    import os
-    import re as _re
-
-    from ..operators.profile import read_profile, write_profile
+    from ..operators.profile import list_profile_runs, read_profile, write_profile
 
     li = load_table(spark, sf_dir, "lineitem")
-    store = os.path.join(
-        "spark-warehouse",
-        "profile_store",
-        _re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
-        "lineitem",
-    )
-    if not os.path.isdir(store) or not any(
-        e.startswith("run_id=") for e in os.listdir(store)
-    ):
+    store = _profile_store(sf_dir, "lineitem")
+    if not list_profile_runs(store):
         baseline = profile(
             li.filter(F.col("l_orderkey") % 2 == 0), "lineitem", AS_OF,
             columns=_DELTA_COLS,
@@ -270,23 +275,11 @@ def profile_history_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs observed, first/last value, and first-to-last relative change
     in exact bp via the bit-stable floor idiom. No table re-scan at
     query time — the store is the data."""
-    import os
-    import re as _re
-
-    from ..operators.profile import read_profile, write_profile
+    from ..operators.profile import list_profile_runs, write_profile
 
     li = load_table(spark, sf_dir, "lineitem")
-    store = os.path.join(
-        "spark-warehouse",
-        "profile_store",
-        _re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
-        "lineitem_history",
-    )
-    have = (
-        {e.split("=", 1)[1] for e in os.listdir(store) if e.startswith("run_id=")}
-        if os.path.isdir(store)
-        else set()
-    )
+    store = _profile_store(sf_dir, "lineitem_history")
+    have = set(list_profile_runs(store))
     for rid, pred in _HIST_RUNS:
         if rid not in have:
             write_profile(
@@ -365,26 +358,17 @@ def profile_incremental_stored_lineitem(spark: SparkSession, sf_dir: str) -> Dat
     so merge-correctness against real persisted state IS the check.
     At 100 TB this is the profile's steady-state cost model: one scan
     of the day's partition + a stats-sized read, never the table."""
-    import os
-    import re as _re
-
     from ..operators.profile import (
         finalize_profile,
+        list_profile_runs,
         merge_partials,
         profile_partial,
         write_profile,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    store = os.path.join(
-        "spark-warehouse",
-        "profile_store",
-        _re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
-        "lineitem_partials",
-    )
-    if not os.path.isdir(store) or not any(
-        e.startswith("run_id=") for e in os.listdir(store)
-    ):
+    store = _profile_store(sf_dir, "lineitem_partials")
+    if not list_profile_runs(store):
         write_profile(
             profile_partial(li.filter(F.col("l_orderkey") % 2 == 0), "lineitem"),
             store,
@@ -4657,8 +4641,9 @@ def seasonality_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seasonality_strength(daily)
 
 
-_CP_FLAG_Q = 1_000_000  # changepoint alert floor on the 1e-4-quantized gain
-_SLA_P99_FLAG_S = 6 * 3600  # SLA screen: flag pipelines with p99 >= 6h
+from ..streaming.monitor import CP_FLAG_Q as _CP_FLAG_Q  # noqa: E402
+from ..streaming.monitor import SLA_P99_FLAG_S as _SLA_P99_FLAG_S  # noqa: E402
+from ..streaming.monitor import monitor_pane  # noqa: E402
 
 
 def _monitor_twin() -> str:
@@ -4711,13 +4696,14 @@ def monitor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose those wrappers and therefore scanned events FIVE times and
     computed the run rollup twice and the daily type counts three
     times. It now loads events once (transient persist), pins ONE
-    daily-counts frame (mk/cusum/changepoint consume it — cusum and
-    changepoint read the day as the formatted string the twins use)
-    and ONE run rollup (p-chart subgroup counts and the SLA quantile
-    sketch consume it); both pins are metadata-sized. Screen operators
-    and twins unchanged, so every screen's rows are identical to its
-    standalone query."""
-    from ..operators.sketch import qsketch_by, qsketch_quantiles_by
+    daily-counts frame (mk/cusum/changepoint read it with the day as
+    the formatted string the twins use) and ONE run rollup (p-chart
+    subgroup counts and the SLA quantile sketch consume it); both pins
+    are metadata-sized. The composition itself is
+    :func:`streaming.monitor.monitor_pane`, shared with the pane served
+    from the continuous stores. Screen operators and twins unchanged,
+    so every screen's rows are identical to its standalone query."""
+    from ..operators.sketch import qsketch_by
 
     # both pins are materialized inside the scope; nothing reads ev after
     with pinned(load_table(spark, sf_dir, "events")) as ev:
@@ -4727,66 +4713,18 @@ def monitor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).agg(F.count(F.lit(1)).cast("long").alias("v"))
         )
         runs = pin(_events_run_rollup(ev))
-    daily_str = daily_ts.select(
-        "k", F.date_format("day", "yyyy-MM-dd").alias("o"), "v"
-    )
-    mk = mann_kendall(daily_ts).selectExpr(
-        "'mk_trend' AS screen",
-        "k AS entity",
-        "significant AS flagged",
-        "CAST(s_stat AS STRING) AS detail",
-    )
-    cs = cusum_screen(daily_str).selectExpr(
-        "'cusum' AS screen",
-        "k AS entity",
-        "out_of_control AS flagged",
-        "CAST(upper_alarms + lower_alarms AS STRING) AS detail",
-    )
-    cp = changepoint(daily_str).selectExpr(
-        "'changepoint' AS screen",
-        "k AS entity",
-        f"gain_q >= {_CP_FLAG_Q} AS flagged",
-        "CAST(gain_q AS STRING) AS detail",
-    )
-    pc_counts = runs.groupBy(
-        F.concat(
-            F.col("pipeline_key"), F.lit("|"), F.date_format("start_ts", "yyyy-MM-dd")
-        ).alias("k")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("final_status") == "FAILED").cast("long")).alias("x"),
-    )
-    pc = (
-        p_chart(pc_counts)
-        .groupBy(F.split_part(F.col("k"), F.lit("|"), F.lit(1)).alias("entity"))
-        .agg(
-            F.max(F.col("breach")).alias("flagged"),
-            F.sum(F.col("breach").cast("int")).cast("long").cast("string").alias("detail"),
-        )
-        .selectExpr("'p_chart' AS screen", "entity", "flagged", "detail")
-    )
     dur = runs.selectExpr(
         "pipeline_key",
         "(unix_micros(end_ts) - unix_micros(start_ts)) DIV 1000000 AS dur_s",
     )
-    sk = qsketch_by(dur, "pipeline_key", "dur_s", lo=0, hi=_QSB_HI)
-    sla = (
-        qsketch_quantiles_by(sk, _QSB_BPS, lo=0, hi=_QSB_HI)
-        .select(F.col("k_key").alias("pipeline_key"), "q_bp", "n", "est")
-        .filter(F.col("q_bp") == 9900)
-        .selectExpr(
-            "'sla_p99' AS screen",
-            "pipeline_key AS entity",
-            f"est >= {_SLA_P99_FLAG_S} AS flagged",
-            "CAST(est AS STRING) AS detail",
-        )
-    )
-    return (
-        cp.unionByName(cs)
-        .unionByName(mk)
-        .unionByName(pc)
-        .unionByName(sla)
-        .orderBy("screen", "entity")
+    return monitor_pane(
+        daily_ts.select("k", F.date_format("day", "yyyy-MM-dd").alias("o"), "v"),
+        runs.select(
+            "pipeline_key", "start_ts",
+            (F.col("final_status") == "FAILED").alias("failed"),
+        ),
+        qsketch_by(dur, "pipeline_key", "dur_s", lo=0, hi=_QSB_HI),
+        qs_hi=_QSB_HI,
     )
 
 

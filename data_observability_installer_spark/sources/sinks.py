@@ -80,6 +80,21 @@ def idempotent_batch_sink(stream, out_dir: str, query_name: str = "idempotent_si
     )
 
 
+def start_batch_query(stream, commit, checkpoint: str, **trigger):
+    """Start ``stream`` as a checkpointed ``foreachBatch(commit)``
+    query — the one start every continuous sink shares. ``trigger``
+    passes through to ``DataStreamWriter.trigger`` when given (e.g.
+    ``availableNow=True``); Spark's default trigger applies otherwise.
+
+    Returns the started StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(commit).option(
+        "checkpointLocation", checkpoint
+    )
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
+
+
 class ContractViolation(RuntimeError):
     """Raised by :func:`guarded_write` when the outgoing data fails its
     contract suite; carries the failing outcome rows."""

@@ -132,6 +132,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.pin import pin
+from .sinks import start_batch_query
 
 _COMMITS = "_commits"
 _DATA = "data"
@@ -2341,12 +2342,7 @@ def txtable_sink(stream: DataFrame, path: str, checkpoint: str, **trigger):
     def commit_batch(df: DataFrame, batch_id: int) -> None:
         commit_stream_batch(path, df, batch_id)
 
-    writer = stream.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return start_batch_query(stream, commit_batch, checkpoint, **trigger)
 
 
 def txtable_upsert_sink(
@@ -2392,12 +2388,7 @@ def txtable_upsert_sink(
             deleted_col=deleted_col, batch_id=batch_id,
         )
 
-    writer = stream.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return start_batch_query(stream, commit_batch, checkpoint, **trigger)
 
 
 class TxTableStream:

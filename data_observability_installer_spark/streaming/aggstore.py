@@ -1,44 +1,72 @@
-"""Generic MERGEABLE AGGREGATE STORE — the streaming pre-aggregation
-cube the serving-side monitors read.
+"""The MICRO-BATCH STORE seam every continuous store sink writes
+through, and the generic mergeable aggregate store built on it.
 
-Every screen in the continuous-monitoring pane consumes a small keyed
-aggregate (daily counts per event type, per-run min/max/status
-counters), not raw events. This sink maintains exactly that: each
-micro-batch reduces to its own partial aggregate under
-``run_id=<batch>`` (overwrite => replay-idempotent), and the read face
-folds partials by each column's declared merge op (sum | min | max —
-all associative and commutative, so the folded store is identical to
-the one-shot aggregate over everything ingested, for any batch split).
+Store protocol (:func:`store_sink`): each micro-batch reduces to a
+small partial — the batch's share of the store's state — written under
+``store/run_id=<batch_id:08d>`` with overwrite. foreachBatch is
+at-least-once, and a replayed micro-batch can only ever be the LAST
+uncommitted batch: its partition is the store's newest, never yet
+absorbed by retention, so the overwrite replaces identical rows and
+nothing double-counts. The read face folds every partial with the
+store's merge (``fold``); the folds are associative and commutative,
+so the result is the one-shot answer over everything ingested, for
+any batch split. Stream state is ZERO; durability lives in the store.
 
-Replay safety of the sum fold: a replayed micro-batch (foreachBatch is
-at-least-once) can only ever be the LAST uncommitted batch, whose
-partition is the store's newest — never yet absorbed by retention — so
-the overwrite replaces identical rows and nothing double-counts. (The
-same argument the profile/CM/HLL partial stores rely on.)
+Retention: ``retain=N`` bounds the store to N run partitions plus one
+rollup. After each write, the oldest surplus partitions fold (through
+the same ``fold``) into ``run_id=00000000_rollup_<batch_id:08d>`` —
+an id that sorts below every run id, so latest-run selection never
+sees a rollup as newest — via the crash-safe sidecar protocol of
+:func:`operators.profile.retain_runs`. The folded store reads
+row-identical to the unbounded one. Without ``retain``, the store
+grows one partition per micro-batch (``vacuum_profile_store`` bounds a
+profile store externally).
 
-State story at 100 TB: stream state is ZERO (stateless per-batch
-aggregation); store size is O(distinct keys), independent of stream
-length; ``retain=`` bounds the partition count through the shared
-crash-safe :func:`operators.profile.retain_runs` protocol with the
-same fold.
+The aggregate store (:func:`agg_sink`) is the streaming pre-aggregation
+cube the serving-side monitors read: every screen in the
+continuous-monitoring pane consumes a small keyed aggregate (daily
+counts per event type, per-run min/max/status counters), not raw
+events. Each partial is the batch's keyed aggregate and the fold is
+each column's declared merge op (sum | min | max). Store size is
+O(distinct keys), independent of stream length.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..operators.sketch import fold_keyed
+from ..sources.sinks import start_batch_query
+
 _FOLDS = ("sum", "min", "max")
 
 
-def _fold_frame(parts: list[DataFrame], keys: list[str], folds: dict):
-    from pyspark.sql import functions as F
+def store_sink(
+    stream: DataFrame,
+    store: str,
+    checkpoint: str,
+    partial,
+    fold,
+    retain: int | None = None,
+    **trigger,
+):
+    """Start a continuous store sink (see module docstring):
+    ``partial(df, batch_id) -> DataFrame`` is the micro-batch's state,
+    ``fold(list[DataFrame]) -> DataFrame`` the store's merge, used by
+    retention rollups and by the store's read face alike.
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.groupBy(*keys).agg(
-        *[getattr(F, op)(c).alias(c) for c, op in folds.items()]
-    )
+    Returns the started StreamingQuery."""
+    from ..operators.profile import retain_runs, write_profile
+
+    def commit(df: DataFrame, batch_id: int) -> None:
+        write_profile(partial(df, batch_id), store, f"{batch_id:08d}")
+        if retain is not None:
+            retain_runs(
+                df.sparkSession, store, retain,
+                f"00000000_rollup_{batch_id:08d}", fold,
+            )
+
+    return start_batch_query(stream, commit, checkpoint, **trigger)
 
 
 def agg_sink(
@@ -61,35 +89,20 @@ def agg_sink(
     mergeable under it (count/sum -> sum, min -> min, max -> max).
 
     Returns the started StreamingQuery."""
-    from ..operators.profile import retain_runs
-
     bad = {c: op for c, op in folds.items() if op not in _FOLDS}
     if bad or set(folds) != set(aggs):
         raise ValueError(
             f"folds must map every agg column to one of {_FOLDS}; got "
             f"{folds} for aggs {sorted(aggs)}"
         )
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        partial = df.groupBy(*keys).agg(
+    return store_sink(
+        stream, store, checkpoint,
+        lambda df, _: df.groupBy(*keys).agg(
             *[a.alias(c) for c, a in aggs.items()]
-        )
-        partial.coalesce(1).write.mode("overwrite").parquet(
-            f"{store}/run_id={batch_id:08d}"
-        )
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, store, retain,
-                f"00000000_rollup_{batch_id:08d}",
-                lambda parts: _fold_frame(parts, keys, folds),
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
+        ),
+        lambda parts: fold_keyed(parts, keys, folds),
+        retain, **trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def read_agg_store(
@@ -99,10 +112,4 @@ def read_agg_store(
     identical to the one-shot groupBy over everything ingested (the
     fold ops are associative + commutative). Pass the SAME ``keys`` /
     ``folds`` the sink used."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(store)
-        .groupBy(*keys)
-        .agg(*[getattr(F, op)(c).alias(c) for c, op in folds.items()])
-    )
+    return fold_keyed([spark.read.parquet(store)], keys, folds)

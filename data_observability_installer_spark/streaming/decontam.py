@@ -10,10 +10,10 @@ nominate (broadcast-hash semi-join, zero corpus shuffle) + verify
 (exact string join of the nominated pairs only) plan as the batch
 operator (:func:`operators.llm.decontam.decontaminate_fingerprint`).
 
-Verdict rows land under ``verdict_store/run_id=<batch>`` (overwrite =>
-replay-idempotent); each document is verdicted exactly once (in its
-arrival batch), so the cumulative read is a plain union with an id
-dedup that only ever removes replay artifacts. Parity with the batch
+Verdict rows are the micro-batch partials of
+:func:`streaming.aggstore.store_sink`; each document is verdicted
+exactly once (in its arrival batch), so the store's fold is a plain
+union with an id dedup that only ever removes replay artifacts. Parity with the batch
 operator over everything ingested is pytest-pinned
 (tests/test_streaming.py).
 
@@ -25,9 +25,16 @@ shape in the streaming family.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 
 from ..functions.pin import pin
+from .aggstore import store_sink
+
+
+def _fold_verdicts(parts: list[DataFrame], id_col: str) -> DataFrame:
+    return reduce(DataFrame.unionByName, parts).dropDuplicates([id_col])
 
 
 def decontam_sink(
@@ -46,16 +53,9 @@ def decontam_sink(
     docstring). ``bench`` is the frozen eval set — its shingle frames
     are derived once here and reused every micro-batch.
 
-    ``retain``: bound the verdict store to that many partitions — each
-    over-budget batch folds the oldest surplus into one rollup via the
-    shared crash-safe :func:`operators.profile.retain_runs` protocol.
-    Verdicts are exactly-once rows, so the fold is a concat with an
-    ``id_col`` dedup (removes only replay artifacts).
-
     Returns the started StreamingQuery."""
     from ..operators.llm.decontam import fingerprint_verdicts
     from ..operators.llm.dedup import exploded_shingles
-    from ..operators.profile import retain_runs
     from pyspark.sql import functions as F
 
     bench_sh = pin(
@@ -63,32 +63,15 @@ def decontam_sink(
     )
     fp = pin(bench_sh.select(F.xxhash64("sh").alias("h")).distinct())
 
-    def fold(parts: list[DataFrame]) -> DataFrame:
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.dropDuplicates([id_col])
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        verdicts = fingerprint_verdicts(
+    return store_sink(
+        stream, verdict_store, checkpoint,
+        lambda df, _: fingerprint_verdicts(
             df, bench_sh, fp,
             text_col=text_col, id_col=id_col, n=n, min_hits=min_hits,
-        )
-        verdicts.coalesce(1).write.mode("overwrite").parquet(
-            f"{verdict_store}/run_id={batch_id:08d}"
-        )
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, verdict_store, retain,
-                f"00000000_rollup_{batch_id:08d}", fold,
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
+        ),
+        lambda parts: _fold_verdicts(parts, id_col),
+        retain, **trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def decontam_verdicts(
@@ -99,8 +82,8 @@ def decontam_verdicts(
     after a retention rollup absorbed its partition re-creates
     identical rows); legitimate rows are unique per ``id_col`` by
     construction — each document is verdicted in its arrival batch."""
-    return (
-        spark.read.parquet(verdict_store)
-        .select(id_col, "hit_shingles", "contaminated")
-        .dropDuplicates([id_col])
+    return _fold_verdicts(
+        [spark.read.parquet(verdict_store)
+         .select(id_col, "hit_shingles", "contaminated")],
+        id_col,
     )

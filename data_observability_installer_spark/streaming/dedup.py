@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 
 from ..operators.llm.curation import curation_filter
 from ..operators.llm.text import fingerprint_col
+from ..sources.sinks import start_batch_query
+from .aggstore import store_sink
 
 
 def dedup_exact_stream(
@@ -126,12 +128,7 @@ def pq_near_dup_sink(
             f"{pairs_store}/batch_id={batch_id}"
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return start_batch_query(stream, commit, checkpoint, **trigger)
 
 
 def semdedup_sink(
@@ -152,43 +149,27 @@ def semdedup_sink(
     production — train once, serve many), joined within-cell against
     the txtable-backed cell store (per-batch cost = batch x store
     same-cell rows, never the full-corpus sum(cell^2) the batch
-    operator re-pays per run), its witness rows written under
-    ``witness_store/run_id=<batch>`` (overwrite => replay-idempotent),
-    and its vectors appended exactly-once (batch_id-stamped commit).
+    operator re-pays per run), its witness rows written as the batch's
+    partial of :func:`streaming.aggstore.store_sink`, and its vectors
+    appended exactly-once (batch_id-stamped commit).
 
-    Verdicts fold by min(dup_of), so the cumulative result
-    (:func:`operators.llm.similarity.semdedup_verdicts`) is row-identical
-    to full-corpus semdedup over everything ingested, for any batch
-    split or arrival order (parity-tested in test_streaming.py).
-    ``max_cell`` bounds per-batch cost by skipping cumulative-over-cap
-    cells — parity-safe when semdedup_verdicts reads with the SAME cap
-    (counts only grow; see semdedup_incremental).
-
-    ``retain``: bound the witness store to that many partitions — each
-    over-budget batch folds the oldest surplus into one rollup
-    partition via min(dup_of)-per-vid (profile.retain_runs — the same
-    crash-safe sidecar protocol the profile/CM/HLL/DSIR sinks use).
-    min is associative/commutative/idempotent, so the folded store's
-    verdicts are BIT-identical to the unbounded one's (parity-pinned
-    by pytest) while the ``semdedup_verdicts`` read fan-in stays
-    bounded instead of growing one partition per micro-batch forever
-    (round-11 verdict, What's wrong #2). Without it, apply retention
-    externally.
+    Verdicts fold by min(dup_of) per vid
+    (:func:`operators.llm.similarity.fold_witnesses` — associative,
+    commutative and idempotent), so the cumulative result
+    (:func:`operators.llm.similarity.semdedup_verdicts`) is
+    row-identical to full-corpus semdedup over everything ingested,
+    for any batch split, arrival order or retention rollup
+    (parity-tested in test_streaming.py). ``max_cell`` bounds
+    per-batch cost by skipping cumulative-over-cap cells — parity-safe
+    when semdedup_verdicts reads with the SAME cap (counts only grow;
+    see semdedup_incremental).
 
     Returns the started StreamingQuery."""
-    from pyspark.sql import functions as F
+    from ..operators.llm.similarity import fold_witnesses, semdedup_incremental
 
-    from ..operators.llm.similarity import semdedup_incremental
-    from ..operators.profile import retain_runs
-
-    def fold(parts: list[DataFrame]) -> DataFrame:
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.groupBy("vid").agg(F.min("dup_of").alias("dup_of"))
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        witnesses = semdedup_incremental(
+    return store_sink(
+        stream, witness_store, checkpoint,
+        lambda df, batch_id: semdedup_incremental(
             df.sparkSession,
             store,
             df,
@@ -198,19 +179,6 @@ def semdedup_sink(
             cents=cents,
             batch_id=batch_id,
             max_cell=max_cell,
-        )
-        witnesses.coalesce(1).write.mode("overwrite").parquet(
-            f"{witness_store}/run_id={batch_id:08d}"
-        )
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, witness_store, retain,
-                f"00000000_rollup_{batch_id:08d}", fold,
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
+        ),
+        fold_witnesses, retain, **trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .aggstore import store_sink
+
 
 def volume_anomaly_stream(
     stream: DataFrame,
@@ -373,51 +375,19 @@ def profile_partial_sink(
     **trigger,
 ):
     """CONTINUOUS PROFILING: every micro-batch reduces to its mergeable
-    partial-profile state (one agg pass, O(columns x stats) rows) and
-    lands in the profile store under ``run_id=<batch_id>`` — the
-    streaming face of the no-rescan profile
+    partial-profile state (one agg pass, O(columns x stats) rows), a
+    profile-store partial of :func:`streaming.aggstore.store_sink` —
+    the streaming face of the no-rescan profile
     (operators/profile.py: profile_partial / merge_partials /
-    finalize_profile, store layout from write_profile). A monitoring
-    job then reads the store, merges the partials, and finalizes,
-    WITHOUT ever re-scanning history; the partial algebra is
-    associative, so batch boundaries are invisible in the result
-    (parity-pinned by pytest).
+    finalize_profile). A monitoring job then reads the store, merges
+    the partials, and finalizes, WITHOUT ever re-scanning history; the
+    partial algebra is associative, so batch boundaries (and retention
+    rollups) are invisible in the result (parity-pinned by pytest)."""
+    from ..operators.profile import merge_partials, profile_partial
 
-    Idempotence: the run_id partition is keyed by batch_id and written
-    with overwrite, so foreachBatch's at-least-once replays rewrite
-    the same partition with the same deterministic content instead of
-    double-counting. State here is ZERO (stateless agg per batch);
-    durability lives in the store.
-
-    ``retain``: bound the store to that many run partitions — each
-    over-budget batch folds the oldest surplus into a rollup partition
-    (profile.retain_runs: the partial algebra is associative, so the
-    merged+finalized result stays bit-identical) instead of accreting
-    one partition per micro-batch forever. Without it, schedule
-    vacuum_profile_store externally."""
-    from ..operators.profile import (
-        merge_partials,
-        profile_partial,
-        retain_runs,
-        write_profile,
+    return store_sink(
+        stream, store, checkpoint,
+        lambda df, _: profile_partial(df, table_name, columns=columns),
+        lambda parts: merge_partials(*parts),
+        retain, **trigger,
     )
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        write_profile(
-            profile_partial(df, table_name, columns=columns),
-            store,
-            f"{batch_id:08d}",
-        )
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, store, retain,
-                f"00000000_rollup_{batch_id:08d}",
-                lambda parts: merge_partials(*parts),
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

@@ -7,10 +7,11 @@ the full blocked self-join per refresh — round-11 verdict, Next round
 :func:`operators.linkage.entity_match_incremental`: each micro-batch
 prefix-block-joins against the txtable-backed reference store (per-
 batch cost = batch x same-block store rows, with ``max_block`` as the
-hot-block bound), writes its scored pairs under
-``pairs_store/run_id=<batch>`` (overwrite => replay-idempotent), and
-appends its normalized rows exactly-once (batch_id-stamped commit) —
-the same store/witness split as the PQ near-dup and SemDeDup sinks.
+hot-block bound), writes its scored pairs as the batch's partial of
+:func:`streaming.aggstore.store_sink` (folded by
+:func:`operators.linkage.fold_match_pairs`), and appends its
+normalized rows exactly-once (batch_id-stamped commit) — the same
+store/witness split as the PQ near-dup and SemDeDup sinks.
 
 Read the cumulative result with
 :func:`operators.linkage.entity_match_pairs`; it is row-identical to
@@ -21,6 +22,8 @@ test_streaming.py).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from .aggstore import store_sink
 
 
 def entity_match_sink(
@@ -43,30 +46,12 @@ def entity_match_sink(
 ):
     """Start the continuous matcher (see module docstring).
 
-    ``retain``: bound the pairs store to that many partitions — each
-    over-budget batch folds the oldest surplus into one rollup
-    partition (profile.retain_runs, the same crash-safe sidecar
-    protocol as the profile/CM/HLL/DSIR/SemDeDup sinks). Every
-    unordered pair is generated exactly once across batches, so the
-    fold is a plain concat with an (id_a, id_b) dedup that only ever
-    removes replay artifacts (a batch replayed AFTER a rollup absorbed
-    its partition re-creates identical rows) — the folded store reads
-    row-identical to the unbounded one while ``entity_match_pairs``'s
-    fan-in stays bounded instead of growing one partition per
-    micro-batch forever. Without it, apply retention externally.
-
     Returns the started StreamingQuery."""
-    from ..operators.linkage import entity_match_incremental
-    from ..operators.profile import retain_runs
+    from ..operators.linkage import entity_match_incremental, fold_match_pairs
 
-    def fold(parts: list[DataFrame]) -> DataFrame:
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.dropDuplicates(["id_a", "id_b"])
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        pairs = entity_match_incremental(
+    return store_sink(
+        stream, pairs_store, checkpoint,
+        lambda df, batch_id: entity_match_incremental(
             df.sparkSession,
             store,
             df,
@@ -81,19 +66,6 @@ def entity_match_sink(
             threshold_bp=threshold_bp,
             max_block=max_block,
             batch_id=batch_id,
-        )
-        pairs.coalesce(1).write.mode("overwrite").parquet(
-            f"{pairs_store}/run_id={batch_id:08d}"
-        )
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, pairs_store, retain,
-                f"00000000_rollup_{batch_id:08d}", fold,
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
+        ),
+        fold_match_pairs, retain, **trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

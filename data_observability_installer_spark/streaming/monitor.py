@@ -26,15 +26,88 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# shared with the recomputed pane (plans/registry.py monitor_events)
-CP_FLAG_Q = 1_000_000     # changepoint alert floor on the 1e-4 gain
-SLA_P99_FLAG_S = 6 * 3600  # flag pipelines with p99 >= 6h
+CP_FLAG_Q = 1_000_000      # changepoint alert floor on the 1e-4-quantized gain
+SLA_P99_FLAG_S = 6 * 3600  # SLA screen: flag pipelines with p99 >= 6h
+_SLA_BPS = [5000, 9000, 9900]  # quantiles read off the SLA sketch
 
 COUNTS_KEYS = ["k", "o"]
 COUNTS_FOLDS = {"v": "sum"}
 RUNS_KEYS = ["pipeline_key", "run_key"]
 RUNS_FOLDS = {"start_ts": "min", "end_ts": "max",
               "err_ct": "sum", "pur_ct": "sum"}
+
+
+def monitor_pane(
+    daily: DataFrame,
+    runs: DataFrame,
+    sk: DataFrame,
+    cp_flag_q: int = CP_FLAG_Q,
+    sla_flag_s: int = SLA_P99_FLAG_S,
+    qs_lo: int = 0,
+    qs_hi: int = (1 << 17) - 1,
+) -> DataFrame:
+    """The five screens composed to (screen, entity, flagged, detail),
+    ordered by screen and entity — the one composition the recomputed
+    pane (plans/registry.py monitor_events) and the stored pane share.
+
+    ``daily``: (k, o='yyyy-MM-dd', v) daily volume per event type; ISO
+    day strings sort like days, so Mann-Kendall orders on ``o``.
+    ``runs``: (pipeline_key, start_ts, failed) one row per run.
+    ``sk``: grouped quantile-sketch nodes of run durations in whole
+    seconds per pipeline_key (k_key, level, idx, cnt)."""
+    from pyspark.sql import functions as F
+
+    from ..operators.drift import changepoint, cusum_screen, mann_kendall, p_chart
+    from ..operators.sketch import qsketch_quantiles_by
+
+    mk = mann_kendall(daily, ord_col="o").selectExpr(
+        "'mk_trend' AS screen", "k AS entity",
+        "significant AS flagged", "CAST(s_stat AS STRING) AS detail",
+    )
+    cs = cusum_screen(daily).selectExpr(
+        "'cusum' AS screen", "k AS entity",
+        "out_of_control AS flagged",
+        "CAST(upper_alarms + lower_alarms AS STRING) AS detail",
+    )
+    cp = changepoint(daily).selectExpr(
+        "'changepoint' AS screen", "k AS entity",
+        f"gain_q >= {cp_flag_q} AS flagged",
+        "CAST(gain_q AS STRING) AS detail",
+    )
+    pc_counts = runs.groupBy(
+        F.concat(
+            F.col("pipeline_key"), F.lit("|"),
+            F.date_format("start_ts", "yyyy-MM-dd"),
+        ).alias("k")
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("failed").cast("long")).alias("x"),
+    )
+    pc = (
+        p_chart(pc_counts)
+        .groupBy(F.split_part(F.col("k"), F.lit("|"), F.lit(1)).alias("entity"))
+        .agg(
+            F.max(F.col("breach")).alias("flagged"),
+            F.sum(F.col("breach").cast("int")).cast("long").cast("string")
+            .alias("detail"),
+        )
+        .selectExpr("'p_chart' AS screen", "entity", "flagged", "detail")
+    )
+    sla = (
+        qsketch_quantiles_by(sk, _SLA_BPS, lo=qs_lo, hi=qs_hi)
+        .filter(F.col("q_bp") == 9900)
+        .selectExpr(
+            "'sla_p99' AS screen", "k_key AS entity",
+            f"est >= {sla_flag_s} AS flagged", "CAST(est AS STRING) AS detail",
+        )
+    )
+    return (
+        cp.unionByName(cs)
+        .unionByName(mk)
+        .unionByName(pc)
+        .unionByName(sla)
+        .orderBy("screen", "entity")
+    )
 
 
 def monitor_pane_stored(
@@ -53,64 +126,21 @@ def monitor_pane_stored(
     ``counts_store``: agg_sink cube keyed (k, o='yyyy-MM-dd') with
     ``{"v": "sum"}`` — daily volume per event type. ``runs_store``:
     agg_sink cube keyed (pipeline_key, run_key) with min start / max
-    end / summed error+purchase counters — the mergeable run rollup.
-    ``qsketch_store``: grouped qsketch_sink store of run durations in
-    whole seconds per pipeline_key."""
+    end / summed error+purchase counters — the mergeable run rollup; a
+    run with any error event counts as failed. ``qsketch_store``:
+    grouped qsketch_sink store of run durations in whole seconds per
+    pipeline_key."""
     from pyspark.sql import functions as F
 
-    from ..operators.drift import changepoint, cusum_screen, mann_kendall, p_chart
-    from ..operators.sketch import qsketch_quantiles_by
     from .aggstore import read_agg_store
     from .sketch import read_qsketch_store
 
-    daily = read_agg_store(spark, counts_store, COUNTS_KEYS, COUNTS_FOLDS)
-    mk = mann_kendall(daily, ord_col="o").selectExpr(
-        "'mk_trend' AS screen", "k AS entity",
-        "significant AS flagged", "CAST(s_stat AS STRING) AS detail",
+    runs = read_agg_store(spark, runs_store, RUNS_KEYS, RUNS_FOLDS).select(
+        "pipeline_key", "start_ts", (F.col("err_ct") > 0).alias("failed")
     )
-    cs = cusum_screen(daily).selectExpr(
-        "'cusum' AS screen", "k AS entity",
-        "out_of_control AS flagged",
-        "CAST(upper_alarms + lower_alarms AS STRING) AS detail",
-    )
-    cp = changepoint(daily).selectExpr(
-        "'changepoint' AS screen", "k AS entity",
-        f"gain_q >= {cp_flag_q} AS flagged",
-        "CAST(gain_q AS STRING) AS detail",
-    )
-    runs = read_agg_store(spark, runs_store, RUNS_KEYS, RUNS_FOLDS)
-    pc_counts = runs.groupBy(
-        F.concat(
-            F.col("pipeline_key"), F.lit("|"),
-            F.date_format("start_ts", "yyyy-MM-dd"),
-        ).alias("k")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("err_ct") > 0).cast("long")).alias("x"),
-    )
-    pc = (
-        p_chart(pc_counts)
-        .groupBy(F.split_part(F.col("k"), F.lit("|"), F.lit(1)).alias("entity"))
-        .agg(
-            F.max(F.col("breach")).alias("flagged"),
-            F.sum(F.col("breach").cast("int")).cast("long").cast("string")
-            .alias("detail"),
-        )
-        .selectExpr("'p_chart' AS screen", "entity", "flagged", "detail")
-    )
-    sk = read_qsketch_store(spark, qsketch_store, grouped=True)
-    sla = (
-        qsketch_quantiles_by(sk, [5000, 9000, 9900], lo=qs_lo, hi=qs_hi)
-        .filter(F.col("q_bp") == 9900)
-        .selectExpr(
-            "'sla_p99' AS screen", "k_key AS entity",
-            f"est >= {sla_flag_s} AS flagged", "CAST(est AS STRING) AS detail",
-        )
-    )
-    return (
-        cp.unionByName(cs)
-        .unionByName(mk)
-        .unionByName(pc)
-        .unionByName(sla)
-        .orderBy("screen", "entity")
+    return monitor_pane(
+        read_agg_store(spark, counts_store, COUNTS_KEYS, COUNTS_FOLDS),
+        runs,
+        read_qsketch_store(spark, qsketch_store, grouped=True),
+        cp_flag_q, sla_flag_s, qs_lo, qs_hi,
     )

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .aggstore import store_sink
+
 OUTPUT_SCHEMA = "shard int, w string, est long, shard_n long"
 STATE_SCHEMA = "items array<string>, cts array<long>, n long"
 
@@ -110,64 +112,27 @@ def cm_sketch_sink(
     **trigger,
 ):
     """CONTINUOUS Count-Min: every micro-batch reduces to its own d x w
-    sketch (ONE aggregation, cells not rows) and lands under
-    ``run_id=<batch_id>`` — replay-idempotent via overwrite, exactly
-    like the continuous profiling sink. Because cm_merge is plain
+    sketch (ONE aggregation, cells not rows), a store partial of
+    :func:`streaming.aggstore.store_sink`. Because cm_merge is plain
     per-cell summation, the merged store equals the one-pass sketch of
     everything ingested (parity-pinned), so a monitoring job gets
-    whole-history frequency estimates without re-scanning any data.
-    State in the stream is ZERO; durability lives in the store.
+    whole-history frequency estimates without re-scanning any data."""
+    from ..operators.sketch import cm_merge, cm_sketch
 
-    ``retain``: bound the store to that many run partitions — each
-    over-budget batch folds the oldest surplus into one rollup sketch
-    (per-cell sums, the whole merge algebra, so read_cm_store stays
-    cell-identical) instead of accreting a partition per micro-batch
-    forever."""
-    from pyspark.sql import functions as F
-
-    from ..operators.profile import retain_runs, write_profile
-    from ..operators.sketch import cm_sketch
-
-    def _merge_cells(parts):
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.groupBy("row_id", "bucket").agg(
-            F.sum("ct").cast("long").alias("ct")
-        )
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        write_profile(
-            cm_sketch(df, col=col, width=width, depth=depth),
-            store,
-            f"{batch_id:08d}",
-        )
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, store, retain,
-                f"00000000_rollup_{batch_id:08d}", _merge_cells,
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
+    return store_sink(
+        stream, store, checkpoint,
+        lambda df, _: cm_sketch(df, col=col, width=width, depth=depth),
+        lambda parts: cm_merge(*parts),
+        retain, **trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def read_cm_store(spark, store: str) -> DataFrame:
     """Merge every stored per-batch sketch into the whole-history
-    sketch: one metadata-sized groupBy over d*w*n_batches cells
-    (vacuum_profile_store's rollup applies unchanged if batch count
-    ever matters)."""
-    from pyspark.sql import functions as F
+    sketch: one metadata-sized groupBy over d*w*n_batches cells."""
+    from ..operators.sketch import cm_merge
 
-    return (
-        spark.read.parquet(store)
-        .groupBy("row_id", "bucket")
-        .agg(F.sum("ct").cast("long").alias("ct"))
-    )
+    return cm_merge(spark.read.parquet(store))
 
 
 def hll_sketch_sink(
@@ -180,55 +145,34 @@ def hll_sketch_sink(
     **trigger,
 ):
     """CONTINUOUS distinct counting: every micro-batch reduces to its
-    own HLL register table (ONE aggregation, <= m rows) and lands under
-    ``run_id=<batch_id>``. Registers merge by MAX — idempotent as well
-    as associative/commutative — so unlike the CM sink's per-cell sums,
-    a replayed or double-ingested batch cannot even in principle skew
-    the merged count; overwrite-per-batch is belt over braces here.
-    ``retain`` bounds the store exactly as in cm_sketch_sink (rollup =
-    per-register max, the same merge algebra)."""
-    from pyspark.sql import functions as F
+    own HLL register table (ONE aggregation, <= m rows), a store
+    partial of :func:`streaming.aggstore.store_sink`. Registers merge
+    by MAX — idempotent as well as associative/commutative — so unlike
+    the CM sink's per-cell sums, a replayed or double-ingested batch
+    cannot even in principle skew the merged count."""
+    from ..operators.sketch import HLL_M, hll_merge, hll_sketch
 
-    from ..operators.profile import retain_runs, write_profile
-    from ..operators.sketch import HLL_M, hll_sketch
-
-    m_eff = m or HLL_M
-
-    def _merge_regs(parts):
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.groupBy("register").agg(F.max("max_rank").alias("max_rank"))
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        write_profile(
-            hll_sketch(df, col=col, m=m_eff), store, f"{batch_id:08d}"
-        )
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, store, retain,
-                f"00000000_rollup_{batch_id:08d}", _merge_regs,
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
+    return store_sink(
+        stream, store, checkpoint,
+        lambda df, _: hll_sketch(df, col=col, m=m or HLL_M),
+        lambda parts: hll_merge(*parts),
+        retain, **trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def read_hll_store(spark, store: str) -> DataFrame:
     """Merge every stored per-batch register table into the
     whole-history one: a metadata-sized MAX over m*n_batches rows;
     feed the result to operators.sketch.hll_estimate."""
-    from pyspark.sql import functions as F
+    from ..operators.sketch import hll_merge
 
-    return (
-        spark.read.parquet(store)
-        .groupBy("register")
-        .agg(F.max("max_rank").alias("max_rank"))
-    )
+    return hll_merge(spark.read.parquet(store))
+
+
+def _fold_dsir(parts: list[DataFrame]) -> DataFrame:
+    from ..operators.sketch import fold_keyed
+
+    return fold_keyed(parts, ["bucket"], {"n_r": "sum", "n_t": "sum"})
 
 
 def dsir_model_sink(
@@ -244,58 +188,35 @@ def dsir_model_sink(
 ):
     """CONTINUOUS DSIR model: every micro-batch of documents reduces to
     its own (bucket, n_r, n_t) feature-count model (ONE aggregation,
-    <= n_buckets rows) under ``run_id=<batch_id>`` — replay-idempotent
-    via overwrite. Counts merge by summation, so the merged store
-    equals the one-pass model over everything ingested (parity-pinned)
-    and operators.llm.curation.dsir_score serves importance weights
-    against a model that tracks the corpus as it grows — the streaming
-    face of train-once-broadcast-everywhere."""
-    from pyspark.sql import functions as F
-
+    <= n_buckets rows), a store partial of
+    :func:`streaming.aggstore.store_sink`. Counts merge by summation,
+    so the merged store equals the one-pass model over everything
+    ingested (parity-pinned) and operators.llm.curation.dsir_score
+    serves importance weights against a model that tracks the corpus
+    as it grows — the streaming face of
+    train-once-broadcast-everywhere."""
     from ..operators.llm.curation import dsir_model
-    from ..operators.profile import retain_runs, write_profile
 
-    def _merge_models(parts):
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.groupBy("bucket").agg(
-            F.sum("n_r").cast("long").alias("n_r"),
-            F.sum("n_t").cast("long").alias("n_t"),
-        )
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        write_profile(
-            dsir_model(df, target_pred, n_buckets, text_col, id_col),
-            store,
-            f"{batch_id:08d}",
-        )
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, store, retain,
-                f"00000000_rollup_{batch_id:08d}", _merge_models,
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
+    return store_sink(
+        stream, store, checkpoint,
+        lambda df, _: dsir_model(df, target_pred, n_buckets, text_col, id_col),
+        _fold_dsir, retain, **trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def read_dsir_model(spark, store: str) -> DataFrame:
     """Merge every stored per-batch model into the whole-history model:
     one metadata-sized summation over n_buckets*n_batches rows."""
-    from pyspark.sql import functions as F
+    return _fold_dsir([spark.read.parquet(store)])
 
-    return (
-        spark.read.parquet(store)
-        .groupBy("bucket")
-        .agg(
-            F.sum("n_r").cast("long").alias("n_r"),
-            F.sum("n_t").cast("long").alias("n_t"),
-        )
+
+def _qsketch_fold(grouped: bool):
+    from ..operators.sketch import fold_keyed, qsketch_merge
+
+    if not grouped:
+        return lambda parts: qsketch_merge(*parts)
+    return lambda parts: fold_keyed(
+        parts, ["k_key", "level", "idx"], {"cnt": "sum"}
     )
 
 
@@ -314,51 +235,26 @@ def qsketch_sink(
 ):
     """CONTINUOUS quantiles: every micro-batch reduces to its own
     dyadic quantile sketch (<= (log_u+1)*(k-1) rows — ONE bounded
-    aggregation, never the batch's values) under ``run_id=<batch_id>``,
-    replay-idempotent via overwrite. Node residuals merge by summation
-    and every part's counts sit at ancestors of their true leaves, so
-    the merged store answers rank queries within the q-digest bound at
-    n = total ingested — quantiles over an unbounded stream with
-    bounded state, the face run_duration_sla percentiles need when the
-    run log never fits a batch. Stream state is ZERO; durability lives
-    in the store; ``retain`` folds surplus partitions through
-    qsketch_rethin-compatible summation. ``key_col`` switches to
+    aggregation, never the batch's values), a store partial of
+    :func:`streaming.aggstore.store_sink`. Node residuals merge by
+    summation and every part's counts sit at ancestors of their true
+    leaves, so the merged store answers rank queries within the
+    q-digest bound at n = total ingested — quantiles over an unbounded
+    stream with bounded state, the face run_duration_sla percentiles
+    need when the run log never fits a batch. ``key_col`` switches to
     GROUPED sketches (qsketch_by) — the continuous per-pipeline SLA
     percentile store, each key bounded independently."""
-    from pyspark.sql import functions as F
-
-    from ..operators.profile import retain_runs, write_profile
     from ..operators.sketch import qsketch, qsketch_by
 
-    keys = (["k_key"] if key_col else []) + ["level", "idx"]
+    def partial(df: DataFrame, _) -> DataFrame:
+        if key_col:
+            return qsketch_by(df, key_col, col, lo=lo, hi=hi, k=k, log_u=log_u)
+        return qsketch(df, col, lo=lo, hi=hi, k=k, log_u=log_u)
 
-    def _merge_nodes(parts):
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.groupBy(*keys).agg(
-            F.sum("cnt").cast("long").alias("cnt")
-        )
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        sk = (
-            qsketch_by(df, key_col, col, lo=lo, hi=hi, k=k, log_u=log_u)
-            if key_col
-            else qsketch(df, col, lo=lo, hi=hi, k=k, log_u=log_u)
-        )
-        write_profile(sk, store, f"{batch_id:08d}")
-        if retain is not None:
-            retain_runs(
-                df.sparkSession, store, retain,
-                f"00000000_rollup_{batch_id:08d}", _merge_nodes,
-            )
-
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint
+    return store_sink(
+        stream, store, checkpoint, partial,
+        _qsketch_fold(bool(key_col)), retain, **trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def read_qsketch_store(spark, store: str, grouped: bool = False) -> DataFrame:
@@ -366,11 +262,4 @@ def read_qsketch_store(spark, store: str, grouped: bool = False) -> DataFrame:
     sketch (node-residual sums — sketch-sized, never data-sized); feed
     to qsketch_quantiles / qsketch_rethin (``grouped=True`` for stores
     written with ``key_col=`` → qsketch_quantiles_by)."""
-    from pyspark.sql import functions as F
-
-    keys = (["k_key"] if grouped else []) + ["level", "idx"]
-    return (
-        spark.read.parquet(store)
-        .groupBy(*keys)
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    return _qsketch_fold(grouped)([spark.read.parquet(store)])

@@ -830,3 +830,31 @@ def test_decontam_fuzzy_reads_each_side_once(spark, sf_smoke, monkeypatch):
     assert out.count() > 0
     assert sum(n for _, n in scans) == 2, scans
     assert [n for name, n in scans if name == "pinned"] == [1, 1], scans
+
+
+def _probe_side(plan: str, node: str) -> list[str]:
+    """Lines of the first child (the streamed side under BuildRight)
+    of the first ``node`` operator in a physical plan tree string."""
+    lines = plan.splitlines()
+    i = next(n for n, ln in enumerate(lines) if node in ln)
+    # a child's ':- '/'+- ' marker sits where its parent's text starts
+    col = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    out = []
+    for ln in lines[i + 1:]:
+        if ln[col:col + 3] == "+- " and out:
+            break  # the second (last) child starts here
+        out.append(ln)
+    return out
+
+
+def test_topk_int8_rescore_norms_only_candidates(spark, sf_smoke):
+    """The exact-rescore tail computes the float norm after the
+    candidate join: the corpus side of the candidate BroadcastHashJoin
+    carries no SQRT, so only the rescore * k candidates pay it."""
+    df = registry.QUERIES["topk_int8_embeddings"](spark, sf_smoke)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    probe = _probe_side(final, "BroadcastHashJoin")
+    assert any("embeddings.parquet" in ln for ln in probe), probe
+    assert not any("SQRT" in ln for ln in probe), "\n".join(probe)

@@ -230,3 +230,70 @@ def test_orc_keeps_pushdown_and_pruning(spark, tmp_path):
     assert "PushedFilters: [" in plan and "l_orderkey" in plan.split("PushedFilters")[1][:120]
     rs = plan.split("ReadSchema")[1][:160]
     assert "l_quantity" in rs and "l_extendedprice" not in rs
+
+
+def _package_sources() -> dict[str, str]:
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "data_observability_installer_spark"
+    return {
+        p.relative_to(pkg).as_posix(): p.read_text() for p in sorted(pkg.rglob("*.py"))
+    }
+
+
+def _code_strings(text: str):
+    """(line, value) of every string constant in ``text`` that is not a
+    docstring — f-string literal parts included."""
+    import ast
+
+    tree = ast.parse(text)
+    docs = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str) and id(node) not in docs:
+            yield node.lineno, node.value
+
+
+def test_store_sinks_go_through_one_seam():
+    """One micro-batch store seam: the checkpointed foreachBatch start
+    lives in sources/sinks.py, retention is invoked only by
+    streaming/aggstore.store_sink, and run_id= partition paths are
+    built only by the profile-store module."""
+    import ast
+
+    src = _package_sources()
+    ckpt = [
+        f"{f}:{n}"
+        for f, text in src.items()
+        for n, line in enumerate(text.splitlines(), 1)
+        if "checkpointLocation" in line
+    ]
+    assert len(ckpt) == 1 and ckpt[0].startswith("sources/sinks.py:"), ckpt
+
+    retain_calls = [
+        f"{f}:{node.lineno}"
+        for f, text in src.items()
+        for node in ast.walk(ast.parse(text))
+        if isinstance(node, ast.Call)
+        and "retain_runs" in (getattr(node.func, "id", None), getattr(node.func, "attr", None))
+    ]
+    assert retain_calls and all(
+        c.startswith("streaming/aggstore.py:") for c in retain_calls
+    ), retain_calls
+
+    run_paths = [
+        f"{f}:{n}: {s!r}"
+        for f, text in src.items()
+        if f != "operators/profile.py"
+        for n, s in _code_strings(text)
+        if "run_id=" in s
+    ]
+    assert not run_paths, "run_id= paths built outside operators/profile.py:\n" + "\n".join(
+        run_paths
+    )

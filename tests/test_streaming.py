@@ -2630,3 +2630,93 @@ def test_txtable_stream_feeds_monitor_cube(spark, tmp_path):
             .agg(F.count(F.lit(1)).cast("long").alias("v")).collect())
     )
     assert got == want and len(want) == 6
+
+
+@pytest.fixture(scope="module")
+def retention_src(tmp_path_factory):
+    """Three micro-batch files, mtime-ordered, with the columns every
+    retention case below reads."""
+    import json as _json
+    import time as _time
+
+    src = tmp_path_factory.mktemp("retention_src")
+    for b in range(3):
+        rows = [
+            {"doc_id": 10 * b + j, "text": f"alpha beta w{b} t{j % 2} gamma",
+             "lang": ["en", "de"][j % 2], "w": f"w{(b * j) % 5}",
+             "k": f"g{j % 3}", "v": 100 * b + 7 * j}
+            for j in range(6)
+        ]
+        (src / f"{b}.json").write_text("\n".join(_json.dumps(r) for r in rows))
+        _time.sleep(0.15)  # file-source order follows mtime
+    return str(src)
+
+
+def _retention_cases():
+    from data_observability_installer_spark.streaming import aggstore, sketch
+
+    folds = {"n": "sum", "lo": "min", "hi": "max"}
+    return {
+        "hll_sketch_sink": (
+            lambda s, st, ck, r: sketch.hll_sketch_sink(
+                s, st, ck, m=64, retain=r, availableNow=True),
+            lambda sp, st: sketch.read_hll_store(sp, st),
+        ),
+        "dsir_model_sink": (
+            lambda s, st, ck, r: sketch.dsir_model_sink(
+                s, st, ck, F.col("lang") == "en", n_buckets=32, retain=r,
+                availableNow=True),
+            lambda sp, st: sketch.read_dsir_model(sp, st),
+        ),
+        "qsketch_sink_grouped": (
+            lambda s, st, ck, r: sketch.qsketch_sink(
+                s, st, ck, col="v", hi=1023, k=8, log_u=10, key_col="k",
+                retain=r, availableNow=True),
+            lambda sp, st: sketch.read_qsketch_store(sp, st, grouped=True),
+        ),
+        "agg_sink": (
+            lambda s, st, ck, r: aggstore.agg_sink(
+                s, st, ck, ["k"],
+                {"n": F.count(F.lit(1)).cast("long"), "lo": F.min("v"),
+                 "hi": F.max("v")},
+                folds, retain=r, availableNow=True),
+            lambda sp, st: aggstore.read_agg_store(sp, st, ["k"], folds),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "sink",
+    ["hll_sketch_sink", "dsir_model_sink", "qsketch_sink_grouped", "agg_sink"],
+)
+def test_store_sink_retain_bounded_and_row_identical(
+    spark, tmp_path, retention_src, sink
+):
+    """retain=1 leaves at most two run partitions (the newest run and
+    one rollup), and the store's read face is row-identical to the
+    store written with retain=None over the same micro-batches."""
+    from data_observability_installer_spark.operators.profile import (
+        list_profile_runs,
+    )
+
+    start, read = _retention_cases()[sink]
+
+    def drive(retain):
+        store = str(tmp_path / f"store_{retain}")
+        stream = (
+            spark.readStream.schema(
+                "doc_id long, text string, lang string, w string, k string,"
+                " v long"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .json(retention_src)
+        )
+        q = start(stream, store, str(tmp_path / f"ckpt_{retain}"), retain)
+        q.awaitTermination(120)
+        return store
+
+    bounded, unbounded = drive(1), drive(None)
+    assert len(list_profile_runs(unbounded)) == 3
+    assert len(list_profile_runs(bounded)) <= 2
+    rows = lambda st: sorted(map(tuple, read(spark, st).collect()))  # noqa: E731
+    assert rows(bounded) == rows(unbounded) and rows(unbounded)
