@@ -35,6 +35,7 @@ from contextlib import ExitStack, nullcontext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.driver import DRIVER_ROWS, local_frame
 from ...functions.pin import pin, pinned
 
 # ---------------------------------------------------------------------------
@@ -436,22 +437,31 @@ def minhash_pairs_sql(
 
 
 def dedup_groups(
-    pairs: DataFrame, max_iters: int = 20, driver_threshold: int = 1_000_000
+    pairs: DataFrame, max_iters: int = 20, driver_threshold: int = DRIVER_ROWS
 ) -> DataFrame:
     """Connected components over near-dup pairs: every doc's group id
     is the smallest doc id reachable through the pair graph; the
     survivor of each group is its group id. Hybrid execution — driver
-    union-find below ``driver_threshold`` edges (pair graphs are
+    union-find below ``driver_threshold`` pairs (pair graphs are
     result-sized, not corpus-sized), distributed iterative min-label
     propagation above it.
 
-    Each round is one join + one groupBy (labels shuffled on doc id);
-    rounds needed = graph diameter, and near-dup clusters are shallow
-    (duplicates of a common source), so convergence is 2-4 rounds in
-    practice with ``max_iters`` as the backstop. The convergence check
-    compares label sums — one tiny action per round, no collect of the
-    label table. (The GraphX large-star/small-star variant gets
-    O(log n) worst-case rounds; unnecessary for shallow dup clusters.)
+    Driver path: the pair list is collected once, capped at
+    ``driver_threshold + 1`` rows — the only Spark action. Union-find
+    treats each pair as undirected (the mirror is implicit), and the
+    labels return through :func:`local_frame` as a ``LocalTableScan``.
+    Each distributed round costs 2-3 scheduled jobs regardless of data
+    size, which dominates on a hundreds-of-rows graph (measured 17.7 s
+    -> <1 s for the embedding family at sf0.1).
+
+    Distributed path: each round is one join + one groupBy (labels
+    shuffled on doc id); rounds needed = graph diameter, and near-dup
+    clusters are shallow (duplicates of a common source), so
+    convergence is 2-4 rounds in practice with ``max_iters`` as the
+    backstop. The convergence check compares label sums — one tiny
+    action per round, no collect of the label table. (The GraphX
+    large-star/small-star variant gets O(log n) worst-case rounds;
+    unnecessary for shallow dup clusters.)
 
     Returns (doc, group_id), one row per doc that appears in ≥1 pair.
 
@@ -461,6 +471,28 @@ def dedup_groups(
     (and the next round's analysis cost) constant regardless of
     diameter; the label table itself is tiny (one row per paired doc).
     """
+    rows = pairs.select("doc_a", "doc_b").limit(driver_threshold + 1).collect()
+    if len(rows) <= driver_threshold:
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent.get(root, root) != root:
+                root = parent[root]
+            while parent.get(x, x) != x:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        for doc_a, doc_b in rows:
+            a, b = find(doc_a), find(doc_b)
+            if a != b:
+                # min id wins the root so group_id = min reachable id
+                lo, hi = (a, b) if a < b else (b, a)
+                parent[hi] = lo
+        docs = sorted({d for r in rows for d in r})
+        schema = pairs.select(F.col("doc_a").alias("doc"), F.col("doc_a").alias("group_id")).schema
+        return local_frame(pairs.sparkSession, [(d, find(d)) for d in docs], schema)
+
     # A pin, not a cache: the edge list is tiny (one row per
     # pair direction) but its LINEAGE is the whole upstream pair
     # pipeline (LSH banding / shingling) — with cache() every
@@ -478,41 +510,6 @@ def dedup_groups(
         .union(p.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
     )
-    # Hybrid execution: the pair graph is orders of magnitude smaller
-    # than the corpus (it exists only where near-dups were found), so
-    # below ``driver_threshold`` edges a driver-side union-find beats
-    # label propagation outright — each distributed iteration costs
-    # 2-3 scheduled jobs regardless of data size, which dominates on a
-    # hundreds-of-rows graph (measured 17.7 s -> <1 s for the
-    # embedding family at sf0.1). Above the threshold (a truly massive
-    # dup graph), the distributed min-label loop below takes over.
-    n_edges = e.count()
-    if n_edges <= driver_threshold:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        rows = e.collect()
-        for r in rows:
-            a, b = find(r["src"]), find(r["dst"])
-            if a != b:
-                # min id wins the root so group_id = min reachable id
-                lo, hi = (a, b) if a < b else (b, a)
-                parent[hi] = lo
-        docs = sorted({r["src"] for r in rows})
-        spark = pairs.sparkSession
-        out = [(d, find(d)) for d in docs]
-        schema = pairs.select(
-            F.col("doc_a").alias("doc"), F.col("doc_a").alias("group_id")
-        ).schema
-        return spark.createDataFrame(out, schema)
-
     labels = e.select(F.col("src").alias("doc")).distinct().withColumn("label", F.col("doc"))
     prev_sum = None
     # each round's label table is read twice (neighbour join + carry-

@@ -20,13 +20,16 @@ Everything here is DataFrame -> DataFrame and shuffle-lean:
   handful of datasets each, so the join fan-out is bounded by
   reads-per-run x writes-per-run, not |events|²) followed by a
   distinct. Both are one shuffle each on keys Spark hash-partitions.
-- ``transitive_closure`` — iterative frontier BFS (semi-naive
-  evaluation: only the pairs first reached in the previous round are
-  extended by an edge). Lineage graphs are metadata-sized even for 100 TB
-  warehouses (edges ~ #tables x avg-degree, not data volume), so each
-  iteration is a small hash join; a per-round pin truncates the
-  logical plan so 10 iterations don't compile a 10-deep join tree.
-  At cluster scale set ``spark.dataobs.pin.mode`` to ``persist`` or
+- ``transitive_closure`` — frontier BFS (semi-naive evaluation: only
+  the pairs first reached in the previous round are extended by an
+  edge). Lineage graphs are metadata-sized even for 100 TB warehouses
+  (edges ~ #tables x avg-degree, not data volume), so the edge list is
+  collected once and the BFS runs on the driver while both the edges
+  and the closure stay under ``functions.driver.DRIVER_ROWS`` rows; the
+  result goes back through Arrow as a ``LocalTableScan``. Above the cap
+  each round is a Spark hash join whose pin truncates the logical plan
+  so 10 iterations don't compile a 10-deep join tree; for those rounds
+  at cluster scale set ``spark.dataobs.pin.mode`` to ``persist`` or
   ``reliable`` — the default ``localCheckpoint`` blocks are lost on
   executor failure.
 - ``impact_downstream`` — broadcast semi-join of the (tiny) seed set
@@ -37,7 +40,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
+from ...functions.driver import DRIVER_ROWS, local_frame
 from ...functions.pin import pin
 
 
@@ -117,26 +122,48 @@ def pipeline_edges(io: DataFrame, pipeline_col: str = "pipeline_key") -> DataFra
 def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     """Reachability with minimum hop count: (src, dst, depth) for every
     pair connected by a path of <= max_depth edges, depth = shortest.
+    A source on a cycle reaches itself: (a, a) carries the shortest
+    cycle's length.
 
     Semi-naive BFS: only the frontier — the pairs FIRST reached at the
     previous depth — is extended by an edge each round. Equivalent to
     ANSI ``WITH RECURSIVE`` with a depth cap + min(depth) rollup (the
     DuckDB oracle twin in plans/registry.py states it exactly).
 
-    Termination: no pair is first reached at the new depth (graph
-    exhausted, incl. cycles — the min(depth) rollup folds revisits into
-    the pairs already known) or depth cap. The pinned (src, dst, depth)
-    table is the round's ONLY input: the hop join keeps every known row
-    (extending those at the frontier depth) and one min(depth) rollup
-    yields the next table. One reference per round keeps the plan
-    linear in rounds under every pin mode: ``persist`` keeps lineage,
-    and a second reference (a separate frontier and known set) grows
-    that plan ~2.6x per round. In the default mode each round's eager
-    pin (``localCheckpoint``) truncates lineage, so the returned closure
-    is the last round's pin, a leaf; the per-round ``limit(1).count()``
+    Hybrid execution. The distinct edge list is collected once, capped
+    at ``DRIVER_ROWS + 1`` rows — the only Spark action on the driver
+    path. When at most ``DRIVER_ROWS`` edges come back, one BFS per
+    source runs on the driver over an adjacency dict and the closure
+    returns through :func:`local_frame` (a ``LocalTableScan``). The
+    closure can be quadratic in the node count, so a driver BFS whose
+    output passes ``DRIVER_ROWS`` rows is abandoned for the Spark
+    rounds too.
+
+    Spark rounds (edges or closure above the cap). Termination: no pair
+    is first reached at the new depth (graph exhausted, incl. cycles —
+    the min(depth) rollup folds revisits into the pairs already known)
+    or depth cap. The pinned (src, dst, depth) table is the round's
+    ONLY input: the hop join keeps every known row (extending those at
+    the frontier depth) and one min(depth) rollup yields the next
+    table. One reference per round keeps the plan linear in rounds
+    under every pin mode: ``persist`` keeps lineage, and a second
+    reference (a separate frontier and known set) grows that plan ~2.6x
+    per round. In the default mode each round's eager pin
+    (``localCheckpoint``) truncates lineage, so the returned closure is
+    the last round's pin, a leaf; the per-round ``limit(1).count()``
     emptiness probe is metadata-sized work against it.
+
+    Both paths return ``edges``' src/dst fields and a non-nullable int
+    ``depth``.
     """
-    e = pin(edges.select("src", "dst").distinct())
+    e = edges.select("src", "dst").distinct()
+    rows = e.limit(DRIVER_ROWS + 1).collect()
+    if len(rows) <= DRIVER_ROWS:
+        closure = _driver_closure(rows, max_depth)
+        if closure is not None:
+            schema = StructType(e.schema.fields + [StructField("depth", IntegerType(), False)])
+            return local_frame(edges.sparkSession, closure, schema)
+    e = pin(e)
     known = pin(e.withColumn("depth", F.lit(1)))
     for depth in range(2, max_depth + 1):
         hop = known.alias("k").join(
@@ -147,8 +174,10 @@ def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
         pairs = F.explode(
             F.array(
                 F.struct("k.src", "k.dst", "k.depth"),
+                # matched hop: e.src equals a non-null k.dst (a null
+                # e.dst is a real edge end and extends like any other)
                 F.when(
-                    F.col("e.dst").isNotNull(),
+                    F.col("e.src").isNotNull(),
                     F.struct(
                         F.col("k.src").alias("src"),
                         F.col("e.dst").alias("dst"),
@@ -161,12 +190,44 @@ def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
             hop.select(pairs.alias("p"))
             .filter(F.col("p").isNotNull())
             .groupBy("p.src", "p.dst")
-            .agg(F.min("p.depth").alias("depth"))
+            # every group holds a row, so the min is never null; the
+            # coalesce only keeps ``depth`` non-nullable in the schema
+            .agg(F.coalesce(F.min("p.depth"), F.lit(depth)).alias("depth"))
         )
         if grown.filter(F.col("depth") == depth).limit(1).count() == 0:
             break
         known = grown
     return known
+
+
+def _driver_closure(edges: list, max_depth: int) -> list[tuple] | None:
+    """The closure rows of the (src, dst) ``edges``: one BFS per source,
+    each node's depth its first-reach hop count, at most ``max_depth``
+    hops (the first hop always runs, as in the Spark rounds). None once
+    the output passes ``DRIVER_ROWS`` rows. A null node never matches
+    an edge's src (SQL join semantics), so it is reached but never
+    extended."""
+    adj: dict = {}
+    for s, d in edges:
+        adj.setdefault(s, []).append(d)
+    out: list[tuple] = []
+    for src, first in adj.items():
+        seen = dict.fromkeys(first, 1)
+        frontier = first
+        for depth in range(2, max_depth + 1):
+            nxt = []
+            for n in frontier:
+                for d in adj.get(n, ()) if n is not None else ():
+                    if d not in seen:
+                        seen[d] = depth
+                        nxt.append(d)
+            if not nxt:
+                break
+            frontier = nxt
+        out.extend((src, d, k) for d, k in seen.items())
+        if len(out) > DRIVER_ROWS:
+            return None
+    return out
 
 
 def impact_downstream(closure: DataFrame, seeds: DataFrame) -> DataFrame:

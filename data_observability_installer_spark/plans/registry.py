@@ -5022,8 +5022,9 @@ def _lineage_io(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the BFS closure is a sequence of materializing jobs — share one per
-# (session, sf) across every lineage consumer, like cached_profile
+# the closure costs an edge collect plus a driver BFS (a sequence of
+# pinned Spark rounds above the driver cap) — share one per (session,
+# sf) across every lineage consumer, like cached_profile
 _CLOSURE_CACHE = DFCache(capacity=4)
 
 
@@ -5053,8 +5054,9 @@ def pagerank_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("lineage_closure", _LINEAGE_CLOSURE_SQL + "\n    SELECT src, dst, depth FROM cl")
 def lineage_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive closure with min hop count — semi-naive frontier BFS
-    in Spark, value-for-value against DuckDB's WITH RECURSIVE (same
-    depth cap, min(depth) rollup)."""
+    (on the driver under the driver row cap, Spark rounds above it),
+    value-for-value against DuckDB's WITH RECURSIVE (same depth cap,
+    min(depth) rollup)."""
     return _cached_closure(spark, sf_dir)
 
 

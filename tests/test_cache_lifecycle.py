@@ -217,3 +217,50 @@ def test_materialization_goes_through_pin_seam():
         if _RAW_MATERIALIZE.search(line)
     ]
     assert not hits, "raw materialization outside functions/pin.py:\n" + "\n".join(hits)
+
+
+# Spark jobs per call (build + collect) at sf0.001 after clear_caches():
+# the measured count of the driver-side graph rounds (every repetition
+# on 2, 4 and 8 cores gave the same count). The per-round Spark BFS and
+# the pinned pair mirror ran 57 and 23.
+DRIVER_GRAPH_JOB_BUDGET = {"lineage_closure": 6, "dedup_groups_documents": 17}
+
+
+@pytest.mark.parametrize("name", sorted(DRIVER_GRAPH_JOB_BUDGET))
+def test_driver_graph_rounds_job_budget_and_plan(spark, sf_smoke, name):
+    """Metadata-sized graph rounds run on the driver: the call stays in
+    its job budget and returns a LocalTableScan, not the ExistingRDD
+    scan of a pin or of a non-Arrow createDataFrame."""
+    sc = spark.sparkContext
+    registry.clear_caches()
+    group = f"{name}_budget"
+    sc.setJobGroup(group, "job-budget run")
+    try:
+        df = registry.QUERIES[name](spark, sf_smoke)
+        rows = df.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows
+    assert len(jobs) <= DRIVER_GRAPH_JOB_BUDGET[name], (
+        f"{name} ran {len(jobs)} Spark jobs (budget {DRIVER_GRAPH_JOB_BUDGET[name]})"
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_lineage_closure_leaves_no_persist_in_persist_mode(spark, sf_smoke):
+    """Under ``pin.mode=persist`` the closure holds no per-round
+    persists: the driver BFS pins nothing."""
+    from data_observability_installer_spark.functions.pin import PIN_MODE_CONF
+
+    registry.clear_caches()
+    spark.catalog.clearCache()
+    spark.conf.set(PIN_MODE_CONF, "persist")
+    try:
+        assert registry.QUERIES["lineage_closure"](spark, sf_smoke).collect()
+        assert _persisted_rdd_count(spark) == 0, "lineage_closure left a persist behind"
+    finally:
+        spark.conf.unset(PIN_MODE_CONF)
+        registry.clear_caches()
+        spark.catalog.clearCache()

@@ -1,8 +1,10 @@
 """Lineage extraction: edge derivation, BFS transitive closure vs
-hand-computed shortest paths (chain / diamond / cycle), impact sets."""
+hand-computed shortest paths (chain / diamond / cycle), impact sets,
+and row/schema parity of the closure's driver BFS and Spark rounds."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_observability_installer_spark.operators.obs.lineage import (
@@ -184,3 +186,57 @@ def test_rebuild_plan_waves_are_topological(spark):
     cyc = spark.createDataFrame([("s", "a"), ("a", "s")], "src string, dst string")
     capped = {r.dataset_key: r.wave for r in rebuild_plan(cyc, seeds, max_depth=4).collect()}
     assert capped["a"] <= 4 and capped["s"] <= 4
+
+
+# Graphs for the driver/Spark parity checks: (edges, max_depth).
+_PARITY_GRAPHS = {
+    "chain_past_cap": ([(f"n{i}", f"n{i + 1}") for i in range(6)], 3),
+    "diamond_shortcut": ([("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("a", "d"), ("d", "e")], 8),
+    "three_cycle": ([("a", "b"), ("b", "c"), ("c", "a")], 8),
+    "self_loop": ([("x", "x"), ("x", "y"), ("y", "z")], 8),
+    "two_components": ([("a", "b"), ("b", "c"), ("p", "q"), ("q", "p"), ("q", "r")], 8),
+    "null_node": ([(None, "a"), ("a", None), ("a", "b")], 8),
+    "empty": ([], 8),
+}
+
+
+def _closure_both_ways(spark, monkeypatch, edges, max_depth, cap):
+    """The closure of ``edges`` on the driver path, then with the cap
+    patched to ``cap`` (Spark rounds), as (rows, schema) pairs."""
+    from data_observability_installer_spark.operators.obs import lineage
+
+    e = spark.createDataFrame(edges, "src string, dst string")
+    driver = transitive_closure(e, max_depth=max_depth)
+    assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(lineage, "DRIVER_ROWS", cap)
+    rounds = transitive_closure(e, max_depth=max_depth)
+    assert "LocalTableScan" not in rounds._jdf.queryExecution().executedPlan().toString()
+    return [(sorted(map(tuple, df.collect()), key=repr), df.schema) for df in (driver, rounds)]
+
+
+@pytest.mark.parametrize("graph", sorted(_PARITY_GRAPHS))
+def test_closure_driver_path_matches_spark_rounds(spark, monkeypatch, graph):
+    """The driver BFS and the Spark rounds give row-identical
+    (src, dst, depth) and one schema. A cap of -1 sends even an empty
+    edge list (which fits a cap of 0) to the Spark rounds."""
+    edges, max_depth = _PARITY_GRAPHS[graph]
+    driver, rounds = _closure_both_ways(spark, monkeypatch, edges, max_depth, cap=-1)
+    assert driver == rounds
+    assert bool(driver[0]) == bool(edges)
+    depth = driver[1]["depth"]
+    assert (depth.dataType.simpleString(), depth.nullable) == ("int", False)
+
+
+def test_closure_output_over_cap_takes_spark_rounds(spark, monkeypatch):
+    """Edges that fit the cap but a closure that does not (a 3-cycle:
+    3 edges, 9 closure rows) fall through to the Spark rounds with the
+    same rows."""
+    from data_observability_installer_spark.operators.obs import lineage
+
+    edges, max_depth = _PARITY_GRAPHS["three_cycle"]
+    assert len(lineage._driver_closure(edges, max_depth)) == 9
+    monkeypatch.setattr(lineage, "DRIVER_ROWS", 5)
+    assert lineage._driver_closure(edges, max_depth) is None
+    monkeypatch.undo()
+    driver, rounds = _closure_both_ways(spark, monkeypatch, edges, max_depth, cap=5)
+    assert driver == rounds

@@ -168,6 +168,36 @@ def test_dedup_groups_deep_chain_converges(spark):
     assert plan.count("Join") < 10
 
 
+_GROUP_GRAPHS = {
+    "chain": [(i, i + 1) for i in range(4)],
+    "diamond_shortcut": [(1, 2), (1, 3), (2, 4), (3, 4), (1, 4)],
+    "three_cycle": [(5, 6), (6, 7), (7, 5)],
+    "self_loop": [(9, 9), (9, 8)],
+    "two_components": [(1, 2), (2, 3), (10, 11), (11, 10)],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("graph", sorted(_GROUP_GRAPHS))
+def test_dedup_groups_driver_path_matches_label_propagation(spark, graph):
+    """The driver union-find and the distributed min-label rounds give
+    row-identical (doc, group_id) and one schema. A threshold of -1
+    sends even an empty pair list to the distributed rounds."""
+    from data_observability_installer_spark.operators.llm.dedup import dedup_groups
+
+    pairs = spark.createDataFrame(
+        [(a, b, 0.9) for a, b in _GROUP_GRAPHS[graph]],
+        "doc_a bigint, doc_b bigint, jaccard double",
+    )
+    driver = dedup_groups(pairs)
+    rounds = dedup_groups(pairs, driver_threshold=-1)
+    assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" not in rounds._jdf.queryExecution().executedPlan().toString()
+    got = [(sorted(map(tuple, df.collect())), df.schema) for df in (driver, rounds)]
+    assert got[0] == got[1]
+    assert bool(got[0][0]) == bool(_GROUP_GRAPHS[graph])
+
+
 def test_simhash_buckets_exact_dups_collide(docs):
     sh = {r["doc_id"]: r["simhash"] for r in simhash_buckets(docs).collect()}
     assert sh[1] == sh[2]  # identical text, identical signature

@@ -28,7 +28,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -181,9 +183,18 @@ def main() -> None:
         "spark.sql.streaming.numRecentProgressUpdates",
         str(max(200, args.batches * 2)),
     )
-    import tempfile
+    # the ~20 MB json replay lives under one temp root, removed however
+    # the run ends
+    replay_root = tempfile.mkdtemp(prefix="stream_bench_")
+    try:
+        _bench(spark, args, os.path.join(replay_root, "events_json"))
+    finally:
+        shutil.rmtree(replay_root, ignore_errors=True)
 
-    replay_dir = os.path.join(tempfile.mkdtemp(prefix="stream_bench_"), "events_json")
+
+def _bench(spark, args: argparse.Namespace, replay_dir: str) -> None:
+    """Run every streaming measurement over a json replay written to
+    ``replay_dir`` and print the result line."""
     obs = obs_replay_frame(spark, args.sf_dir)
     write_replay_chunks(obs, replay_dir, args.batches)
 
@@ -492,9 +503,6 @@ def main() -> None:
     # telemetry for. Zero keyed state by design (durability lives in the
     # store/commit log), so the interesting numbers are throughput and
     # per-batch store growth.
-    import shutil
-    import tempfile as _tf
-
     from data_observability_installer_spark.operators.profile import (
         list_profile_runs,
     )
@@ -503,7 +511,7 @@ def main() -> None:
         profile_partial_sink,
     )
 
-    sink_root = _tf.mkdtemp(prefix="stream_bench_sinks_")
+    sink_root = tempfile.mkdtemp(prefix="stream_bench_sinks_")
     pstore = os.path.join(sink_root, "profile_store")
     q = profile_partial_sink(
         read_stream().select("event_timestamp", "pipeline_key", "metric_value"),
@@ -644,7 +652,7 @@ def main() -> None:
             "event_timestamp",
         )
 
-    sink_root2 = _tf.mkdtemp(prefix="stream_bench_pqnd_")
+    sink_root2 = tempfile.mkdtemp(prefix="stream_bench_pqnd_")
     q = pq_near_dup_sink(
         synth_emb(read_stream()).drop("event_timestamp"),
         os.path.join(sink_root2, "codes"),
@@ -680,7 +688,7 @@ def main() -> None:
         pq_near_dups_incremental,
     )
 
-    growth_root = _tf.mkdtemp(prefix="stream_bench_pqnd_growth_")
+    growth_root = tempfile.mkdtemp(prefix="stream_bench_pqnd_growth_")
     gstore = os.path.join(growth_root, "codes")
     n_growth_batches = 8
     gbatch = 2000
@@ -728,7 +736,7 @@ def main() -> None:
     )
     from data_observability_installer_spark.streaming.dedup import semdedup_sink
 
-    sink_root_sd = _tf.mkdtemp(prefix="stream_bench_semdedup_")
+    sink_root_sd = tempfile.mkdtemp(prefix="stream_bench_semdedup_")
     q = semdedup_sink(
         synth_emb(read_stream()).drop("event_timestamp"),
         os.path.join(sink_root_sd, "cells"),
@@ -767,7 +775,7 @@ def main() -> None:
     # size per batch (the whole point vs re-running full-corpus
     # semdedup, which re-pays sum(cell^2) over EVERYTHING per run); a
     # super-linear step here would mean the store self-joins.
-    growth_root_sd = _tf.mkdtemp(prefix="stream_bench_semdedup_growth_")
+    growth_root_sd = tempfile.mkdtemp(prefix="stream_bench_semdedup_growth_")
     gstore_sd = os.path.join(growth_root_sd, "cells")
     growth_sd = []
     for b in range(n_growth_batches):
@@ -845,7 +853,7 @@ def main() -> None:
             "concat('bench', CAST(id + j AS STRING))))"
         ).alias("text"),
     )
-    sink_root_dc = _tf.mkdtemp(prefix="stream_bench_decontam_")
+    sink_root_dc = tempfile.mkdtemp(prefix="stream_bench_decontam_")
     dstore = os.path.join(sink_root_dc, "verdicts")
     q = decontam_sink(
         synth_docs(read_stream()),
@@ -920,7 +928,7 @@ def main() -> None:
         num_cols=[("cents", 10000)],
         threshold_bp=6000,
     )
-    sink_root_em = _tf.mkdtemp(prefix="stream_bench_entitymatch_")
+    sink_root_em = tempfile.mkdtemp(prefix="stream_bench_entitymatch_")
     q = entity_match_sink(
         synth_records(read_stream()),
         os.path.join(sink_root_em, "store"),
@@ -961,7 +969,7 @@ def main() -> None:
             em_batch, "rid", "name", max_block=64, **em_kw
         ).count()
     )
-    growth_root_em = _tf.mkdtemp(prefix="stream_bench_em_growth_")
+    growth_root_em = tempfile.mkdtemp(prefix="stream_bench_em_growth_")
     gstore_em = os.path.join(growth_root_em, "store")
     growth_em = []
     # growth uses a SMALLER block space (256 two-hex-char blocks) so
@@ -1013,7 +1021,7 @@ def main() -> None:
         read_hll_store,
     )
 
-    sink_root3 = _tf.mkdtemp(prefix="stream_bench_hll_")
+    sink_root3 = tempfile.mkdtemp(prefix="stream_bench_hll_")
     q = hll_sketch_sink(
         hh_items(read_stream()),
         os.path.join(sink_root3, "hll"),
