@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.driver import local_frame
 from ...functions.pin import pin
 
 # key material for FK candidates: classes whose string cast is
@@ -278,7 +279,8 @@ def discover_fds(
     stats = column_stats(df, columns).collect()
     pairs = fd_candidates(stats, max_pairs)
     if not pairs:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [],
             "determinant string, dependent string, n_keys long, "
             "n_violating_keys long, n_keypairs long, holds boolean",
@@ -412,9 +414,9 @@ def discover_fks(
     ]
     pairs = fk_candidates(rows, max_pairs)
     if not pairs:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     dv = vc.filter(F.col("val").isNotNull()).select("tbl", "col", "val")
-    cand = spark.createDataFrame(pairs, "ct string, cc string, pt string, pc string")
+    cand = local_frame(spark, pairs, "ct string, cc string, pt string, pc string")
     ch = dv.join(
         F.broadcast(cand), (dv.tbl == cand.ct) & (dv.col == cand.cc)
     ).select("ct", "cc", "pt", "pc", "val")

@@ -19,6 +19,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ...functions.driver import local_frame
+
 from .testtypes import TABLE_LEVEL, TestSpec
 
 LOV_CAP = 10  # max distinct values for list-of-values / Constant baselines
@@ -292,7 +294,8 @@ def run_referential_tests(
             )
         )
     spark = next(iter(tables.values())).sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_name string, column_name string, test_type string, "
         "measure double, threshold_value double, result string",

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from typing import Any
 
+from ...functions.driver import local_frame
 from .compiler import OUTCOME_COLUMNS, compile_suite_sql
 from .testtypes import TestSpec
 
@@ -55,7 +56,7 @@ def outcomes_to_df(spark, outcomes: list[dict[str, Any]]):
         "measure double, threshold_value double, result string"
     )
     data = [tuple(o[c] for c in OUTCOME_COLUMNS) for o in outcomes]
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)
 
 
 PROFILE_COLUMNS = ["table_name", "column_name", "metric", "value", "value_str"]
@@ -93,4 +94,4 @@ def profile_to_df(spark, rows: list[dict[str, Any]]):
         "value double, value_str string"
     )
     data = [tuple(r[c] for c in PROFILE_COLUMNS) for r in rows]
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)

@@ -32,6 +32,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ...functions.driver import local_frame
 from ...functions.pin import pin
 
 
@@ -207,8 +208,8 @@ def schema_drift_batch(
     for name, typ in exp.items():
         if name not in actual:
             rows.append(("DROPPED_COLUMN", name, typ, None))
-    return spark.createDataFrame(
-        rows, "drift string, column string, expected string, actual string"
+    return local_frame(
+        spark, rows, "drift string, column string, expected string, actual string"
     )
 
 

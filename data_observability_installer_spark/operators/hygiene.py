@@ -20,6 +20,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.driver import local_frame
+
 
 @dataclass(frozen=True)
 class Detector:
@@ -253,7 +255,7 @@ def hygiene(profile_long: DataFrame, as_of: str) -> DataFrame:
             else:
                 vals.append(pair[1] if c.endswith("_s") else pair[0])
         data.append((tname, cname, *vals))
-    wide = profile_long.sparkSession.createDataFrame(data, schema)
+    wide = local_frame(profile_long.sparkSession, data, schema)
     structs = [
         F.struct(
             F.col("table_name"),

@@ -436,18 +436,16 @@ def minhash_pairs_sql(
 # ---------------------------------------------------------------------------
 
 
-def dedup_groups(
-    pairs: DataFrame, max_iters: int = 20, driver_threshold: int = DRIVER_ROWS
-) -> DataFrame:
+def dedup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs: every doc's group id
     is the smallest doc id reachable through the pair graph; the
     survivor of each group is its group id. Hybrid execution — driver
-    union-find below ``driver_threshold`` pairs (pair graphs are
+    union-find up to ``DRIVER_ROWS`` pairs (pair graphs are
     result-sized, not corpus-sized), distributed iterative min-label
     propagation above it.
 
     Driver path: the pair list is collected once, capped at
-    ``driver_threshold + 1`` rows — the only Spark action. Union-find
+    ``DRIVER_ROWS + 1`` rows — the only Spark action. Union-find
     treats each pair as undirected (the mirror is implicit), and the
     labels return through :func:`local_frame` as a ``LocalTableScan``.
     Each distributed round costs 2-3 scheduled jobs regardless of data
@@ -471,8 +469,8 @@ def dedup_groups(
     (and the next round's analysis cost) constant regardless of
     diameter; the label table itself is tiny (one row per paired doc).
     """
-    rows = pairs.select("doc_a", "doc_b").limit(driver_threshold + 1).collect()
-    if len(rows) <= driver_threshold:
+    rows = pairs.select("doc_a", "doc_b").limit(DRIVER_ROWS + 1).collect()
+    if len(rows) <= DRIVER_ROWS:
         parent: dict = {}
 
         def find(x):

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.driver import local_frame
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
     "meta struct<width:int, height:int, sample_rate:int, duration_ms:int, codec:string>"
@@ -533,7 +535,7 @@ def synth_media(spark, n: int = 12, seed: int = 7):
             "codec": {"image": "png", "audio": "pcm", "video": "h264"}[kind],
         }
         rows.append((i, kind, bytearray(payload), meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 MEDIA_EXACT_SCHEMA = (

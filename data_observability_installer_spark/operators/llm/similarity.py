@@ -29,6 +29,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.driver import local_frame
 from ...functions.pin import pin, pinned
 
 N_PLANES = 8
@@ -1853,7 +1854,7 @@ def _pq_books_table(spark, books: list[list[list[int]]]):
         for j in range(len(books))
         for c in range(len(books[j]))
     ]
-    return spark.createDataFrame(rows, "j int, code int, cvec array<bigint>")
+    return local_frame(spark, rows, "j int, code int, cvec array<bigint>")
 
 
 def _pq_codes_rel(
@@ -3061,7 +3062,7 @@ def semdedup_verdicts(
         msg = str(e)
         if "PATH_NOT_FOUND" not in msg and "UNABLE_TO_INFER_SCHEMA" not in msg:
             raise
-        w = spark.createDataFrame([], "vid long, dup_of long")
+        w = local_frame(spark, [], "vid long, dup_of long")
     verd = fold_witnesses([w])
     if max_cell is not None:
         hot = (

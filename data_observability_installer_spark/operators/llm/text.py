@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ...functions.driver import local_frame
+
 # tiny function-word profiles; enough signal for coarse routing
 LANG_MARKERS: dict[str, str] = {
     "en": r"\b(the|and|of|to|is|in|that|with)\b",
@@ -536,8 +538,8 @@ def bpe_train(
             for p in zip(toks, toks[1:]):
                 pair_ct[p] += wct
                 pair_words[p].add(w)
-    return spark.createDataFrame(
-        merges, "merge_round int, left_tok string, right_tok string, pair_ct long"
+    return local_frame(
+        spark, merges, "merge_round int, left_tok string, right_tok string, pair_ct long"
     )
 
 

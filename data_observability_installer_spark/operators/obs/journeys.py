@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ...functions.driver import local_frame
 from ...functions.pin import pin
 
 
@@ -314,7 +315,7 @@ def critical_path(assigned: DataFrame, edges: list[tuple[str, str]]) -> DataFram
         .groupBy("instance_id", "pipeline_key")
         .agg(F.max("dur_s").alias("dur_s"))
     )
-    e = spark.createDataFrame(edges, "up_key string, down_key string")
+    e = local_frame(spark, edges, "up_key string, down_key string")
     dist = dur.withColumn("path_s", F.col("dur_s"))
     for _ in range(dag_depth(edges)):
         best = (

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...functions.cron import Cron
+from ...functions.driver import local_frame
 
 
 def expected_ticks(
@@ -36,7 +37,9 @@ def expected_ticks(
     expectation, tick_ts, margin_s). The window bounds and emitted
     tick_ts are UTC; the cron expands against wall-clock time in the
     schedule's zone, so non-UTC deployments and DST transitions land
-    their expectations at the right instants."""
+    their expectations at the right instants. The naive-UTC ticks go
+    back through :func:`local_frame`, which reads them as UTC, so tick
+    instants do not depend on the host's time zone either."""
     rows = []
     cache: dict[tuple, list] = {}  # fleets share few distinct (cron, tz)
     for s in schedules:
@@ -48,8 +51,8 @@ def expected_ticks(
         ticks = cache[ck]
         for tick in ticks:
             rows.append((s["component_key"], s.get("expectation", "BATCH_PIPELINE_START_TIME"), tick, int(s["margin_s"])))
-    return spark.createDataFrame(
-        rows, "component_key string, expectation string, tick_ts timestamp, margin_s int"
+    return local_frame(
+        spark, rows, "component_key string, expectation string, tick_ts timestamp, margin_s int"
     )
 
 

@@ -47,6 +47,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.driver import local_frame
 from ..functions.pin import pinned
 from .dq.testtypes import EMAIL_RE, US_STATES, _sql_quote
 
@@ -451,7 +452,7 @@ def profile(
                     (table_name, c, met.name, v if met.kind == "d" else None,
                      v if met.kind == "s" else None)
                 )
-        return df.sparkSession.createDataFrame(data, schema=_PROFILE_RESULT_SCHEMA)
+        return local_frame(df.sparkSession, data, _PROFILE_RESULT_SCHEMA)
 
     parts: list[DataFrame] = []
     for batch in chunks:

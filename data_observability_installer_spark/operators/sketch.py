@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from ..functions.driver import local_frame
 from ..functions.pin import pin
 
 #: Schema of a dyadic quantile sketch frame — identical to what the
@@ -647,9 +648,6 @@ def qsketch(
     import numpy as np
 
     rows = leaves.collect()
-    spark = df.sparkSession
-    if not rows:
-        return spark.createDataFrame([], _QSKETCH_SCHEMA)
     b = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
     c = np.fromiter((r[1] for r in rows), dtype=np.int64, count=len(rows))
     n = int(c.sum())
@@ -672,7 +670,7 @@ def qsketch(
         (int(key >> (log_u + 1)), int(key & ((1 << (log_u + 1)) - 1)), int(v))
         for key, v in zip(uniq.tolist(), cnt.tolist())
     ]
-    return spark.createDataFrame(data, _QSKETCH_SCHEMA)
+    return local_frame(df.sparkSession, data, _QSKETCH_SCHEMA)
 
 
 def qsketch_merge(*sketches: DataFrame) -> DataFrame:
@@ -766,7 +764,6 @@ def qsketch_quantiles(
     # arithmetic: rank rule cum*10000 >= q*n, nodes in (hib asc, level
     # desc) order, est = lo + ((hib+1)*span) DIV u - 1.
     nodes = sketch.select("level", "idx", "cnt").collect()
-    spark = sketch.sparkSession
     out_schema = StructType(
         [
             StructField("q_bp", IntegerType(), True),
@@ -774,8 +771,6 @@ def qsketch_quantiles(
             StructField("est", LongType(), True),
         ]
     )
-    if not nodes:
-        return spark.createDataFrame([], out_schema)
     n = sum(r["cnt"] for r in nodes)
     ordered = sorted(
         (
@@ -791,7 +786,7 @@ def qsketch_quantiles(
             if cum * 10000 >= q * n:
                 data.append((q, n, lo + ((hib + 1) * span) // u - 1))
                 break
-    return spark.createDataFrame(data, out_schema)
+    return local_frame(sketch.sparkSession, data, out_schema)
 
 
 def _qsketch_nodes_sql(
@@ -1065,9 +1060,7 @@ def qsketch_quantiles_by(
     cum = ordered.select(
         "k_key", "hib", "n", F.sum("cnt").over(w).alias("cum")
     )
-    qs = ordered.sparkSession.createDataFrame(
-        [(int(q),) for q in q_bps], "q_bp int"
-    )
+    qs = local_frame(ordered.sparkSession, [(int(q),) for q in q_bps], "q_bp int")
     return (
         cum.crossJoin(F.broadcast(qs))
         .filter(F.col("cum") * 10000 >= F.col("q_bp") * F.col("n"))

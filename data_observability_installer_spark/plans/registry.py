@@ -13,6 +13,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.driver import local_frame
 from ..functions.pin import pin, pinned
 from ..functions.time import epoch_seconds
 from ..operators.dq.compiler import compile_suite, compile_suite_sql
@@ -1539,6 +1540,25 @@ def a4_run_state_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _A6_EDGES = [("pipeline-0", "pipeline-1"), ("pipeline-1", "pipeline-2"),
              ("pipeline-0", "pipeline-3")]
+_CONDITIONS_DDL = "journey_id string, action string, batch_pipeline string"
+
+
+def _j_events_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Runs of journey j-events (pipelines 0-3) assigned to instances
+    bounded by pipeline-0 run starts: the input of A6 and of the
+    critical path. The rollup feeds instance derivation AND run
+    assignment, so it is pinned and events scan once (measured ~20-50%
+    at sf0.1; rollup rows = runs, far below the event count)."""
+    from ..operators.obs.journeys import assign_to_instances, journey_instances
+
+    runs = pin(_events_run_rollup(load_table(spark, sf_dir, "events")))
+    conditions = local_frame(spark, [("j-events", "START", "pipeline-0")], _CONDITIONS_DDL)
+    components = local_frame(
+        spark,
+        [("j-events", f"pipeline-{i}") for i in range(4)],
+        "journey_id string, component_key string",
+    )
+    return assign_to_instances(runs, journey_instances(runs, conditions), components)
 
 
 @register(
@@ -1571,31 +1591,14 @@ def a6_out_of_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     j-events with DAG 0→1→2, 0→3; instances bounded by pipeline-0 run
     starts; an upstream run ending after a downstream run starts inside
     one instance violates the DAG."""
-    from ..operators.obs.journeys import (
-        assign_to_instances,
-        journey_instances,
-        out_of_sequence,
-        transitive_edges,
-    )
+    from ..operators.obs.journeys import out_of_sequence, transitive_edges
 
-    # the rollup feeds instance derivation AND run assignment — pin it
-    # so events scan once (measured ~20-50% at sf0.1; rollup rows =
-    # runs, far below the event count)
-    runs = pin(_events_run_rollup(load_table(spark, sf_dir, "events")))
-    conditions = spark.createDataFrame(
-        [("j-events", "START", "pipeline-0")], "journey_id string, action string, batch_pipeline string"
-    )
-    components = spark.createDataFrame(
-        [("j-events", f"pipeline-{i}") for i in range(4)],
-        "journey_id string, component_key string",
-    )
-    closure = spark.createDataFrame(
+    closure = local_frame(
+        spark,
         [("j-events", u, d) for u, d in transitive_edges(_A6_EDGES)],
         "journey_id string, up_key string, down_key string",
     )
-    instances = journey_instances(runs, conditions)
-    assigned = assign_to_instances(runs, instances, components)
-    return out_of_sequence(assigned, closure)
+    return out_of_sequence(_j_events_assigned(spark, sf_dir), closure)
 
 
 @register(
@@ -1641,25 +1644,9 @@ def critical_path_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     asks after 'it was late'). DAG relaxation rounds = dag_depth
     (metadata); the working frame is instances x components, never the
     event count."""
-    from ..operators.obs.journeys import (
-        assign_to_instances,
-        critical_path,
-        journey_instances,
-    )
+    from ..operators.obs.journeys import critical_path
 
-    # pinned: the rollup feeds instance derivation AND run assignment
-    runs = pin(_events_run_rollup(load_table(spark, sf_dir, "events")))
-    conditions = spark.createDataFrame(
-        [("j-events", "START", "pipeline-0")],
-        "journey_id string, action string, batch_pipeline string",
-    )
-    components = spark.createDataFrame(
-        [("j-events", f"pipeline-{i}") for i in range(4)],
-        "journey_id string, component_key string",
-    )
-    instances = journey_instances(runs, conditions)
-    assigned = assign_to_instances(runs, instances, components)
-    return critical_path(assigned, _A6_EDGES)
+    return critical_path(_j_events_assigned(spark, sf_dir), _A6_EDGES)
 
 
 @register(
@@ -1708,9 +1695,10 @@ def a2_payload_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("run_key"),
         F.get_json_object("props", "$.k").alias("payload_key"),
     ).distinct()
-    conditions = spark.createDataFrame(
+    conditions = local_frame(
+        spark,
         [("j-payload", "START", "pipeline-0"), ("j-payload", "END_PAYLOAD", "pipeline-1")],
-        "journey_id string, action string, batch_pipeline string",
+        _CONDITIONS_DDL,
     )
     inst = payload_instances(runs, conditions, payloads)
     return inst.select(
@@ -1771,7 +1759,8 @@ def catalog_upsert_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format(F.min("ts"), _TS_FMT_SPARK).alias("first_seen"),
         F.count(F.lit(1)).alias("event_ct"),
     )
-    incoming = spark.createDataFrame(
+    incoming = local_frame(
+        spark,
         [("pipeline-3", "2099-01-01 00:00:00", 0), ("pipeline-9", "2099-01-01 00:00:00", 0)],
         "key string, first_seen string, event_ct bigint",
     )
@@ -5113,7 +5102,7 @@ def rebuild_plan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("pipeline_key").alias("dataset_key"))
         .distinct()
     )
-    edges = spark.createDataFrame(_PIPE_DAG, "src string, dst string")
+    edges = local_frame(spark, _PIPE_DAG, "src string, dst string")
     return _lin.rebuild_plan(edges, seeds)
 
 
@@ -6811,9 +6800,8 @@ def txtable_stream_cdf_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tail.process_available(collect_batch)
     if not batches:
-        return spark.createDataFrame(
-            [],
-            "version int, change_type string, n_rows long, qty_cents long",
+        return local_frame(
+            spark, [], "version int, change_type string, n_rows long, qty_cents long"
         )
     feed = batches[0]
     for b in batches[1:]:

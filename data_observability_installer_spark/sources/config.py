@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.driver import local_frame
+
 CONDITION_SCHEMA = T.StructType(
     [
         T.StructField("journey_id", T.StringType()),
@@ -93,7 +95,7 @@ def load_config(spark: SparkSession, path: str) -> dict[str, DataFrame]:
         if os.path.exists(p):
             out[family] = spark.read.schema(schema).json(p)
         else:
-            out[family] = spark.createDataFrame([], schema)
+            out[family] = local_frame(spark, [], schema)
     return out
 
 

@@ -27,6 +27,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.driver import local_frame
 from ..schemas import HEARTBEAT, OBS_EVENT
 
 ANCHOR = dt.datetime(2024, 3, 1, 0, 0, 0)
@@ -170,12 +171,13 @@ def build_demo(spark: SparkSession) -> dict:
 
     # arrival order ≠ event order (the demo replays history)
     rows.sort(key=lambda r: (r["event_id"] * 2654435761) % 2**32)
-    events = spark.createDataFrame(
-        [{f.name: r.get(f.name) for f in OBS_EVENT.fields} for r in rows], OBS_EVENT
+    events = local_frame(
+        spark, [tuple(r.get(f.name) for f in OBS_EVENT.fields) for r in rows], OBS_EVENT
     )
 
     # --- catalog ---
-    components = spark.createDataFrame(
+    components = local_frame(
+        spark,
         [
             (k, "proj", "BATCH_PIPELINE", k.replace("_", " ").title(), k, "airflow")
             for k in [fanout_root, *fanout_children, "dia_a", "dia_b", "dia_c", "dia_d", "island"]
@@ -183,7 +185,8 @@ def build_demo(spark: SparkSession) -> dict:
         + [("warehouse-server", "proj", "SERVER", "Warehouse Server", "warehouse-server", "redshift")],
         "component_id string, project_id string, type string, name string, key string, tool string",
     )
-    dag = spark.createDataFrame(
+    dag = local_frame(
+        spark,
         [("j1", fanout_root, c) for c in fanout_children]
         + [
             ("j2", "dia_a", "dia_b"),
@@ -194,11 +197,13 @@ def build_demo(spark: SparkSession) -> dict:
         ],
         "journey_id string, left_id string, right_id string",
     )
-    conditions = spark.createDataFrame(
+    conditions = local_frame(
+        spark,
         [("j1", "START", fanout_root), ("j2", "START", "dia_a")],
         "journey_id string, action string, batch_pipeline string",
     )
-    journey_components = spark.createDataFrame(
+    journey_components = local_frame(
+        spark,
         [("j1", k) for k in [fanout_root, *fanout_children]]
         + [("j2", k) for k in ["dia_a", "dia_b", "dia_c", "dia_d"]],
         "journey_id string, component_key string",
@@ -245,7 +250,7 @@ def build_demo(spark: SparkSession) -> dict:
             hb.append(
                 (agent, "airflow", "1.0", ANCHOR - dt.timedelta(minutes=10) + dt.timedelta(seconds=25 * i))
             )
-    heartbeats = spark.createDataFrame(hb, HEARTBEAT)
+    heartbeats = local_frame(spark, hb, HEARTBEAT)
 
     return {
         "events": events,

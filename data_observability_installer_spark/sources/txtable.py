@@ -131,6 +131,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.driver import local_frame
 from ..functions.pin import pin
 from .sinks import start_batch_query
 
@@ -304,6 +305,24 @@ def read_manifest(path: str, version: int | None = None) -> dict:
         raise FileNotFoundError(f"version {v} not in {vs}")
     with open(_manifest_path(path, v)) as fh:
         return json.load(fh)
+
+
+def _check_range(path: str, lo: int, hi: int | None, remedy: str) -> int:
+    """End of the version range ``(lo, hi]`` (``hi=None``: the head).
+    Raises FileNotFoundError for a path with no commits and
+    :class:`VacuumedVersionError` (ending in ``remedy``) when the range
+    reaches a version the vacuum deleted."""
+    vs = _versions(path)
+    if not vs:
+        raise FileNotFoundError(f"not a txtable (no commits): {path}")
+    hi = vs[-1] if hi is None else hi
+    missing = sorted(set(range(lo + 1, hi + 1)) - set(vs))
+    if missing:
+        raise VacuumedVersionError(
+            f"versions {missing} of (v{lo}, v{hi}] predate the vacuum retention "
+            f"horizon (oldest retained: {vs[0]}); {remedy}"
+        )
+    return hi
 
 
 def _write_data_files(
@@ -1038,7 +1057,7 @@ def read_table(
     files = prune_files(m, predicates) if predicates else m["files"]
     schema = StructType.fromJson(json.loads(m["schema"]))
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     dv = m.get("dv") or {}
     plain = [f for f in files if f not in dv]
     dved = [f for f in files if f in dv]
@@ -1874,17 +1893,7 @@ def table_changes(
     compact/merge commits, whose file lists do not decompose into
     added-rows (a row-level diff there is
     :func:`operators.dq.snapshot.snapshot_diff`'s job)."""
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"not a txtable (no commits): {path}")
-    to_v = to_version if to_version is not None else vs[-1]
-    have = set(vs)
-    missing = [v for v in range(from_version + 1, to_v + 1) if v not in have]
-    if missing:
-        raise VacuumedVersionError(
-            f"versions {missing} predate the vacuum retention horizon "
-            f"(oldest retained: {vs[0]}); CDC over them is unrecoverable"
-        )
+    to_v = _check_range(path, from_version, to_version, "CDC over them is unrecoverable")
     added: list[str] = []
     for v in range(from_version + 1, to_v + 1):
         m = read_manifest(path, v)
@@ -1898,7 +1907,7 @@ def table_changes(
 
     schema = StructType.fromJson(json.loads(read_manifest(path, to_v)["schema"]))
     if not added:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # the range-end manifest's schema covers every file in the range
     # (schemas only grow, and only via explicit merge_schema appends),
     # so an evolved range reads union-by-name like read_table
@@ -2063,17 +2072,7 @@ def table_changes_cdf(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"not a txtable (no commits): {path}")
-    to_v = to_version if to_version is not None else vs[-1]
-    have = set(vs)
-    missing = [v for v in range(from_version + 1, to_v + 1) if v not in have]
-    if missing:
-        raise VacuumedVersionError(
-            f"versions {missing} predate the vacuum retention horizon "
-            f"(oldest retained: {vs[0]}); CDF over them is unrecoverable"
-        )
+    to_v = _check_range(path, from_version, to_version, "CDF over them is unrecoverable")
     end_m = read_manifest(path, to_v)
     end_fields, _, _ = _bootstrap_mapping(end_m)
     end_by_fid = {fid: name for name, fid in end_fields.items()}
@@ -2234,7 +2233,8 @@ def table_changes_cdf(
             )
     from pyspark.sql.types import IntegerType, StringType, StructField
 
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [],
         StructType(
             [f for f in end_schema.fields]
@@ -2535,13 +2535,7 @@ class TxTableStream:
                 total += n
                 capped = v
             hi = capped
-        missing = [v for v in range(lo + 1, hi + 1) if v not in set(vs)]
-        if missing:
-            raise VacuumedVersionError(
-                f"stream checkpoint at v{lo} but versions {missing} "
-                f"predate the vacuum retention horizon (oldest retained: "
-                f"{vs[0]}); re-seed the subscriber from a snapshot read"
-            )
+        _check_range(self.path, lo, hi, "re-seed the subscriber from a snapshot read")
         if self.cdf:
             return table_changes_cdf(self.spark, self.path, lo, hi), hi
         return self._appended_rows(lo, hi), hi
@@ -2609,7 +2603,7 @@ class TxTableStream:
                     "decompose into appended rows — re-seed the "
                     "subscriber from a snapshot read"
                 )
-        out = self.spark.createDataFrame([], end_schema)
+        out = local_frame(self.spark, [], end_schema)
         for p in parts:
             # commits that predate an added column contribute NULL
             out = out.unionByName(p, allowMissingColumns=True)

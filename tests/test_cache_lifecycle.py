@@ -3,6 +3,7 @@ materialization seam: every owned persist is released."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -181,9 +182,9 @@ def test_pinned_releases_only_what_it_persisted(spark):
         own.unpersist()
 
 
-def test_dedup_groups_distributed_branch(spark, sf_smoke):
+def test_dedup_groups_distributed_branch(spark, sf_smoke, monkeypatch):
     """The distributed min-label propagation (forced with
-    ``driver_threshold=0``) yields the union-find path's groups and
+    ``DRIVER_ROWS = 0``) yields the union-find path's groups and
     releases every per-round label persist."""
     from data_observability_installer_spark.operators.llm import dedup
 
@@ -192,7 +193,8 @@ def test_dedup_groups_distributed_branch(spark, sf_smoke):
     docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
     pairs = dedup.ngram_jaccard_pairs(docs, **registry._JACCARD_ARGS)
     local = sorted(map(tuple, dedup.dedup_groups(pairs).collect()))
-    dist = sorted(map(tuple, dedup.dedup_groups(pairs, driver_threshold=0).collect()))
+    monkeypatch.setattr(dedup, "DRIVER_ROWS", 0)
+    dist = sorted(map(tuple, dedup.dedup_groups(pairs).collect()))
     assert local, "no near-dup pairs at smoke scale"
     assert dist == local
     assert _persisted_rdd_count(spark) == 0, "dedup_groups leaked a label persist"
@@ -217,6 +219,22 @@ def test_materialization_goes_through_pin_seam():
         if _RAW_MATERIALIZE.search(line)
     ]
     assert not hits, "raw materialization outside functions/pin.py:\n" + "\n".join(hits)
+
+
+def test_driver_rows_go_through_local_frame():
+    """functions/driver.py is the only module that calls
+    ``createDataFrame``: every frame built from driver-side rows is an
+    Arrow ``LocalTableScan`` with UTC timestamps, never the list path's
+    ``Scan ExistingRDD``."""
+    seam = _PKG / "functions" / "driver.py"
+    hits = [
+        f"{path.relative_to(_PKG)}:{node.lineno}"
+        for path in sorted(_PKG.rglob("*.py"))
+        if path != seam
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+    ]
+    assert not hits, "createDataFrame outside functions/driver.py:\n" + "\n".join(hits)
 
 
 # Spark jobs per call (build + collect) at sf0.001 after clear_caches():

@@ -151,21 +151,47 @@ def test_dedup_groups_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
-def test_dedup_groups_deep_chain_converges(spark):
+def test_dedup_groups_deep_chain_converges(spark, monkeypatch):
     """Path graph of length 20: worst-case diameter for label
-    propagation. The periodic localCheckpoint truncates lineage, so
-    20 rounds neither blow the plan tree nor change the answer."""
-    from data_observability_installer_spark.operators.llm.dedup import dedup_groups
+    propagation, forced onto the distributed rounds. The pin every 3rd
+    round truncates lineage, so 20 rounds neither stack joins onto the
+    label plans handed to pin/pinned nor change the answer."""
+    from data_observability_installer_spark.operators.llm import dedup
 
+    depths = []
+
+    def spy(real):
+        def handed(df, *a, **k):
+            # each round nests two more joins into the label plan: the
+            # periodic pin holds it at 6, without it round 20 reaches ~40
+            depths.append(_join_depth(df._jdf.queryExecution().analyzed(), 10))
+            assert depths[-1] <= 10, f"label plan handed over {depths[-1]} joins deep"
+            return real(df, *a, **k)
+
+        return handed
+
+    monkeypatch.setattr(dedup, "pin", spy(dedup.pin))
+    monkeypatch.setattr(dedup, "pinned", spy(dedup.pinned))
+    monkeypatch.setattr(dedup, "DRIVER_ROWS", 0)
     edges = [(i, i + 1, 0.9) for i in range(20)]
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint, jaccard double")
-    out = dedup_groups(pairs, max_iters=30)
+    out = dedup.dedup_groups(pairs, max_iters=30)
     got = {r.doc: r.group_id for r in out.collect()}
     assert got == {i: 0 for i in range(21)}
-    # lineage stays bounded: the final plan string must not contain a
-    # 20-deep join stack (checkpoint every 3 rounds caps it)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Join") < 10
+    assert len(depths) > 20  # one pinned scope per round, and the pins
+
+
+def _join_depth(node, budget: int) -> int:
+    """Deepest nesting of Join nodes in a JVM logical plan, cut short
+    once it passes ``budget``: the label plan repeats each round's
+    input twice, so a full walk grows as 2^rounds."""
+    here = int(node.nodeName().endswith("Join"))
+    kids, deepest = node.children(), 0
+    for i in range(kids.size()):
+        if deepest + here > budget:
+            break
+        deepest = max(deepest, _join_depth(kids.apply(i), budget - here))
+    return deepest + here
 
 
 _GROUP_GRAPHS = {
@@ -179,10 +205,11 @@ _GROUP_GRAPHS = {
 
 
 @pytest.mark.parametrize("graph", sorted(_GROUP_GRAPHS))
-def test_dedup_groups_driver_path_matches_label_propagation(spark, graph):
+def test_dedup_groups_driver_path_matches_label_propagation(spark, graph, monkeypatch):
     """The driver union-find and the distributed min-label rounds give
-    row-identical (doc, group_id) and one schema. A threshold of -1
-    sends even an empty pair list to the distributed rounds."""
+    row-identical (doc, group_id) and one schema. A cap of -1 sends
+    even an empty pair list to the distributed rounds."""
+    from data_observability_installer_spark.operators.llm import dedup
     from data_observability_installer_spark.operators.llm.dedup import dedup_groups
 
     pairs = spark.createDataFrame(
@@ -190,7 +217,8 @@ def test_dedup_groups_driver_path_matches_label_propagation(spark, graph):
         "doc_a bigint, doc_b bigint, jaccard double",
     )
     driver = dedup_groups(pairs)
-    rounds = dedup_groups(pairs, driver_threshold=-1)
+    monkeypatch.setattr(dedup, "DRIVER_ROWS", -1)
+    rounds = dedup_groups(pairs)
     assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" not in rounds._jdf.queryExecution().executedPlan().toString()
     got = [(sorted(map(tuple, df.collect())), df.schema) for df in (driver, rounds)]

@@ -435,7 +435,10 @@ def test_qsketch_edge_values_and_empty(spark):
     empty = spark.createDataFrame([], "v long")
     sk0 = qsketch(empty, "v", lo=0, hi=99, k=4, log_u=4)
     assert sk0.count() == 0
-    assert qsketch_quantiles(sk0, [5000], 0, 99, 4).count() == 0
+    assert sk0.schema.simpleString() == "struct<level:int,idx:bigint,cnt:bigint>"
+    q0 = qsketch_quantiles(sk0, [5000], 0, 99, 4)
+    assert q0.count() == 0
+    assert q0.schema.simpleString() == "struct<q_bp:int,n:bigint,est:bigint>"
 
 
 def test_qsketch_by_per_key_isolation_and_bounds(spark):
