@@ -20,7 +20,11 @@ Graph operators over metadata-sized inputs (lineage edges, near-dup
 pair lists) run their rounds on the driver while the input fits under
 :data:`DRIVER_ROWS`: one bounded ``collect`` replaces a Spark job (plus
 its pin and its emptiness probe) per round. Above the cap the operator
-keeps its distributed rounds.
+keeps its distributed rounds. The near-dup family's exact shingle
+overlap (``operators/llm/dedup.driver_overlap``) has the same shape:
+one capped collect of the shingle index, or of the MinHash candidates
+and then their docs' shingles, a local count while the self-join's
+output stays under the cap, and the overlap rows handed back here.
 """
 
 from __future__ import annotations

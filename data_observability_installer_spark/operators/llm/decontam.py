@@ -121,6 +121,10 @@ def decontaminate_fuzzy(
     SCREEN, size bands so the curve is steep BELOW your threshold, and
     treat anything below ~0.25 as out of scope rather than silently
     half-covered.
+
+    The exact verify stays on the Spark kernel (``shingle_overlap``),
+    not ``dedup.driver_overlap``: the two sides are different shingle
+    frames, and the benchmark side is broadcast.
     """
     rows_per_band = num_hashes // bands
     # each side shingles ONCE: the persisted shingle frame feeds its

@@ -17,23 +17,35 @@ Four families, each with the partition/shuffle story spelled out:
   pair, compute Jaccard from set sizes. Cost is Σ df(shingle)² AFTER
   the cap, not n².
 - **MinHash + LSH banding** — per-document signature of ``num_hashes``
-  minima; hash_i(s) = first 8 hex chars of md5(i ':' s), so a MIN over
-  hex strings is a valid uniform min-hash AND is computable bit-for-bit
-  in any engine with md5 (the correctness oracle runs it in DuckDB).
-  Signatures band into ``bands`` groups; same-band collisions are
-  candidates; candidates verify with exact Jaccard. Only bucket
-  collisions shuffle — the O(n²) never materializes.
+  minima from ONE md5 per shingle: its first 15 hex chars are a 60-bit
+  integer, reduced mod p = 2^31 - 1 to ``h0``, and hash i is the affine
+  rehash (a_i * h0 + b_i) mod p with fixed seeded coefficients — a MIN
+  over BIGINTs, computable bit-for-bit in any engine with md5 (the
+  correctness oracle runs it in DuckDB). Signatures band into ``bands``
+  groups; same-band collisions are candidates; candidates verify with
+  exact Jaccard. Only bucket collisions shuffle — the O(n²) never
+  materializes.
 - **SimHash** — 16-bit vote vector over xxhash64(word) bits
   (JVM-native hash; no SQL twin, driver records a rows-only check).
   Near-dup candidates share a bucket.
+
+The exact-overlap step the Jaccard and MinHash screens share runs on
+the driver while it is metadata-sized (:func:`driver_overlap`): one
+capped collect of the index (or of the candidates and their docs'
+shingles), a local count, and the overlap rows back as a
+``LocalTableScan``. Above ``DRIVER_ROWS`` the Spark self-join runs.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from collections.abc import Callable
 from contextlib import ExitStack, nullcontext
+from itertools import combinations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ...functions.driver import DRIVER_ROWS, local_frame
 from ...functions.pin import pin, pinned
@@ -94,7 +106,9 @@ def exploded_shingles(
     unlike a posexplode+lead window formulation, needs NO shuffle, so
     shingling remains a pure map stage at any scale. Documents shorter
     than ``n`` words contribute their whole text as one shingle
-    (matching the SQL oracle's truncated-slice semantics).
+    (matching the SQL oracle's truncated-slice semantics), and NULL text
+    contributes none (NGram throws on a NULL array, so those rows are
+    dropped before it).
     """
     base = df.select(F.col(id_col).alias("doc"), _words(text_col).alias("words"))
     dedupe = F.array_distinct if distinct else (lambda c: c)
@@ -102,7 +116,9 @@ def exploded_shingles(
         return base.select("doc", F.explode(dedupe(F.col("words"))).alias("sh"))
     from pyspark.ml.feature import NGram
 
-    with_ngrams = NGram(n=n, inputCol="words", outputCol="ngrams").transform(base)
+    with_ngrams = NGram(n=n, inputCol="words", outputCol="ngrams").transform(
+        base.filter(F.col("words").isNotNull())
+    )
     shingles = F.when(
         F.size("words") >= n, F.col("ngrams")
     ).otherwise(F.array(F.concat_ws(" ", F.col("words"))))
@@ -140,7 +156,9 @@ def shingle_overlap(
     ``pair`` an extra join condition over ``x.doc``/``y.doc``;
     ``cand`` (columns a, b) semi-joins the pairs down to candidates
     before the size joins. The self-join on shingle is the inverted-
-    index join: cost is Σ df(shingle)², never n²."""
+    index join: cost is Σ df(shingle)², never n². While that is
+    metadata-sized, :func:`driver_overlap` counts the same rows on the
+    driver."""
     sizes_x = x.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     sizes_y = sizes_x if y is x else y.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     on = F.col("x.sh") == F.col("y.sh")
@@ -162,6 +180,130 @@ def jaccard_score() -> Column:
     return F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4)
 
 
+def _capped_columns(df: DataFrame) -> list[list] | None:
+    """``df``'s columns as Python lists from one Arrow collect capped at
+    ``DRIVER_ROWS + 1`` rows; None when it holds more than
+    ``DRIVER_ROWS``."""
+    table = df.limit(DRIVER_ROWS + 1).toArrow()
+    if table.num_rows > DRIVER_ROWS:
+        return None
+    return [c.to_pylist() for c in table.columns]
+
+
+def driver_overlap(
+    index: DataFrame, a: str = "doc_a", b: str = "doc_b", cand: DataFrame | None = None
+) -> DataFrame | None:
+    """:func:`shingle_overlap`'s (a, b, inter, sz_a, sz_b) over the
+    (doc, sh) ``index``, counted on the driver and handed back through
+    :func:`local_frame` as a ``LocalTableScan`` — or None when the work
+    passes ``DRIVER_ROWS``, and the caller runs the Spark kernel.
+
+    - Without ``cand``: the symmetric self-overlap (pairs with a < b).
+      The index is collected once, capped at ``DRIVER_ROWS + 1`` rows,
+      and pairs are counted from an inverted shingle -> docs map while
+      Σ df·(df−1)/2, the rows the self-join would produce, stays within
+      ``DRIVER_ROWS``.
+    - With ``cand`` (columns a, b): the distinct candidates are
+      collected once under the same cap, then only the candidate docs'
+      index rows, through a semi-join with a ``local_frame`` of those
+      docs.
+
+    The join's semantics carry over exactly: a NULL shingle counts in
+    ``sz`` but never matches, a NULL doc never pairs, a repeated
+    (doc, sh) row counts once per row on each side, no pair with
+    ``inter = 0`` is emitted, and the three counts are BIGINT. The
+    schema is the kernel's, column order included (its size joins put
+    ``b`` first).
+    """
+    spark = index.sparkSession
+    doc = index.schema["doc"]
+    schema = StructType(
+        [StructField(b, doc.dataType, doc.nullable), StructField(a, doc.dataType, doc.nullable)]
+        + [StructField(c, LongType(), False) for c in ("inter", "sz_a", "sz_b")]
+    )
+    if cand is None:
+        cols = _capped_columns(index.select("doc", "sh"))
+        if cols is None:
+            return None
+        postings: dict = {}
+        for d, s in zip(*cols):
+            if d is not None and s is not None:
+                postings.setdefault(s, []).append(d)
+        if sum(len(p) * (len(p) - 1) // 2 for p in postings.values()) > DRIVER_ROWS:
+            return None
+        inter = Counter(
+            xy for p in postings.values() for xy in combinations(sorted(p), 2) if xy[0] != xy[1]
+        )
+    else:
+        pairs = _capped_columns(cand.select(a, b))
+        if pairs is None:
+            return None
+        docs = sorted({d for col in pairs for d in col if d is not None})
+        cdocs = local_frame(spark, [(d,) for d in docs], StructType([doc]))
+        cols = (
+            _capped_columns(index.join(cdocs, "doc", "semi").select("doc", "sh"))
+            if docs
+            else [[], []]
+        )
+        if cols is None:
+            return None
+        bags: dict = {}
+        for d, s in zip(*cols):
+            if s is not None:
+                bags.setdefault(d, Counter())[s] += 1
+        inter = {}
+        for x, y in zip(*pairs):
+            bx, by = bags.get(x, {}), bags.get(y, {})
+            k = sum(bx[s] * by[s] for s in bx.keys() & by.keys())
+            if k:
+                inter[x, y] = k
+    sizes = Counter(cols[0])
+    return local_frame(
+        spark, [(y, x, k, sizes[x], sizes[y]) for (x, y), k in inter.items()], schema
+    )
+
+
+def _jaccard_at(
+    overlap: DataFrame, threshold: float, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """(a, b, jaccard) of the overlap rows at >= ``threshold``."""
+    return (
+        overlap.withColumn("jaccard", jaccard_score())
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _self_overlap(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    max_df: int,
+    capped_shingles: DataFrame | None,
+    score: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """``score`` applied to the symmetric self-overlap of the df-capped
+    index (``capped_shingles``, or one built from ``df``): the
+    :func:`driver_overlap` frame while it fits, else the Spark
+    self-join. An owned index is persisted for the scope, so the Spark
+    kernel above the cap reuses what the capped collect computed; its
+    result-sized output is pinned inside the scope, the driver's
+    ``LocalTableScan`` needs no pin."""
+    owned = capped_shingles is None
+    index = (
+        capped_index(exploded_shingles(df, text_col, id_col, n), max_df)
+        if owned
+        else capped_shingles
+    )
+    with pinned(index) if owned else nullcontext(index) as sh:
+        local = driver_overlap(sh)
+        if local is not None:
+            return score(local)
+        out = score(shingle_overlap(sh, sh, _ordered_pair()))
+        return pin(out) if owned else out
+
+
 # ---------------------------------------------------------------------------
 # n-gram Jaccard
 # ---------------------------------------------------------------------------
@@ -179,24 +321,12 @@ def ngram_jaccard_pairs(
     """Near-dup pairs by n-gram Jaccard via inverted-index join.
     ``capped_shingles`` shares a caller-owned df-capped index (same
     max_df) across dedup operators instead of re-shingling the corpus;
-    the caller owns that frame's persist lifecycle."""
-    # The index feeds THREE subtrees (sizes + both self-join sides). An
-    # owned index is persisted for the scope and released on exit, with
-    # the result-sized pair list pinned inside it.
-    owned = capped_shingles is None
-    index = (
-        capped_index(exploded_shingles(df, text_col, id_col, n), max_df)
-        if owned
-        else capped_shingles
+    the caller owns that frame's persist lifecycle. The overlap counts
+    come from :func:`driver_overlap` while Σ df·(df−1)/2 fits under
+    ``DRIVER_ROWS``, from the Spark self-join above it."""
+    return _self_overlap(
+        df, text_col, id_col, n, max_df, capped_shingles, lambda o: _jaccard_at(o, threshold)
     )
-    with pinned(index) if owned else nullcontext(index) as sh:
-        out = (
-            shingle_overlap(sh, sh, _ordered_pair())
-            .withColumn("jaccard", jaccard_score())
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
-        )
-        return pin(out) if owned else out
 
 
 def ngram_jaccard_sql(
@@ -345,8 +475,9 @@ def minhash_pairs(
     sh = exploded_shingles(df, text_col, id_col, n) if owned else shingles
     with pinned(sh) if owned else nullcontext(sh) as sh0:
         verify = capped_shingles if capped_shingles is not None else capped_index(sh0, max_df)
-        out = _minhash_verified(sh0, verify, num_hashes, bands, threshold, _ordered_pair())
-        return pin(out) if owned else out
+        return _minhash_verified(
+            sh0, verify, num_hashes, bands, threshold, _ordered_pair(), pin_out=owned
+        )
 
 
 def _minhash_verified(
@@ -358,17 +489,20 @@ def _minhash_verified(
     pair: Column,
     a: str = "doc_a",
     b: str = "doc_b",
+    pin_out: bool = False,
 ) -> DataFrame:
     """The MinHash screen over one shingle frame: signatures from
     ``sh0``, band collisions that satisfy ``pair`` (over ``x.doc`` /
     ``y.doc``) as candidates (a, b), each verified with exact Jaccard on
-    the ``verify`` index. Returns (a, b, jaccard) at >= threshold."""
+    the ``verify`` index. Returns (a, b, jaccard) at >= threshold.
+
+    The verify runs on the driver (:func:`driver_overlap`) while the
+    candidates and their docs' index rows fit under ``DRIVER_ROWS``;
+    the result is then a ``LocalTableScan`` and nothing is pinned.
+    Above the cap the Spark verify runs, and ``pin_out`` pins its
+    result for a caller whose scope releases the shingles."""
     bk = band_keys(minhash_signatures(sh0, num_hashes), num_hashes // bands, bands)
-    # cand is RESULT-sized (LSH collisions only) but feeds THREE
-    # subtrees (both cdocs union branches + the verify semi-join);
-    # without a pin the signature+banding+self-join pipeline re-runs
-    # per consumer past whatever exchanges happen to be reused.
-    cand = pin(
+    cand = (
         bk.alias("x")
         .join(
             bk.alias("y"),
@@ -377,6 +511,14 @@ def _minhash_verified(
         .select(F.col("x.doc").alias(a), F.col("y.doc").alias(b))
         .distinct()
     )
+    local = driver_overlap(verify, a, b, cand=cand)
+    if local is not None:
+        return _jaccard_at(local, threshold, a, b)
+    # cand is RESULT-sized (LSH collisions only) but feeds THREE
+    # subtrees (both cdocs union branches + the verify semi-join);
+    # without a pin the signature+banding+self-join pipeline re-runs
+    # per consumer past whatever exchanges happen to be reused.
+    cand = pin(cand)
     # Exact verify scoped to CANDIDATES ONLY: semi-join the index down
     # to docs that appear in some candidate pair, so the overlap join is
     # bounded by LSH collisions, never Σ df².
@@ -386,12 +528,8 @@ def _minhash_verified(
         .distinct()
     )
     shc = verify.join(cdocs, "doc", "semi")
-    return (
-        shingle_overlap(shc, shc, pair, a, b, cand=cand)
-        .withColumn("jaccard", jaccard_score())
-        .filter(F.col("jaccard") >= threshold)
-        .select(a, b, "jaccard")
-    )
+    out = _jaccard_at(shingle_overlap(shc, shc, pair, a, b, cand=cand), threshold, a, b)
+    return pin(out) if pin_out else out
 
 
 def minhash_pairs_sql(
@@ -960,8 +1098,8 @@ def minhash_incremental(
     # predicate, and the verify reads the raw (uncapped) shingles
     newer = (F.col("x.doc") >= new_min_id) & (F.col("y.doc") < new_min_id)
     with pinned(exploded_shingles(df, text_col, id_col, n)) as sh0:
-        return pin(
-            _minhash_verified(sh0, sh0, num_hashes, bands, threshold, newer, "new_id", "dup_of")
+        return _minhash_verified(
+            sh0, sh0, num_hashes, bands, threshold, newer, "new_id", "dup_of", pin_out=True
         )
 
 
@@ -1190,18 +1328,13 @@ def ngram_containment_pairs(
     Same df-capped inverted-index join as the Jaccard operator (share
     ``capped_shingles`` to reuse the one corpus shingle pass); the
     scoring arithmetic is floor-division integers, so the twin is
-    hash-exact with no float-rounding hazard."""
-    # LIFECYCLE: an owned index is released on exit, the result pinned
-    owned = capped_shingles is None
-    index = (
-        capped_index(exploded_shingles(df, text_col, id_col, n), max_df)
-        if owned
-        else capped_shingles
-    )
-    with pinned(index) if owned else nullcontext(index) as sh:
-        out = (
-            shingle_overlap(sh, sh, _ordered_pair())
-            .withColumn(
+    hash-exact with no float-rounding hazard. The overlap counts come
+    from :func:`driver_overlap` while they fit, as for the Jaccard
+    pairs."""
+
+    def score(overlap: DataFrame) -> DataFrame:
+        return (
+            overlap.withColumn(
                 "containment_bp",
                 F.expr("CAST(inter * 10000L DIV least(sz_a, sz_b) AS BIGINT)"),
             )
@@ -1215,7 +1348,8 @@ def ngram_containment_pairs(
             .select("doc_a", "doc_b", "inter", "containment_bp", "contained_doc")
             .orderBy("doc_a", "doc_b")
         )
-        return pin(out) if owned else out
+
+    return _self_overlap(df, text_col, id_col, n, max_df, capped_shingles, score)
 
 
 def ngram_containment_sql(
@@ -1281,25 +1415,22 @@ def jaccard_threshold_sweep(
     is materialized, and the index is unpersisted before returning;
     with the shared index the plan is returned lazily and cache
     ownership stays with the caller (the registry's plan gate pins
-    this path to the shared cache)."""
+    this path to the shared cache). While the overlap fits under
+    ``DRIVER_ROWS`` its counts come from :func:`driver_overlap` and the
+    sweep aggregates a ``LocalTableScan``, with no pin."""
     floor_bp = min(int(t) for t in thresholds_bp)
-    owned = capped_shingles is None
-    index = (
-        capped_index(exploded_shingles(df, text_col, id_col, n), max_df)
-        if owned
-        else capped_shingles
+    th = df.sparkSession.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(f"({int(t)})" for t in sorted(set(thresholds_bp)))
+        + " AS t(threshold_bp)"
     )
-    with pinned(index) if owned else nullcontext(index) as sh:
-        pairs = shingle_overlap(sh, sh, _ordered_pair()).selectExpr(
+
+    def score(overlap: DataFrame) -> DataFrame:
+        pairs = overlap.selectExpr(
             "doc_a",
             "doc_b",
             "CAST(inter * 10000 DIV (sz_a + sz_b - inter) AS BIGINT) AS j_bp",
         ).filter(F.col("j_bp") >= floor_bp)
-        th = df.sparkSession.sql(
-            "SELECT * FROM VALUES "
-            + ", ".join(f"({int(t)})" for t in sorted(set(thresholds_bp)))
-            + " AS t(threshold_bp)"
-        )
         hits = pairs.join(F.broadcast(th), F.col("j_bp") >= F.col("threshold_bp"))
         agg = (
             hits.select("threshold_bp", F.explode(F.array("doc_a", "doc_b")).alias("doc"))
@@ -1309,7 +1440,7 @@ def jaccard_threshold_sweep(
                 F.countDistinct("doc").cast("long").alias("n_docs"),
             )
         )
-        out = (
+        return (
             th.join(agg, "threshold_bp", "left")
             .selectExpr(
                 "threshold_bp",
@@ -1318,7 +1449,8 @@ def jaccard_threshold_sweep(
             )
             .orderBy("threshold_bp")
         )
-        return pin(out) if owned else out
+
+    return _self_overlap(df, text_col, id_col, n, max_df, capped_shingles, score)
 
 
 def jaccard_threshold_sweep_sql(

@@ -240,8 +240,9 @@ def test_driver_rows_go_through_local_frame():
 # Spark jobs per call (build + collect) at sf0.001 after clear_caches():
 # the measured count of the driver-side graph rounds (every repetition
 # on 2, 4 and 8 cores gave the same count). The per-round Spark BFS and
-# the pinned pair mirror ran 57 and 23.
-DRIVER_GRAPH_JOB_BUDGET = {"lineage_closure": 6, "dedup_groups_documents": 17}
+# the pinned pair mirror ran 57 and 23; dedup_groups ran 17 before its
+# Jaccard pairs were counted on the driver too.
+DRIVER_GRAPH_JOB_BUDGET = {"lineage_closure": 6, "dedup_groups_documents": 8}
 
 
 @pytest.mark.parametrize("name", sorted(DRIVER_GRAPH_JOB_BUDGET))
@@ -278,6 +279,30 @@ def test_lineage_closure_leaves_no_persist_in_persist_mode(spark, sf_smoke):
     try:
         assert registry.QUERIES["lineage_closure"](spark, sf_smoke).collect()
         assert _persisted_rdd_count(spark) == 0, "lineage_closure left a persist behind"
+    finally:
+        spark.conf.unset(PIN_MODE_CONF)
+        registry.clear_caches()
+        spark.catalog.clearCache()
+
+
+def test_near_dup_queries_persist_only_the_shared_shingles(spark, sf_smoke):
+    """Under ``pin.mode=persist`` the driver-side overlap pins nothing:
+    after minhash_pairs_documents and dedup_groups_documents the only
+    persisted frames are the two shared shingle-cache entries, and
+    releasing those empties the CacheManager."""
+    from data_observability_installer_spark.functions.pin import PIN_MODE_CONF
+
+    registry.clear_caches()
+    spark.catalog.clearCache()
+    spark.conf.set(PIN_MODE_CONF, "persist")
+    try:
+        for name in ("minhash_pairs_documents", "dedup_groups_documents"):
+            assert registry.QUERIES[name](spark, sf_smoke).collect()
+        assert len(registry._SHINGLE_CACHE) == len(registry._CAPPED_SHINGLE_CACHE) == 1
+        assert _persisted_rdd_count(spark) == 1
+        registry._SHINGLE_CACHE.clear()
+        registry._CAPPED_SHINGLE_CACHE.clear()
+        assert _persisted_rdd_count(spark) == 0, "a near-dup query left a persist behind"
     finally:
         spark.conf.unset(PIN_MODE_CONF)
         registry.clear_caches()

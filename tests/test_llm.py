@@ -75,19 +75,34 @@ def test_minhash_agrees_with_exact_on_dups(docs):
     assert all(j >= 0.5 for j in got.values())
 
 
-def test_minhash_verify_is_candidate_scoped(docs):
-    """The exact-verify join must be gated behind the LSH candidate set
-    (a semi join), not an unbounded all-pairs materialization. Inspect
-    the caller-owned-shingles path: it returns the LAZY plan (the
-    self-persist path pins the result-sized pairs, hiding the shape
-    behind the checkpoint scan — same body code either way)."""
-    from data_observability_installer_spark.operators.llm.dedup import (
-        exploded_shingles,
-    )
+def test_minhash_verify_is_candidate_scoped(docs, monkeypatch):
+    """The exact verify reads the LSH candidates' shingles only, never
+    an all-pairs overlap. Driver branch: the second capped collect (the
+    first is the candidate pairs) holds exactly the candidate docs'
+    index rows, and the result is a local relation. Spark branch
+    (``DRIVER_ROWS = 0``): the verify join is gated behind the
+    candidate set by a semi join. Inspect the caller-owned-shingles
+    path: it returns the LAZY plan (the self-persist path pins the
+    result-sized pairs, hiding the shape behind the checkpoint scan —
+    same body code either way)."""
+    from data_observability_installer_spark.operators.llm import dedup
 
-    sh = exploded_shingles(docs, "text", "doc_id", 2)
+    sh = dedup.exploded_shingles(docs, "text", "doc_id", 2)
+    collected, real = [], dedup._capped_columns
+    monkeypatch.setattr(
+        dedup, "_capped_columns", lambda df: collected.append(real(df)) or collected[-1]
+    )
+    out = dedup.minhash_pairs(docs, n=2, shingles=sh)
+    cand, index = collected
+    cdocs = set(cand[0]) | set(cand[1])
+    assert cdocs and cdocs < {d for d, _ in DOCS}
+    assert set(index[0]) == cdocs
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "Join" not in plan, plan
+
+    monkeypatch.setattr(dedup, "DRIVER_ROWS", 0)
     plan = (
-        minhash_pairs(docs, n=2, shingles=sh)
+        dedup.minhash_pairs(docs, n=2, shingles=sh)
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert "LeftSemi" in plan
@@ -109,34 +124,188 @@ def test_minhash_incremental_is_one_batch_minhash_pairs(spark, sf_smoke):
     assert got == want
 
 
-# measured at sf_smoke, shared shingle caches built inside the call: 25
-# or 26 jobs. The verify plan is fixed; which one runs depends on AQE's
-# runtime re-planning racing concurrent query stages (whether the
-# candidate-docs semi-join reads a coalesced shuffle or a broadcast
-# depends on which stage finishes first), so the budget is the maximum.
-MINHASH_PAIRS_DOCUMENTS_JOB_BUDGET = 26
+# Spark jobs per call (build + collect) at sf_smoke after clear_caches(),
+# shared shingle caches built inside the call: the same count on every
+# repetition on 2, 4 and 8 cores and at sf0.01. The exact verify runs on
+# the driver from two capped collects, so AQE's runtime re-planning has
+# no candidate-docs semi-join left to race (with it, minhash_pairs ran
+# 25 or 26 jobs depending on which query stage finished first).
+NEAR_DUP_JOB_BUDGET = {
+    "minhash_pairs_documents": 13,
+    "dedup_groups_documents": 8,
+    "minhash_incremental_documents": 9,
+}
+MINHASH_PAIRS_DOCUMENTS_JOB_BUDGET = NEAR_DUP_JOB_BUDGET["minhash_pairs_documents"]
+
+
+def _registry_jobs(spark, sf, name) -> list[int]:
+    """Spark jobs of each of two cold calls of registry query ``name``,
+    each under its own job group."""
+    from data_observability_installer_spark.plans import registry
+
+    sc, counts = spark.sparkContext, []
+    for call in range(2):
+        registry.clear_caches()
+        spark.catalog.clearCache()
+        group = f"{name}_budget_{call}"
+        sc.setJobGroup(group, "job-budget run")
+        try:
+            assert registry.queries()[name](spark, sf).collect()
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        finally:
+            sc.setJobGroup(None, None)
+    return counts
 
 
 def test_minhash_pairs_documents_job_budget(spark, sf_smoke):
     """Job tripwire for the registry query: signatures, band
-    collisions, the candidate pin and the candidate-scoped verify run
-    a fixed handful of Spark jobs."""
-    from data_observability_installer_spark.plans import registry
+    collisions and the driver-side verify run an exact number of Spark
+    jobs, the same on two calls."""
+    counts = _registry_jobs(spark, sf_smoke, "minhash_pairs_documents")
+    assert counts == [MINHASH_PAIRS_DOCUMENTS_JOB_BUDGET] * 2, counts
 
-    registry.clear_caches()
-    spark.catalog.clearCache()
-    sc = spark.sparkContext
-    sc.setJobGroup("minhash_pairs_documents_budget", "job-budget run")
-    try:
-        rows = registry.queries()["minhash_pairs_documents"](spark, sf_smoke).collect()
-        jobs = sc.statusTracker().getJobIdsForGroup("minhash_pairs_documents_budget")
-    finally:
-        sc.setJobGroup(None, None)
-    assert rows
-    assert len(jobs) <= MINHASH_PAIRS_DOCUMENTS_JOB_BUDGET, (
-        f"minhash_pairs_documents ran {len(jobs)} Spark jobs "
-        f"(budget {MINHASH_PAIRS_DOCUMENTS_JOB_BUDGET})"
+
+@pytest.mark.parametrize("name", ["dedup_groups_documents", "minhash_incremental_documents"])
+def test_near_dup_job_budget(spark, sf_smoke, name):
+    """The Jaccard pairs behind dedup_groups and the incremental MinHash
+    screen also count their overlap on the driver: an exact job count,
+    the same on two calls."""
+    counts = _registry_jobs(spark, sf_smoke, name)
+    assert counts == [NEAR_DUP_JOB_BUDGET[name]] * 2, counts
+
+
+NEAR_DUP_DOCS = [
+    (1, "alpha beta gamma delta epsilon zeta eta theta"),
+    (2, "alpha beta gamma delta epsilon zeta eta theta"),  # exact dup of 1
+    (3, "alpha beta gamma delta epsilon zeta eta iota"),  # one-word edit of 1
+    (4, "alpha beta"),  # shorter than n: its whole text is its one shingle
+    (5, "alpha beta"),
+    (6, None),  # NULL text: no shingles
+    (7, "gamma delta epsilon zeta kappa lambda mu nu"),  # partial overlap
+    (8, "omicron pi rho sigma tau upsilon phi chi"),  # unrelated
+    (None, "alpha beta gamma delta epsilon zeta eta theta"),  # NULL id never pairs
+]
+
+# every routed caller at threshold 0, where only a shared shingle
+# makes a pair; the MinHash screens at a 1-row band so every pair that
+# shares a signature value is a candidate
+_ROUTED = {
+    "ngram_jaccard": lambda d, docs: d.ngram_jaccard_pairs(docs, threshold=0.0, max_df=100),
+    "ngram_jaccard_shared": lambda d, docs: d.ngram_jaccard_pairs(
+        docs,
+        threshold=0.0,
+        capped_shingles=d.capped_index(d.exploded_shingles(docs, "text", "doc_id", 3), 100),
+    ),
+    "minhash_pairs": lambda d, docs: d.minhash_pairs(
+        docs, num_hashes=12, bands=12, threshold=0.0, max_df=100
+    ),
+    "minhash_incremental": lambda d, docs: d.minhash_incremental(
+        docs, new_min_id=5, num_hashes=12, bands=12, threshold=0.0
+    ),
+    "containment": lambda d, docs: d.ngram_containment_pairs(docs, threshold_bp=0, max_df=100),
+    "threshold_sweep": lambda d, docs: d.jaccard_threshold_sweep(
+        docs, thresholds_bp=(0, 3000, 9000), max_df=100
+    ),
+}
+
+
+def _spy_driver_overlap(monkeypatch) -> list:
+    """The list each ``driver_overlap`` call's result is appended to
+    (None: the caller ran the Spark kernel)."""
+    from data_observability_installer_spark.operators.llm import dedup
+
+    taken, real = [], dedup.driver_overlap
+    monkeypatch.setattr(
+        dedup, "driver_overlap", lambda *a, **k: taken.append(real(*a, **k)) or taken[-1]
     )
+    return taken
+
+
+def _both_branches(monkeypatch, build):
+    """``build()`` on the driver overlap and on the Spark kernel (a cap
+    of -1): (driver frame, Spark frame), after checking each call took
+    the branch it was meant to."""
+    from data_observability_installer_spark.operators.llm import dedup
+
+    taken = _spy_driver_overlap(monkeypatch)
+    driver = build()
+    assert taken and all(t is not None for t in taken)
+    taken.clear()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "DRIVER_ROWS", -1)
+        spark_side = build()
+    assert taken and all(t is None for t in taken)
+    return driver, spark_side
+
+
+@pytest.mark.parametrize("caller", sorted(_ROUTED))
+def test_driver_overlap_matches_spark_kernel(spark, caller, monkeypatch):
+    """Every routed caller gives row-identical results and one schema
+    on the driver overlap and on the Spark self-join, over an exact
+    duplicate, a doc shorter than n words, NULL text and a NULL id; at
+    threshold 0 no pair without a shared shingle appears."""
+    from data_observability_installer_spark.operators.llm import dedup
+
+    docs = spark.createDataFrame(NEAR_DUP_DOCS, "doc_id bigint, text string")
+    driver, spark_side = _both_branches(monkeypatch, lambda: _ROUTED[caller](dedup, docs))
+    got, want = driver.collect(), spark_side.collect()
+    assert driver.schema == spark_side.schema
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    if caller != "threshold_sweep":
+        ids = {d for r in got for d in r[:2]}
+        assert {1, 4, 5, 7} <= ids and not ids & {6, 8, None}, got
+    else:
+        assert got[0]["n_pairs"] > 0 and got[0]["n_docs"] < 8, got
+
+
+def test_driver_overlap_counts_like_the_join(spark):
+    """Both overlap cases against :func:`shingle_overlap` on a hand-built
+    index: a NULL shingle counts in sz but never matches, a NULL doc
+    never pairs, a repeated (doc, sh) row counts once per row on each
+    side, and docs sharing nothing never form an inter = 0 row."""
+    from data_observability_installer_spark.operators.llm import dedup
+
+    index = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (1, None), (2, "a"), (2, "b"), (2, "b"), (3, None),
+         (3, "z"), (4, "a"), (None, "a"), (None, "b")],
+        "doc bigint, sh string",
+    )
+    cand = spark.createDataFrame([(1, 2), (1, 3), (2, 4), (3, 4)], "doc_a bigint, doc_b bigint")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    pair, xy = F.col("x.doc") < F.col("y.doc"), cand.toDF("x_id", "y_id")
+    for got, want in [
+        (dedup.driver_overlap(index), dedup.shingle_overlap(index, index, pair)),
+        (
+            dedup.driver_overlap(index, "x_id", "y_id", cand=xy),
+            dedup.shingle_overlap(index, index, pair, "x_id", "y_id", cand=xy),
+        ),
+    ]:
+        assert got.schema == want.schema
+        assert rows(got) == rows(want)
+        assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
+    assert rows(dedup.driver_overlap(index)) == [(2, 1, 3, 3, 3), (4, 1, 1, 3, 1), (4, 2, 1, 3, 1)]
+
+
+def test_driver_overlap_caps_join_rows_not_index_rows(spark, monkeypatch):
+    """An index under the row cap whose Σ df·(df−1)/2 goes over it takes
+    the Spark path: six identical docs hold 18 index rows but make 45
+    self-join rows, so a cap of 20 sends them to the Spark kernel, and
+    the answer is the driver's at the default cap."""
+    from data_observability_installer_spark.operators.llm import dedup
+
+    docs = spark.createDataFrame(
+        [(i, "one two three four five") for i in range(6)], "doc_id bigint, text string"
+    )
+    want = sorted(map(tuple, dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()))
+    assert len(want) == 15
+    taken = _spy_driver_overlap(monkeypatch)
+    monkeypatch.setattr(dedup, "DRIVER_ROWS", 20)
+    got = sorted(map(tuple, dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()))
+    assert taken == [None]
+    assert got == want
 
 
 def test_dedup_groups_connected_components(spark):

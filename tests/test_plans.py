@@ -695,11 +695,28 @@ def test_profile_delta_stored_steady_state_one_table_scan(spark, sf_smoke):
     assert "InMemoryTableScan" in plan  # new side rides the cache
 
 
-def test_threshold_sweep_rides_shared_shingle_cache(spark, sf_smoke):
+def test_threshold_sweep_rides_shared_shingle_cache(spark, sf_smoke, monkeypatch):
     """The sweep must consume the SHARED capped shingle index (cache
     hit after any other consumer built it) and add no corpus scan of
-    its own — ten thresholds cost one index pass."""
+    its own — ten thresholds cost one index pass. On the driver branch
+    that pass is the one capped collect of the index, and the sweep
+    aggregates a local relation; on the Spark branch (``DRIVER_ROWS =
+    0``) the self-join reads the cached index."""
+    from data_observability_installer_spark.operators.llm import dedup
+
     registry.QUERIES["ngram_jaccard_documents"](spark, sf_smoke).collect()
+    collected, real = [], dedup._capped_columns
+    monkeypatch.setattr(dedup, "_capped_columns", lambda d: collected.append(d) or real(d))
+    df = registry.QUERIES["threshold_sweep_documents"](spark, sf_smoke)
+    [index] = collected
+    plan = index._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan  # the shared index
+    assert "documents.parquet" not in plan.split("InMemoryRelation")[0], plan
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in final and "documents.parquet" not in final, final
+    assert "BroadcastNestedLoopJoin" in final or "BroadcastHashJoin" in final
+
+    monkeypatch.setattr(dedup, "DRIVER_ROWS", 0)
     df = registry.QUERIES["threshold_sweep_documents"](spark, sf_smoke)
     plan = df._jdf.queryExecution().executedPlan().toString()
     executed = plan.split("InMemoryRelation")[0]
