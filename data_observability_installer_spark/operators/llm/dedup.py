@@ -43,6 +43,8 @@ from collections.abc import Callable
 from contextlib import ExitStack, nullcontext
 from itertools import combinations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -180,14 +182,28 @@ def jaccard_score() -> Column:
     return F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4)
 
 
-def _capped_columns(df: DataFrame) -> list[list] | None:
-    """``df``'s columns as Python lists from one Arrow collect capped at
-    ``DRIVER_ROWS + 1`` rows; None when it holds more than
-    ``DRIVER_ROWS``."""
+def _capped_table(df: DataFrame) -> pa.Table | None:
+    """``df`` from one Arrow collect capped at ``DRIVER_ROWS + 1`` rows;
+    None when it holds more than ``DRIVER_ROWS``."""
     table = df.limit(DRIVER_ROWS + 1).toArrow()
-    if table.num_rows > DRIVER_ROWS:
-        return None
-    return [c.to_pylist() for c in table.columns]
+    return None if table.num_rows > DRIVER_ROWS else table
+
+
+def _capped_columns(df: DataFrame) -> list[list] | None:
+    """:func:`_capped_table`'s columns as Python lists."""
+    table = _capped_table(df)
+    return None if table is None else [c.to_pylist() for c in table.columns]
+
+
+def _self_join_rows(table: pa.Table) -> int:
+    """Σ c·(c−1)/2 over the shingles of a (doc, sh) table, c = the
+    shingle's non-null (doc, sh) rows: the pair rows the self-join
+    would produce, counted in Arrow before any Python list exists."""
+    live = table.filter(pc.and_(pc.is_valid(table["doc"]), pc.is_valid(table["sh"])))
+    if live.num_rows == 0:
+        return 0
+    c = live.group_by("sh").aggregate([("doc", "count")])["doc_count"]
+    return pc.sum(pc.divide(pc.multiply(c, pc.subtract(c, 1)), 2)).as_py()
 
 
 def driver_overlap(
@@ -222,15 +238,14 @@ def driver_overlap(
         + [StructField(c, LongType(), False) for c in ("inter", "sz_a", "sz_b")]
     )
     if cand is None:
-        cols = _capped_columns(index.select("doc", "sh"))
-        if cols is None:
+        table = _capped_table(index.select("doc", "sh"))
+        if table is None or _self_join_rows(table) > DRIVER_ROWS:
             return None
+        cols = [c.to_pylist() for c in table.columns]
         postings: dict = {}
         for d, s in zip(*cols):
             if d is not None and s is not None:
                 postings.setdefault(s, []).append(d)
-        if sum(len(p) * (len(p) - 1) // 2 for p in postings.values()) > DRIVER_ROWS:
-            return None
         inter = Counter(
             xy for p in postings.values() for xy in combinations(sorted(p), 2) if xy[0] != xy[1]
         )

@@ -163,16 +163,17 @@ def profile_delta_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile_delta(old, new)
 
 
-def _profile_store(sf_dir: str, name: str) -> str:
-    """The registry's profile store for table ``name`` of the data at
-    ``sf_dir``: one store per data directory, so stored baselines from
-    different scale factors never mix."""
+def _store(kind: str, sf_dir: str, name: str) -> str:
+    """The registry's ``kind`` store (``profile_store`` or
+    ``txtable_store``) for ``name`` of the data at ``sf_dir``: one store
+    per data directory, so stored state from different scale factors
+    never mixes."""
     import os
     import re
 
     return os.path.join(
         "spark-warehouse",
-        "profile_store",
+        kind,
         re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
         name,
     )
@@ -205,7 +206,7 @@ def profile_delta_stored_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators.profile import list_profile_runs, read_profile, write_profile
 
     li = load_table(spark, sf_dir, "lineitem")
-    store = _profile_store(sf_dir, "lineitem")
+    store = _store("profile_store", sf_dir, "lineitem")
     if not list_profile_runs(store):
         baseline = profile(
             li.filter(F.col("l_orderkey") % 2 == 0), "lineitem", AS_OF,
@@ -279,7 +280,7 @@ def profile_history_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.profile import list_profile_runs, write_profile
 
     li = load_table(spark, sf_dir, "lineitem")
-    store = _profile_store(sf_dir, "lineitem_history")
+    store = _store("profile_store", sf_dir, "lineitem_history")
     have = set(list_profile_runs(store))
     for rid, pred in _HIST_RUNS:
         if rid not in have:
@@ -368,7 +369,7 @@ def profile_incremental_stored_lineitem(spark: SparkSession, sf_dir: str) -> Dat
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    store = _profile_store(sf_dir, "lineitem_partials")
+    store = _store("profile_store", sf_dir, "lineitem_partials")
     if not list_profile_runs(store):
         write_profile(
             profile_partial(li.filter(F.col("l_orderkey") % 2 == 0), "lineitem"),
@@ -6212,6 +6213,31 @@ def min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _txtable_versions(
+    spark: SparkSession, store: str, reads: list[tuple[int, int, str]]
+) -> DataFrame:
+    """Per-version summary of the lineitem txtable ``store``: one
+    (version, op, n_rows, qty_cents) row per ``(label, version read,
+    op)`` in ``reads``, the quantity as an exact integer-cents sum, so
+    the oracle can recompute each snapshot straight from lineitem."""
+    from ..sources import txtable as _tx
+
+    cents = "CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT)"
+    parts = [
+        _tx.read_table(spark, store, version=v).selectExpr(
+            f"CAST({label} AS INT) AS version",
+            f"'{op}' AS op",
+            "CAST(count(*) AS BIGINT) AS n_rows",
+            f"{cents} AS qty_cents",
+        )
+        for label, v, op in reads
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("version")
+
+
 @register(
     "txtable_time_travel_lineitem",
     """
@@ -6245,20 +6271,12 @@ def txtable_time_travel_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-runs an already-committed step (re-running step 1 would
     append the even slice twice and permanently poison the store —
     round-8 advice finding)."""
-    import os
-    import re as _re
-
     from ..sources import txtable as _tx
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
-    store = os.path.join(
-        "spark-warehouse",
-        "txtable_store",
-        _re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
-        "lineitem",
-    )
+    store = _store("txtable_store", sf_dir, "lineitem")
     seed_steps = [
         lambda: _tx.write_table(spark, store, li.filter(F.col("l_orderkey") % 2 == 0)),
         lambda: _tx.write_table(spark, store, li.filter(F.col("l_orderkey") % 2 == 1)),
@@ -6266,21 +6284,9 @@ def txtable_time_travel_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     for step in seed_steps[len(_tx._versions(store)):]:
         step()
-    cents = "CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT)"
-    parts = []
-    for h in _tx.history(store)[:3]:
-        parts.append(
-            _tx.read_table(spark, store, version=h["version"]).selectExpr(
-                f"CAST({h['version']} AS INT) AS version",
-                f"'{h['op']}' AS op",
-                "CAST(count(*) AS BIGINT) AS n_rows",
-                f"{cents} AS qty_cents",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("version")
+    return _txtable_versions(spark, store, [
+        (h["version"], h["version"], h["op"]) for h in _tx.history(store)[:3]
+    ])
 
 
 @register(
@@ -6309,20 +6315,12 @@ def txtable_skipping_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches immediately. Seeding resumes from the observed
     version count (same crash-safety as the time-travel store). The
     pruned-vs-total file-count gate is tests/test_txtable.py."""
-    import os
-    import re as _re
-
     from ..sources import txtable as _tx
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_shipdate"
     )
-    store = os.path.join(
-        "spark-warehouse",
-        "txtable_store",
-        _re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
-        "lineitem_by_shipdate",
-    )
+    store = _store("txtable_store", sf_dir, "lineitem_by_shipdate")
     buckets = [
         "l_shipdate <  TIMESTAMP'1997-01-01'",
         "l_shipdate >= TIMESTAMP'1997-01-01' AND l_shipdate < TIMESTAMP'1999-01-01'",
@@ -6359,20 +6357,12 @@ def _seed_lineitem_dv_store(spark: SparkSession, sf_dir: str) -> str:
     txtable_delete_lineitem and txtable_cdf_lineitem: v1 appends the
     even-orderkey lineitem slice, v2 the odd slice, v3 deletes
     ``_DV_DELETE_PRED`` via positional-delete sidecars."""
-    import os
-    import re as _re
-
     from ..sources import txtable as _tx
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
-    store = os.path.join(
-        "spark-warehouse",
-        "txtable_store",
-        _re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
-        "lineitem_dv",
-    )
+    store = _store("txtable_store", sf_dir, "lineitem_dv")
     seed_steps = [
         lambda: _tx.write_table(spark, store, li.filter(F.col("l_orderkey") % 2 == 0)),
         lambda: _tx.write_table(spark, store, li.filter(F.col("l_orderkey") % 2 == 1)),
@@ -6421,22 +6411,13 @@ def txtable_delete_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import txtable as _tx
 
     store = _seed_lineitem_dv_store(spark, sf_dir)
-    cents = "CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT)"
     # an EMPTY lineitem matches nothing, so delete_rows commits nothing
     # and the head stays at v2 — the post-delete row then reads the
     # head (post-delete state == pre-delete state at zero rows)
     head = _tx.read_manifest(store)["version"]
-    parts = []
-    for label, v, op in ((2, 2, "append"), (3, min(3, head), "delete")):
-        parts.append(
-            _tx.read_table(spark, store, version=v).selectExpr(
-                f"CAST({label} AS INT) AS version",
-                f"'{op}' AS op",
-                "CAST(count(*) AS BIGINT) AS n_rows",
-                f"{cents} AS qty_cents",
-            )
-        )
-    return parts[0].unionByName(parts[1]).orderBy("version")
+    return _txtable_versions(
+        spark, store, [(2, 2, "append"), (3, min(3, head), "delete")]
+    )
 
 
 @register(
@@ -6468,20 +6449,12 @@ def txtable_update_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaking past its DV), or mis-applied the set expression
     hash-mismatches. Row count must be IDENTICAL across versions
     (updates replace, never add). sources/txtable.py update_rows."""
-    import os
-    import re as _re
-
     from ..sources import txtable as _tx
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
-    store = os.path.join(
-        "spark-warehouse",
-        "txtable_store",
-        _re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
-        "lineitem_upd",
-    )
+    store = _store("txtable_store", sf_dir, "lineitem_upd")
     seed_steps = [
         lambda: _tx.write_table(spark, store, li),
         lambda: _tx.update_rows(
@@ -6491,21 +6464,12 @@ def txtable_update_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     for step in seed_steps[len(_tx._versions(store)):]:
         step()
-    cents = "CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT)"
     # empty lineitem: the update matches nothing and commits nothing —
     # the post-update row reads the head (identical state at 0 rows)
     head = _tx.read_manifest(store)["version"]
-    parts = []
-    for label, v, op in ((1, 1, "append"), (2, min(2, head), "update")):
-        parts.append(
-            _tx.read_table(spark, store, version=v).selectExpr(
-                f"CAST({label} AS INT) AS version",
-                f"'{op}' AS op",
-                "CAST(count(*) AS BIGINT) AS n_rows",
-                f"{cents} AS qty_cents",
-            )
-        )
-    return parts[0].unionByName(parts[1]).orderBy("version")
+    return _txtable_versions(
+        spark, store, [(1, 1, "append"), (2, min(2, head), "update")]
+    )
 
 
 @register(
@@ -6614,9 +6578,6 @@ def txtable_merge_dv_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     inserts) — a merge that lost a row, leaked a retired version past
     its DV, dropped an insert, or mis-keyed an update hash-mismatches
     on the integer-cents sum."""
-    import os
-    import re as _re
-
     from ..sources import txtable as _tx
 
     li = (
@@ -6624,12 +6585,7 @@ def txtable_merge_dv_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey", "l_linenumber")
         .agg(F.max("l_quantity").alias("l_quantity"))
     )
-    store = os.path.join(
-        "spark-warehouse",
-        "txtable_store",
-        _re.sub(r"\W+", "_", os.path.abspath(sf_dir)).strip("_"),
-        "lineitem_mdv",
-    )
+    store = _store("txtable_store", sf_dir, "lineitem_mdv")
 
     def _merge():
         upd = li.filter(F.expr(_DV_DELETE_PRED)).withColumn(
@@ -6657,18 +6613,9 @@ def txtable_merge_dv_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     for step in seed_steps[len(_tx._versions(store)):]:
         step()
-    cents = "CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT)"
-    parts = []
-    for label, op in ((1, "append"), (2, "merge_dv")):
-        parts.append(
-            _tx.read_table(spark, store, version=label).selectExpr(
-                f"CAST({label} AS INT) AS version",
-                f"'{op}' AS op",
-                "CAST(count(*) AS BIGINT) AS n_rows",
-                f"{cents} AS qty_cents",
-            )
-        )
-    return parts[0].unionByName(parts[1]).orderBy("version")
+    return _txtable_versions(
+        spark, store, [(1, 1, "append"), (2, 2, "merge_dv")]
+    )
 
 
 @register(
@@ -6781,24 +6728,25 @@ def txtable_stream_cdf_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch CDF (txtable_cdf_lineitem), so the streamed union must be
     row-identical to the one-shot feed — a tail that skipped a commit,
     double-emitted on a trigger boundary, or mis-ranged an offset
-    hash-mismatches. The checkpoint is a fresh temp dir per run (the
-    query replays the whole log deterministically); crash-replay
+    hash-mismatches. The checkpoint is a fresh temp dir per run, removed
+    once the log is drained (the query replays the whole log
+    deterministically); crash-replay
     exactly-once and vacuum-horizon contracts are pytest-covered."""
     import tempfile
 
     from ..sources import txtable as _tx
 
     store = _seed_lineitem_dv_store(spark, sf_dir)
-    tail = _tx.txtable_stream(
-        spark, store, tempfile.mkdtemp(prefix="txstream_ckpt_"),
-        cdf=True, max_commits_per_trigger=1,
-    )
     batches: list[DataFrame] = []
 
     def collect_batch(df: DataFrame, batch_id: int) -> None:
         batches.append(df)
 
-    tail.process_available(collect_batch)
+    # the batches read the store, not the checkpoint (offset.json only)
+    with tempfile.TemporaryDirectory(prefix="txstream_ckpt_") as ckpt:
+        _tx.txtable_stream(
+            spark, store, ckpt, cdf=True, max_commits_per_trigger=1,
+        ).process_available(collect_batch)
     if not batches:
         return local_frame(
             spark, [], "version int, change_type string, n_rows long, qty_cents long"

@@ -98,9 +98,11 @@ entries, not rows); data writes are fully distributed; the commit
 itself is one O(1) driver CAS. Readers never pay a directory listing
 of ``data/`` — the manifest IS the file index (the same reason real
 table formats beat Hive-style listing at scale). A lost race never
-rewrites data files — append/compact/stream retries merge MANIFESTS
-only; ``merge_cdc`` and ``delete_rows`` re-derive, because their row
-content depends on the snapshot they read.
+rewrites data files — append/compact/purge/stream retries merge
+MANIFESTS only; ``merge_cdc`` re-derives its rewrite and the row-level
+operations (``delete_rows``, ``update_rows``, ``merge_dv``) re-derive
+their match, because their row content depends on the snapshot they
+read (merge_dv's appended batch rows do not, so they are written once).
 
 Row-level deletes WITHOUT rewrite (deletion vectors): a GDPR-delete of
 a handful of rows on a 100 TB table must not re-pay whole files, so
@@ -115,6 +117,15 @@ them), time travel pins each snapshot's own DV set, restore/clone
 carry the target's, and vacuum collects sidecars exactly like data
 files. The same mechanism as Delta deletion vectors / Iceberg
 positional deletes, re-derived over the row_index metadata column.
+:func:`delete_rows`, :func:`update_rows` and :func:`merge_dv` share one
+core: a pinned match over the live positional scan every DV reader
+uses (:func:`_live_scan`), retired through one sidecar writer
+(:func:`_retire`), the pin released after each publish attempt.
+
+Exactly-once: stream commits and batch-id merges skip any ``batch_id``
+at or below the head's ``max_batch_id``, which every commit folds
+forward — one manifest read per commit, however long the retained
+history grows.
 
 What this deliberately does NOT implement: multi-table transactions —
 swap in Delta/Iceberg via this module's API surface when the package
@@ -123,16 +134,30 @@ is available.
 
 from __future__ import annotations
 
+import ctypes
+import datetime
+import decimal
 import errno
 import json
 import os
+import re
+import shutil
+import tempfile
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..functions.driver import local_frame
-from ..functions.pin import pin
+from ..functions.pin import pin, unpin
 from .sinks import start_batch_query
 
 _COMMITS = "_commits"
@@ -217,9 +242,6 @@ class LocalTmpfileBackend(CommitBackend):
     _AT_FDCWD = -100
 
     def _linkat(self, fd: int, dst: str) -> bool:
-        import ctypes
-        import errno as _errno
-
         libc = ctypes.CDLL(None, use_errno=True)
         r = libc.linkat(
             fd, b"", self._AT_FDCWD, os.fsencode(dst), self._AT_EMPTY_PATH
@@ -227,7 +249,7 @@ class LocalTmpfileBackend(CommitBackend):
         if r == 0:
             return True
         e = ctypes.get_errno()
-        if e == _errno.EEXIST:
+        if e == errno.EEXIST:
             return False
         raise OSError(e, os.strerror(e), dst)
 
@@ -250,7 +272,6 @@ class LocalTmpfileBackend(CommitBackend):
         platform/filesystem (probed with a real claim in a temp dir)."""
         if not hasattr(os, "O_TMPFILE"):
             return False
-        import tempfile
 
         try:
             with tempfile.TemporaryDirectory() as td:
@@ -307,6 +328,24 @@ def read_manifest(path: str, version: int | None = None) -> dict:
         return json.load(fh)
 
 
+def _head(path: str) -> dict | None:
+    """The head manifest, or None for a path with no commits yet."""
+    return read_manifest(path) if _versions(path) else None
+
+
+def _replayed(head: dict | None, batch_id: int | None) -> bool:
+    """The exactly-once replay guard: True iff ``batch_id`` is at or
+    below the head's ``max_batch_id`` high-water mark. :func:`_publish`
+    folds the mark forward on EVERY commit and no writer bypasses it,
+    so any batch_id a retained manifest carries is <= the head's mark —
+    one manifest read decides, at any retained history length, and a
+    batch whose own manifest vacuum dropped is still caught. This leans
+    on foreachBatch's contract that batch ids are monotone per stream:
+    an id below the mark counts as a replay."""
+    hw = (head or {}).get("max_batch_id")
+    return batch_id is not None and hw is not None and batch_id <= hw
+
+
 def _check_range(path: str, lo: int, hi: int | None, remedy: str) -> int:
     """End of the version range ``(lo, hi]`` (``hi=None``: the head).
     Raises FileNotFoundError for a path with no commits and
@@ -339,8 +378,6 @@ def _write_data_files(
     out of the manifest: they can contribute nothing to any scan, they
     have no footer stats to skip on, and at scale empty-partition
     debris is a real file-count tax."""
-    import pyarrow.parquet as pq
-
     sub = os.path.join(_DATA, uuid.uuid4().hex)
     out = os.path.join(path, sub)
     df.write.mode("error").parquet(out)
@@ -361,7 +398,6 @@ def _file_rows(path: str, m: dict, f: str) -> int:
     r = (m.get("rows") or {}).get(f)
     if r is not None:
         return int(r)
-    import pyarrow.parquet as pq
 
     return pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
 
@@ -370,9 +406,6 @@ def _stat_value(v):
     """Parquet-footer statistic -> JSON-storable, order-preserving
     value: dates/timestamps become ISO strings (lexicographic ==
     chronological), bytes decode, numbers pass through."""
-    import datetime
-    import decimal
-
     if isinstance(v, (datetime.date, datetime.datetime)):
         return v.isoformat()
     if isinstance(v, decimal.Decimal):
@@ -406,8 +439,6 @@ def _collect_file_stats(
     string — pad it to midnight here so lexicographic pruning stays
     chronological. Padding at collection time covers every commit
     path, not just the widening commit itself."""
-    import pyarrow.parquet as pq
-
     ts_cols: set[str] = set()
     if schema:
         ts_cols = {
@@ -448,6 +479,34 @@ def _collect_file_stats(
         if fstats:
             out[f] = fstats
     return out
+
+
+def _tracked(stats: dict | None) -> list[str]:
+    """The columns a manifest ``stats`` map tracks, sorted."""
+    return sorted({c for s in (stats or {}).values() for c in s})
+
+
+def _footer_stats(
+    path: str, files: list[str], stats: dict | None, schema: str
+) -> dict[str, dict[str, list]]:
+    """Footer stats of freshly written ``files`` on the columns the
+    table already tracks (``stats``: the basis manifest's map) — a
+    rewrite keeps collecting what its basis collected."""
+    cols = _tracked(stats)
+    return _collect_file_stats(path, files, cols, schema) if cols else {}
+
+
+def _carry_stats(manifest: dict, carry: dict | None, own: dict) -> dict:
+    """Set ``manifest["stats"]`` to ``carry``'s entries for the files
+    the manifest keeps plus ``own`` (its new files' footer stats); no
+    key when both are empty. Returns ``manifest``."""
+    if carry or own:
+        keep = set(manifest["files"])
+        manifest["stats"] = {
+            **{f: s for f, s in (carry or {}).items() if f in keep},
+            **own,
+        }
+    return manifest
 
 
 def prune_files(
@@ -668,7 +727,6 @@ def _merge_schemas(old_json: str, new_json: str) -> str:
     for f in new["fields"]:
         if f["name"] not in old_by:
             fields.append(dict(f, nullable=True))  # old files lack it
-    from pyspark.sql.types import StructType
 
     # round-trip through StructType so the stored string is in Spark's
     # canonical schema-JSON form — _schema_compatible compares strings,
@@ -721,7 +779,6 @@ def rename_column(
         fid = fields.pop(old)
         fields[new] = fid
         log[str(fid)].append([epoch, new])
-        from pyspark.sql.types import StructType
 
         new_schema = StructType.fromJson(
             dict(schema, fields=[
@@ -776,7 +833,6 @@ def drop_column(
         # it anymore, but retaining it prevents field-id reuse (a fresh
         # same-named column must mint a fresh id or old files resurrect
         # stale bytes)
-        from pyspark.sql.types import StructType
 
         new_schema = StructType.fromJson(
             dict(schema, fields=[f for f in schema["fields"] if f["name"] != col])
@@ -947,7 +1003,7 @@ def write_table(
                         }
                 if cols is None and base_stats:
                     # keep tracking whatever the table already tracks
-                    cols = sorted({c for s in base_stats.values() for c in s})
+                    cols = _tracked(base_stats)
             elif "fields" in cur:
                 # overwrite under active column mapping: the old file
                 # list (and possibly the old schema) is gone, so the
@@ -981,11 +1037,7 @@ def write_table(
                     "rows": own_rows}
         if evo:
             manifest.update(evo)
-        if base_stats or own_stats:
-            manifest["stats"] = {
-                **{f: s for f, s in base_stats.items() if f in set(base_files)},
-                **own_stats,
-            }
+        _carry_stats(manifest, base_stats, own_stats)
         try:
             return _publish(path, manifest, parent_v, backend)
         except VersionClaimedError:
@@ -1047,8 +1099,6 @@ def read_table(
     Files WITHOUT DVs keep the plain scan: a table that never deletes
     pays nothing, and after a delete only the touched files pay the
     join."""
-    from pyspark.sql.types import StructType
-
     if as_of_ms is not None:
         if version is not None:
             raise ValueError("pass version= or as_of_ms=, not both")
@@ -1065,20 +1115,14 @@ def read_table(
     if plain:
         parts.append(_scan_plain(spark, path, m, plain, schema))
     if dved:
-        from pyspark.sql import functions as F
-
-        scanned = _scan_with_pos(spark, path, m, dved, schema)
-        dvdf = _dv_frame(spark, path, dv, dved)
-        if sum(dv[f]["count"] for f in dved) <= _DV_BROADCAST_ROWS:
-            dvdf = F.broadcast(dvdf)
         parts.append(
-            scanned.join(
-                dvdf,
-                (scanned["__file"] == dvdf["file"])
-                & (scanned["__pos"] == dvdf["pos"]),
-                "left_anti",
-            ).drop("__file", "__pos")
+            _live_scan(spark, path, m, dved, schema).drop("__file", "__pos")
         )
+    return _union(parts)
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    """``unionByName`` of ``parts``, left to right."""
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1093,7 +1137,7 @@ def _scan_plain(spark, path: str, m: dict, files: list[str], schema):
     evolved tables read union-by-name (files that predate a column
     return NULL for it)."""
     if "fields" in m:
-        return _read_mapped(spark, path, m, files, schema)
+        return _scan_eras(spark, path, m, files, schema)
     return spark.read.schema(schema).parquet(
         *[os.path.join(path, f) for f in files]
     )
@@ -1130,14 +1174,24 @@ def _era_groups(m: dict, files: list[str], schema) -> dict[tuple, list[str]]:
     return groups
 
 
-def _read_mapped(spark, path: str, m: dict, files: list[str], schema):
-    """Column-mapping scan: each era group reads with its physical
-    field names, renames positionally to the snapshot's logical names,
-    and the groups union by position. Within a group Spark still gets
-    pushdown, pruning and one multi-file FileScan, so at 100 TB a
-    rename costs one extra scan NODE, zero data rewrite."""
-    from pyspark.sql.types import StructField, StructType
+def _scan_eras(
+    spark, path: str, m: dict, files: list[str], schema, pos: bool = False
+):
+    """Scan ``files`` under the snapshot's logical column names: each
+    era group (:func:`_era_groups`) reads with its physical field names
+    and renames positionally, and the groups union by name. Within a
+    group Spark still gets pushdown, pruning and one multi-file
+    FileScan, so at 100 TB a rename costs one extra scan NODE, zero
+    data rewrite.
 
+    ``pos=True`` adds the row identity the deletion-vector machinery
+    keys on: ``__file`` (the file's table-relative path, recovered from
+    the hidden ``_metadata.file_path`` — data files always live exactly
+    three path components deep, ``data/<uuid>/part-*.parquet``) and
+    ``__pos`` (the hidden ``_metadata.row_index``). Both are generated
+    by the parquet reader itself — no shuffle, no windowing, stable
+    under split planning — which is what makes positional deletes exact
+    at any scan parallelism."""
     logical = [fld.name for fld in schema.fields]
     parts = []
     for phys, fs in sorted(_era_groups(m, files, schema).items()):
@@ -1146,56 +1200,46 @@ def _read_mapped(spark, path: str, m: dict, files: list[str], schema):
                         bool(fld.nullable) or p.startswith("__absent_"))
             for p, fld in zip(phys, schema.fields)
         ])
-        parts.append(
+        df = (
             spark.read.schema(gschema)
             .parquet(*[os.path.join(path, f) for f in fs])
             .toDF(*logical)
         )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
-
-
-def _scan_with_pos(spark, path: str, m: dict, files: list[str], schema):
-    """Scan ``files`` with the snapshot's logical columns PLUS the row
-    identity the deletion-vector machinery keys on: ``__file`` (the
-    file's table-relative path, recovered from the hidden
-    ``_metadata.file_path`` — data files always live exactly three
-    path components deep, ``data/<uuid>/part-*.parquet``) and ``__pos``
-    (the hidden ``_metadata.row_index``). Column mapping applies per
-    era group like :func:`_read_mapped`. Both metadata columns are
-    generated by the parquet reader itself — no shuffle, no windowing,
-    stable under split planning — which is what makes positional
-    deletes exact at any scan parallelism."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, StructType
-
-    parts = []
-    for phys, fs in sorted(_era_groups(m, files, schema).items()):
-        gschema = StructType([
-            StructField(p, fld.dataType,
-                        bool(fld.nullable) or p.startswith("__absent_"))
-            for p, fld in zip(phys, schema.fields)
-        ])
-        parts.append(
-            spark.read.schema(gschema)
-            .parquet(*[os.path.join(path, f) for f in fs])
-            .select(
-                *[
-                    F.col(p).alias(fld.name)
-                    for p, fld in zip(phys, schema.fields)
-                ],
+        if pos:
+            df = df.select(
+                "*",
                 F.substring_index(
                     F.col("_metadata.file_path"), "/", -3
                 ).alias("__file"),
                 F.col("_metadata.row_index").alias("__pos"),
             )
-        )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+        parts.append(df)
+    return _union(parts)
+
+
+def _live_scan(spark, path: str, m: dict, files: list[str], schema):
+    """The LIVE rows of ``files`` under snapshot ``m`` with their row
+    identity (:func:`_scan_eras` with ``pos=True``): the files carrying
+    deletion vectors anti-join their (file, pos) sidecars — broadcast while
+    their deleted-row count stays under ``_DV_BROADCAST_ROWS``, a
+    shuffle join (AQE re-plannable) beyond. The one DV read every
+    reader shares: :func:`read_table`, :func:`purge_dvs`,
+    :func:`table_changes_cdf`'s deleted-row reconstruction, and the
+    match step of :func:`delete_rows`, :func:`update_rows` and
+    :func:`merge_dv` (so already-deleted rows never match again)."""
+    scanned = _scan_eras(spark, path, m, files, schema, pos=True)
+    dv = m.get("dv") or {}
+    dved = [f for f in files if f in dv]
+    if not dved:
+        return scanned
+    dvdf = _dv_frame(spark, path, dv, dved)
+    if sum(dv[f]["count"] for f in dved) <= _DV_BROADCAST_ROWS:
+        dvdf = F.broadcast(dvdf)
+    return scanned.join(
+        dvdf,
+        (scanned["__file"] == dvdf["file"]) & (scanned["__pos"] == dvdf["pos"]),
+        "left_anti",
+    )
 
 
 def _dv_frame(spark, path: str, dv: dict, files: list[str]):
@@ -1204,22 +1248,62 @@ def _dv_frame(spark, path: str, dv: dict, files: list[str]):
     scan per distinct sidecar (a delete commit writes ONE sidecar
     carrying the full position union for every file it touched, so
     exactly one sidecar is ever consulted per file)."""
-    from pyspark.sql import functions as F
-
     by_dir: dict[str, list[str]] = {}
     for f in files:
         by_dir.setdefault(dv[f]["dv"], []).append(f)
-    parts = []
-    for d, fs in sorted(by_dir.items()):
-        parts.append(
-            spark.read.parquet(os.path.join(path, d))
-            .where(F.col("file").isin(fs))
-            .select("file", "pos")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union([
+        spark.read.parquet(os.path.join(path, d))
+        .where(F.col("file").isin(fs))
+        .select("file", "pos")
+        for d, fs in sorted(by_dir.items())
+    ])
+
+
+def _retire(
+    spark, path: str, m: dict, hits: DataFrame | None
+) -> tuple[int, list[str], dict, dict]:
+    """Retire the live rows ``hits`` (``__file``, ``__pos``) from
+    snapshot ``m`` through deletion vectors — the commit half every
+    row-level operation shares. The caller pins ``hits`` (one
+    materialization feeds the per-file counts, the sidecar and any
+    postimages: a nondeterministic match re-evaluated per consumer
+    would desync the manifest's dv count from the sidecar's rows, and
+    an overcount reaching num_rows drops a live file).
+
+    Writes ONE fresh sidecar carrying the FULL position union (new ∪
+    old) for every touched file, so readers consult exactly one sidecar
+    per file; untouched files keep pointing at their old ones. A file
+    whose every row is now deleted leaves the file list, recorded under
+    ``dv_dropped`` so the CDF face can still reconstruct which rows the
+    commit deleted — row counts come from the manifest, so a broad
+    delete touching 10^5 files does no serial footer reads.
+
+    Returns ``(retired rows, files kept, dv entries, dv_dropped)``;
+    nothing is written when ``hits`` is None or empty."""
+    dv = dict(m.get("dv") or {})
+    files = list(m["files"])
+    dropped: dict[str, dict] = {}
+    # metadata-sized collect: one (file, count) row per touched FILE
+    per_file = {} if hits is None else {
+        r["__file"]: r["n"]
+        for r in hits.groupBy("__file").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    if not per_file:
+        return 0, files, dv, dropped
+    touched = sorted(per_file)
+    new_dv = hits.select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
+    old_touched = [f for f in touched if f in dv]
+    if old_touched:
+        new_dv = new_dv.unionByName(_dv_frame(spark, path, dv, old_touched))
+    sub = os.path.join(_DV, uuid.uuid4().hex)
+    new_dv.write.mode("error").parquet(os.path.join(path, sub))
+    for f in touched:
+        total = (dv[f]["count"] if f in dv else 0) + int(per_file[f])
+        dv[f] = {"dv": sub, "count": total}
+        if total >= _file_rows(path, m, f):
+            dropped[f] = dv.pop(f)
+            files.remove(f)
+    return int(sum(per_file.values())), files, dv, dropped
 
 
 def _prune_from_condition(
@@ -1236,8 +1320,6 @@ def _prune_from_condition(
     do not parse are simply not used (pruning is an optimization;
     correctness always comes from re-evaluating ``condition`` on the
     kept files)."""
-    import re
-
     # Word-boundary regex, not literal " or " scans: "a=1\nor b=2" or a
     # tab-separated OR must disable derivation exactly like a
     # space-separated one, or the derived conjunct would silently skip
@@ -1317,85 +1399,37 @@ def delete_rows(
       concurrent compact/overwrite invalidate positions, which the
       re-derive makes correct by construction.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     if prune is None:
         prune = _prune_from_condition(condition)
     for _ in range(_RETRIES):
         m = read_manifest(path)
         schema = StructType.fromJson(json.loads(m["schema"]))
-        dv = dict(m.get("dv") or {})
         candidates = prune_files(m, prune) if prune else m["files"]
         if not candidates:
             return 0
-        scanned = _scan_with_pos(spark, path, m, candidates, schema)
-        hits = scanned.filter(F.expr(condition)).select("__file", "__pos")
-        already = [f for f in candidates if f in dv]
-        if already:
-            old = _dv_frame(spark, path, dv, already)
-            hits = hits.join(
-                old,
-                (hits["__file"] == old["file"]) & (hits["__pos"] == old["pos"]),
-                "left_anti",
-            )
-        # ONE materialization feeds the per-file count AND the sidecar
-        # write: a nondeterministic condition re-evaluated per consumer
-        # would desync the manifest dv count from the actual sidecar
-        # rows (an overcount reaching num_rows drops a live file)
-        hits = pin(hits)
-        # metadata-sized collect: one (file, count) row per touched FILE
-        per_file = {
-            r["__file"]: r["n"]
-            for r in hits.groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if not per_file:
-            return 0  # nothing (newly) matched: no commit
-        touched = sorted(per_file)
-        # one fresh sidecar carrying the FULL position union for every
-        # touched file; untouched files keep pointing at their old ones
-        new_dv = hits.select(
-            F.col("__file").alias("file"), F.col("__pos").alias("pos")
+        hits = pin(
+            _live_scan(spark, path, m, candidates, schema)
+            .filter(F.expr(condition))
+            .select("__file", "__pos")
         )
-        old_touched = [f for f in touched if f in dv]
-        if old_touched:
-            new_dv = new_dv.unionByName(_dv_frame(spark, path, dv, old_touched))
-        sub = os.path.join(_DV, uuid.uuid4().hex)
-        new_dv.write.mode("error").parquet(os.path.join(path, sub))
-        files_out = list(m["files"])
-        for f in touched:
-            total = (dv[f]["count"] if f in dv else 0) + int(per_file[f])
-            dv[f] = {"dv": sub, "count": total}
-        dropped: dict[str, dict] = {}
-        for f in touched:
-            # fully-deleted file: drop it from the snapshot entirely
-            # (recorded under dv_dropped so the CDC-read face can still
-            # reconstruct WHICH rows this commit deleted). Row counts
-            # come from the manifest — a broad delete touching 10^5
-            # files must not do 10^5 serial driver-side footer reads
-            if dv[f]["count"] >= _file_rows(path, m, f):
-                dropped[f] = dv.pop(f)
-                files_out.remove(f)
-        n = int(sum(per_file.values()))
-        manifest = {
-            "op": "delete", "files": files_out, "schema": m["schema"],
-            "added": 0, "added_files": [], "dv": dv,
-            "predicate": condition, "deleted_rows": n,
-        }
-        if dropped:
-            manifest["dv_dropped"] = dropped
-        if m.get("stats"):
-            keep = set(files_out)
-            manifest["stats"] = {
-                f: s for f, s in m["stats"].items() if f in keep
-            }
         try:
+            n, files, dv, dropped = _retire(spark, path, m, hits)
+            if not n:
+                return 0  # nothing (newly) matched: no commit
+            manifest = {
+                "op": "delete", "files": files, "schema": m["schema"],
+                "added": 0, "added_files": [], "dv": dv,
+                "predicate": condition, "deleted_rows": n,
+            }
+            if dropped:
+                manifest["dv_dropped"] = dropped
+            _carry_stats(manifest, m.get("stats"), {})
             _publish(path, manifest, m["version"], backend)
             return n
         except VersionClaimedError:
             continue  # snapshot basis stale: re-derive the whole delete
+        finally:
+            unpin(hits)
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
 
 
@@ -1441,20 +1475,15 @@ def compact(
     else:
         rewritten = cur.repartition(target_partitions)
     files, schema, own_rows = _write_data_files(rewritten, path)
-    cols = sorted({c for s in (base.get("stats") or {}).values() for c in s})
-    own_stats = _collect_file_stats(path, files, cols, schema) if cols else {}
+    own_stats = _footer_stats(path, files, base.get("stats"), schema)
     for _ in range(_RETRIES):
         head = read_manifest(path)
         carried = _appends_since(path, base["version"], head["version"])
-        manifest = {"op": "compact", "files": files + carried,
-                    "schema": schema, "added": len(files),
-                    "added_files": files, "rows": own_rows}
-        head_stats = head.get("stats") or {}
-        if own_stats or head_stats:
-            manifest["stats"] = {
-                **{f: s for f, s in head_stats.items() if f in set(carried)},
-                **own_stats,
-            }
+        manifest = _carry_stats(
+            {"op": "compact", "files": files + carried, "schema": schema,
+             "added": len(files), "added_files": files, "rows": own_rows},
+            head.get("stats"), own_stats,
+        )
         try:
             return _publish(path, manifest, head["version"], backend)
         except VersionClaimedError:
@@ -1492,9 +1521,6 @@ def purge_dvs(
     Returns ``{"purged_files", "new_files", "version"}`` — version is
     the pre-purge head when nothing crossed the threshold (no commit).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     base = read_manifest(path)
     dv = base.get("dv") or {}
     hot = sorted(
@@ -1505,21 +1531,9 @@ def purge_dvs(
         return {"purged_files": 0, "new_files": 0,
                 "version": base["version"]}
     schema = StructType.fromJson(json.loads(base["schema"]))
-    scanned = _scan_with_pos(spark, path, base, hot, schema)
-    dvdf = _dv_frame(spark, path, dv, hot)
-    if sum(dv[f]["count"] for f in hot) <= _DV_BROADCAST_ROWS:
-        dvdf = F.broadcast(dvdf)
-    live = scanned.join(
-        dvdf,
-        (scanned["__file"] == dvdf["file"])
-        & (scanned["__pos"] == dvdf["pos"]),
-        "left_anti",
-    ).drop("__file", "__pos")
+    live = _live_scan(spark, path, base, hot, schema).drop("__file", "__pos")
     files, _, own_rows = _write_data_files(live, path)
-    cols = sorted({c for s in (base.get("stats") or {}).values() for c in s})
-    own_stats = (
-        _collect_file_stats(path, files, cols, base["schema"]) if cols else {}
-    )
+    own_stats = _footer_stats(path, files, base.get("stats"), base["schema"])
     hot_set = set(hot)
     for _ in range(_RETRIES):
         head = read_manifest(path)
@@ -1528,7 +1542,7 @@ def purge_dvs(
         # since the base invalidates the rewrite (raises CommitConflict)
         _appends_since(path, base["version"], head["version"])
         kept = [f for f in head["files"] if f not in hot_set]
-        manifest = {
+        manifest = _carry_stats({
             "op": "purge_dvs",
             "files": kept + files,
             "schema": base["schema"],
@@ -1541,13 +1555,7 @@ def purge_dvs(
             },
             "rows": own_rows,
             "purged": hot,
-        }
-        head_stats = head.get("stats") or {}
-        if head_stats or own_stats:
-            manifest["stats"] = {
-                **{f: s for f, s in head_stats.items() if f in set(kept)},
-                **own_stats,
-            }
+        }, head.get("stats"), own_stats)
         try:
             v = _publish(path, manifest, head["version"], backend)
             return {"purged_files": len(hot), "new_files": len(files),
@@ -1579,8 +1587,6 @@ def vacuum(path: str, keep_last: int = 2) -> int:
     makes. CDC reads over retained versions keep working (added_files
     is embedded per manifest); ranges reaching past the horizon raise
     :class:`VacuumedVersionError`."""
-    import shutil as _shutil
-
     vs = _versions(path)
     keep, drop = vs[-keep_last:], vs[:-keep_last]
     live: set[str] = set()
@@ -1609,7 +1615,7 @@ def vacuum(path: str, keep_last: int = 2) -> int:
     for d in dead_dv:
         full = os.path.join(path, d)
         if os.path.isdir(full):
-            _shutil.rmtree(full)
+            shutil.rmtree(full)
             removed += 1
     return removed
 
@@ -1642,45 +1648,34 @@ def merge_cdc(
     foreachBatch MERGE exactly-once under at-least-once replays."""
     survivors = updates
     if deleted_col is not None:
-        from pyspark.sql import functions as F
 
         survivors = updates.filter(~F.coalesce(F.col(deleted_col), F.lit(False))).drop(
             deleted_col
         )
     for _ in range(_RETRIES):
-        vs = _versions(path)
-        if batch_id is not None and vs:
-            if batch_id in {read_manifest(path, v).get("batch_id") for v in vs}:
-                return None  # replay of an already-merged batch
-            hw = read_manifest(path).get("max_batch_id")
-            if hw is not None and batch_id <= hw:
-                return None  # merged before the vacuum horizon
-        if vs:
-            base = read_manifest(path)
-            parent_v = base["version"]
-            cur = read_table(spark, path, version=parent_v)
+        # without a batch_id there is no bootstrap: a missing table
+        # raises read_manifest's FileNotFoundError
+        base = _head(path) if batch_id is not None else read_manifest(path)
+        if _replayed(base, batch_id):
+            return None  # replay of an already-merged batch
+        merged = survivors  # bootstrap: the first batch IS the table
+        if base is not None:
+            cur = read_table(spark, path, version=base["version"])
             merged = cur.join(
                 updates.select(*key_cols), key_cols, "left_anti"
             ).unionByName(survivors)
-            cols = sorted(
-                {c for s in (base.get("stats") or {}).values() for c in s}
-            )
-        elif batch_id is not None:
-            parent_v = 0
-            merged = survivors  # bootstrap: the first batch IS the table
-            cols = []
-        else:
-            raise FileNotFoundError(f"not a txtable (no commits): {path}")
         files, schema, own_rows = _write_data_files(merged, path)
         manifest = {"op": "merge", "files": files, "schema": schema,
                     "added": len(files), "added_files": files,
                     "rows": own_rows}
         if batch_id is not None:
             manifest["batch_id"] = batch_id
-        if cols:
-            manifest["stats"] = _collect_file_stats(path, files, cols, schema)
+        stats = (base or {}).get("stats")
+        _carry_stats(manifest, stats, _footer_stats(path, files, stats, schema))
         try:
-            return _publish(path, manifest, parent_v, backend)
+            return _publish(
+                path, manifest, base["version"] if base else 0, backend
+            )
         except VersionClaimedError:
             continue  # stale snapshot basis: redo the merge on the new head
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
@@ -1726,9 +1721,6 @@ def merge_dv(
 
     Returns the number of PREVIOUS row versions retired (0 = pure
     insert), or None when ``batch_id`` already committed (replay)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     survivors = updates
     if deleted_col is not None:
         survivors = updates.filter(
@@ -1739,16 +1731,12 @@ def merge_dv(
     new_rows: dict[str, int] = {}
     written_schema: str | None = None
     for _ in range(_RETRIES):
-        vs = _versions(path)
-        if batch_id is not None and vs:
-            if batch_id in {read_manifest(path, v).get("batch_id") for v in vs}:
-                return None  # replay of an already-merged batch
-            hw = read_manifest(path).get("max_batch_id")
-            if hw is not None and batch_id <= hw:
-                return None  # merged before the vacuum horizon
-        if not vs:
-            if batch_id is None:
-                raise FileNotFoundError(f"not a txtable (no commits): {path}")
+        # without a batch_id there is no bootstrap: a missing table
+        # raises read_manifest's FileNotFoundError
+        m = _head(path) if batch_id is not None else read_manifest(path)
+        if _replayed(m, batch_id):
+            return None  # replay of an already-merged batch
+        if m is None:
             # bootstrap: the first batch IS the table
             files, schema, own_rows = _write_data_files(survivors, path)
             manifest = {"op": "merge_dv", "files": files, "schema": schema,
@@ -1761,7 +1749,6 @@ def merge_dv(
                 return 0
             except VersionClaimedError:
                 continue  # a racer created the table: re-check the guard
-        m = read_manifest(path)
         schema = StructType.fromJson(json.loads(m["schema"]))
         names = [f.name for f in schema.fields]
         missing = [c for c in names if c not in survivors.columns]
@@ -1770,12 +1757,11 @@ def merge_dv(
                 f"merge batch lacks table column(s) {missing}; merge_dv "
                 "appends postimages in the table's exact schema"
             )
-        dv = dict(m.get("dv") or {})
         # stats pruning from the BATCH's key ranges: a conjunct
         # k >= min(batch) AND k <= max(batch) is implied for every
         # matched row, so skipped files provably contain no match
-        stats_cols = {c for s in (m.get("stats") or {}).values() for c in s}
-        keyed = [k for k in key_cols if k in stats_cols]
+        tracked = set(_tracked(m.get("stats")))
+        keyed = [k for k in key_cols if k in tracked]
         candidates = m["files"]
         if keyed:
             aggs = []
@@ -1790,94 +1776,49 @@ def merge_dv(
                     preds += [(k, ">=", lo), (k, "<=", hi)]
             if preds:
                 candidates = prune_files(m, preds)
-        matched = None
-        per_file: dict[str, int] = {}
-        if candidates:
-            scanned = _scan_with_pos(spark, path, m, candidates, schema)
-            matched = scanned.join(keys_only, list(key_cols), "left_semi")
-            already = [f for f in candidates if f in dv]
-            if already:
-                old = _dv_frame(spark, path, dv, already)
-                matched = matched.join(
-                    old,
-                    (matched["__file"] == old["file"])
-                    & (matched["__pos"] == old["pos"]),
-                    "left_anti",
-                )
-            # unlike update_rows, the postimages come from the BATCH,
-            # so only the POSITIONS of the retired rows are needed —
-            # projecting before the pin lets Catalyst prune the match
-            # scan to the key columns + row_index (a wide table's
-            # payload bytes are never read) and keeps the pinned
-            # materialization two-columns small
-            matched = matched.select("__file", "__pos")
-            # ONE materialization feeds the per-file counts AND the
-            # sidecar write (same atomic-swap discipline as update_rows)
-            matched = pin(matched)
-            per_file = {
-                r["__file"]: r["n"]
-                for r in matched.groupBy("__file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        if new_files is None or written_schema != m["schema"]:
-            # postimages = the surviving batch rows in the table's
-            # declared schema — snapshot-independent, written ONCE
-            # (re-written only if a racer evolved the schema between
-            # retries; the orphaned first attempt is unreferenced
-            # garbage, collected like any crashed writer's files)
-            types = {f.name: f.dataType.simpleString() for f in schema.fields}
-            shaped = survivors.select(
-                *[F.col(c).cast(types[c]).alias(c) for c in names]
-            )
-            new_files, _, new_rows = _write_data_files(shaped, path)
-            written_schema = m["schema"]
-        files_out = list(m["files"])
-        touched = sorted(per_file)
-        if touched:
-            new_dv = matched.select(
-                F.col("__file").alias("file"), F.col("__pos").alias("pos")
-            )
-            old_touched = [f for f in touched if f in dv]
-            if old_touched:
-                new_dv = new_dv.unionByName(
-                    _dv_frame(spark, path, dv, old_touched)
-                )
-            sub = os.path.join(_DV, uuid.uuid4().hex)
-            new_dv.write.mode("error").parquet(os.path.join(path, sub))
-            for f in touched:
-                total = (dv[f]["count"] if f in dv else 0) + int(per_file[f])
-                dv[f] = {"dv": sub, "count": total}
-        dropped: dict[str, dict] = {}
-        for f in touched:
-            if dv[f]["count"] >= _file_rows(path, m, f):
-                dropped[f] = dv.pop(f)
-                files_out.remove(f)
-        n = int(sum(per_file.values()))
-        base_stats = m.get("stats") or {}
-        cols = sorted({c for s in base_stats.values() for c in s})
-        manifest = {
-            "op": "merge_dv", "files": files_out + new_files,
-            "schema": m["schema"], "added": len(new_files),
-            "added_files": new_files, "dv": dv, "rows": new_rows,
-            "merge_keys": list(key_cols), "retired_rows": n,
-        }
-        if batch_id is not None:
-            manifest["batch_id"] = batch_id
-        if dropped:
-            manifest["dv_dropped"] = dropped
-        if base_stats or cols:
-            keep = set(files_out)
-            manifest["stats"] = {
-                **{f: s for f, s in base_stats.items() if f in keep},
-                **(_collect_file_stats(path, new_files, cols, m["schema"])
-                   if cols else {}),
-            }
+        # unlike update_rows, the postimages come from the BATCH, so
+        # only the POSITIONS of the retired rows are needed — projecting
+        # before the pin lets Catalyst prune the match scan to the key
+        # columns + row_index (a wide table's payload bytes are never
+        # read) and keeps the pinned materialization two columns small
+        matched = pin(
+            _live_scan(spark, path, m, candidates, schema)
+            .join(keys_only, list(key_cols), "left_semi")
+            .select("__file", "__pos")
+        ) if candidates else None
         try:
+            n, files, dv, dropped = _retire(spark, path, m, matched)
+            if new_files is None or written_schema != m["schema"]:
+                # postimages = the surviving batch rows in the table's
+                # declared schema — snapshot-independent, written ONCE
+                # (re-written only if a racer evolved the schema between
+                # retries; the orphaned first attempt is unreferenced
+                # garbage, collected like any crashed writer's files)
+                types = {f.name: f.dataType.simpleString() for f in schema.fields}
+                shaped = survivors.select(
+                    *[F.col(c).cast(types[c]).alias(c) for c in names]
+                )
+                new_files, _, new_rows = _write_data_files(shaped, path)
+                written_schema = m["schema"]
+            manifest = {
+                "op": "merge_dv", "files": files + new_files,
+                "schema": m["schema"], "added": len(new_files),
+                "added_files": new_files, "dv": dv, "rows": new_rows,
+                "merge_keys": list(key_cols), "retired_rows": n,
+            }
+            if batch_id is not None:
+                manifest["batch_id"] = batch_id
+            if dropped:
+                manifest["dv_dropped"] = dropped
+            _carry_stats(manifest, m.get("stats"), _footer_stats(
+                path, new_files, m.get("stats"), m["schema"]))
             _publish(path, manifest, m["version"], backend)
             return n
         except VersionClaimedError:
             continue  # stale snapshot basis: re-derive the match
+        finally:
+            if matched is not None:
+                unpin(matched)
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
 
 
@@ -1903,7 +1844,6 @@ def table_changes(
                 "append-only — use snapshot_diff for rewrites"
             )
         added.extend(_added_files(path, m))
-    from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(read_manifest(path, to_v)["schema"]))
     if not added:
@@ -1943,9 +1883,6 @@ def update_rows(
     pins; a lost race re-derives from the new head; the CDC face
     (:func:`table_changes_cdf`) emits the matched rows as
     'update_preimage' and the new versions as 'update_postimage'."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     if prune is None:
         prune = _prune_from_condition(condition)
     for _ in range(_RETRIES):
@@ -1954,90 +1891,97 @@ def update_rows(
         bad = [c for c in set_exprs if c not in {f.name for f in schema.fields}]
         if bad:
             raise ValueError(f"update of unknown column(s): {bad}")
-        dv = dict(m.get("dv") or {})
         candidates = prune_files(m, prune) if prune else m["files"]
         if not candidates:
             return 0
-        scanned = _scan_with_pos(spark, path, m, candidates, schema)
-        matched = scanned.filter(F.expr(condition))
-        already = [f for f in candidates if f in dv]
-        if already:
-            old = _dv_frame(spark, path, dv, already)
-            matched = matched.join(
-                old,
-                (matched["__file"] == old["file"])
-                & (matched["__pos"] == old["pos"]),
-                "left_anti",
-            )
         # ONE materialization feeds the position sidecar AND the
         # updated-row write — the two halves of the atomic swap must
         # come from the same snapshot of the match
-        matched = pin(matched)
-        per_file = {
-            r["__file"]: r["n"]
-            for r in matched.groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if not per_file:
-            return 0
-        touched = sorted(per_file)
-        # (a) the updated versions, in the snapshot's exact schema
-        types = {f.name: f.dataType.simpleString() for f in schema.fields}
-        updated = matched.select(
-            *[
-                F.expr(f"CAST(({set_exprs[c]}) AS {types[c]})").alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in (f.name for f in schema.fields)
-            ]
+        matched = pin(
+            _live_scan(spark, path, m, candidates, schema)
+            .filter(F.expr(condition))
         )
-        new_files, _, new_rows = _write_data_files(updated, path)
-        # (b) the positions of the rows they replace
-        new_dv = matched.select(
-            F.col("__file").alias("file"), F.col("__pos").alias("pos")
-        )
-        old_touched = [f for f in touched if f in dv]
-        if old_touched:
-            new_dv = new_dv.unionByName(_dv_frame(spark, path, dv, old_touched))
-        sub = os.path.join(_DV, uuid.uuid4().hex)
-        new_dv.write.mode("error").parquet(os.path.join(path, sub))
-        files_out = list(m["files"])
-        for f in touched:
-            total = (dv[f]["count"] if f in dv else 0) + int(per_file[f])
-            dv[f] = {"dv": sub, "count": total}
-        dropped: dict[str, dict] = {}
-        for f in touched:
-            # manifest row counts, not serial footer reads (see
-            # delete_rows)
-            if dv[f]["count"] >= _file_rows(path, m, f):
-                dropped[f] = dv.pop(f)
-                files_out.remove(f)
-        n = int(sum(per_file.values()))
-        base_stats = m.get("stats") or {}
-        cols = sorted({c for s in base_stats.values() for c in s})
-        manifest = {
-            "op": "update", "files": files_out + new_files,
-            "schema": m["schema"], "added": len(new_files),
-            "added_files": new_files, "dv": dv, "rows": new_rows,
-            "predicate": condition,
-            "set": dict(set_exprs), "updated_rows": n,
-        }
-        if dropped:
-            manifest["dv_dropped"] = dropped
-        if base_stats or cols:
-            keep = set(files_out)
-            manifest["stats"] = {
-                **{f: s for f, s in base_stats.items() if f in keep},
-                **(_collect_file_stats(path, new_files, cols, m["schema"])
-                   if cols else {}),
-            }
         try:
+            # (a) retire the matched positions
+            n, files, dv, dropped = _retire(spark, path, m, matched)
+            if not n:
+                return 0
+            # (b) their updated versions, in the snapshot's exact schema
+            types = {f.name: f.dataType.simpleString() for f in schema.fields}
+            updated = matched.select(
+                *[
+                    F.expr(f"CAST(({set_exprs[c]}) AS {types[c]})").alias(c)
+                    if c in set_exprs
+                    else F.col(c)
+                    for c in (f.name for f in schema.fields)
+                ]
+            )
+            new_files, _, new_rows = _write_data_files(updated, path)
+            manifest = {
+                "op": "update", "files": files + new_files,
+                "schema": m["schema"], "added": len(new_files),
+                "added_files": new_files, "dv": dv, "rows": new_rows,
+                "predicate": condition,
+                "set": dict(set_exprs), "updated_rows": n,
+            }
+            if dropped:
+                manifest["dv_dropped"] = dropped
+            _carry_stats(manifest, m.get("stats"), _footer_stats(
+                path, new_files, m.get("stats"), m["schema"]))
             _publish(path, manifest, m["version"], backend)
             return n
         except VersionClaimedError:
             continue  # snapshot basis stale: re-derive the whole update
+        finally:
+            unpin(matched)
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
+
+
+class _RangeEnd:
+    """The range-end snapshot both change readers (:func:`table_changes_cdf`
+    and :class:`TxTableStream`'s appends-only tail) project every commit
+    in ``(lo, version]`` onto: its logical names by stable field id (a
+    rename mid-range cannot mis-wire columns; columns dropped by the
+    range end are omitted) and its schema as the typed base of the
+    union."""
+
+    def __init__(self, spark: SparkSession, path: str, version: int):
+        m = read_manifest(path, version)
+        fields, _, _ = _bootstrap_mapping(m)
+        self.spark, self.path = spark, path
+        self.by_fid = {fid: name for name, fid in fields.items()}
+        self.schema = StructType.fromJson(json.loads(m["schema"]))
+
+    def project(self, df: DataFrame, m: dict) -> DataFrame:
+        """``df``, read under commit manifest ``m``, in range-end names."""
+        cf, _, _ = _bootstrap_mapping(m)
+        return df.select(*[
+            F.col(name).alias(self.by_fid[fid])
+            for name, fid in cf.items()
+            if fid in self.by_fid
+        ])
+
+    def added_rows(self, m: dict) -> DataFrame | None:
+        """The rows commit ``m`` added (its ``added_files``, a plain
+        scan with no parent lookups), or None when it added none."""
+        files = _added_files(self.path, m)
+        if not files:
+            return None
+        schema = StructType.fromJson(json.loads(m["schema"]))
+        return self.project(
+            _scan_plain(self.spark, self.path, m, files, schema), m
+        )
+
+    def union(self, parts: list[DataFrame], extra: list = ()) -> DataFrame:
+        """``parts`` unioned onto a typed-empty frame of the range-end
+        schema plus ``extra`` fields; commits that predate an added
+        column contribute NULL for it."""
+        out = local_frame(
+            self.spark, [], StructType(list(self.schema.fields) + list(extra))
+        )
+        for p in parts:
+            out = out.unionByName(p, allowMissingColumns=True)
+        return out
 
 
 def table_changes_cdf(
@@ -2069,32 +2013,8 @@ def table_changes_cdf(
 
     Data files and manifests in the range must still exist — vacuum
     retention bounds CDF reach exactly as it does for Delta."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
     to_v = _check_range(path, from_version, to_version, "CDF over them is unrecoverable")
-    end_m = read_manifest(path, to_v)
-    end_fields, _, _ = _bootstrap_mapping(end_m)
-    end_by_fid = {fid: name for name, fid in end_fields.items()}
-    end_schema = StructType.fromJson(json.loads(end_m["schema"]))
-
-    def to_end_names(df: DataFrame, commit_m: dict) -> DataFrame:
-        """Project a commit-era frame onto the range-end logical names
-        via stable field ids (dropped-by-end columns omitted)."""
-        cf, _, _ = _bootstrap_mapping(commit_m)
-        cols = [
-            F.col(name).alias(end_by_fid[fid])
-            for name, fid in cf.items()
-            if fid in end_by_fid
-        ]
-        return df.select(*cols)
-
-    def added_rows(m: dict) -> DataFrame | None:
-        files = _added_files(path, m)
-        if not files:
-            return None
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        return to_end_names(_scan_plain(spark, path, m, files, schema), m)
+    end = _RangeEnd(spark, path, to_v)
 
     def newly_vectored_rows(m: dict, parent: dict) -> DataFrame | None:
         """The rows this commit's NEW deletion-vector positions cover,
@@ -2108,32 +2028,22 @@ def table_changes_cdf(
         }
         if not touched:
             return None
-        now = _dv_frame(spark, path, touched, sorted(touched))
-        old_touched = [f for f in touched if f in parent_dv]
-        if old_touched:
-            old = _dv_frame(spark, path, parent_dv, old_touched)
-            now = now.join(
-                old.select(
-                    F.col("file").alias("ofile"), F.col("pos").alias("opos")
-                ),
-                (F.col("file") == F.col("ofile"))
-                & (F.col("pos") == F.col("opos")),
-                "left_anti",
-            )
+        # a touched file's new sidecar holds new ∪ old positions, so the
+        # rows it newly deletes are the parent's LIVE rows it covers
         pschema = StructType.fromJson(json.loads(parent["schema"]))
-        scanned = _scan_with_pos(spark, path, parent, sorted(touched), pschema)
+        live = _live_scan(spark, path, parent, sorted(touched), pschema)
+        now = _dv_frame(spark, path, touched, sorted(touched))
         # same gate as read_table: a CDF read over a large delete
         # (millions of positions) must not broadcast the position set —
         # beyond the cap, a shuffle join AQE can re-plan
         if sum(e["count"] for e in touched.values()) <= _DV_BROADCAST_ROWS:
             now = F.broadcast(now)
-        rows = scanned.join(
+        rows = live.join(
             now,
-            (scanned["__file"] == now["file"])
-            & (scanned["__pos"] == now["pos"]),
+            (live["__file"] == now["file"]) & (live["__pos"] == now["pos"]),
             "left_semi",
         ).drop("__file", "__pos")
-        return to_end_names(rows, parent)
+        return end.project(rows, parent)
 
     def stamp(df: DataFrame, kind: str, v: int) -> DataFrame:
         return df.withColumn("_change_type", F.lit(kind)).withColumn(
@@ -2144,7 +2054,7 @@ def table_changes_cdf(
     for v in range(from_version + 1, to_v + 1):
         m = read_manifest(path, v)
         if m["op"] in ("append", "stream_append"):
-            rows = added_rows(m)
+            rows = end.added_rows(m)
             if rows is not None:
                 parts.append(stamp(rows, "insert", v))
         elif m["op"] == "delete":
@@ -2159,7 +2069,7 @@ def table_changes_cdf(
             pre = newly_vectored_rows(m, read_manifest(path, v - 1))
             if pre is not None:
                 parts.append(stamp(pre, "update_preimage", v))
-            post = added_rows(m)
+            post = end.added_rows(m)
             if post is not None:
                 parts.append(stamp(post, "update_postimage", v))
         elif m["op"] == "merge_dv":
@@ -2173,15 +2083,15 @@ def table_changes_cdf(
             end_keys = []
             for k in m.get("merge_keys") or []:
                 fid = cf.get(k)
-                if fid is None or fid not in end_by_fid:
+                if fid is None or fid not in end.by_fid:
                     raise ValueError(
                         f"merge key {k!r} of v{v} was dropped by the "
                         "range end; its merge_dv commit cannot be "
                         "decomposed — use snapshot_diff"
                     )
-                end_keys.append(end_by_fid[fid])
+                end_keys.append(end.by_fid[fid])
             pre = newly_vectored_rows(m, read_manifest(path, v - 1))
-            post = added_rows(m)
+            post = end.added_rows(m)
             if pre is not None and post is not None:
                 # gate the key-set broadcasts on the manifest's own
                 # counts (batch rows / retired rows), same cap as the
@@ -2231,23 +2141,11 @@ def table_changes_cdf(
                 f"version {v} is op={m['op']!r}; its file list does not "
                 "decompose into row changes — use snapshot_diff"
             )
-    from pyspark.sql.types import IntegerType, StringType, StructField
 
-    base = local_frame(
-        spark,
-        [],
-        StructType(
-            [f for f in end_schema.fields]
-            + [StructField("_change_type", StringType(), False),
-               StructField("_commit_version", IntegerType(), False)]
-        ),
-    )
-    out = base
-    for p in parts:
-        # allowMissingColumns: commits that predate an added column
-        # contribute NULL for it
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    return end.union(parts, [
+        StructField("_change_type", StringType(), False),
+        StructField("_commit_version", IntegerType(), False),
+    ])
 
 
 def commit_stream_batch(
@@ -2264,13 +2162,13 @@ def commit_stream_batch(
     check re-runs after every lost commit race, because the racing
     winner may BE a replay of this very batch.
 
-    The guard is VACUUM-SAFE: besides scanning retained manifests, it
-    rejects any ``batch_id`` at or below the table's ``max_batch_id``
-    high-water mark, which every commit (stream or not) carries forward
-    from its parent — so a replay of a batch whose own manifest vacuum
-    dropped still publishes nothing. This leans on foreachBatch's
-    contract that batch ids are monotone per stream; callers feeding
-    out-of-order ids must not vacuum past them.
+    The guard is VACUUM-SAFE and reads one manifest whatever the
+    history length: it rejects any ``batch_id`` at or below the head's
+    ``max_batch_id`` high-water mark (:func:`_replayed`), which every
+    commit (stream or not) carries forward from its parent — so a
+    replay of a batch whose own manifest vacuum dropped still publishes
+    nothing, and a store that never vacuums does not pay a manifest
+    read per retained version.
 
     Schema discipline matches :func:`write_table`'s append path: the
     batch schema must equal the head snapshot's logical schema, checked
@@ -2283,43 +2181,33 @@ def commit_stream_batch(
     own_rows: dict[str, int] = {}
     batch_schema = df.schema.json()
     for _ in range(_RETRIES):
-        vs = _versions(path)
-        if batch_id in {read_manifest(path, v).get("batch_id") for v in vs}:
+        head = _head(path)
+        if _replayed(head, batch_id):
             return None  # replay of an already-committed micro-batch
-        head = read_manifest(path) if vs else None
-        if head is not None:
-            hw = head.get("max_batch_id")
-            if hw is not None and batch_id <= hw:
-                return None  # committed before the vacuum horizon
-            if not _schema_compatible(head["schema"], batch_schema):
-                # checked on every retry: the racing winner may have
-                # evolved the schema (rename/drop/add) out from under
-                # this stream
-                raise ValueError(
-                    "stream batch schema does not match the table's "
-                    "current logical schema; restart the stream with "
-                    "the evolved schema (column-mapping renames/drops "
-                    "apply to writers immediately)"
-                )
+        if head is not None and not _schema_compatible(
+            head["schema"], batch_schema
+        ):
+            # checked on every retry: the racing winner may have
+            # evolved the schema (rename/drop/add) out from under this
+            # stream
+            raise ValueError(
+                "stream batch schema does not match the table's "
+                "current logical schema; restart the stream with "
+                "the evolved schema (column-mapping renames/drops "
+                "apply to writers immediately)"
+            )
         if files is None:
             files, schema, own_rows = _write_data_files(df, path)
-        head_stats = (head.get("stats") or {}) if head else {}
-        cols = sorted({c for s in head_stats.values() for c in s})
+        head = head or {"files": [], "version": 0}
         manifest = {"op": "stream_append",
-                    "files": (head["files"] if head else []) + files,
+                    "files": head["files"] + files,
                     "schema": schema, "added": len(files),
                     "added_files": files, "batch_id": batch_id,
                     "rows": own_rows}
-        if head_stats:
-            manifest["stats"] = {
-                **{f: s for f, s in head_stats.items()
-                   if f in set(head["files"])},
-                **(_collect_file_stats(path, files, cols, schema)
-                   if cols else {}),
-            }
+        _carry_stats(manifest, head.get("stats"), _footer_stats(
+            path, files, head.get("stats"), schema))
         try:
-            return _publish(path, manifest, head["version"] if head else 0,
-                            backend)
+            return _publish(path, manifest, head["version"], backend)
         except VersionClaimedError:
             continue  # re-read head AND re-check batch_id dedupe
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
@@ -2545,41 +2433,23 @@ class TxTableStream:
         logical names — :func:`table_changes` semantics made
         maintenance-tolerant (skips dataChange=false commits, resolves
         renames through field ids instead of failing)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
-        end_m = read_manifest(self.path, hi)
-        end_fields, _, _ = _bootstrap_mapping(end_m)
-        end_by_fid = {fid: name for name, fid in end_fields.items()}
-        end_schema = StructType.fromJson(json.loads(end_m["schema"]))
+        end = _RangeEnd(self.spark, self.path, hi)
         parts: list[DataFrame] = []
         for v in range(lo + 1, hi + 1):
             m = read_manifest(self.path, v)
             op = m["op"]
-            if op in ("append", "stream_append", "merge_dv"):
-                if op == "merge_dv":
-                    # a merge's appended files mix inserts with update
-                    # postimages; an appends-only tail cannot tell them
-                    # apart (a postimage re-emitted as an insert
-                    # double-counts downstream)
-                    raise ValueError(
-                        f"version {v} is op='merge_dv'; an appends-only "
-                        "tail cannot represent row updates — use cdf=True"
-                    )
-                files = _added_files(self.path, m)
-                if not files:
-                    continue
-                schema = StructType.fromJson(json.loads(m["schema"]))
-                df = _scan_plain(self.spark, self.path, m, files, schema)
-                cf, _, _ = _bootstrap_mapping(m)
-                parts.append(
-                    df.select(
-                        *[
-                            F.col(name).alias(end_by_fid[fid])
-                            for name, fid in cf.items()
-                            if fid in end_by_fid
-                        ]
-                    )
+            if op in ("append", "stream_append"):
+                rows = end.added_rows(m)
+                if rows is not None:
+                    parts.append(rows)
+            elif op == "merge_dv":
+                # a merge's appended files mix inserts with update
+                # postimages; an appends-only tail cannot tell them
+                # apart (a postimage re-emitted as an insert
+                # double-counts downstream)
+                raise ValueError(
+                    f"version {v} is op='merge_dv'; an appends-only "
+                    "tail cannot represent row updates — use cdf=True"
                 )
             elif op in ("rename_column", "drop_column", "purge_dvs",
                         "compact"):
@@ -2603,11 +2473,7 @@ class TxTableStream:
                     "decompose into appended rows — re-seed the "
                     "subscriber from a snapshot read"
                 )
-        out = local_frame(self.spark, [], end_schema)
-        for p in parts:
-            # commits that predate an added column contribute NULL
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        return end.union(parts)
 
     def process_available(self, fn) -> int:
         """availableNow loop: drain every pending commit, calling
@@ -2669,7 +2535,7 @@ def table_health(path: str, version: int | None = None) -> dict:
         return sizes[min(int(len(sizes) * p), len(sizes) - 1)] if sizes else None
 
     stats = m.get("stats") or {}
-    cols = sorted({c for s in stats.values() for c in s})
+    cols = _tracked(stats)
     depth = {}
     for c in cols:
         ranges = [s[c] for s in stats.values() if c in s]
@@ -2720,8 +2586,6 @@ def clone_table(
     shallow clones exist for. On object stores the link step becomes a
     server-side copy of the object reference (S3 CopyObject), same
     manifest shape."""
-    import shutil as _shutil
-
     if as_of_ms is not None:
         if version is not None:
             raise ValueError("pass version= or as_of_ms=, not both")
@@ -2758,11 +2622,11 @@ def clone_table(
                 except OSError as e:
                     if e.errno != errno.EXDEV:
                         raise
-                    _shutil.copy2(s, d)
+                    shutil.copy2(s, d)
         except OSError as e:
             if e.errno != errno.EXDEV:
                 raise  # EPERM/ENOSPC etc. are real failures, not fallbacks
-            _shutil.copy2(s, d)  # cross-device: pay the copy
+            shutil.copy2(s, d)  # cross-device: pay the copy
     manifest = {
         "op": "clone",
         "files": list(m["files"]),

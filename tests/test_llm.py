@@ -292,8 +292,9 @@ def test_driver_overlap_counts_like_the_join(spark):
 def test_driver_overlap_caps_join_rows_not_index_rows(spark, monkeypatch):
     """An index under the row cap whose Σ df·(df−1)/2 goes over it takes
     the Spark path: six identical docs hold 18 index rows but make 45
-    self-join rows, so a cap of 20 sends them to the Spark kernel, and
-    the answer is the driver's at the default cap."""
+    self-join rows, so caps of 20 and 44 send them to the Spark kernel
+    while 45 keeps the driver, and the answer is the driver's at the
+    default cap on every branch."""
     from data_observability_installer_spark.operators.llm import dedup
 
     docs = spark.createDataFrame(
@@ -302,10 +303,12 @@ def test_driver_overlap_caps_join_rows_not_index_rows(spark, monkeypatch):
     want = sorted(map(tuple, dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()))
     assert len(want) == 15
     taken = _spy_driver_overlap(monkeypatch)
-    monkeypatch.setattr(dedup, "DRIVER_ROWS", 20)
-    got = sorted(map(tuple, dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()))
-    assert taken == [None]
-    assert got == want
+    for cap, branch in ((20, None), (44, None), (45, "driver")):
+        taken.clear()
+        monkeypatch.setattr(dedup, "DRIVER_ROWS", cap)
+        got = sorted(map(tuple, dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()))
+        assert [None if t is None else "driver" for t in taken] == [branch], cap
+        assert got == want
 
 
 def test_dedup_groups_connected_components(spark):

@@ -705,8 +705,8 @@ def test_threshold_sweep_rides_shared_shingle_cache(spark, sf_smoke, monkeypatch
     from data_observability_installer_spark.operators.llm import dedup
 
     registry.QUERIES["ngram_jaccard_documents"](spark, sf_smoke).collect()
-    collected, real = [], dedup._capped_columns
-    monkeypatch.setattr(dedup, "_capped_columns", lambda d: collected.append(d) or real(d))
+    collected, real = [], dedup._capped_table
+    monkeypatch.setattr(dedup, "_capped_table", lambda d: collected.append(d) or real(d))
     df = registry.QUERIES["threshold_sweep_documents"](spark, sf_smoke)
     [index] = collected
     plan = index._jdf.queryExecution().executedPlan().toString()

@@ -2416,3 +2416,135 @@ def test_upsert_sink_rewrite_strategy(spark, tmp_path):
             spark.readStream.schema("k int, v string").json(str(src)),
             t, ["k"], str(tmp_path / "c2"), strategy="nope",
         )
+
+
+# ---------------------------------------------------------------------------
+# one deletion-vector core: pins released, O(1) replay guard, one DV path
+# ---------------------------------------------------------------------------
+
+
+def test_row_level_ops_release_their_match_pins(spark, tmp_path):
+    """Under ``pin.mode=persist`` delete_rows, update_rows and merge_dv
+    each release the pinned match once the commit is published: the
+    CacheManager holds nothing afterwards and the persisted-RDD count
+    does not grow (a leaked pin is one frame per micro-batch under
+    txtable_upsert_sink)."""
+    from data_observability_installer_spark.functions.pin import PIN_MODE_CONF
+    from data_observability_installer_spark.sources import txtable as tx
+
+    t = str(tmp_path / "t")
+    write_table(spark, t, spark.range(40).selectExpr("id as k", "id % 4 as g"))
+    sc = spark.sparkContext
+    ops = [
+        lambda: tx.delete_rows(spark, t, "g = 0"),
+        lambda: tx.update_rows(spark, t, "g = 1", {"g": "g + 10"}),
+        lambda: tx.merge_dv(
+            spark, t, spark.createDataFrame([(2, 7), (99, 9)], "k bigint, g bigint"),
+            ["k"],
+        ),
+    ]
+    spark.catalog.clearCache()
+    spark.conf.set(PIN_MODE_CONF, "persist")
+    try:
+        for op, expect in zip(ops, (10, 10, 1)):
+            before = sc._jsc.getPersistentRDDs().size()
+            assert op() == expect
+            assert sc._jsc.getPersistentRDDs().size() <= before
+            assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        spark.conf.unset(PIN_MODE_CONF)
+        spark.catalog.clearCache()
+    assert read_table(spark, t).count() == 31  # 40 - 10 deleted + 1 insert
+
+
+def test_stream_guard_reads_constant_manifests(spark, tmp_path, monkeypatch):
+    """The exactly-once guard is one high-water check: the number of
+    manifests commit_stream_batch reads does not grow with the retained
+    history (a scan of every retained manifest read V+2), and a
+    replayed batch_id still publishes nothing."""
+    from data_observability_installer_spark.sources import txtable as tx
+
+    t = str(tmp_path / "t")
+    reads = []
+    orig = tx.read_manifest
+
+    def counting(path, version=None):
+        reads.append(version)
+        return orig(path, version)
+
+    monkeypatch.setattr(tx, "read_manifest", counting)
+    per_commit = []
+    for b in range(6):
+        reads.clear()
+        assert tx.commit_stream_batch(t, spark.createDataFrame([(b,)], "k int"), b) == b + 1
+        per_commit.append(len(reads))
+    assert per_commit[1:] == [per_commit[1]] * 5, per_commit
+    assert per_commit[-1] <= 2  # head read + _publish's parent read
+    reads.clear()
+    assert tx.commit_stream_batch(t, spark.createDataFrame([(9,)], "k int"), 3) is None
+    assert len(reads) == 1
+    assert len(tx._versions(t)) == 6
+    assert _rows(read_table(spark, t)) == [(b,) for b in range(6)]
+
+
+def test_merge_dv_pinned_match_reads_only_key_columns(spark, tmp_path, monkeypatch):
+    """merge_dv pins only the (file, pos) of the retired rows, so the
+    match scan's ReadSchema holds the key column alone — a wide
+    table's payload bytes are never read to find the rows to retire."""
+    import re
+
+    from data_observability_installer_spark.sources import txtable as tx
+
+    t = str(tmp_path / "t")
+    write_table(
+        spark, t,
+        spark.range(30).selectExpr("id as k", "repeat('x', 50) as pay1", "id * 2 as pay2"),
+    )
+    tx.delete_rows(spark, t, "k = 5")  # the match scan also anti-joins a DV
+    plans = []
+    orig = tx.pin
+
+    def spy(df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return orig(df, *a, **kw)
+
+    monkeypatch.setattr(tx, "pin", spy)
+    batch = spark.createDataFrame([(3, "y", 0), (40, "z", 1)], "k bigint, pay1 string, pay2 bigint")
+    assert tx.merge_dv(spark, t, batch, ["k"]) == 1
+    assert len(plans) == 1
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plans[0])
+    # the table scan's data columns; the row index rides along as a
+    # _tmp_metadata column, the DV sidecar scan reads (file, pos)
+    data = [
+        [c for c in s.split(",") if not c.startswith("_tmp_metadata")]
+        for s in schemas if "file:" not in s
+    ]
+    assert data == [["k:bigint"]], schemas
+
+
+def test_dv_paths_go_through_the_shared_helpers():
+    """One deletion-vector core: positional scans
+    (``_scan_eras(..., pos=True)``) happen only in the shared live scan,
+    sidecar scans (``_dv_frame``) only there, in the retire step and in
+    the CDF reconstruction of a commit's new positions, and a ``_dv/``
+    sidecar path is minted in exactly one place."""
+    import ast
+
+    from data_observability_installer_spark.sources import txtable as tx
+
+    tree = ast.parse(open(tx.__file__).read())
+    dv_scans, pos_scans, dv_uses = set(), set(), []
+    for top in tree.body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+                if node.func.id == "_dv_frame":
+                    dv_scans.add(top.name)
+                if node.func.id == "_scan_eras" and any(
+                    k.arg == "pos" for k in node.keywords
+                ):
+                    pos_scans.add(top.name)
+            if isinstance(node, ast.Name) and node.id == "_DV" and isinstance(node.ctx, ast.Load):
+                dv_uses.append(top.name)
+    assert dv_scans == {"_live_scan", "_retire", "table_changes_cdf"}
+    assert pos_scans == {"_live_scan"}
+    assert dv_uses == ["_retire"]
