@@ -519,24 +519,18 @@ def cmd_qsketch_store(args) -> int:
     (streaming/sketch.py qsketch_sink): merge the per-batch run_id
     partitions into the whole-history sketch (node-residual sums —
     sketch-sized, never data-sized) and scan it for the requested
-    quantiles; --grouped reads a key_col= store and reports per key
-    (the per-pipeline SLA p50/p99 serving path). lo/hi/log-u must
-    match what the sink was started with."""
-    from .operators.sketch import qsketch_quantiles, qsketch_quantiles_by
+    quantiles, per key for a store written with key_col= (the
+    per-pipeline SLA p50/p99 serving path). lo/hi/log-u must match
+    what the sink was started with."""
+    from .operators.sketch import qsketch_quantiles
     from .streaming.sketch import read_qsketch_store
 
     spark = _spark(args)
     q_bps = [int(x) for x in args.q.split(",")]
-    sk = read_qsketch_store(spark, args.path, grouped=args.grouped)
-    if args.grouped:
-        out = qsketch_quantiles_by(
-            sk, q_bps, lo=args.lo, hi=args.hi, log_u=args.log_u
-        ).orderBy("k_key", "q_bp")
-    else:
-        out = qsketch_quantiles(
-            sk, q_bps, lo=args.lo, hi=args.hi, log_u=args.log_u
-        ).orderBy("q_bp")
-    out.show(args.rows, truncate=False)
+    qsketch_quantiles(
+        read_qsketch_store(spark, args.path), q_bps,
+        lo=args.lo, hi=args.hi, log_u=args.log_u,
+    ).show(args.rows, truncate=False)
     return 0
 
 
@@ -545,7 +539,7 @@ def cmd_monitor_stored(args) -> int:
     STORES (streaming/monitor.py monitor_pane_stored): daily-volume
     screens (Mann-Kendall, CUSUM, change-point) from the counts cube,
     the SPC p-chart from the run-rollup cube, and the per-pipeline SLA
-    p99 from the grouped quantile-sketch store — O(store) serving
+    p99 from the keyed quantile-sketch store — O(store) serving
     latency, the raw event log never rescanned (the oracle-checked
     recompute variant is `query monitor_events`)."""
     from .streaming.monitor import monitor_pane_stored
@@ -670,8 +664,6 @@ def main(argv: list[str] | None = None) -> int:
 
     p = sub.add_parser("qsketch-store")
     p.add_argument("path")
-    p.add_argument("--grouped", action="store_true",
-                   help="store written with key_col= (per-key report)")
     p.add_argument("--q", default="5000,9000,9900",
                    help="quantiles in basis points, comma-separated")
     p.add_argument("--lo", type=int, default=0)

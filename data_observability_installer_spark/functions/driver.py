@@ -16,31 +16,76 @@ HOST's time zone (``TimestampType.toInternal`` calls ``time.mktime``),
 so on a non-UTC host naive-UTC instants such as cron ticks landed hours
 off; Arrow's ``timestamp[us, UTC]`` reads them as UTC on any host.
 
-Graph operators over metadata-sized inputs (lineage edges, near-dup
-pair lists) run their rounds on the driver while the input fits under
-:data:`DRIVER_ROWS`: one bounded ``collect`` replaces a Spark job (plus
-its pin and its emptiness probe) per round. Above the cap the operator
-keeps its distributed rounds. The near-dup family's exact shingle
-overlap (``operators/llm/dedup.driver_overlap``) has the same shape:
-one capped collect of the shingle index, or of the MinHash candidates
-and then their docs' shingles, a local count while the self-join's
-output stays under the cap, and the overlap rows handed back here.
+Operators over metadata-sized inputs run on the driver while the input
+fits under :data:`DRIVER_ROWS`, and every such branch reads its input
+through one capped Arrow collect, :func:`capped_table` (or its column
+lists, :func:`capped_columns`); None sends the operator to its Spark
+form. The graph rounds (lineage closure, near-dup groups) replace a
+Spark job, a pin and an emptiness probe per round with one BFS or
+union-find; the near-dup family's exact shingle overlap
+(``operators/llm/dedup.driver_overlap``) counts the shingle index, or
+the MinHash candidates and then their docs' shingles, while the
+self-join's output stays under the cap; the q-digest assembly and
+quantile scan (``operators/sketch.py``) run their closed forms over the
+sketch nodes. Each hands its rows back through :func:`local_frame`.
+Callers read the cap as ``driver.DRIVER_ROWS`` at call time, so one
+setting of it moves every branch.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from datetime import timezone
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 
-__all__ = ["DRIVER_ROWS", "local_frame"]
+__all__ = ["DRIVER_ROWS", "capped_columns", "capped_table", "local_frame"]
 
 #: most rows a driver-side round collects or emits; past it the Spark
 #: rounds run instead
 DRIVER_ROWS = 1_000_000
+
+
+def capped_table(df: DataFrame) -> pa.Table | None:
+    """``df`` from one Arrow collect capped at ``DRIVER_ROWS + 1`` rows;
+    None when it holds more than ``DRIVER_ROWS``. A frame that plans as
+    a ``LocalTableScan`` (its rows are already on the driver, e.g. a
+    :func:`local_frame` result) is read with ``collect()``, which runs
+    no Spark job where the Arrow collect runs one."""
+    capped = df.limit(DRIVER_ROWS + 1)
+    if capped._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan":
+        # collect() hands TimestampType values back as naive HOST-local
+        # datetimes; aware ones keep the instant through Arrow
+        ts = {i for i, f in enumerate(capped.schema) if isinstance(f.dataType, TimestampType)}
+        table = _arrow_table(
+            [
+                [v.astimezone(timezone.utc) if i in ts and v is not None else v
+                 for i, v in enumerate(r)]
+                for r in capped.collect()
+            ],
+            capped.schema,
+        )
+    else:
+        table = capped.toArrow()
+    return None if table.num_rows > DRIVER_ROWS else table
+
+
+def capped_columns(df: DataFrame) -> list[list] | None:
+    """:func:`capped_table`'s columns as Python lists."""
+    table = capped_table(df)
+    return None if table is None else [c.to_pylist() for c in table.columns]
+
+
+def _arrow_table(rows: Sequence[Sequence], schema: StructType) -> pa.Table:
+    """``rows`` transposed into one Arrow array per field of ``schema``."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
 
 
 def local_frame(
@@ -52,9 +97,4 @@ def local_frame(
     ``schema``, a ``StructType`` or a DDL string."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(_arrow_table(rows, schema), schema)

@@ -5,8 +5,9 @@ Three entry points, one per ownership shape:
 
 - :func:`pin` — for a frame that OUTLIVES its builder or must cut
   lineage: a small intermediate fed to two or more downstream consumers
-  (the qsketch leaf histogram feeds three scans; semdedup's batch
-  assignment feeds the witness join AND the store commit), a BFS
+  (q-digest nodes past the driver cap feed three aggregates;
+  semdedup's batch assignment feeds the witness join AND the store
+  commit), a BFS
   frontier, a result-sized pair list returned to the caller.
   Re-executing the producer per consumer would re-pay the scan and, for
   nondeterministic producers, hand consumers DIFFERENT rows. The pin

@@ -49,7 +49,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from ...functions.driver import DRIVER_ROWS, local_frame
+from ...functions import driver
+from ...functions.driver import capped_columns, capped_table, local_frame
 from ...functions.pin import pin, pinned
 
 # ---------------------------------------------------------------------------
@@ -182,19 +183,6 @@ def jaccard_score() -> Column:
     return F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4)
 
 
-def _capped_table(df: DataFrame) -> pa.Table | None:
-    """``df`` from one Arrow collect capped at ``DRIVER_ROWS + 1`` rows;
-    None when it holds more than ``DRIVER_ROWS``."""
-    table = df.limit(DRIVER_ROWS + 1).toArrow()
-    return None if table.num_rows > DRIVER_ROWS else table
-
-
-def _capped_columns(df: DataFrame) -> list[list] | None:
-    """:func:`_capped_table`'s columns as Python lists."""
-    table = _capped_table(df)
-    return None if table is None else [c.to_pylist() for c in table.columns]
-
-
 def _self_join_rows(table: pa.Table) -> int:
     """Σ c·(c−1)/2 over the shingles of a (doc, sh) table, c = the
     shingle's non-null (doc, sh) rows: the pair rows the self-join
@@ -238,8 +226,8 @@ def driver_overlap(
         + [StructField(c, LongType(), False) for c in ("inter", "sz_a", "sz_b")]
     )
     if cand is None:
-        table = _capped_table(index.select("doc", "sh"))
-        if table is None or _self_join_rows(table) > DRIVER_ROWS:
+        table = capped_table(index.select("doc", "sh"))
+        if table is None or _self_join_rows(table) > driver.DRIVER_ROWS:
             return None
         cols = [c.to_pylist() for c in table.columns]
         postings: dict = {}
@@ -250,13 +238,13 @@ def driver_overlap(
             xy for p in postings.values() for xy in combinations(sorted(p), 2) if xy[0] != xy[1]
         )
     else:
-        pairs = _capped_columns(cand.select(a, b))
+        pairs = capped_columns(cand.select(a, b))
         if pairs is None:
             return None
         docs = sorted({d for col in pairs for d in col if d is not None})
         cdocs = local_frame(spark, [(d,) for d in docs], StructType([doc]))
         cols = (
-            _capped_columns(index.join(cdocs, "doc", "semi").select("doc", "sh"))
+            capped_columns(index.join(cdocs, "doc", "semi").select("doc", "sh"))
             if docs
             else [[], []]
         )
@@ -622,8 +610,8 @@ def dedup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     (and the next round's analysis cost) constant regardless of
     diameter; the label table itself is tiny (one row per paired doc).
     """
-    rows = pairs.select("doc_a", "doc_b").limit(DRIVER_ROWS + 1).collect()
-    if len(rows) <= DRIVER_ROWS:
+    cols = capped_columns(pairs.select("doc_a", "doc_b"))
+    if cols is not None:
         parent: dict = {}
 
         def find(x):
@@ -634,13 +622,13 @@ def dedup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
                 parent[x], x = root, parent[x]
             return root
 
-        for doc_a, doc_b in rows:
+        for doc_a, doc_b in zip(*cols):
             a, b = find(doc_a), find(doc_b)
             if a != b:
                 # min id wins the root so group_id = min reachable id
                 lo, hi = (a, b) if a < b else (b, a)
                 parent[hi] = lo
-        docs = sorted({d for r in rows for d in r})
+        docs = sorted({d for c in cols for d in c})
         schema = pairs.select(F.col("doc_a").alias("doc"), F.col("doc_a").alias("group_id")).schema
         return local_frame(pairs.sparkSession, [(d, find(d)) for d in docs], schema)
 

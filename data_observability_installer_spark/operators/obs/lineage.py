@@ -38,11 +38,14 @@ Everything here is DataFrame -> DataFrame and shuffle-lean:
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ...functions.driver import DRIVER_ROWS, local_frame
+from ...functions import driver
+from ...functions.driver import capped_columns, local_frame
 from ...functions.pin import pin
 
 
@@ -157,9 +160,9 @@ def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     ``depth``.
     """
     e = edges.select("src", "dst").distinct()
-    rows = e.limit(DRIVER_ROWS + 1).collect()
-    if len(rows) <= DRIVER_ROWS:
-        closure = _driver_closure(rows, max_depth)
+    cols = capped_columns(e)
+    if cols is not None:
+        closure = _driver_closure(zip(*cols), max_depth)
         if closure is not None:
             schema = StructType(e.schema.fields + [StructField("depth", IntegerType(), False)])
             return local_frame(edges.sparkSession, closure, schema)
@@ -200,7 +203,7 @@ def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     return known
 
 
-def _driver_closure(edges: list, max_depth: int) -> list[tuple] | None:
+def _driver_closure(edges: Iterable[tuple], max_depth: int) -> list[tuple] | None:
     """The closure rows of the (src, dst) ``edges``: one BFS per source,
     each node's depth its first-reach hop count, at most ``max_depth``
     hops (the first hop always runs, as in the Spark rounds). None once
@@ -225,7 +228,7 @@ def _driver_closure(edges: list, max_depth: int) -> list[tuple] | None:
                 break
             frontier = nxt
         out.extend((src, d, k) for d, k in seen.items())
-        if len(out) > DRIVER_ROWS:
+        if len(out) > driver.DRIVER_ROWS:
             return None
     return out
 

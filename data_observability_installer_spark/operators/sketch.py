@@ -1,6 +1,21 @@
-"""Mergeable frequency-sketch operators: bounded-memory heavy hitters.
+"""Mergeable sketch operators: bounded-memory summaries whose CONTENT,
+not just their error bound, is value-checked against DuckDB twins.
 
-Reference parity: the TestGen surface profiles "51 data characteristics"
+The suite: Misra–Gries heavy hitters (exact, below), Count-Min point
+frequencies, HyperLogLog distinct counts and the dyadic q-digest
+quantile sketch. Each summary merges by one associative fold
+(:func:`fold_keyed`), which is also the read face of its streaming
+store (``streaming/sketch.py``). The HLL and q-digest operations are
+written once and take an optional key: ``key_col=None`` builds one
+global sketch, a key builds one per key value in the same pass, and a
+sketch frame's key column (``k`` for HLL, ``k_key`` for the q-digest)
+is what makes merge, estimate, re-thin and the quantile scan per key.
+The q-digest closed form has one assembly: a build is the re-thin of
+its leaf nodes, run on the driver while one capped collect of the
+nodes fits under ``functions.driver.DRIVER_ROWS`` and as Spark
+aggregates above it; the quantile scan is selected the same way.
+
+Heavy hitters. Reference parity: the TestGen surface profiles "51 data characteristics"
 including dominant-value / list-of-values capture (reference
 `README.md:207`; LOV baselines in `demo/input_data/data_tests.csv`).
 At 100 TB the exact `collect_set` / full `groupBy` route for "which
@@ -41,19 +56,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from ..functions.driver import local_frame
+from ..functions.driver import capped_columns, capped_table, local_frame
 from ..functions.pin import pin
 
-#: Schema of a dyadic quantile sketch frame — identical to what the
-#: previous all-DataFrame construction produced (level INT from the
-#: explode(sequence(...)), idx/cnt BIGINT).
-_QSKETCH_SCHEMA = StructType(
-    [
-        StructField("level", IntegerType(), True),
-        StructField("idx", LongType(), True),
-        StructField("cnt", LongType(), True),
-    ]
-)
 
 def mg_summarize_partition(counts, batch_counts, capacity: int):
     """Merge exact per-batch counts into a Misra–Gries summary held as
@@ -379,37 +384,55 @@ def _hll_cell_exprs(col_sql: str, m: int = HLL_M) -> tuple[str, str]:
     return register, rank
 
 
-def hll_sketch(items: DataFrame, col: str = "w", m: int = HLL_M) -> DataFrame:
+def hll_sketch(
+    items: DataFrame, col: str = "w", m: int = HLL_M, key_col: str | None = None
+) -> DataFrame:
     """Build the register table (register, max_rank): one map pass +
     ONE groupBy whose shuffle is bounded at m rows regardless of input
-    size. Registers never seen stay absent (they read as rank 0)."""
+    size. Registers never seen stay absent (they read as rank 0).
+
+    ``key_col`` (a SQL expression) builds one register table per key
+    in the same pass, (k, register, max_rank): shuffle bounded at m
+    rows PER KEY (distinct users per day, distinct tokens per
+    language)."""
     poly = _cm_poly_sql(col)
     register, rank = _hll_cell_exprs(col, m)
+    keys = ["k"] if key_col else []
     return (
-        items.selectExpr(f"{poly} AS _poly")
-        .selectExpr(f"{register} AS register", f"{rank} AS rank")
-        .groupBy("register")
+        items.selectExpr(*([f"{key_col} AS k"] if key_col else []), f"{poly} AS _poly")
+        .selectExpr(*keys, f"{register} AS register", f"{rank} AS rank")
+        .groupBy(*keys, "register")
         .agg(F.max("rank").alias("max_rank"))
     )
 
 
+def _keys(sketch: DataFrame, key: str) -> list[str]:
+    """``[key]`` when ``sketch`` is a keyed sketch frame, else ``[]``:
+    a sketch's groupedness is the presence of its key column."""
+    return [key] if key in sketch.columns else []
+
+
 def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge register tables: MAX per register — idempotent, so
+    """Merge register tables: MAX per (key,) register — idempotent, so
     double-counted input (replays, overlapping windows) changes
     nothing, the property that makes the streaming sink's store
     trivially exactly-once."""
-    return fold_keyed(sketches, ["register"], {"max_rank": "max"})
+    return fold_keyed(
+        sketches, [*_keys(sketches[0], "k"), "register"], {"max_rank": "max"}
+    )
 
 
 def hll_estimate(sketch: DataFrame, m: int = HLL_M) -> DataFrame:
-    """One-row estimate from the register table. The indicator sum
-    uses 1/2^rank as exact dyadic doubles (integer shift, then one
-    division), so the sum is EXACT in binary — both engines agree
-    bit-for-bit; the only inexact steps are the final division and the
-    small-range ln correction, absorbed by the half-up floor to an
-    integer count. Small-range: the paper's linear counting when the
-    raw estimate <= 2.5m and empty registers remain."""
-    agg = sketch.agg(
+    """Estimates from the register table: one row, or one per key of a
+    keyed table (k, v_zero, est_ct). The indicator sum uses 1/2^rank
+    as exact dyadic doubles (integer shift, then one division), so the
+    sum is EXACT in binary — both engines agree bit-for-bit; the only
+    inexact steps are the final division and the small-range ln
+    correction, absorbed by the half-up floor to an integer count.
+    Small-range: the paper's linear counting when the raw estimate
+    <= 2.5m and empty registers remain."""
+    keys = _keys(sketch, "k")
+    agg = sketch.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("present"),
         F.sum(
             # dynamic shift must go through expr: F.shiftleft takes a
@@ -425,17 +448,19 @@ def hll_estimate(sketch: DataFrame, m: int = HLL_M) -> DataFrame:
         F.lit(float(m)) * F.log(F.lit(float(m)) / zeros.cast("double")),
     ).otherwise(e_raw)
     return agg.select(
+        *keys,
         zeros.cast("long").alias("v_zero"),
         F.floor(est + F.lit(0.5)).cast("long").alias("est_ct"),
     )
 
 
 def hll_report_sql(
-    table: str, text_col: str = "text", m: int = HLL_M
+    table: str, text_col: str = "text", m: int = HLL_M, key_col: str | None = None
 ) -> str:
     """DuckDB twin of the distinct-token report (sketch + estimate +
-    exact comparison): identical poly hash, identical register/rank
-    arithmetic, identical dyadic indicator sum and correction branch."""
+    exact comparison), per ``key_col`` value when given: identical poly
+    hash, identical register/rank arithmetic, identical dyadic
+    indicator sum and correction branch."""
     a1, b1 = HLL_IDX
     a2, b2 = HLL_RANK
     poly = (
@@ -445,117 +470,32 @@ def hll_report_sql(
     )
     sq = f"((_poly * _poly) % {CM_P})"
     h2 = f"(({a2} * {sq} + {b2}) % {CM_P})"
+    k = "k, " if key_col else ""
+    k_in, k_out, tail = (
+        (f"{key_col} AS k,", f"est.k AS {key_col},",
+         "FROM est JOIN exact USING (k) ORDER BY est.k")
+        if key_col else ("", "", "FROM est CROSS JOIN exact")
+    )
+    # GROUP BY ALL with no key is the global aggregate: one row, also
+    # for an empty table
     return f"""
     WITH t AS MATERIALIZED (
-      SELECT unnest(regexp_split_to_array(trim(lower({text_col})), '\\s+')) AS w
-      FROM {table}),
-    hp AS MATERIALIZED (SELECT w, {poly} AS _poly FROM t),
-    cells AS (
-      SELECT CAST(({a1} * {sq} + {b1}) % {CM_P} % {m} AS INT) AS register,
-             CASE WHEN {h2} = 0 THEN {HLL_RANK_CAP}
-                  ELSE bit_count(({h2} & -{h2}) - 1) + 1 END AS rank
-      FROM hp),
-    sk AS (SELECT register, max(rank) AS max_rank FROM cells GROUP BY register),
-    agg AS (
-      SELECT count(*) AS present,
-             sum(1.0 / (CAST(1 AS BIGINT) << max_rank)) AS s_present
-      FROM sk),
-    est AS (
-      SELECT ({m} - present) AS v_zero,
-             CASE WHEN ({HLL_ALPHA * m * m!r} /
-                        (({m} - present) + coalesce(s_present, 0.0)))
-                       <= {2.5 * m!r}
-                   AND ({m} - present) > 0
-                  THEN {float(m)!r} * ln({float(m)!r} / ({m} - present))
-                  ELSE {HLL_ALPHA * m * m!r} /
-                       (({m} - present) + coalesce(s_present, 0.0))
-             END AS e
-      FROM agg),
-    exact AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS exact_ct FROM t)
-    SELECT CAST(v_zero AS BIGINT) AS v_zero,
-           CAST(floor(e + 0.5) AS BIGINT) AS est_ct,
-           exact_ct,
-           CASE WHEN exact_ct = 0 THEN CAST(0 AS BIGINT) ELSE
-             CAST(floor(abs(floor(e + 0.5) - exact_ct) * 10000.0 / exact_ct)
-                  AS BIGINT) END AS err_bp
-    FROM est CROSS JOIN exact
-    """
-
-
-def hll_sketch_by(
-    items: DataFrame, key_col: str, col: str = "w", m: int = HLL_M
-) -> DataFrame:
-    """GROUPED register tables: (key, register, max_rank) in one pass —
-    shuffle bounded at m rows PER KEY (the grouped approximate-distinct
-    workload: distinct users per day, distinct tokens per language).
-    Same merge algebra as the global sketch: MAX per (key, register),
-    so per-key sketches fold across partitions/days idempotently."""
-    poly = _cm_poly_sql(col)
-    register, rank = _hll_cell_exprs(col, m)
-    return (
-        items.selectExpr(f"{key_col} AS k", f"{poly} AS _poly")
-        .selectExpr("k", f"{register} AS register", f"{rank} AS rank")
-        .groupBy("k", "register")
-        .agg(F.max("rank").alias("max_rank"))
-    )
-
-
-def hll_estimate_by(sketch: DataFrame, m: int = HLL_M) -> DataFrame:
-    """Per-key estimates from a grouped register table — the same
-    harmonic-mean + linear-counting arithmetic as :func:`hll_estimate`
-    applied per key; one metadata-sized aggregation (<= m rows/key)."""
-    agg = sketch.groupBy("k").agg(
-        F.count(F.lit(1)).alias("present"),
-        F.sum(
-            F.expr("1.0 / CAST(shiftleft(CAST(1 AS BIGINT), max_rank) AS DOUBLE)")
-        ).alias("s_present"),
-    )
-    zeros = F.lit(m) - F.col("present")
-    s = zeros.cast("double") + F.coalesce(F.col("s_present"), F.lit(0.0))
-    e_raw = F.lit(HLL_ALPHA * m * m) / s
-    est = F.when(
-        (e_raw <= F.lit(2.5 * m)) & (zeros > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / zeros.cast("double")),
-    ).otherwise(e_raw)
-    return agg.select(
-        "k",
-        zeros.cast("long").alias("v_zero"),
-        F.floor(est + F.lit(0.5)).cast("long").alias("est_ct"),
-    )
-
-
-def hll_by_report_sql(
-    table: str, key_col: str, text_col: str = "text", m: int = HLL_M
-) -> str:
-    """DuckDB twin of the per-key distinct-token report (sketch +
-    estimate + exact per key)."""
-    a1, b1 = HLL_IDX
-    a2, b2 = HLL_RANK
-    poly = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "generate_series(CAST(1 AS BIGINT), CAST(length(w) AS BIGINT))), "
-        f"(acc, i) -> (acc * 131 + ascii(substr(w, CAST(i AS INT), 1))) % {CM_P})"
-    )
-    sq = f"((_poly * _poly) % {CM_P})"
-    h2 = f"(({a2} * {sq} + {b2}) % {CM_P})"
-    return f"""
-    WITH t AS MATERIALIZED (
-      SELECT {key_col} AS k,
+      SELECT {k_in}
              unnest(regexp_split_to_array(trim(lower({text_col})), '\\s+')) AS w
       FROM {table}),
-    hp AS MATERIALIZED (SELECT k, w, {poly} AS _poly FROM t),
+    hp AS MATERIALIZED (SELECT {k}w, {poly} AS _poly FROM t),
     cells AS (
-      SELECT k, CAST(({a1} * {sq} + {b1}) % {CM_P} % {m} AS INT) AS register,
+      SELECT {k}CAST(({a1} * {sq} + {b1}) % {CM_P} % {m} AS INT) AS register,
              CASE WHEN {h2} = 0 THEN {HLL_RANK_CAP}
                   ELSE bit_count(({h2} & -{h2}) - 1) + 1 END AS rank
       FROM hp),
-    sk AS (SELECT k, register, max(rank) AS max_rank FROM cells GROUP BY k, register),
+    sk AS (SELECT {k}register, max(rank) AS max_rank FROM cells GROUP BY ALL),
     agg AS (
-      SELECT k, count(*) AS present,
+      SELECT {k}count(*) AS present,
              sum(1.0 / (CAST(1 AS BIGINT) << max_rank)) AS s_present
-      FROM sk GROUP BY k),
+      FROM sk GROUP BY ALL),
     est AS (
-      SELECT k, ({m} - present) AS v_zero,
+      SELECT {k}({m} - present) AS v_zero,
              CASE WHEN ({HLL_ALPHA * m * m!r} /
                         (({m} - present) + coalesce(s_present, 0.0)))
                        <= {2.5 * m!r}
@@ -565,16 +505,15 @@ def hll_by_report_sql(
                        (({m} - present) + coalesce(s_present, 0.0))
              END AS e
       FROM agg),
-    exact AS (SELECT k, CAST(count(DISTINCT w) AS BIGINT) AS exact_ct FROM t GROUP BY k)
-    SELECT est.k AS {key_col},
+    exact AS (SELECT {k}CAST(count(DISTINCT w) AS BIGINT) AS exact_ct FROM t GROUP BY ALL)
+    SELECT {k_out}
            CAST(v_zero AS BIGINT) AS v_zero,
            CAST(floor(e + 0.5) AS BIGINT) AS est_ct,
            exact_ct,
            CASE WHEN exact_ct = 0 THEN CAST(0 AS BIGINT) ELSE
              CAST(floor(abs(floor(e + 0.5) - exact_ct) * 10000.0 / exact_ct)
                   AS BIGINT) END AS err_bp
-    FROM est JOIN exact USING (k)
-    ORDER BY est.k
+    {tail}
     """
 
 
@@ -602,7 +541,28 @@ def hll_by_report_sql(
 # preserving rather than bit-identical to a one-pass build (true of
 # the published q-digest merge as well, and the honest contract for
 # the streaming sink).
+#
+# Every operation is keyed by the frame it gets: a ``k_key`` column
+# means one sketch per key, each with its own n (a hot pipeline cannot
+# evict a quiet one's detail); without it, one global sketch. A build
+# is the re-thin of its leaf nodes (level log_u, one per non-empty
+# bucket), so ONE assembly over (key, level, idx, cnt) nodes serves
+# build and re-thin. It runs on the driver while one capped Arrow
+# collect of the nodes fits under ``functions.driver.DRIVER_ROWS``, as
+# Spark aggregates above it — the size-selected shape of
+# ``transitive_closure`` and ``dedup_groups``; the quantile scan is
+# selected the same way.
 # ---------------------------------------------------------------------------
+
+#: Schema of a dyadic quantile sketch frame; a keyed one puts ``k_key``
+#: (the key expression's type) first
+_QSKETCH_SCHEMA = StructType(
+    [
+        StructField("level", IntegerType(), True),
+        StructField("idx", LongType(), True),
+        StructField("cnt", LongType(), True),
+    ]
+)
 
 
 def _q_bucket_sql(col_sql: str, lo: int, hi: int, log_u: int) -> str:
@@ -623,121 +583,147 @@ def qsketch(
     hi: int,
     k: int = 64,
     log_u: int = 16,
+    key_col: str | None = None,
 ) -> DataFrame:
     """Build the sketch: (level, idx, cnt) rows, level 0 = root,
-    ``log_u`` = leaves. ONE pass over the data (the bucket groupBy);
-    every later shuffle is bounded by the 2^log_u bucket space, never
-    by the row count, and the result is <= (log_u+1)*(k-1) rows — the
-    shape that lets a 100 TB column ship its quantile summary as a
-    broadcast table. All arithmetic is exact int64."""
+    ``log_u`` = leaves; with ``key_col`` (a SQL expression) one sketch
+    per key value, (k_key, level, idx, cnt), a null key dropped. ONE
+    pass over the data (the bucket groupBy); everything after it is
+    bounded by keys x the 2^log_u bucket space, and each sketch is
+    <= (log_u+1)*(k-1) rows — the shape that lets a 100 TB column ship
+    its quantile summary as a broadcast table. All arithmetic is exact
+    int64."""
+    keys = ["k_key"] if key_col else []
     leaves = (
-        df.selectExpr(f"{_q_bucket_sql(col, lo, hi, log_u)} AS bucket")
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        df.selectExpr(
+            *([f"{key_col} AS k_key"] if key_col else []),
+            f"{_q_bucket_sql(col, lo, hi, log_u)} AS idx",
+        )
+        .groupBy(*keys, "idx")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        .select(*keys, F.lit(log_u).alias("level"), "idx", "cnt")
     )
-    # The leaf pass is the ONLY data-sized stage; its result is bounded
-    # at 2^log_u rows (65,536 at the default) BY CONSTRUCTION, so the
-    # q-digest closed form over it is metadata-sized work. Running it
-    # as 5 more Spark stages (node rollup, kept filter, deepest-kept
-    # join, final fold — the previous shape) cost ~6 stage round-trips
-    # of pure latency per sketch; assemble it DRIVER-SIDE instead with
-    # exact int64 numpy arithmetic (identical values — every step is
-    # integer shifts/sums/compares) and return the <= (log_u+1)*(k-1)
-    # sketch rows as a local frame. This also removes the pin() the
-    # multi-consumer plan needed — there is exactly one pass now.
-    import numpy as np
-
-    rows = leaves.collect()
-    b = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-    c = np.fromiter((r[1] for r in rows), dtype=np.int64, count=len(rows))
-    n = int(c.sum())
-    best = np.full(len(rows), -1, dtype=np.int64)
-    for level in range(log_u + 1):
-        idx = b >> (log_u - level)
-        uniq, inv = np.unique(idx, return_inverse=True)
-        sums = np.zeros(len(uniq), dtype=np.int64)
-        np.add.at(sums, inv, c)
-        # same kept rule as the SQL twin: subtree total * k > n
-        row_kept = (sums * k > n)[inv]
-        best = np.where(row_kept, np.int64(level), best)
-    # root is always kept for k > 1 (sub == n), so best >= 0 here
-    out_idx = b >> (log_u - best)
-    combined = (best << np.int64(log_u + 1)) | out_idx
-    uniq, inv = np.unique(combined, return_inverse=True)
-    cnt = np.zeros(len(uniq), dtype=np.int64)
-    np.add.at(cnt, inv, c)
-    data = [
-        (int(key >> (log_u + 1)), int(key & ((1 << (log_u + 1)) - 1)), int(v))
-        for key, v in zip(uniq.tolist(), cnt.tolist())
-    ]
-    return local_frame(df.sparkSession, data, _QSKETCH_SCHEMA)
+    return qsketch_rethin(leaves, k, log_u)
 
 
 def qsketch_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge by per-node residual sums. Values sit at ancestors of
+    """Merge by per-(key,)node residual sums. Values sit at ancestors of
     their true leaves in every part, a property unions preserve, so
     the merged sketch answers rank queries within the same error bound
     at n = sum(n_i); size is bounded by the union of kept nodes
     (re-tighten with :func:`qsketch_rethin` when parts accumulate)."""
-    return fold_keyed(sketches, ["level", "idx"], {"cnt": "sum"})
+    return fold_keyed(
+        sketches, [*_keys(sketches[0], "k_key"), "level", "idx"], {"cnt": "sum"}
+    )
 
 
 def qsketch_rethin(sketch: DataFrame, k: int = 64, log_u: int = 16) -> DataFrame:
-    """Re-tighten an accumulated (merged) sketch to <= (log_u+1)*(k-1)
-    rows with the SAME closed form used at build time: recompute each
-    node's subtree total from the residuals, keep the heavy nodes, and
-    push every residual up to its deepest kept ancestor (at or above
-    its own level — counts only ever move UP, so the error bound is
-    preserved). Runs entirely on sketch-sized inputs."""
-    rows = pin(sketch.select("level", "idx", "cnt"))  # feeds 3 consumers
-    total = rows.agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n"))
-    anc = rows.select(
-        F.explode(F.sequence(F.lit(0), F.col("level"))).alias("alevel"),
-        "level",
-        "idx",
-        "cnt",
-    ).select(
-        F.col("alevel"),
-        F.expr("shiftright(idx, level - alevel)").alias("aidx"),
-        "cnt",
+    """Re-tighten (merged) nodes to <= (log_u+1)*(k-1) rows per key with
+    the build's closed form: recompute each node's subtree total from
+    the residuals, keep the heavy nodes, and push every residual up to
+    its deepest kept ancestor-or-self (counts only ever move UP, so the
+    error bound is preserved). Sketch-sized work: on the driver while
+    one capped collect of the nodes fits, Spark aggregates above it.
+    Levels come from the nodes; ``log_u`` names the tree they are in."""
+    keys = _keys(sketch, "k_key")
+    nodes = sketch.select(*keys, "level", "idx", "cnt")
+    table = capped_table(nodes)
+    if table is None:
+        return _spark_assemble(pin(nodes), keys, k)
+    schema = StructType(
+        [StructField(c, nodes.schema[c].dataType) for c in keys]
+        + _QSKETCH_SCHEMA.fields
     )
-    kept = (
-        anc.groupBy(F.col("alevel").alias("level"), F.col("aidx").alias("idx"))
-        .agg(F.sum("cnt").alias("sub"))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("sub") * k > F.col("n"))
-        .select("level", "idx")
+    return local_frame(sketch.sparkSession, _driver_assemble(table, keys, k), schema)
+
+
+def _driver_assemble(table, keys: list[str], k: int) -> list[tuple]:
+    """The closed form over an Arrow (key..., level, idx, cnt) node
+    table in exact int64 numpy: for each level, every node's ancestor
+    there, summed per (key, ancestor) into subtree totals; a node's
+    home is the deepest level whose ancestor is kept (sub * k > its
+    key's n). Rows with a null key are dropped, as the Spark join
+    drops them."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if keys:
+        table = table.filter(pc.is_valid(table[keys[0]]))
+        enc = table[keys[0]].combine_chunks().dictionary_encode()
+        key_of, g = enc.dictionary.to_pylist(), enc.indices.to_numpy().astype(np.int64)
+    else:
+        g = np.zeros(table.num_rows, dtype=np.int64)
+    lvl, idx, cnt = (
+        np.asarray(table[c].to_numpy(), dtype=np.int64) for c in ("level", "idx", "cnt")
     )
-    deepest = (
-        rows.select(
-            F.explode(F.sequence(F.lit(0), F.col("level"))).alias("alevel"),
-            "level",
-            "idx",
-            "cnt",
+    n = np.zeros(int(g.max(initial=-1)) + 1, dtype=np.int64)
+    np.add.at(n, g, cnt)
+    home = np.full(len(idx), -1, dtype=np.int64)
+    for level in range(int(lvl.max(initial=-1)) + 1):
+        at = np.flatnonzero(lvl >= level)
+        anc = (g[at] << level) | (idx[at] >> (lvl[at] - level))
+        uniq, inv = np.unique(anc, return_inverse=True)
+        sub = np.zeros(len(uniq), dtype=np.int64)
+        np.add.at(sub, inv, cnt[at])
+        home[at[sub[inv] * k > n[g[at]]]] = level
+    live = home >= 0  # the root is kept whenever n > 0 and k > 1
+    out = np.stack([g, home, idx >> (lvl - home)], axis=1)[live]
+    uniq, inv = np.unique(out, axis=0, return_inverse=True)
+    sums = np.zeros(len(uniq), dtype=np.int64)
+    np.add.at(sums, inv.reshape(-1), cnt[live])
+    return [
+        (*([key_of[a]] if keys else []), b, c, v)
+        for (a, b, c), v in zip(uniq.tolist(), sums.tolist())
+        if v > 0
+    ]
+
+
+def _spark_assemble(nodes: DataFrame, keys: list[str], k: int) -> DataFrame:
+    """The closed form as Spark aggregates, for node sets past the
+    driver cap. Every node's ancestors-or-self give the subtree totals
+    ``sub``; since sub(parent) >= sub(child), the kept set is closed
+    under ancestors, so a kept node's deepest-kept residual is its own
+    subtree minus its kept children's,
+
+        cnt(X) = sub(X) - sum(sub(Y) for kept children Y of X),
+
+    with cnt = 0 nodes dropped: one exploded ancestor aggregate (which
+    keeps map-side partial aggregation) and sketch-sized work after it."""
+    sub = (
+        nodes.select(
+            *keys, F.explode(F.sequence(F.lit(0), F.col("level"))).alias("a"),
+            "level", "idx", "cnt",
         )
         .select(
-            "alevel",
-            F.expr("shiftright(idx, level - alevel)").alias("aidx"),
-            "level",
-            "idx",
-            "cnt",
+            *keys, F.col("a").alias("level"),
+            F.expr("shiftright(idx, level - a)").alias("idx"), "cnt",
         )
-        .join(
-            kept,
-            (F.col("alevel") == kept["level"]) & (F.col("aidx") == kept["idx"]),
+        .groupBy(*keys, "level", "idx")
+        .agg(F.sum("cnt").cast("long").alias("sub"))
+    )
+    # the level-0 root IS the (per-key) total
+    n = F.broadcast(sub.filter(F.col("level") == 0).select(*keys, F.col("sub").alias("n")))
+    kept = (
+        (sub.join(n, keys) if keys else sub.crossJoin(n))
+        .filter(F.col("sub") * k > F.col("n"))
+        .select(*keys, "level", "idx", "sub")
+    )
+    child = (
+        kept.filter(F.col("level") > 0)
+        .select(
+            *keys, (F.col("level") - 1).alias("level"),
+            F.expr("shiftright(idx, 1)").alias("idx"), "sub",
         )
-        .drop(kept["level"]).drop(kept["idx"])
-        .groupBy(F.col("level").alias("olevel"), F.col("idx").alias("oidx"))
-        .agg(F.max("alevel").alias("dlevel"), F.max("cnt").alias("cnt"))
+        .groupBy(*keys, "level", "idx")
+        .agg(F.sum("sub").cast("long").alias("csub"))
     )
     return (
-        deepest.select(
-            F.col("dlevel").alias("level"),
-            F.expr("shiftright(oidx, olevel - dlevel)").alias("idx"),
-            "cnt",
+        kept.join(child, [*keys, "level", "idx"], "left")
+        .select(
+            *keys, "level", "idx",
+            (F.col("sub") - F.coalesce(F.col("csub"), F.lit(0))).cast("long").alias("cnt"),
         )
-        .groupBy("level", "idx")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+        .filter(F.col("cnt") > 0)
     )
 
 
@@ -748,357 +734,89 @@ def qsketch_quantiles(
     hi: int,
     log_u: int = 16,
 ) -> DataFrame:
-    """Quantile estimates from the sketch alone: for each q (basis
-    points), rank r = ceil(q*n/10000), nodes scanned in increasing
+    """Quantile estimates from the sketch alone, (q_bp, n, est) — per
+    key, (k_key, q_bp, n, est), for a keyed sketch — ordered by key and
+    q: for each q (basis points), nodes scanned in increasing
     range-upper-bound order (ties: deeper/smaller ranges first — the
     canonical q-digest query order), answer = the upper value edge of
-    the first node where the running count reaches r. Exact integer
-    arithmetic end to end; cost is sketch-sized, not data-sized."""
-    u = 1 << log_u
-    span = hi - lo + 1
-    # A sketch is <= (log_u+1)*(k-1) rows BY BOUND (and the build now
-    # returns a local frame), so the rank scan is driver-sized work:
-    # collecting it and walking the canonical q-digest order in exact
-    # Python integers replaces a crossJoin+window+groupBy plan (~4
-    # stages of latency per query) with one metadata collect. Same
-    # arithmetic: rank rule cum*10000 >= q*n, nodes in (hib asc, level
-    # desc) order, est = lo + ((hib+1)*span) DIV u - 1.
-    nodes = sketch.select("level", "idx", "cnt").collect()
-    out_schema = StructType(
-        [
-            StructField("q_bp", IntegerType(), True),
-            StructField("n", LongType(), True),
-            StructField("est", LongType(), True),
+    the first node where the running count reaches q*n/10000. Exact
+    integer arithmetic end to end; sketch-sized work, on the driver
+    while one capped collect of the nodes fits, Spark windows above."""
+    keys = _keys(sketch, "k_key")
+    u, span = 1 << log_u, hi - lo + 1
+    qs = sorted({int(q) for q in q_bps})
+    cols = capped_columns(sketch.select(*keys, "level", "idx", "cnt"))
+    if cols is None:
+        return _spark_scan(sketch, keys, qs, lo, hi, log_u)
+    groups: dict[tuple, list] = {}
+    for *key, level, idx, cnt in zip(*cols):
+        groups.setdefault(tuple(key), []).append(
+            (((idx + 1) << (log_u - level)) - 1, -level, cnt)
+        )
+    data = []
+    for key in sorted(groups, key=lambda t: [(v is not None, v) for v in t]):
+        nodes = sorted(groups[key])
+        n = sum(c for _, _, c in nodes)
+        for q in qs:
+            cum = 0
+            for hib, _, cnt in nodes:
+                cum += cnt
+                if cum * 10000 >= q * n:
+                    data.append((*key, q, n, lo + ((hib + 1) * span) // u - 1))
+                    break
+    schema = StructType(
+        [StructField(c, sketch.schema[c].dataType) for c in keys]
+        + [
+            StructField("q_bp", IntegerType()),
+            StructField("n", LongType()),
+            StructField("est", LongType()),
         ]
     )
-    n = sum(r["cnt"] for r in nodes)
-    ordered = sorted(
-        (
-            ((r["idx"] + 1) * (1 << (log_u - r["level"])) - 1, -r["level"], r["cnt"])
-            for r in nodes
-        ),
+    return local_frame(sketch.sparkSession, data, schema)
+
+
+def _spark_scan(
+    sketch: DataFrame, keys: list[str], qs: list[int], lo: int, hi: int, log_u: int
+) -> DataFrame:
+    """The quantile scan as Spark windows over each key's nodes (the
+    (per-key) total a window column), for sketches past the driver cap."""
+    u, span = 1 << log_u, hi - lo + 1
+    ordered = sketch.select(
+        *keys, "cnt", "level",
+        F.expr(f"(idx + 1) * shiftleft(1L, {log_u} - level) - 1").alias("hib"),
+    ).withColumn("n", F.sum("cnt").over(Window.partitionBy(*keys)).cast("long"))
+    w = Window.partitionBy(*keys).orderBy(F.col("hib").asc(), F.col("level").desc())
+    cum = ordered.select(*keys, "hib", "n", F.sum("cnt").over(w).alias("cum"))
+    q = local_frame(sketch.sparkSession, [(q,) for q in qs], "q_bp int")
+    return (
+        cum.crossJoin(F.broadcast(q))
+        .filter(F.col("cum") * 10000 >= F.col("q_bp") * F.col("n"))
+        .groupBy(*keys, "q_bp", "n")
+        .agg(F.min("hib").alias("hib"))
+        .select(
+            *keys, "q_bp", "n",
+            F.expr(f"CAST({lo} + ((hib + 1) * {span}) DIV {u} - 1 AS BIGINT)").alias("est"),
+        )
+        .orderBy(*keys, "q_bp")
     )
-    data = []
-    for q in sorted({int(q) for q in q_bps}):
-        cum = 0
-        for hib, _neg_level, cnt in ordered:
-            cum += cnt
-            if cum * 10000 >= q * n:
-                data.append((q, n, lo + ((hib + 1) * span) // u - 1))
-                break
-    return local_frame(sketch.sparkSession, data, out_schema)
 
 
 def _qsketch_nodes_sql(
-    table: str, col_sql: str, lo: int, hi: int, k: int, log_u: int
+    table: str, col_sql: str, lo: int, hi: int, k: int, log_u: int, key_sql: str
 ) -> str:
-    """Subquery producing ONE sketch's (level, idx, cnt) rows from
-    ``table`` — the build half of the twin, composable so merge-path
-    oracles can union several of these before the quantile scan."""
+    """Subquery producing one sketch's (k_key, level, idx, cnt) rows
+    per ``key_sql`` value from ``table`` (a constant key: one global
+    sketch) — the build half of the twin, written as the definition
+    itself: each leaf joined to its kept ancestors, its count sent to
+    the deepest."""
     u = 1 << log_u
     span = hi - lo + 1
     return f"""(
     WITH src AS (
-      SELECT greatest(0, least({u - 1},
-               (CAST({col_sql} AS BIGINT) - {lo}) * {u} // {span})) AS bucket
-      FROM {table}),
-    leaves AS MATERIALIZED (
-      SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM src GROUP BY bucket),
-    tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM leaves),
-    lv AS (SELECT unnest(generate_series(0, {log_u})) AS level),
-    nodes AS (
-      SELECT level, bucket >> ({log_u} - level) AS idx,
-             CAST(sum(c) AS BIGINT) AS sub
-      FROM leaves, lv GROUP BY 1, 2),
-    kept AS (
-      SELECT level, idx FROM nodes, tot WHERE sub * {k} > n),
-    deepest AS (
-      SELECT l.bucket, max(kp.level) AS dlevel, max(l.c) AS c
-      FROM leaves l JOIN kept kp
-        ON kp.idx = l.bucket >> ({log_u} - kp.level)
-      GROUP BY l.bucket)
-    SELECT dlevel AS level, bucket >> ({log_u} - dlevel) AS idx,
-           CAST(sum(c) AS BIGINT) AS cnt
-    FROM deepest GROUP BY 1, 2
-    )"""
-
-
-def _qsketch_quantiles_sql(
-    nodes_sql: str, q_bps: list[int], lo: int, hi: int, log_u: int
-) -> str:
-    """Quantile scan over a (level, idx, cnt) node subquery — the query
-    half of the twin (same scan order as qsketch_quantiles)."""
-    u = 1 << log_u
-    span = hi - lo + 1
-    qs_rows = ", ".join(f"({int(q)})" for q in q_bps)
-    return f"""
-    WITH sk AS MATERIALIZED (SELECT * FROM {nodes_sql}),
-    tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM sk),
-    ordered AS (
-      SELECT (idx + 1) * (CAST(1 AS BIGINT) << ({log_u} - level)) - 1 AS hib,
-             level, cnt
-      FROM sk),
-    cum AS (
-      SELECT hib, sum(cnt) OVER (ORDER BY hib ASC, level DESC) AS cum
-      FROM ordered),
-    qs(q_bp) AS (VALUES {qs_rows}),
-    sel AS (
-      SELECT q_bp, n, min(hib) AS hib
-      FROM qs, cum, tot WHERE cum * 10000 >= q_bp * n GROUP BY 1, 2)
-    SELECT CAST(q_bp AS INT) AS q_bp, n,
-           CAST({lo} + ((hib + 1) * {span}) // {u} - 1 AS BIGINT) AS est
-    FROM sel ORDER BY q_bp
-    """
-
-
-def qsketch_report_sql(
-    table: str,
-    col_sql: str,
-    lo: int,
-    hi: int,
-    q_bps: list[int],
-    k: int = 64,
-    log_u: int = 16,
-) -> str:
-    """DuckDB twin of qsketch + qsketch_quantiles: identical integer
-    quantization, identical closed-form heavy-node keep rule, identical
-    deepest-kept-ancestor assignment and query scan order — the sketch
-    pipeline is value-checked end to end, not just its error bound."""
-    return _qsketch_quantiles_sql(
-        _qsketch_nodes_sql(table, col_sql, lo, hi, k, log_u),
-        q_bps, lo, hi, log_u,
-    )
-
-
-def qsketch_merge_report_sql(
-    part_tables: list[str],
-    col_sql: str,
-    lo: int,
-    hi: int,
-    q_bps: list[int],
-    k: int = 64,
-    log_u: int = 16,
-) -> str:
-    """DuckDB twin of the MERGE path: one sketch per part, node sums,
-    then the shared quantile scan — value-checks the merge algebra
-    itself, not just the one-pass build."""
-    parts = " UNION ALL ".join(
-        f"SELECT * FROM {_qsketch_nodes_sql(t, col_sql, lo, hi, k, log_u)}"
-        for t in part_tables
-    )
-    merged = (
-        f"(SELECT level, idx, CAST(sum(cnt) AS BIGINT) AS cnt "
-        f"FROM ({parts}) GROUP BY 1, 2)"
-    )
-    return _qsketch_quantiles_sql(merged, q_bps, lo, hi, log_u)
-
-
-def qsketch_by(
-    df: DataFrame,
-    key_col: str,
-    col: str,
-    lo: int,
-    hi: int,
-    k: int = 64,
-    log_u: int = 16,
-) -> DataFrame:
-    """GROUPED quantile sketches: (k_key, level, idx, cnt) — the same
-    closed form as :func:`qsketch` applied per key, with the heavy-node
-    rule evaluated against EACH key's own n (a hot pipeline and a quiet
-    one both get <= (log_u+1)*(k-1) rows). One pass over the data; all
-    later shuffles bounded by keys x the bucket space. The per-key SLA
-    percentile workload (run-duration p95 per pipeline over an
-    unbounded log) at bounded state."""
-    u = 1 << log_u
-    leaves = (
-        df.selectExpr(
-            f"{key_col} AS k_key",
-            f"{_q_bucket_sql(col, lo, hi, log_u)} AS bucket",
-        )
-        .groupBy("k_key", "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    # NOTE (r13 A/B): a window-based single-exchange rewrite (one
-    # repartition(k_key), totals and subtree sums as window columns)
-    # was measured and REVERTED — it removed ~6 exchanges of bounded
-    # data but replaced hash aggregation of the 17x-exploded ancestor
-    # rows with two window SORTS over them, and regressed
-    # qsketch_sla_events 2.1 -> 3.1 s. The groupBy shape keeps
-    # map-side partial aggregation on the exploded rows, which is the
-    # scale-dominant cost; the pinned leaf pass already bounds every
-    # downstream shuffle.
-    #
-    # A second r13 A/B — pin(leaves).repartition("k_key"), which makes
-    # every downstream groupBy/join/window exchange-free because
-    # hashpartitioning(k_key) satisfies all their (k_key, ...)
-    # ClusteredDistributions — was ALSO measured and REVERTED
-    # (qsketch_sla_events ~2.8 vs ~3.2 s median, monitor pane likewise
-    # ~5% slower): with a LOW-cardinality key (5 pipelines) the
-    # key-only partitioning collapses the 17x-exploded ancestor
-    # aggregate from 32-way to 5-way parallelism, which costs more
-    # than the removed bounded exchanges saved (guide §2.5's
-    # too-few-distinct-keys trap). The composite-key exchanges below
-    # are what SPREADS that work. (Note: a pre-pin repartition is lost
-    # entirely — localCheckpoint under AQE reports
-    # UnknownPartitioning.)
-    # r14 rewrite (guide §2.4, VERDICT r13 #2): the q-digest assembly
-    # used to re-explode the leaves x(log_u+1) a SECOND time and join
-    # them back to the kept node set to find each leaf's deepest kept
-    # ancestor. That whole pass is redundant: the kept set is closed
-    # under ancestors (sub(parent) >= sub(child), so sub*k > n
-    # propagates upward), which makes the deepest-kept-ancestor
-    # assignment computable from the kept nodes alone —
-    #
-    #   cnt(X) = sub(X) - sum(sub(Y) for kept CHILDREN Y of X)
-    #
-    # (a leaf under a kept child has its deepest kept ancestor inside
-    # that child's subtree; a leaf under no kept child bottoms out at X
-    # because kept is ancestor-closed), with cnt = 0 nodes dropped
-    # exactly as the old shape never emitted them. All sums are the
-    # same int64 leaf counts, so values are bit-identical (parity
-    # pinned in test_sketch's per-key isolation test and the oracle).
-    # Plan effect: the second x(log_u+1) explode of the leaves, its
-    # join against kept, and the groupBy(k_key, bucket) re-aggregation
-    # are gone — the only data-sized work left is the single leaf pass
-    # and ONE exploded ancestor aggregate (which keeps map-side partial
-    # aggregation, the scale-dominant cost the r13 notes identified);
-    # everything after it is sketch-sized. The leaves pin stays: the
-    # totals/kept split below re-derives the nodes aggregate per
-    # consumer (AQE exchange reuse dedupes the shuffle at runtime, but
-    # the pin makes the corpus pass provably-once in the static plan
-    # too, and the pinned variant A/B-measured faster — sla min-of-6
-    # 2.86 vs 2.31 s against the unpinned form).
-    # (pinning `nodes` instead — one bigger pin, explode provably once —
-    # was A/B-measured a wash at bench scale; the leaves pin is the
-    # smaller executor-storage footprint at warehouse scale, so it
-    # stays. The 2-3 bounded re-aggregations of `nodes` under the
-    # totals/kept consumers are sketch-assembly-sized.)
-    leaves = pin(leaves)
-    lvl = F.explode(F.sequence(F.lit(0), F.lit(log_u))).alias("level")
-    nodes = (
-        leaves.select("k_key", lvl, "bucket", "c")
-        .select(
-            "k_key",
-            "level",
-            F.expr(f"shiftright(bucket, {log_u} - level)").alias("idx"),
-            "c",
-        )
-        .groupBy("k_key", "level", "idx")
-        .agg(F.sum("c").cast("long").alias("sub"))
-    )
-    # the level-0 root IS the per-key total (idx = 0 for every bucket)
-    totals = nodes.filter(F.col("level") == 0).select(
-        "k_key", F.col("sub").alias("n")
-    )
-    kept = (
-        nodes.join(F.broadcast(totals), "k_key")
-        .filter(F.col("sub") * k > F.col("n"))
-        .select("k_key", "level", "idx", "sub")
-    )
-    child = (
-        kept.filter(F.col("level") > 0)
-        .select(
-            "k_key",
-            (F.col("level") - 1).alias("level"),
-            F.expr("shiftright(idx, 1)").alias("idx"),
-            "sub",
-        )
-        .groupBy("k_key", "level", "idx")
-        .agg(F.sum("sub").cast("long").alias("csub"))
-    )
-    return (
-        kept.join(child, ["k_key", "level", "idx"], "left")
-        .select(
-            "k_key",
-            "level",
-            "idx",
-            (F.col("sub") - F.coalesce(F.col("csub"), F.lit(0)))
-            .cast("long")
-            .alias("cnt"),
-        )
-        .filter(F.col("cnt") > 0)
-    )
-
-
-def qsketch_quantiles_by(
-    sketch: DataFrame,
-    q_bps: list[int],
-    lo: int,
-    hi: int,
-    log_u: int = 16,
-) -> DataFrame:
-    """Per-key quantile estimates from a grouped sketch: the q-digest
-    scan order (range upper bound ASC, deeper first) evaluated inside
-    each key's partition — sketch-sized work per key.
-
-    NOTE (round-13 ADVICE): the shuffle-free window claim below holds
-    for sketches FRESHLY BUILT by :func:`qsketch_by` (hashpartitioned
-    on k_key by its final groupBy). Stored or merged sketches read
-    back from parquet carry no such partitioning — there the windows
-    add one sort+shuffle of the (bounded, sketch-sized) input that the
-    old groupBy+broadcast-join shape also effectively paid; values are
-    identical either way, and the input is bounded at keys x
-    (log_u+1)(k-1) rows, so the extra exchange is metadata-sized."""
-    u = 1 << log_u
-    span = hi - lo + 1
-    # per-key total as a window column (not groupBy + broadcast join):
-    # a sketch produced by qsketch_by is already hashpartitioned on
-    # k_key, so BOTH windows and the groupBy below satisfy their
-    # clustering from that one partitioning — the whole scan runs
-    # shuffle-free until the final ORDER BY (identical int64 sums).
-    ordered = sketch.select(
-        "k_key",
-        "cnt",
-        F.expr(f"(idx + 1) * shiftleft(1L, {log_u} - level) - 1").alias("hib"),
-        "level",
-    ).withColumn(
-        "n", F.sum("cnt").over(Window.partitionBy("k_key")).cast("long")
-    )
-    w = Window.partitionBy("k_key").orderBy(
-        F.col("hib").asc(), F.col("level").desc()
-    )
-    cum = ordered.select(
-        "k_key", "hib", "n", F.sum("cnt").over(w).alias("cum")
-    )
-    qs = local_frame(ordered.sparkSession, [(int(q),) for q in q_bps], "q_bp int")
-    return (
-        cum.crossJoin(F.broadcast(qs))
-        .filter(F.col("cum") * 10000 >= F.col("q_bp") * F.col("n"))
-        .groupBy("k_key", "q_bp", "n")
-        .agg(F.min("hib").alias("hib"))
-        .select(
-            "k_key",
-            "q_bp",
-            "n",
-            F.expr(
-                f"CAST({lo} + ((hib + 1) * {span}) DIV {u} - 1 AS BIGINT)"
-            ).alias("est"),
-        )
-        .orderBy("k_key", "q_bp")
-    )
-
-
-def qsketch_by_report_sql(
-    table_sql: str,
-    key_col: str,
-    col_sql: str,
-    lo: int,
-    hi: int,
-    q_bps: list[int],
-    k: int = 64,
-    log_u: int = 16,
-) -> str:
-    """DuckDB twin of qsketch_by + qsketch_quantiles_by — the grouped
-    closed form, value-checked per key."""
-    u = 1 << log_u
-    span = hi - lo + 1
-    qs_rows = ", ".join(f"({int(q)})" for q in q_bps)
-    return f"""
-    WITH src AS (
-      SELECT {key_col} AS k_key,
+      SELECT {key_sql} AS k_key,
              greatest(0, least({u - 1},
                (CAST({col_sql} AS BIGINT) - {lo}) * {u} // {span})) AS bucket
-      FROM {table_sql}),
+      FROM {table}),
     leaves AS MATERIALIZED (
       SELECT k_key, bucket, CAST(count(*) AS BIGINT) AS c
       FROM src GROUP BY 1, 2),
@@ -1117,11 +835,42 @@ def qsketch_by_report_sql(
       FROM leaves l JOIN kept kp
         ON kp.k_key = l.k_key
        AND kp.idx = l.bucket >> ({log_u} - kp.level)
-      GROUP BY 1, 2),
-    sk AS (
-      SELECT k_key, dlevel AS level, bucket >> ({log_u} - dlevel) AS idx,
-             CAST(sum(c) AS BIGINT) AS cnt
-      FROM deepest GROUP BY 1, 2, 3),
+      GROUP BY 1, 2)
+    SELECT k_key, dlevel AS level, bucket >> ({log_u} - dlevel) AS idx,
+           CAST(sum(c) AS BIGINT) AS cnt
+    FROM deepest GROUP BY 1, 2, 3
+    )"""
+
+
+def qsketch_report_sql(
+    table: str | list[str],
+    col_sql: str,
+    lo: int,
+    hi: int,
+    q_bps: list[int],
+    k: int = 64,
+    log_u: int = 16,
+    key_col: str | None = None,
+) -> str:
+    """DuckDB twin of qsketch + qsketch_merge + qsketch_quantiles,
+    per ``key_col`` value when given: identical integer quantization,
+    identical heavy-node keep rule and query scan order — the sketch
+    pipeline is value-checked end to end, not just its error bound.
+    ``table`` may be a list of part tables: one sketch per part, summed
+    per node before the scan, which value-checks the merge algebra."""
+    u = 1 << log_u
+    span = hi - lo + 1
+    parts = " UNION ALL ".join(
+        f"SELECT * FROM {_qsketch_nodes_sql(t, col_sql, lo, hi, k, log_u, key_col or '0')}"
+        for t in ([table] if isinstance(table, str) else table)
+    )
+    qs_rows = ", ".join(f"({int(q)})" for q in q_bps)
+    k_out = "k_key, " if key_col else ""
+    return f"""
+    WITH sk AS MATERIALIZED (
+      SELECT k_key, level, idx, CAST(sum(cnt) AS BIGINT) AS cnt
+      FROM ({parts}) GROUP BY 1, 2, 3),
+    tot AS (SELECT k_key, CAST(sum(cnt) AS BIGINT) AS n FROM sk GROUP BY 1),
     ordered AS (
       SELECT k_key,
              (idx + 1) * (CAST(1 AS BIGINT) << ({log_u} - level)) - 1 AS hib,
@@ -1137,7 +886,7 @@ def qsketch_by_report_sql(
       SELECT cum.k_key, q_bp, n, min(hib) AS hib
       FROM qs, cum JOIN tot ON cum.k_key = tot.k_key
       WHERE cum * 10000 >= q_bp * n GROUP BY 1, 2, 3)
-    SELECT k_key, CAST(q_bp AS INT) AS q_bp, n,
+    SELECT {k_out}CAST(q_bp AS INT) AS q_bp, n,
            CAST({lo} + ((hib + 1) * {span}) // {u} - 1 AS BIGINT) AS est
     FROM sel ORDER BY k_key, q_bp
     """

@@ -3525,9 +3525,7 @@ def qsketch_merged_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return qsketch_quantiles(merged, _QS_BPS, lo=0, hi=(1 << 24) - 1, log_u=16)
 
 
-from ..operators.sketch import qsketch_merge_report_sql as _qsm_sql  # noqa: E402
-
-ORACLES["qsketch_merged_lineitem"] = _qsm_sql(
+ORACLES["qsketch_merged_lineitem"] = _qs_sql(
     [
         "(SELECT * FROM lineitem WHERE l_linenumber % 2 = 0)",
         "(SELECT * FROM lineitem WHERE l_linenumber % 2 = 1)",
@@ -3554,31 +3552,29 @@ def qsketch_sla_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles over an unbounded run log at bounded state). Duration
     in whole seconds via unix_micros (cross-engine-exact; plain
     unix_timestamp truncates differently than DuckDB's epoch())."""
-    from ..operators.sketch import qsketch_by, qsketch_quantiles_by
+    from ..operators.sketch import qsketch, qsketch_quantiles
 
     runs = _events_run_rollup(load_table(spark, sf_dir, "events"))
     dur = runs.selectExpr(
         "pipeline_key",
         "(unix_micros(end_ts) - unix_micros(start_ts)) DIV 1000000 AS dur_s",
     )
-    sk = qsketch_by(dur, "pipeline_key", "dur_s", lo=0, hi=_QSB_HI)
-    return qsketch_quantiles_by(sk, _QSB_BPS, lo=0, hi=_QSB_HI).select(
+    sk = qsketch(dur, "dur_s", lo=0, hi=_QSB_HI, key_col="pipeline_key")
+    return qsketch_quantiles(sk, _QSB_BPS, lo=0, hi=_QSB_HI).select(
         F.col("k_key").alias("pipeline_key"), "q_bp", "n", "est"
     )
 
 
-from ..operators.sketch import qsketch_by_report_sql as _qsb_sql  # noqa: E402
-
 ORACLES["qsketch_sla_events"] = (
     "SELECT k_key AS pipeline_key, q_bp, n, est FROM ("
-    + _qsb_sql(
+    + _qs_sql(
         f"(SELECT pipeline_key, (epoch_us(end_ts) - epoch_us(start_ts)) // 1000000"
         f" AS dur_s FROM ({_RUNS_SQL}))",
-        "pipeline_key",
         "dur_s",
         lo=0,
         hi=_QSB_HI,
         q_bps=_QSB_BPS,
+        key_col="pipeline_key",
     )
     + ") ORDER BY pipeline_key, q_bp"
 )
@@ -3633,7 +3629,7 @@ def hll_distinct_by_lang_documents(spark: SparkSession, sf_dir: str) -> DataFram
     (key, register), so per-partition/per-day sketches fold
     idempotently; estimates and the exact comparison are value-checked
     per key on DuckDB."""
-    from ..operators.sketch import hll_estimate_by, hll_sketch_by
+    from ..operators.sketch import hll_estimate, hll_sketch
 
     docs = load_table(spark, sf_dir, "documents")
     # tokenize carrying the key inline — no corpus re-join for the key
@@ -3641,7 +3637,7 @@ def hll_distinct_by_lang_documents(spark: SparkSession, sf_dir: str) -> DataFram
         "lang",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
     )
-    est = hll_estimate_by(hll_sketch_by(toks, "lang"))
+    est = hll_estimate(hll_sketch(toks, key_col="lang"))
     exact = toks.groupBy(F.col("lang").alias("k")).agg(
         F.countDistinct("w").cast("long").alias("exact_ct")
     )
@@ -3660,9 +3656,7 @@ def hll_distinct_by_lang_documents(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-from ..operators.sketch import hll_by_report_sql as _hll_by_sql  # noqa: E402
-
-ORACLES["hll_distinct_by_lang_documents"] = _hll_by_sql("documents", "lang")
+ORACLES["hll_distinct_by_lang_documents"] = _hll_sql("documents", key_col="lang")
 
 
 @register("topk_bruteforce_embeddings", _sim.topk_bruteforce_sql("embeddings", k=10, query_id=0))
@@ -4693,7 +4687,7 @@ def monitor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`streaming.monitor.monitor_pane`, shared with the pane served
     from the continuous stores. Screen operators and twins unchanged,
     so every screen's rows are identical to its standalone query."""
-    from ..operators.sketch import qsketch_by
+    from ..operators.sketch import qsketch
 
     # both pins are materialized inside the scope; nothing reads ev after
     with pinned(load_table(spark, sf_dir, "events")) as ev:
@@ -4713,7 +4707,7 @@ def monitor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pipeline_key", "start_ts",
             (F.col("final_status") == "FAILED").alias("failed"),
         ),
-        qsketch_by(dur, "pipeline_key", "dur_s", lo=0, hi=_QSB_HI),
+        qsketch(dur, "dur_s", lo=0, hi=_QSB_HI, key_col="pipeline_key"),
         qs_hi=_QSB_HI,
     )
 

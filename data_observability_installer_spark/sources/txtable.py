@@ -567,17 +567,22 @@ def prune_files(
 def _publish(
     path: str,
     manifest: dict,
-    parent_version: int,
+    parent: dict | None,
     backend: CommitBackend | None = None,
 ) -> int:
-    """ONE CAS attempt to commit ``manifest`` as ``parent_version + 1``.
-    Claiming exactly parent+1 (not "next free number") is what makes
-    this optimistic concurrency: a manifest derived from head v is only
+    """ONE CAS attempt to commit ``manifest`` as the version after
+    ``parent``, the manifest the caller read and derived it from (None,
+    or a version-0 stand-in, for a table with no commits yet). Claiming
+    exactly parent+1 (not "next free number") is what makes this
+    optimistic concurrency: a manifest derived from head v is only
     allowed to become v+1, so any interleaving commit forces
     :class:`VersionClaimedError` and the operation rebuilds from the
-    new head. The retry loop deliberately does NOT live here — a
-    publish-level retry cannot know how to recompute the file list
-    (round-8 judge-reproduced lost update)."""
+    new head — re-reading it, so the carries below always come from
+    the manifest the claim is checked against. The retry loop
+    deliberately does NOT live here — a publish-level retry cannot know
+    how to recompute the file list (round-8 judge-reproduced lost
+    update)."""
+    parent_version = (parent or {}).get("version", 0)
     v = parent_version + 1
     manifest["version"] = v
     manifest["parent"] = parent_version if parent_version else None
@@ -586,7 +591,7 @@ def _publish(
     # stream_appends) so the exactly-once replay guard survives vacuum:
     # retained manifests may no longer include the commit that carried a
     # given batch_id, but the head always carries the max ever committed
-    pm = read_manifest(path, parent_version) if parent_version else {}
+    pm = parent if parent_version else {}
     inherited = pm.get("max_batch_id")
     # column mapping (rename/drop evolution) rides along on EVERY
     # commit once active: logical-name -> field-id, per-id physical
@@ -800,7 +805,7 @@ def rename_column(
                 for fn, s in m["stats"].items()
             }
         try:
-            return _publish(path, manifest, m["version"], backend)
+            return _publish(path, manifest, m, backend)
         except VersionClaimedError:
             continue  # metadata-only: rebuild from the racer's head
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
@@ -849,7 +854,7 @@ def drop_column(
                 for fn, s in m["stats"].items()
             }
         try:
-            return _publish(path, manifest, m["version"], backend)
+            return _publish(path, manifest, m, backend)
         except VersionClaimedError:
             continue
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
@@ -930,13 +935,12 @@ def write_table(
     for _ in range(_RETRIES):
         base_files: list[str] = []
         base_stats: dict = {}
-        parent_v = 0
+        cur = None
         cols = stats_cols
         commit_schema = schema
         evo: dict | None = None
         if _versions(path):
             cur = read_manifest(path)
-            parent_v = cur["version"]
             if mode == "append":
                 if not _schema_compatible(cur["schema"], schema):
                     if not merge_schema:
@@ -1039,7 +1043,7 @@ def write_table(
             manifest.update(evo)
         _carry_stats(manifest, base_stats, own_stats)
         try:
-            return _publish(path, manifest, parent_v, backend)
+            return _publish(path, manifest, cur, backend)
         except VersionClaimedError:
             continue  # rebuild base_files from the racer's head
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
@@ -1424,7 +1428,7 @@ def delete_rows(
             if dropped:
                 manifest["dv_dropped"] = dropped
             _carry_stats(manifest, m.get("stats"), {})
-            _publish(path, manifest, m["version"], backend)
+            _publish(path, manifest, m, backend)
             return n
         except VersionClaimedError:
             continue  # snapshot basis stale: re-derive the whole delete
@@ -1485,7 +1489,7 @@ def compact(
             head.get("stats"), own_stats,
         )
         try:
-            return _publish(path, manifest, head["version"], backend)
+            return _publish(path, manifest, head, backend)
         except VersionClaimedError:
             continue  # a racer landed mid-publish; carry its appends too
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
@@ -1557,7 +1561,7 @@ def purge_dvs(
             "purged": hot,
         }, head.get("stats"), own_stats)
         try:
-            v = _publish(path, manifest, head["version"], backend)
+            v = _publish(path, manifest, head, backend)
             return {"purged_files": len(hot), "new_files": len(files),
                     "version": v}
         except VersionClaimedError:
@@ -1673,9 +1677,7 @@ def merge_cdc(
         stats = (base or {}).get("stats")
         _carry_stats(manifest, stats, _footer_stats(path, files, stats, schema))
         try:
-            return _publish(
-                path, manifest, base["version"] if base else 0, backend
-            )
+            return _publish(path, manifest, base, backend)
         except VersionClaimedError:
             continue  # stale snapshot basis: redo the merge on the new head
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
@@ -1745,7 +1747,7 @@ def merge_dv(
                         "merge_keys": list(key_cols), "batch_id": batch_id,
                         "retired_rows": 0}
             try:
-                _publish(path, manifest, 0, backend)
+                _publish(path, manifest, None, backend)
                 return 0
             except VersionClaimedError:
                 continue  # a racer created the table: re-check the guard
@@ -1812,7 +1814,7 @@ def merge_dv(
                 manifest["dv_dropped"] = dropped
             _carry_stats(manifest, m.get("stats"), _footer_stats(
                 path, new_files, m.get("stats"), m["schema"]))
-            _publish(path, manifest, m["version"], backend)
+            _publish(path, manifest, m, backend)
             return n
         except VersionClaimedError:
             continue  # stale snapshot basis: re-derive the match
@@ -1928,7 +1930,7 @@ def update_rows(
                 manifest["dv_dropped"] = dropped
             _carry_stats(manifest, m.get("stats"), _footer_stats(
                 path, new_files, m.get("stats"), m["schema"]))
-            _publish(path, manifest, m["version"], backend)
+            _publish(path, manifest, m, backend)
             return n
         except VersionClaimedError:
             continue  # snapshot basis stale: re-derive the whole update
@@ -2207,7 +2209,7 @@ def commit_stream_batch(
         _carry_stats(manifest, head.get("stats"), _footer_stats(
             path, files, head.get("stats"), schema))
         try:
-            return _publish(path, manifest, head["version"], backend)
+            return _publish(path, manifest, head, backend)
         except VersionClaimedError:
             continue  # re-read head AND re-check batch_id dedupe
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
@@ -2646,7 +2648,7 @@ def clone_table(
               "rows"):
         if k in m:
             manifest[k] = m[k]
-    return _publish(dst, manifest, 0, backend)
+    return _publish(dst, manifest, None, backend)
 
 
 def restore_table(
@@ -2725,7 +2727,7 @@ def restore_table(
                 "file_eras": {f: 0 for f in target["files"]},
             })
         try:
-            return _publish(path, manifest, head["version"], backend)
+            return _publish(path, manifest, head, backend)
         except VersionClaimedError:
             continue  # restore content is head-independent; just re-base
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")

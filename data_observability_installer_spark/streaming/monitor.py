@@ -7,7 +7,7 @@ every screen from the events table — the correctness face. In
 production the same verdicts should come from the stores the streaming
 sinks maintain (that is why the stores exist): daily type counts and
 per-run rollup counters from two :func:`streaming.aggstore.agg_sink`
-cubes, and SLA percentiles from the grouped
+cubes, and SLA percentiles from the keyed
 :func:`streaming.sketch.qsketch_sink` store. Serving latency is then
 O(store size) — distinct keys and sketch nodes — with the raw event
 log never rescanned.
@@ -53,12 +53,12 @@ def monitor_pane(
     ``daily``: (k, o='yyyy-MM-dd', v) daily volume per event type; ISO
     day strings sort like days, so Mann-Kendall orders on ``o``.
     ``runs``: (pipeline_key, start_ts, failed) one row per run.
-    ``sk``: grouped quantile-sketch nodes of run durations in whole
+    ``sk``: keyed quantile-sketch nodes of run durations in whole
     seconds per pipeline_key (k_key, level, idx, cnt)."""
     from pyspark.sql import functions as F
 
     from ..operators.drift import changepoint, cusum_screen, mann_kendall, p_chart
-    from ..operators.sketch import qsketch_quantiles_by
+    from ..operators.sketch import qsketch_quantiles
 
     mk = mann_kendall(daily, ord_col="o").selectExpr(
         "'mk_trend' AS screen", "k AS entity",
@@ -94,7 +94,7 @@ def monitor_pane(
         .selectExpr("'p_chart' AS screen", "entity", "flagged", "detail")
     )
     sla = (
-        qsketch_quantiles_by(sk, _SLA_BPS, lo=qs_lo, hi=qs_hi)
+        qsketch_quantiles(sk, _SLA_BPS, lo=qs_lo, hi=qs_hi)
         .filter(F.col("q_bp") == 9900)
         .selectExpr(
             "'sla_p99' AS screen", "k_key AS entity",
@@ -128,8 +128,8 @@ def monitor_pane_stored(
     agg_sink cube keyed (pipeline_key, run_key) with min start / max
     end / summed error+purchase counters — the mergeable run rollup; a
     run with any error event counts as failed. ``qsketch_store``:
-    grouped qsketch_sink store of run durations in whole seconds per
-    pipeline_key."""
+    keyed qsketch_sink store (``key_col=``) of run durations in whole
+    seconds per pipeline_key."""
     from pyspark.sql import functions as F
 
     from .aggstore import read_agg_store
@@ -141,6 +141,6 @@ def monitor_pane_stored(
     return monitor_pane(
         read_agg_store(spark, counts_store, COUNTS_KEYS, COUNTS_FOLDS),
         runs,
-        read_qsketch_store(spark, qsketch_store, grouped=True),
+        read_qsketch_store(spark, qsketch_store),
         cp_flag_q, sla_flag_s, qs_lo, qs_hi,
     )

@@ -210,16 +210,6 @@ def read_dsir_model(spark, store: str) -> DataFrame:
     return _fold_dsir([spark.read.parquet(store)])
 
 
-def _qsketch_fold(grouped: bool):
-    from ..operators.sketch import fold_keyed, qsketch_merge
-
-    if not grouped:
-        return lambda parts: qsketch_merge(*parts)
-    return lambda parts: fold_keyed(
-        parts, ["k_key", "level", "idx"], {"cnt": "sum"}
-    )
-
-
 def qsketch_sink(
     stream: DataFrame,
     store: str,
@@ -241,25 +231,24 @@ def qsketch_sink(
     leaves, so the merged store answers rank queries within the
     q-digest bound at n = total ingested — quantiles over an unbounded
     stream with bounded state, the face run_duration_sla percentiles
-    need when the run log never fits a batch. ``key_col`` switches to
-    GROUPED sketches (qsketch_by) — the continuous per-pipeline SLA
-    percentile store, each key bounded independently."""
-    from ..operators.sketch import qsketch, qsketch_by
-
-    def partial(df: DataFrame, _) -> DataFrame:
-        if key_col:
-            return qsketch_by(df, key_col, col, lo=lo, hi=hi, k=k, log_u=log_u)
-        return qsketch(df, col, lo=lo, hi=hi, k=k, log_u=log_u)
+    need when the run log never fits a batch. ``key_col`` keeps one
+    sketch per key — the continuous per-pipeline SLA percentile store,
+    each key bounded independently."""
+    from ..operators.sketch import qsketch, qsketch_merge
 
     return store_sink(
-        stream, store, checkpoint, partial,
-        _qsketch_fold(bool(key_col)), retain, **trigger,
+        stream, store, checkpoint,
+        lambda df, _: qsketch(df, col, lo=lo, hi=hi, k=k, log_u=log_u, key_col=key_col),
+        lambda parts: qsketch_merge(*parts),
+        retain, **trigger,
     )
 
 
-def read_qsketch_store(spark, store: str, grouped: bool = False) -> DataFrame:
+def read_qsketch_store(spark, store: str) -> DataFrame:
     """Merge every stored per-batch sketch into the whole-history
-    sketch (node-residual sums — sketch-sized, never data-sized); feed
-    to qsketch_quantiles / qsketch_rethin (``grouped=True`` for stores
-    written with ``key_col=`` → qsketch_quantiles_by)."""
-    return _qsketch_fold(grouped)([spark.read.parquet(store)])
+    sketch (node-residual sums — sketch-sized, never data-sized; per
+    key for a store written with ``key_col=``); feed to
+    qsketch_quantiles / qsketch_rethin."""
+    from ..operators.sketch import qsketch_merge
+
+    return qsketch_merge(spark.read.parquet(store))

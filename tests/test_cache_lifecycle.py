@@ -193,7 +193,7 @@ def test_dedup_groups_distributed_branch(spark, sf_smoke, monkeypatch):
     docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
     pairs = dedup.ngram_jaccard_pairs(docs, **registry._JACCARD_ARGS)
     local = sorted(map(tuple, dedup.dedup_groups(pairs).collect()))
-    monkeypatch.setattr(dedup, "DRIVER_ROWS", 0)
+    monkeypatch.setattr(dedup.driver, "DRIVER_ROWS", 0)
     dist = sorted(map(tuple, dedup.dedup_groups(pairs).collect()))
     assert local, "no near-dup pairs at smoke scale"
     assert dist == local

@@ -293,7 +293,7 @@ def test_cli_qsketch_store_per_key_quantiles(spark, tmp_path, capsys):
     from data_observability_installer_spark.operators.profile import (
         write_profile,
     )
-    from data_observability_installer_spark.operators.sketch import qsketch_by
+    from data_observability_installer_spark.operators.sketch import qsketch
 
     store = str(tmp_path / "qstore")
     df = spark.range(4000).selectExpr(
@@ -309,11 +309,11 @@ def test_cli_qsketch_store_per_key_quantiles(spark, tmp_path, capsys):
             "      ELSE 2000 + id % 1000 END AS LONG) AS dur_s",
         )
         write_profile(
-            qsketch_by(batch, "pipeline", "dur_s", lo=0, hi=4095, log_u=12),
+            qsketch(batch, "dur_s", lo=0, hi=4095, log_u=12, key_col="pipeline"),
             store, f"{b:08d}",
         )
     assert main([
-        "qsketch-store", store, "--grouped",
+        "qsketch-store", store,
         "--q", "5000,9900", "--lo", "0", "--hi", "4095", "--log-u", "12",
     ]) == 0
     out = capsys.readouterr().out
@@ -338,7 +338,7 @@ def test_cli_monitor_stored_pane(spark, tmp_path, capsys):
     from data_observability_installer_spark.operators.profile import (
         write_profile,
     )
-    from data_observability_installer_spark.operators.sketch import qsketch_by
+    from data_observability_installer_spark.operators.sketch import qsketch
 
     counts = str(tmp_path / "counts")
     spark.createDataFrame(
@@ -362,7 +362,7 @@ def test_cli_monitor_stored_pane(spark, tmp_path, capsys):
         "pipeline_key string, dur_s long",
     )
     write_profile(
-        qsketch_by(dur, "pipeline_key", "dur_s", lo=0, hi=(1 << 17) - 1),
+        qsketch(dur, "dur_s", lo=0, hi=(1 << 17) - 1, key_col="pipeline_key"),
         qstore, "00000000",
     )
 

@@ -208,7 +208,7 @@ def _closure_both_ways(spark, monkeypatch, edges, max_depth, cap):
     e = spark.createDataFrame(edges, "src string, dst string")
     driver = transitive_closure(e, max_depth=max_depth)
     assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
-    monkeypatch.setattr(lineage, "DRIVER_ROWS", cap)
+    monkeypatch.setattr(lineage.driver, "DRIVER_ROWS", cap)
     rounds = transitive_closure(e, max_depth=max_depth)
     assert "LocalTableScan" not in rounds._jdf.queryExecution().executedPlan().toString()
     return [(sorted(map(tuple, df.collect()), key=repr), df.schema) for df in (driver, rounds)]
@@ -235,7 +235,7 @@ def test_closure_output_over_cap_takes_spark_rounds(spark, monkeypatch):
 
     edges, max_depth = _PARITY_GRAPHS["three_cycle"]
     assert len(lineage._driver_closure(edges, max_depth)) == 9
-    monkeypatch.setattr(lineage, "DRIVER_ROWS", 5)
+    monkeypatch.setattr(lineage.driver, "DRIVER_ROWS", 5)
     assert lineage._driver_closure(edges, max_depth) is None
     monkeypatch.undo()
     driver, rounds = _closure_both_ways(spark, monkeypatch, edges, max_depth, cap=5)

@@ -88,9 +88,9 @@ def test_minhash_verify_is_candidate_scoped(docs, monkeypatch):
     from data_observability_installer_spark.operators.llm import dedup
 
     sh = dedup.exploded_shingles(docs, "text", "doc_id", 2)
-    collected, real = [], dedup._capped_columns
+    collected, real = [], dedup.capped_columns
     monkeypatch.setattr(
-        dedup, "_capped_columns", lambda df: collected.append(real(df)) or collected[-1]
+        dedup, "capped_columns", lambda df: collected.append(real(df)) or collected[-1]
     )
     out = dedup.minhash_pairs(docs, n=2, shingles=sh)
     cand, index = collected
@@ -100,7 +100,7 @@ def test_minhash_verify_is_candidate_scoped(docs, monkeypatch):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan and "Join" not in plan, plan
 
-    monkeypatch.setattr(dedup, "DRIVER_ROWS", 0)
+    monkeypatch.setattr(dedup.driver, "DRIVER_ROWS", 0)
     plan = (
         dedup.minhash_pairs(docs, n=2, shingles=sh)
         ._jdf.queryExecution().optimizedPlan().toString()
@@ -232,7 +232,7 @@ def _both_branches(monkeypatch, build):
     assert taken and all(t is not None for t in taken)
     taken.clear()
     with monkeypatch.context() as m:
-        m.setattr(dedup, "DRIVER_ROWS", -1)
+        m.setattr(dedup.driver, "DRIVER_ROWS", -1)
         spark_side = build()
     assert taken and all(t is None for t in taken)
     return driver, spark_side
@@ -305,7 +305,7 @@ def test_driver_overlap_caps_join_rows_not_index_rows(spark, monkeypatch):
     taken = _spy_driver_overlap(monkeypatch)
     for cap, branch in ((20, None), (44, None), (45, "driver")):
         taken.clear()
-        monkeypatch.setattr(dedup, "DRIVER_ROWS", cap)
+        monkeypatch.setattr(dedup.driver, "DRIVER_ROWS", cap)
         got = sorted(map(tuple, dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()))
         assert [None if t is None else "driver" for t in taken] == [branch], cap
         assert got == want
@@ -344,7 +344,7 @@ def test_dedup_groups_deep_chain_converges(spark, monkeypatch):
 
     monkeypatch.setattr(dedup, "pin", spy(dedup.pin))
     monkeypatch.setattr(dedup, "pinned", spy(dedup.pinned))
-    monkeypatch.setattr(dedup, "DRIVER_ROWS", 0)
+    monkeypatch.setattr(dedup.driver, "DRIVER_ROWS", 0)
     edges = [(i, i + 1, 0.9) for i in range(20)]
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint, jaccard double")
     out = dedup.dedup_groups(pairs, max_iters=30)
@@ -389,7 +389,7 @@ def test_dedup_groups_driver_path_matches_label_propagation(spark, graph, monkey
         "doc_a bigint, doc_b bigint, jaccard double",
     )
     driver = dedup_groups(pairs)
-    monkeypatch.setattr(dedup, "DRIVER_ROWS", -1)
+    monkeypatch.setattr(dedup.driver, "DRIVER_ROWS", -1)
     rounds = dedup_groups(pairs)
     assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" not in rounds._jdf.queryExecution().executedPlan().toString()

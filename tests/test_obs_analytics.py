@@ -485,3 +485,38 @@ def test_monitor_pane_agrees_with_its_screens(spark, sf_smoke):
     assert {s for s, _ in pane} == {
         "mk_trend", "cusum", "changepoint", "p_chart", "sla_p99"
     }
+
+
+def _events_contract_breaches(ev) -> dict:
+    """Rows of an events frame that break the contract the run rollup
+    (``run_key`` = user_id + day, grouped next to ``user_id``) and the
+    lineage ``co_key`` rely on: a null ``user_id`` or a null ``ts``."""
+    r = ev.agg(
+        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in ("user_id", "ts")]
+    ).first()
+    return {c: int(r[c] or 0) for c in ("user_id", "ts")}
+
+
+def test_events_contract_holds_at_every_sf(spark, sf_smoke):
+    """``user_id`` and ``ts`` are never null in ``events`` at any scale
+    factor of the test data, and the check fires on a planted null."""
+    import glob
+    import os
+
+    from data_observability_installer_spark.sources.tables import load_table
+
+    sfs = sorted(glob.glob(os.path.join(os.path.dirname(sf_smoke), "sf*")))
+    assert sf_smoke in sfs
+    for sf in sfs:
+        ev = load_table(spark, sf, "events")
+        assert ev.limit(1).count() == 1, sf
+        assert _events_contract_breaches(ev) == {"user_id": 0, "ts": 0}, sf
+    ev = load_table(spark, sf_smoke, "events")
+    first = ev.agg(F.min("event_id")).first()[0]
+    for c in ("user_id", "ts"):
+        planted = ev.withColumn(
+            c, F.when(F.col("event_id") == first, F.lit(None)).otherwise(F.col(c))
+        )
+        assert _events_contract_breaches(planted) == {
+            "user_id": int(c == "user_id"), "ts": int(c == "ts")
+        }

@@ -705,8 +705,8 @@ def test_threshold_sweep_rides_shared_shingle_cache(spark, sf_smoke, monkeypatch
     from data_observability_installer_spark.operators.llm import dedup
 
     registry.QUERIES["ngram_jaccard_documents"](spark, sf_smoke).collect()
-    collected, real = [], dedup._capped_table
-    monkeypatch.setattr(dedup, "_capped_table", lambda d: collected.append(d) or real(d))
+    collected, real = [], dedup.capped_table
+    monkeypatch.setattr(dedup, "capped_table", lambda d: collected.append(d) or real(d))
     df = registry.QUERIES["threshold_sweep_documents"](spark, sf_smoke)
     [index] = collected
     plan = index._jdf.queryExecution().executedPlan().toString()
@@ -716,7 +716,7 @@ def test_threshold_sweep_rides_shared_shingle_cache(spark, sf_smoke, monkeypatch
     assert "LocalTableScan" in final and "documents.parquet" not in final, final
     assert "BroadcastNestedLoopJoin" in final or "BroadcastHashJoin" in final
 
-    monkeypatch.setattr(dedup, "DRIVER_ROWS", 0)
+    monkeypatch.setattr(dedup.driver, "DRIVER_ROWS", 0)
     df = registry.QUERIES["threshold_sweep_documents"](spark, sf_smoke)
     plan = df._jdf.queryExecution().executedPlan().toString()
     executed = plan.split("InMemoryRelation")[0]

@@ -295,14 +295,12 @@ def test_hll_sketch_by_grouped_estimates_and_merge(spark):
 
     from data_observability_installer_spark.operators.sketch import (
         hll_estimate,
-        hll_estimate_by,
         hll_sketch,
-        hll_sketch_by,
     )
 
     rows = [("a", f"x{i}") for i in range(400)] + [("b", f"y{i}") for i in range(40)]
     df = spark.createDataFrame(rows, "k string, w string")
-    by = {r["k"]: r for r in hll_estimate_by(hll_sketch_by(df, "k")).collect()}
+    by = {r["k"]: r for r in hll_estimate(hll_sketch(df, key_col="k")).collect()}
     for key, n in (("a", 400), ("b", 40)):
         solo = hll_estimate(
             hll_sketch(df.filter(F.col("k") == key))
@@ -310,14 +308,14 @@ def test_hll_sketch_by_grouped_estimates_and_merge(spark):
         assert by[key]["est_ct"] == solo
         assert abs(by[key]["est_ct"] - n) / n < 0.25
     # grouped merge: two half-sketches fold to the full one
-    h1 = hll_sketch_by(df.filter("w like '%0'"), "k")
-    h2 = hll_sketch_by(df.filter("w not like '%0'"), "k")
+    h1 = hll_sketch(df.filter("w like '%0'"), key_col="k")
+    h2 = hll_sketch(df.filter("w not like '%0'"), key_col="k")
     merged = (
         h1.unionByName(h2).groupBy("k", "register")
         .agg(F.max("max_rank").alias("max_rank"))
     )
     assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, hll_sketch_by(df, "k").collect())
+        map(tuple, hll_sketch(df, key_col="k").collect())
     )
 
 
@@ -452,9 +450,7 @@ def test_qsketch_by_per_key_isolation_and_bounds(spark):
 
     from data_observability_installer_spark.operators.sketch import (
         qsketch,
-        qsketch_by,
         qsketch_quantiles,
-        qsketch_quantiles_by,
     )
 
     rs = np.random.RandomState(8)
@@ -462,7 +458,7 @@ def test_qsketch_by_per_key_isolation_and_bounds(spark):
     rows += [("quiet", int(v)) for v in rs.randint(20000, 30000, 300)]
     df = spark.createDataFrame(rows, "k_col string, v long")
     k, log_u = 64, 16
-    sk = qsketch_by(df, "k_col", "v", lo=0, hi=65535, k=k, log_u=log_u)
+    sk = qsketch(df, "v", lo=0, hi=65535, k=k, log_u=log_u, key_col="k_col")
     per_key = {}
     for r in sk.collect():
         per_key.setdefault(r["k_key"], []).append(r)
@@ -473,7 +469,7 @@ def test_qsketch_by_per_key_isolation_and_bounds(spark):
         assert len(per_key[key]) <= (log_u + 1) * (k - 1)
     got = {
         (r["k_key"], r["q_bp"]): (r["n"], r["est"])
-        for r in qsketch_quantiles_by(sk, [5000, 9000], 0, 65535, log_u).collect()
+        for r in qsketch_quantiles(sk, [5000, 9000], 0, 65535, log_u).collect()
     }
     # per-key result == single-key operator on the slice (same closed
     # form, same n) — grouping changes nothing about any one key
@@ -583,3 +579,191 @@ def test_pin_seam_modes_agree_on_registry_queries(spark, sf_smoke, tmp_path, que
         spark.conf.unset(PIN_DIR_CONF)
         registry.clear_caches()
         spark.catalog.clearCache()  # persist-mode pins are held until unpinned
+
+
+# ---------------------------------------------------------------------------
+# One keyed sketch core: driver and Spark bodies, keyed and unkeyed
+# ---------------------------------------------------------------------------
+
+#: (key, value) rows: a hot key, a quiet key, a one-value key and a null
+#: key (dropped by a keyed build)
+_KEYED_ROWS = (
+    [("hot", (i * 7919) % 1024) for i in range(600)]
+    + [("quiet", 300 + (i * 31) % 200) for i in range(40)]
+    + [("one", 512)]
+    + [(None, 5), (None, 900)]
+)
+
+_QS_CASES = {
+    "unkeyed": (_KEYED_ROWS, None),
+    "keyed": (_KEYED_ROWS, "k"),
+    "single_key": ([r for r in _KEYED_ROWS if r[0] == "quiet"], "k"),
+    "empty_unkeyed": ([], None),
+    "empty_keyed": ([], "k"),
+}
+
+
+def _sorted_rows(df) -> list:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _qs_ops(df, key_col):
+    """Build, merge + re-thin and quantile frames of one case (k=8,
+    log_u=10: small enough that every level keeps and folds nodes)."""
+    from data_observability_installer_spark.operators.sketch import (
+        qsketch,
+        qsketch_merge,
+        qsketch_quantiles,
+        qsketch_rethin,
+    )
+
+    build = qsketch(df, "v", 0, 1023, k=8, log_u=10, key_col=key_col)
+    merged = qsketch_merge(*[
+        qsketch(df.filter(F.col("v") % 3 == p), "v", 0, 1023, k=8, log_u=10, key_col=key_col)
+        for p in range(3)
+    ])
+    return {
+        "build": build,
+        "rethin": qsketch_rethin(merged, k=8, log_u=10),
+        "quantiles": qsketch_quantiles(build, [0, 2500, 5000, 9900, 10000], 0, 1023, log_u=10),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_QS_CASES))
+def test_qsketch_driver_and_spark_bodies_agree(spark, monkeypatch, case):
+    """Build, re-thin and the quantile scan give the same rows and
+    schema on the driver (one capped collect, a LocalTableScan) and as
+    Spark aggregates (the cap patched to -1, so an empty input takes
+    them too), keyed and unkeyed."""
+    from data_observability_installer_spark.functions import driver
+
+    rows, key_col = _QS_CASES[case]
+    df = spark.createDataFrame(rows, "k string, v long")
+    local = {op: (_sorted_rows(f), f.schema.simpleString()) for op, f in _qs_ops(df, key_col).items()}
+    for op in ("build", "quantiles"):
+        plan = _qs_ops(df, key_col)[op]._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, (op, plan)
+    monkeypatch.setattr(driver, "DRIVER_ROWS", -1)
+    ops = _qs_ops(df, key_col)
+    assert "LocalTableScan" not in ops["build"]._jdf.queryExecution().executedPlan().toString()
+    spark_side = {op: (_sorted_rows(f), f.schema.simpleString()) for op, f in ops.items()}
+    assert spark_side == local
+    assert bool(local["build"][0]) == bool(rows)
+    if key_col:
+        assert None not in {r[0] for r in local["build"][0]}
+        assert local["build"][1].startswith("struct<k_key:string,level:int,")
+
+
+def test_qsketch_keyed_rethin_equals_per_key_rethin(spark):
+    """A keyed re-thin is the unkeyed re-thin of each key's nodes: the
+    keep rule reads each key's own n, so keys never see each other."""
+    from data_observability_installer_spark.operators.sketch import (
+        qsketch,
+        qsketch_merge,
+        qsketch_rethin,
+    )
+
+    df = spark.createDataFrame(_KEYED_ROWS, "k string, v long")
+    merged = qsketch_merge(*[
+        qsketch(df.filter(F.col("v") % 2 == p), "v", 0, 1023, k=8, log_u=10, key_col="k")
+        for p in (0, 1)
+    ])
+    keyed = _sorted_rows(qsketch_rethin(merged, k=8, log_u=10))
+    assert {r[0] for r in keyed} == {"hot", "quiet", "one"}
+    for key in ("hot", "quiet", "one"):
+        solo = qsketch_rethin(
+            merged.filter(F.col("k_key") == key).drop("k_key"), k=8, log_u=10
+        )
+        assert [r[1:] for r in keyed if r[0] == key] == _sorted_rows(solo), key
+
+
+def test_hll_keyed_estimate_is_per_key_estimate(spark):
+    """The keyed register table and estimate are the unkeyed ones per
+    key, and merge by the table's own key column."""
+    from data_observability_installer_spark.operators.sketch import (
+        hll_estimate,
+        hll_merge,
+        hll_sketch,
+    )
+
+    df = spark.createDataFrame(
+        [(f"g{i % 3}", f"t{i % (50 * (1 + i % 3))}") for i in range(900)], "g string, w string"
+    )
+    keyed = hll_sketch(df, key_col="g")
+    assert keyed.columns == ["k", "register", "max_rank"]
+    assert hll_merge(keyed, keyed).columns == ["k", "register", "max_rank"]
+    est = {r["k"]: tuple(r)[1:] for r in hll_estimate(hll_merge(keyed, keyed)).collect()}
+    for g in ("g0", "g1", "g2"):
+        solo = hll_estimate(hll_sketch(df.filter(F.col("g") == g))).collect()
+        assert [tuple(r) for r in solo] == [est[g]]
+
+
+#: exact Spark jobs per cold call at sf0.001 (the parent of the keyed
+#: core ran 3 / 7 / 15 / 41 / 7 / 9)
+SKETCH_JOB_BUDGET = {
+    "qsketch_quantiles_lineitem": 3,
+    "qsketch_merged_lineitem": 7,
+    "qsketch_sla_events": 4,
+    "monitor_events": 31,
+    "hll_distinct_documents": 7,
+    "hll_distinct_by_lang_documents": 9,
+}
+
+
+@pytest.mark.parametrize("name", sorted(SKETCH_JOB_BUDGET))
+def test_sketch_queries_job_budget(spark, sf_smoke, name):
+    """The sketch screens run an exact number of Spark jobs, the same on
+    two cold calls: the q-sketch is one leaf aggregate and one capped
+    collect, its quantile scan reads a local relation."""
+    from data_observability_installer_spark.plans import registry
+
+    sc, counts = spark.sparkContext, []
+    for call in range(2):
+        registry.clear_caches()
+        spark.catalog.clearCache()
+        group = f"{name}_budget_{call}"
+        sc.setJobGroup(group, "job-budget run")
+        try:
+            assert registry.queries()[name](spark, sf_smoke).collect()
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        finally:
+            sc.setJobGroup(None, None)
+    assert counts == [SKETCH_JOB_BUDGET[name]] * 2, counts
+
+
+def test_sketch_core_written_once():
+    """Grep gate: the q-digest ancestor shift is written once per engine
+    side (numpy driver body, Spark body, DuckDB twin), the unkeyed/keyed
+    twins are gone, and no ``grouped`` selector is left in the sketch
+    module, the streaming package or the CLI."""
+    import ast
+    import pathlib
+
+    import data_observability_installer_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    src = (root / "operators" / "sketch.py").read_text()
+    assert src.count(">> (lvl[at] - level)") == 1  # driver
+    assert src.count("shiftright(idx, level - a)") == 1  # Spark
+    assert src.count("generate_series(0, {log_u})") == 1  # DuckDB
+    gone = {
+        "hll_sketch_by", "hll_estimate_by", "hll_by_report_sql", "qsketch_by",
+        "qsketch_quantiles_by", "qsketch_by_report_sql", "qsketch_merge_report_sql",
+        "_qsketch_quantiles_sql", "_qsketch_fold",
+    }
+    files = [root / "operators" / "sketch.py", root / "__main__.py",
+             *sorted((root / "streaming").glob("*.py"))]
+    for path in [*files, root / "plans" / "registry.py"]:
+        tree = ast.parse(path.read_text())
+        names = {n.name for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.alias))}
+        names |= {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        assert not names & gone, (path, names & gone)
+    for path in files:
+        tree = ast.parse(path.read_text())
+        for n in ast.walk(tree):
+            if isinstance(n, ast.arg):
+                assert n.arg != "grouped", path
+            if isinstance(n, ast.keyword):
+                assert n.arg != "grouped", path
+            if isinstance(n, ast.Constant) and isinstance(n.value, str):
+                assert "--grouped" not in n.value, path

@@ -1822,7 +1822,7 @@ def test_qsketch_sink_grouped_per_key_bounds(spark, tmp_path):
     import numpy as np
 
     from data_observability_installer_spark.operators.sketch import (
-        qsketch_quantiles_by,
+        qsketch_quantiles,
     )
     from data_observability_installer_spark.streaming.sketch import (
         qsketch_sink,
@@ -1853,7 +1853,7 @@ def test_qsketch_sink_grouped_per_key_bounds(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    merged = read_qsketch_store(spark, store, grouped=True)
+    merged = read_qsketch_store(spark, store)
     per_key = {}
     for r in merged.collect():
         per_key.setdefault(r["k_key"], []).append(r)
@@ -1865,7 +1865,7 @@ def test_qsketch_sink_grouped_per_key_bounds(spark, tmp_path):
     exact = {
         key: np.sort([v for p, v in all_vals if p == key]) for key in ("a", "b")
     }
-    for r in qsketch_quantiles_by(merged, [5000, 9000], 0, 65535, log_u).collect():
+    for r in qsketch_quantiles(merged, [5000, 9000], 0, 65535, log_u).collect():
         n = r["n"]
         target = math.ceil(r["q_bp"] / 10000 * n)
         ex = exact[r["k_key"]]
@@ -2672,7 +2672,7 @@ def _retention_cases():
             lambda s, st, ck, r: sketch.qsketch_sink(
                 s, st, ck, col="v", hi=1023, k=8, log_u=10, key_col="k",
                 retain=r, availableNow=True),
-            lambda sp, st: sketch.read_qsketch_store(sp, st, grouped=True),
+            lambda sp, st: sketch.read_qsketch_store(sp, st),
         ),
         "agg_sink": (
             lambda s, st, ck, r: aggstore.agg_sink(

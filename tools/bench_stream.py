@@ -1042,10 +1042,10 @@ def _bench(spark, args: argparse.Namespace, replay_dir: str) -> None:
 
     # round-11: continuous quantile sketch — per-batch dyadic sketches
     # of metric_value (milli-units), merged store answers whole-history
-    # percentiles; grouped by pipeline for the per-key SLA shape
+    # percentiles; keyed by pipeline for the per-key SLA shape
     from data_observability_installer_spark.operators.sketch import (
-        qsketch_by,
-        qsketch_quantiles_by,
+        qsketch,
+        qsketch_quantiles,
     )
     from data_observability_installer_spark.streaming.sketch import (
         qsketch_sink,
@@ -1067,17 +1067,15 @@ def _bench(spark, args: argparse.Namespace, replay_dir: str) -> None:
     )
     ops["qsketch_sink"] = _drain(
         q,
-        lambda: read_qsketch_store(
-            spark, os.path.join(sink_root3, "qs"), grouped=True
-        ).count(),
+        lambda: read_qsketch_store(spark, os.path.join(sink_root3, "qs")).count(),
     )
-    ops["qsketch_sink"]["p50_p99_keys"] = qsketch_quantiles_by(
-        read_qsketch_store(spark, os.path.join(sink_root3, "qs"), grouped=True),
+    ops["qsketch_sink"]["p50_p99_keys"] = qsketch_quantiles(
+        read_qsketch_store(spark, os.path.join(sink_root3, "qs")),
         [5000, 9900], lo=0, hi=(1 << 20) - 1,
     ).count()
     ops["qsketch_sink"]["batch_twin_s"] = timed_batch(
-        lambda: qsketch_by(
-            qs_vals(batch_df), "pipeline_key", "mv", lo=0, hi=(1 << 20) - 1
+        lambda: qsketch(
+            qs_vals(batch_df), "mv", lo=0, hi=(1 << 20) - 1, key_col="pipeline_key"
         ).count()
     )
 
