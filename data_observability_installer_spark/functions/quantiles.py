@@ -1,171 +1,145 @@
-"""Distributed exact percentiles, bit-compatible with Spark's
-``percentile()`` aggregate.
+"""Keyed percentiles as a frame: :func:`quantiles` returns one row per
+key, ``(keys…, q0…qn)``, and :func:`join_keyed` hands such a frame back
+to the rows it describes. The exact mode is bit-compatible with Spark's
+``percentile()`` aggregate; ``approx=True`` is ``percentile_approx``.
 
 ``percentile(col, q)`` is a TypedImperativeAggregate: every partition
 builds an OpenHashMap of value -> count, the maps merge into ONE
-reducer's buffer, and eval sorts the whole map single-threaded. Two
-costs follow: the per-row update path is interpreted (no whole-stage
+reducer's buffer per key, and eval sorts the whole map single-threaded.
+Two costs follow: the per-row update path is interpreted (no whole-stage
 codegen through an ObjectHashAggregate buffer), and the merged map —
-every distinct value of the column — must fit on one task (guide §5:
-per-task state is the thing that OOMs, and here it is O(distinct)).
+every distinct value of the key's column — must fit on one task (guide
+§5: per-task state is the thing that OOMs, and here it is O(distinct)).
 
-This module computes the identical result from a *relational*
-value-counts sketch instead (guide §1.2 "the distributed algorithm
-first"), in ONE job:
+The exact mode computes the identical result relationally instead
+(guide §1.2 "the distributed algorithm first"), with no driver collect,
+so the number of keys is not capped:
 
-1. melt the requested columns -> ``groupBy(column, value).count()`` —
-   whole-stage-codegen hash aggregation with map-side partial
-   aggregation; the shuffle carries one row per (column, distinct
-   value), exactly the bytes percentile()'s map merge moves, but
-   spread over N reducers instead of one.
-2. one window pass per column partition adds the running count and the
-   column total ``n``; because ``n`` is in-plan, the bracketing-rank
-   predicate — Spark's own ``position = q * (n-1)``, ranks
-   ``floor(position)+1`` / ``ceil(position)+1``, first value whose
-   cumulative count reaches the rank — evaluates as a static SQL
-   filter, so only the <= 2|qs| bracketing rows per column ever reach
-   the driver.
-3. the interpolation — Spark's
-   ``(higher - pos) * v_lo + (pos - lower) * v_hi`` — runs driver-side
-   in IEEE-754 doubles, which Python and the JVM evaluate identically
-   (same multiply/add rounding, no FMA contraction).
+1. value counts ``(keys…, v, cnt)`` — whole-stage-codegen hash
+   aggregation. Unkeyed, the ``groupBy(v)`` shuffle carries one
+   map-side-combined row per distinct value. Keyed, ONE hash exchange
+   on the keys feeds every later step, as percentile()'s one exchange
+   does: the counts, the window and the pick all run inside the key's
+   partition. That exchange carries the (key, value) rows themselves,
+   the same bytes percentile()'s partial maps carry for continuous
+   values; a caller whose rows are already partitioned by the keys
+   (a join streamed from another keyed frame) pays no exchange at all.
+2. one window per key adds the running count ``cum`` and the key's
+   total ``n`` — Spark's own ``position = q * (n-1)``, ranks
+   ``floor(position)+1`` / ``ceil(position)+1``, and the value at a
+   rank is the first value whose running count reaches it.
+3. one ``groupBy(keys)`` picks the two bracketing values per quantile
+   and interpolates with Spark's
+   ``(higher - pos) * v_lo + (pos - lower) * v_hi`` as Column
+   arithmetic (IEEE doubles, evaluated by the JVM exactly as the
+   aggregate does).
 
-Bit-parity with ``percentile()`` is REQUIRED (the DuckDB oracle hash
-pins every profile value) and is enforced two ways: the rule-level
-reproduction above, and ``tests/test_quantiles.py``'s parity sweep
-comparing raw double BITS against ``percentile()`` over every numeric
-column of every test table plus adversarial synthetic distributions
-(ties, exact rank positions, nulls, -0.0, single row).
+NULL values are skipped like the aggregate does, but a key whose values
+are all NULL still gets its row (all quantiles NULL), and the unkeyed
+frame is always one row. One difference from ``percentile()``: the
+value counts group on the value, and grouping normalizes ``-0.0`` to
+``0.0``, so a quantile that lands on a signed zero reads ``0.0``.
+``tests/test_quantiles.py`` compares raw double bits against the
+aggregate over every numeric column of the test tables and adversarial
+synthetic groups.
 
-Scale note: step 2's per-column window sorts that column's distinct
-values on one task — the same O(distinct) hot spot percentile() has,
-minus the per-row interpreted update (the data-sized pass is codegen)
-and minus the single-reducer map merge (the shuffle fans out). For
-columns where even the distinct set is huge, the documented production
-switch remains ``exact=False`` (approx_percentile / GK sketch); this
-module exists to make the EXACT mode's data pass cheap and its plan
-shape honest.
+Scale note: step 2 sorts one key's distinct values on one task — the
+same O(distinct) hot spot percentile() has, minus the per-row
+interpreted update and minus the single-reducer map merge. Where even
+the distinct set is huge, ``approx=True`` keeps a mergeable
+O(accuracy) GK sketch per key instead (rank error <= 1/accuracy).
 """
 
 from __future__ import annotations
 
-import math
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _bracket_filter(qs: list[float]) -> "F.Column":
-    """Static predicate keeping exactly the rows that bracket some
-    requested quantile: Spark's position = q * (n - 1) (IEEE double,
-    reproduced here as the same multiply over the in-plan total), rank
-    lower+1 / higher+1, value-at-rank = first row whose running count
-    ``cum`` reaches the rank. Expects columns cum, cnt, n."""
-    pos = lambda q: F.lit(float(q)) * (F.col("n") - 1).cast("double")  # noqa: E731
-    cond = None
-    for q in qs:
-        for edge in (F.floor(pos(q)), F.ceil(pos(q))):
-            r = edge.cast("long") + 1
-            one = (F.col("cum") >= r) & ((F.col("cum") - F.col("cnt")) < r)
-            cond = one if cond is None else (cond | one)
-    return cond
-
-
-def _interpolate_rows(
-    qs: list[float], n: int, rows: list
-) -> list[float]:
-    """Spark Percentile.getPercentile's exact arithmetic over the
-    collected bracketing rows (driver-side IEEE doubles — Python and
-    the JVM round multiply/add identically; no FMA contraction).
-    ``rows`` carry (v, cnt, cum) for one column."""
-
-    def at(rank: int) -> float:
-        for row in rows:
-            if row["cum"] >= rank and (row["cum"] - row["cnt"]) < rank:
-                return row["v"]
-        raise AssertionError(f"rank {rank} not covered (n={n})")
-
-    out: list[float] = []
-    for q in qs:
-        p = q * (n - 1)
-        lo = math.floor(p)
-        hi = math.ceil(p)
-        v_lo = at(lo + 1)
-        if hi == lo:
-            out.append(v_lo)
-            continue
-        v_hi = at(hi + 1)
-        if v_hi == v_lo:
-            out.append(v_lo)
-            continue
-        # (higher - position) * lowerValue + (position - lower) * higherValue
-        out.append((hi - p) * v_lo + (p - lo) * v_hi)
-    return out
-
-
-def exact_percentiles_multi(
-    df: DataFrame, cols: list[str], qs: list[float]
-) -> dict[str, list[float | None]]:
-    """``percentile(CAST(c AS DOUBLE), qs)`` for EVERY column in
-    ``cols``, from ONE melted value-counts job (guide §2.3 "shuffle
-    keys and metadata": the shuffle carries (column, distinct value,
-    count) rows, never data rows). Returns UNROUNDED doubles,
-    bit-identical to the aggregate (callers needing ``round(x, 4)``
-    should fold ``F.round(F.lit(v), 4)`` through the JVM so the
-    HALF_UP-on-shortest-decimal semantics stay Spark's own)."""
-    structs = [
-        F.struct(F.lit(c).alias("c"), F.col(c).cast("double").alias("v"))
-        for c in cols
-    ]
-    melted = (
-        df.select(F.explode(F.array(*structs)).alias("p"))
-        .select(F.col("p.c").alias("c"), F.col("p.v").alias("v"))
-        .where(F.col("v").isNotNull())
-    )
-    cnts = melted.groupBy("c", "v").agg(F.count(F.lit(1)).alias("cnt"))
-    w_cum = Window.partitionBy("c").orderBy(F.col("v").asc())
-    w_all = Window.partitionBy("c")
-    cum = cnts.select(
-        "c",
+def quantiles(
+    df: DataFrame,
+    col: str,
+    qs: Sequence[float],
+    keys: Sequence[str] = (),
+    approx: bool = False,
+    accuracy: int = 10000,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """``(keys…, carry…, q0…qn)``: the ``qs`` percentiles of
+    ``CAST(col AS DOUBLE)`` per key (one row when ``keys`` is empty).
+    Exact mode equals ``percentile()``; ``approx=True`` is
+    ``percentile_approx(…, accuracy)``. ``carry`` names columns that
+    are constant per key and ride along (the MAD's median next to the
+    MAD): grouping on such a double instead would NaN/zero-normalize
+    it, a new partitioning expression and so one more exchange."""
+    keys = list(keys)
+    v = F.col(col).cast("double")
+    ride = [F.max(c).alias(c) for c in carry]
+    if approx:
+        return df.groupBy(*keys).agg(
+            *ride,
+            *[F.percentile_approx(v, q, accuracy).alias(f"q{i}") for i, q in enumerate(qs)],
+        )
+    vals = df.select(*keys, *carry, v.alias("v"))
+    if keys:
+        # the one exchange; Spark drops it when the rows already arrive
+        # partitioned by the keys
+        vals = vals.repartition(*keys)
+    # count("v") skips NULL: a NULL value keeps its key's row alive with
+    # cnt 0, so an all-NULL key reaches the final groupBy as NULLs
+    cnts = vals.groupBy(*keys, "v").agg(F.count("v").alias("cnt"), *ride)
+    ranked = cnts.select(
+        *keys,
+        *carry,
         "v",
         "cnt",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
+        F.sum("cnt").over(Window.partitionBy(*keys).orderBy("v")).alias("cum"),
+        F.sum("cnt").over(Window.partitionBy(*keys)).alias("n"),
     )
-    rows = cum.filter(_bracket_filter(qs)).collect()
-    by_col: dict[str, list] = {}
-    for row in rows:
-        by_col.setdefault(row["c"], []).append(row)
-    out: dict[str, list[float | None]] = {}
-    for c in cols:
-        col_rows = by_col.get(c)
-        if not col_rows:
-            out[c] = [None for _ in qs]
-        else:
-            out[c] = list(_interpolate_rows(qs, col_rows[0]["n"], col_rows))
-    return out
+
+    def pos(q: float) -> Column:
+        return F.lit(float(q)) * (F.col("n") - 1).cast("double")
+
+    def at(rank: Column) -> Column:
+        r = rank + 1
+        hit = (F.col("cum") >= r) & ((F.col("cum") - F.col("cnt")) < r)
+        return F.max(F.when(hit, F.col("v")))
+
+    picked = ranked.groupBy(*keys).agg(
+        *ride,
+        F.max("n").alias("n"),
+        *[
+            a
+            for i, q in enumerate(qs)
+            for a in (
+                at(F.floor(pos(q))).alias(f"lo{i}"),
+                at(F.ceil(pos(q))).alias(f"hi{i}"),
+            )
+        ],
+    )
+
+    def interpolate(i: int, q: float) -> Column:
+        p, lo, hi = pos(q), F.floor(pos(q)), F.ceil(pos(q))
+        v_lo, v_hi = F.col(f"lo{i}"), F.col(f"hi{i}")
+        return F.when((hi == lo) | (v_hi == v_lo), v_lo).otherwise(
+            (hi - p) * v_lo + (p - lo) * v_hi
+        )
+
+    return picked.select(
+        *keys, *carry, *[interpolate(i, q).alias(f"q{i}") for i, q in enumerate(qs)]
+    )
 
 
-def exact_percentiles(
-    df: DataFrame, col: str, qs: list[float]
-) -> list[float | None]:
-    """``[percentile(col, q) for q in qs]`` — bit-identical to Spark's
-    aggregate, computed from one distributed value-counts job (see
-    :func:`exact_percentiles_multi`). ``col`` must already be the
-    exact column expression percentile() would see (cast included);
-    nulls are excluded, like the aggregate."""
-    vals = df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
-    cnts = vals.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    w_cum = Window.orderBy(F.col("v").asc())
-    cum = cnts.select(
-        "v",
-        "cnt",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(
-            Window.partitionBy(F.lit(1))
-        ).alias("n"),
-    )
-    rows = cum.filter(_bracket_filter(qs)).collect()
-    if not rows:
-        return [None for _ in qs]
-    return list(_interpolate_rows(qs, rows[0]["n"], rows))
+def join_keyed(df: DataFrame, small: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
+    """Hand a per-key frame (quantiles, fences, min/max) back to the
+    rows it describes: an equi-join on ``keys`` (rows with a NULL key
+    drop out) or, unkeyed, a broadcast cross join of the one-row frame.
+    The keyed join carries no hint: AQE broadcasts the smaller side,
+    and when that is the rows, the per-key frame streams through with
+    its key partitioning intact, so a following ``groupBy(keys)`` — a
+    second quantile frame, a per-key report — needs no exchange."""
+    if keys:
+        return df.join(small, list(keys))
+    return df.crossJoin(F.broadcast(small))

@@ -17,18 +17,38 @@ PSI = Σ (p_cur - p_base) * ln(p_cur / p_base), with both proportions
 clamped to ``eps`` so empty bins stay finite. Conventional reading:
 < 0.1 stable, 0.1-0.25 moderate, > 0.25 major drift.
 
-Everything is Column arithmetic with a DuckDB SQL twin — drift runs in
-the same single-pass, no-data-copies style as the DQ suite compiler.
+Beyond PSI, the module holds four families, each screen written once
+with an optional key (one row per key, or one row globally):
+
+- **Two-sample histograms** (baseline-free: slice A vs slice B of one
+  table). :func:`_two_sample_hist` bins both slices over each key's
+  own [min, max] into ``(keys…, h, tot_a, tot_b)``, ``h`` the
+  bin-sorted ``(bin, ct_a, ct_b)`` array; :func:`ks_drift` folds it to
+  the max CDF gap, :func:`wasserstein_drift` (``by=``) to the exact
+  integer area. One SQL builder, :func:`_two_sample_hist_sql`, serves
+  both twins.
+- **Robust fences.** :func:`_mad_fences` turns two keyed exact
+  quantile frames (``functions/quantiles.py``, bit-identical to
+  ``percentile()``) into median ± k·1.4826·MAD per key;
+  :func:`mad_outliers` reports rows per flag, :func:`mad_outliers_grouped`
+  per-group counts, and their twins share :func:`_mad_fences_sql`.
+  ``approx=True`` swaps the exact frame for a GK sketch — a different
+  answer, not a different plan.
+- **Digit law**: :func:`benford_screen`.
+- **Series screens** over a pre-aggregated (key, ordinal, value)
+  frame: Mann-Kendall, p-chart, CUSUM, change-point, seasonality.
+
+Everything is Column arithmetic with a DuckDB SQL twin, and no screen
+collects rows to the driver.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.pin import pin
+from ..functions.quantiles import join_keyed, quantiles
 
 EPS = 1e-6
 
@@ -227,39 +247,26 @@ def benford_screen_sql(table: str, col: str) -> str:
     """
 
 
-def ks_drift(
-    df: DataFrame,
-    col: str,
-    side_expr: Column,
-    bins: int = 256,
+def _two_sample_hist(
+    df: DataFrame, col: str, side_expr: Column, bins: int, keys: list[str]
 ) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov screen between two slices of one
-    table (``side_expr`` boolean: True -> sample A, False or NULL ->
-    B; the predicate is coalesced to FALSE on BOTH engines so a
-    nullable predicate can't diverge — SQL CASE..ELSE counted NULLs
-    into B while a NULL-propagating boolean cast dropped them, round-7
-    ADVICE): the
-    max gap between the slices' binned empirical CDFs. Complements the
-    fixed-baseline PSI with a baseline-free split comparison (old vs
-    new partition, region A vs B), read on the usual scale: D < 0.05
-    stable for large samples, bigger = distribution shift.
+    """``(keys…, h, tot_a, tot_b)``: the two-sample histogram that KS
+    and W1 fold, one row per key (one row when unkeyed). ``h`` is the
+    bin-sorted array of ``(bin, ct_a, ct_b)`` structs over the key's
+    NON-empty bins; ``side_expr`` True -> slice A, False or NULL -> B
+    (coalesced to FALSE on both engines, round-7 ADVICE).
 
-    Plan shape (100 TB story): pass 1 computes the global min/max (one
-    agg, broadcast back as scalars); pass 2 bins every row and
-    aggregates to ``bins`` rows with map-side partials. The cumulative
-    CDF fold then runs as an ``aggregate`` over one collected
-    bins-sized array — a single row on the driver-side plan, no
-    unpartitioned window, nothing proportional to table size. Binning
-    quantizes D by at most 1/bins, the standard streaming/distributed
-    KS approximation.
-    """
-    x = F.col(col).cast("double")
+    Plan: pass 1 is one min/max aggregate per key, joined back; pass
+    2 bins every row over its key's own ``[min, max]`` and aggregates to
+    at most ``bins`` rows per key with map-side partials; the array is
+    a bins-sized collect per key. Nothing proportional to the table
+    reaches a fold, and no window runs."""
     vals = df.select(
-        x.alias("v"), F.coalesce(side_expr, F.lit(False)).alias("is_a")
+        *keys,
+        F.col(col).cast("double").alias("v"),
+        F.coalesce(side_expr, F.lit(False)).alias("is_a"),
     ).filter(F.col("v").isNotNull())
-    mm = vals.agg(
-        F.min("v").alias("lo"), F.max("v").alias("hi")
-    )
+    mm = vals.groupBy(*keys).agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
     span = F.col("hi") - F.col("lo")
     bin_ix = F.when(
         span > 0,
@@ -269,18 +276,62 @@ def ks_drift(
         ),
     ).otherwise(F.lit(0))
     binned = (
-        vals.join(F.broadcast(mm))
-        .groupBy(bin_ix.alias("bin"))
+        join_keyed(vals, mm, keys)
+        .groupBy(*keys, bin_ix.alias("bin"))
         .agg(
             F.sum(F.col("is_a").cast("long")).alias("ct_a"),
             F.sum((~F.col("is_a")).cast("long")).alias("ct_b"),
         )
     )
-    hist = binned.agg(
+    return binned.groupBy(*keys).agg(
         F.sort_array(F.collect_list(F.struct("bin", "ct_a", "ct_b"))).alias("h"),
         F.sum("ct_a").alias("tot_a"),
         F.sum("ct_b").alias("tot_b"),
     )
+
+
+def _two_sample_hist_sql(
+    table: str, col: str, side_sql: str, bins: int, by: str | None = None
+) -> str:
+    """DuckDB twin of :func:`_two_sample_hist` up to the histogram: the
+    CTEs ``vals``, ``mm`` and ``binned`` — ``(bin, ct_a, ct_b)``, with a
+    leading group column ``g`` when ``by`` is given."""
+    g = "g, " if by else ""
+    return f"""vals AS (
+      SELECT {f"{by} AS g, " if by else ""}CAST({col} AS DOUBLE) AS v,
+             coalesce(({side_sql}), FALSE) AS is_a
+      FROM {table} WHERE {col} IS NOT NULL),
+    mm AS (SELECT {g}min(v) AS lo, max(v) AS hi FROM vals{" GROUP BY g" if by else ""}),
+    binned AS (
+      SELECT {g}CASE WHEN hi > lo
+                  THEN least(CAST(floor((v - lo) / (hi - lo) * {bins}) AS INT), {bins - 1})
+                  ELSE 0 END AS bin,
+             CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ct_a,
+             CAST(sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS ct_b
+      FROM vals {"JOIN mm USING (g) GROUP BY 1, 2" if by else ", mm GROUP BY 1"})"""
+
+
+def ks_drift(
+    df: DataFrame,
+    col: str,
+    side_expr: Column,
+    bins: int = 256,
+) -> DataFrame:
+    """Two-sample Kolmogorov-Smirnov screen between two slices of one
+    table (``side_expr`` boolean: True -> sample A, False or NULL ->
+    B): the max gap between the slices' binned empirical CDFs.
+    Complements the fixed-baseline PSI with a baseline-free split
+    comparison (old vs new partition, region A vs B), read on the usual
+    scale: D < 0.05 stable for large samples, bigger = distribution
+    shift.
+
+    Plan: :func:`_two_sample_hist`'s two passes, then the cumulative
+    CDF fold runs as an ``aggregate`` over the one collected bins-sized
+    array — no unpartitioned window, nothing proportional to table
+    size. Binning quantizes D by at most 1/bins, the standard
+    streaming/distributed KS approximation.
+    """
+    hist = _two_sample_hist(df, col, side_expr, bins, [])
     acc0 = F.struct(
         F.lit(0).cast("long").alias("ca"),
         F.lit(0).cast("long").alias("cb"),
@@ -311,20 +362,10 @@ def ks_drift(
 
 
 def ks_drift_sql(table: str, col: str, side_sql: str, bins: int = 256) -> str:
-    """DuckDB twin: same two-pass binning, cumulative CDFs via an
+    """DuckDB twin: the same two-pass histogram, cumulative CDFs via an
     ordered window over the tiny bin table."""
     return f"""
-    WITH vals AS (
-      SELECT CAST({col} AS DOUBLE) AS v, coalesce(({side_sql}), FALSE) AS is_a
-      FROM {table} WHERE {col} IS NOT NULL),
-    mm AS (SELECT min(v) AS lo, max(v) AS hi FROM vals),
-    binned AS (
-      SELECT CASE WHEN hi > lo
-                  THEN least(CAST(floor((v - lo) / (hi - lo) * {bins}) AS INT), {bins - 1})
-                  ELSE 0 END AS bin,
-             sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS ct_a,
-             sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS ct_b
-      FROM vals, mm GROUP BY 1),
+    WITH {_two_sample_hist_sql(table, col, side_sql, bins)},
     cdf AS (
       SELECT sum(ct_a) OVER (ORDER BY bin) AS ca,
              sum(ct_b) OVER (ORDER BY bin) AS cb,
@@ -409,6 +450,53 @@ def psi_trend_sql(
     )
 
 
+def _mad_fences(
+    vals: DataFrame, col: str, k: float, keys: list[str], approx: bool, accuracy: int
+) -> DataFrame:
+    """``(keys…, lo, hi)``: the median ± k·1.4826·MAD fences per key
+    over ``vals`` (``keys…`` plus the double column ``col``) — two
+    keyed :func:`~..functions.quantiles.quantiles` frames, the median
+    joined back for the deviations and carried through the MAD frame,
+    so the fences need no second join. They keep one fixed operation
+    order, ``med - k * 1.4826 * mad``, the twin's."""
+    med = quantiles(vals, col, [0.5], keys, approx, accuracy).withColumnRenamed("q0", "med")
+    dev = join_keyed(vals, med, keys).select(
+        *keys, "med", F.abs(F.col(col) - F.col("med")).alias("dev")
+    )
+    mad = quantiles(dev, "dev", [0.5], keys, approx, accuracy, carry=["med"])
+    return mad.select(
+        *keys,
+        (F.col("med") - k * 1.4826 * F.col("q0")).alias("lo"),
+        (F.col("med") + k * 1.4826 * F.col("q0")).alias("hi"),
+    )
+
+
+def _mad_fences_sql(table: str, col: str, k: float, by: str | None = None) -> str:
+    """DuckDB twin of :func:`_mad_fences`: the CTEs ``m`` (median),
+    ``d`` (MAD) and ``f`` (``lo``, ``hi``), with a leading group
+    column ``g`` when ``by`` is given."""
+    g = "g, " if by else ""
+    return f"""m AS (
+      SELECT {f"{by} AS g, " if by else ""}quantile_cont(CAST({col} AS DOUBLE), 0.5) AS med
+      FROM {table}{f" GROUP BY {by}" if by else ""}),
+    d AS (
+      SELECT {"m.g, " if by else ""}quantile_cont(abs(CAST(t.{col} AS DOUBLE) - m.med), 0.5) AS mad,
+             any_value(m.med) AS med
+      FROM {table} t{f" JOIN m ON t.{by} = m.g GROUP BY m.g" if by else ", m"}),
+    f AS (SELECT {g}med - {k} * 1.4826 * mad AS lo, med + {k} * 1.4826 * mad AS hi FROM d)"""
+
+
+def _fence_cols() -> list[Column]:
+    # floor(x*1e4+0.5), not round(x,4): the fences are arbitrary
+    # computed doubles, where Spark rounds the decimal repr and DuckDB
+    # the binary value — floor of the identical double is bit-stable
+    # (the documented single-value idiom)
+    return [
+        (F.floor(F.any_value(F.col(b)) * 10000 + F.lit(0.5)) / 10000).alias(f"fence_{b}")
+        for b in ("lo", "hi")
+    ]
+
+
 def mad_outliers(
     df: DataFrame,
     col: str,
@@ -422,119 +510,49 @@ def mad_outliers(
     Unlike mean/stddev screens, a few extreme rows cannot drag the
     fence — the breakdown point is 50%.
 
-    Two median passes (median, then median absolute deviation around
-    it — both metadata-sized scalars), then the flag is a map-side
-    expression and the report one small groupBy.
+    Plan: :func:`_mad_fences` (median, then the median absolute
+    deviation around it — both one-row frames), cross-joined back by
+    broadcast; the flag is a map-side expression and the report one
+    small groupBy. The whole screen is one lazy plan: nothing is
+    collected to the driver and nothing is pinned, so nothing is left
+    to release.
 
-    **Memory bound / the 100 TB switch.** ``approx=True`` is the
-    production mode: ``percentile_approx`` keeps a mergeable GK-sketch
-    of O(accuracy) state per partition (rank error ≤ 1/accuracy, so
-    fences are within (hi-lo)/accuracy of exact — a bounded-error
-    pytest pins this), the plan stays fully lazy, and NOTHING is
-    pinned — executor state is O(accuracy), as a 100 TB run needs.
-    Exact mode (the default, because the DuckDB oracle twin
-    ``quantile_cont`` is exact — same split as ``profile(exact=)``)
-    computes both medians with the distributed value-counts rewrite
-    (functions/quantiles.py, bit-identical to ``percentile()``) and
-    pins the projected value column once for its three passes; that
-    pin is O(rows) of one double column on executor storage — exact
-    mode's inherent size class (the old ``percentile`` buffer held the
-    same values in ONE task's memory).
-
-    In exact mode the interpolated percentile is identical on both
-    engines and the fences are built with one fixed operation order,
-    so the report value-checks bit-exactly cross-engine."""
+    ``approx=True`` swaps the exact value-counts quantiles (bit-identical
+    to ``percentile()``, the DuckDB ``quantile_cont`` twin's answer) for
+    Spark's mergeable O(accuracy) GK sketch — rank
+    error <= 1/accuracy, fences within (hi-lo)/accuracy of exact (a
+    bounded-error pytest pins this) — the 100 TB mode whose executor
+    state does not grow with the column's distinct values."""
     c = F.col(col)
-    if approx:
-        # PRODUCTION mode: percentile_approx keeps O(accuracy) sketch
-        # state per partition, and the plan stays fully lazy with NO
-        # pinned column — materializing the cast column would put
-        # O(rows) on executor local storage and truncate lineage,
-        # contradicting exactly the memory bound this mode exists for
-        # (round-13 ADVICE). The three passes re-scan the source; at
-        # scale that is 3 scans of one narrow column vs an O(rows) pin.
-        vals = df.select(c.cast("double").alias(col))
-        pct = lambda x, q: F.percentile_approx(x, q, accuracy)  # noqa: E731
-        med = vals.agg(pct(c, 0.5).alias("med"))
-        d = (
-            vals.crossJoin(F.broadcast(med))
-            .agg(
-                pct(F.abs(c - F.col("med")), 0.5).alias("mad"),
-                F.any_value("med").alias("med"),
-            )
-        )
-        lo = F.col("med") - k * 1.4826 * F.col("mad")
-        hi = F.col("med") + k * 1.4826 * F.col("mad")
-        flag = F.when(c < lo, "LOW").when(c > hi, "HIGH").otherwise("INLIER")
-        return (
-            vals.crossJoin(F.broadcast(d))
-            .groupBy(flag.alias("flag"))
-            .agg(
-                F.count(F.lit(1)).alias("row_ct"),
-                F.round(F.min(c), 2).alias("min_val"),
-                F.round(F.max(c), 2).alias("max_val"),
-                (F.floor(F.any_value(lo) * 10000 + F.lit(0.5)) / 10000).alias("fence_lo"),
-                (F.floor(F.any_value(hi) * 10000 + F.lit(0.5)) / 10000).alias("fence_hi"),
-            )
-            .orderBy("flag")
-        )
-    from ..functions.quantiles import exact_percentiles
-
-    # EXACT mode: the two medians come from the distributed
-    # value-counts rewrite (functions/quantiles.py — bit-identical to
-    # percentile(), proven by tests/test_quantiles.py), replacing two
-    # ObjectHashAggregate passes whose buffer is every distinct value
-    # on one task. The projected value column is pinned ONCE and feeds
-    # the two value-count passes plus the fence rollup (guide §2.4) —
-    # this pin is O(rows) of ONE cast column, the size class exact
-    # mode already accepts (the old percentile buffer held the same
-    # column in one task's memory; the pin at least spreads it).
-    vals = pin(df.select(c.cast("double").alias(col)))
-    med_v = exact_percentiles(vals, col, [0.5])[0]
-    med_lit = F.lit(med_v).cast("double") if med_v is not None else F.lit(None).cast("double")
-    mad_v = exact_percentiles(
-        vals.select(F.abs(c - med_lit).alias(col)), col, [0.5]
-    )[0]
-    mad_lit = F.lit(mad_v).cast("double") if mad_v is not None else F.lit(None).cast("double")
-    # fences built with the SAME operation order as before (med - k *
-    # 1.4826 * mad) over the identical doubles, so every flag and
-    # reported value is bit-stable vs the aggregate-based plan
-    lo = med_lit - k * 1.4826 * mad_lit
-    hi = med_lit + k * 1.4826 * mad_lit
-    flag = F.when(c < lo, "LOW").when(c > hi, "HIGH").otherwise("INLIER")
+    vals = df.select(c.cast("double").alias(col))
+    fences = _mad_fences(vals, col, k, [], approx, accuracy)
+    flag = F.when(c < F.col("lo"), "LOW").when(c > F.col("hi"), "HIGH").otherwise("INLIER")
     return (
-        vals.groupBy(flag.alias("flag"))
+        join_keyed(vals, fences)
+        .groupBy(flag.alias("flag"))
         .agg(
             F.count(F.lit(1)).alias("row_ct"),
             F.round(F.min(c), 2).alias("min_val"),
             F.round(F.max(c), 2).alias("max_val"),
-            # floor(x*1e4+0.5), not round(x,4): the fences are arbitrary
-            # computed doubles, where Spark rounds the decimal repr and
-            # DuckDB the binary value — floor of the identical double
-            # is bit-stable (the documented single-value idiom)
-            (F.floor(F.min(lo) * 10000 + F.lit(0.5)) / 10000).alias("fence_lo"),
-            (F.floor(F.min(hi) * 10000 + F.lit(0.5)) / 10000).alias("fence_hi"),
+            *_fence_cols(),
         )
         .orderBy("flag")
     )
 
 
 def mad_outliers_sql(table: str, col: str, k: float = 3.5) -> str:
+    x = f"CAST(t.{col} AS DOUBLE)"
     return f"""
-    WITH m AS (SELECT quantile_cont(CAST({col} AS DOUBLE), 0.5) AS med FROM {table}),
-    d AS (
-      SELECT quantile_cont(abs(CAST(t.{col} AS DOUBLE) - m.med), 0.5) AS mad,
-             any_value(m.med) AS med
-      FROM {table} t, m)
-    SELECT CASE WHEN CAST(t.{col} AS DOUBLE) < d.med - {k} * 1.4826 * d.mad THEN 'LOW'
-                WHEN CAST(t.{col} AS DOUBLE) > d.med + {k} * 1.4826 * d.mad THEN 'HIGH'
+    WITH {_mad_fences_sql(table, col, k)}
+    SELECT CASE WHEN {x} < f.lo THEN 'LOW'
+                WHEN {x} > f.hi THEN 'HIGH'
                 ELSE 'INLIER' END AS flag,
            count(*) AS row_ct,
-           round(min(CAST(t.{col} AS DOUBLE)), 2) AS min_val,
-           round(max(CAST(t.{col} AS DOUBLE)), 2) AS max_val,
-           floor(any_value(d.med - {k} * 1.4826 * d.mad) * 10000 + 0.5) / 10000 AS fence_lo,
-           floor(any_value(d.med + {k} * 1.4826 * d.mad) * 10000 + 0.5) / 10000 AS fence_hi
-    FROM {table} t, d GROUP BY flag ORDER BY flag
+           round(min({x}), 2) AS min_val,
+           round(max({x}), 2) AS max_val,
+           floor(any_value(f.lo) * 10000 + 0.5) / 10000 AS fence_lo,
+           floor(any_value(f.hi) * 10000 + 0.5) / 10000 AS fence_hi
+    FROM {table} t, f GROUP BY flag ORDER BY flag
     """
 
 
@@ -549,57 +567,40 @@ def mad_outliers_grouped(
     """Per-group robust outlier screen: :func:`mad_outliers` fences
     computed independently for every ``by`` group — the "is THIS
     pipeline's metric wild for THIS pipeline" shape, where a global
-    fence would drown quiet groups in one loud one.
+    fence would drown quiet groups in one loud one. Reports per-group
+    counts (row, low, high) instead of rows per flag.
 
-    Plan: two grouped aggregate passes (median, then MAD around it),
-    each joined back on the group key (shuffle-on-key; the fence table
-    is one row per group), then a map-side flag and one final grouped
-    count. Exact mode's per-group percentile state is bounded by the
-    LARGEST group, not the table — still the scale hazard when one key
-    dominates, so ``approx=True`` swaps in percentile_approx's
-    O(accuracy) sketch per group (same split as the global screen)."""
-    c = F.col(col).cast("double")
-    pct = (
-        (lambda x, q: F.percentile_approx(x, q, accuracy))
-        if approx
-        else (lambda x, q: F.percentile(x, q))
-    )
-    med = df.groupBy(F.col(by).alias("_g")).agg(pct(c, 0.5).alias("med"))
-    with_med = df.join(med, F.col(by) == F.col("_g")).drop("_g")
-    d = with_med.groupBy(F.col(by).alias("_g")).agg(
-        pct(F.abs(c - F.col("med")), 0.5).alias("mad"),
-        F.any_value("med").alias("med"),
-    )
-    j = df.join(d, F.col(by) == F.col("_g")).drop("_g")
-    lo = F.col("med") - k * 1.4826 * F.col("mad")
-    hi = F.col("med") + k * 1.4826 * F.col("mad")
+    Plan: the same :func:`_mad_fences`, keyed by ``by`` — one row per
+    group, joined back on the key (a NULL key matches no
+    group and drops out) — then one grouped count. Exact mode's
+    per-group value counts are bounded by the LARGEST group's distinct
+    values; ``approx=True`` bounds them by O(accuracy) per group."""
+    c = F.col(col)
+    vals = df.select(by, c.cast("double").alias(col))
+    fences = _mad_fences(vals, col, k, [by], approx, accuracy)
     return (
-        j.groupBy(by)
+        join_keyed(vals, fences, [by])
+        .groupBy(by)
         .agg(
             F.count(F.lit(1)).alias("row_ct"),
-            F.sum((c < lo).cast("int")).alias("low_ct"),
-            F.sum((c > hi).cast("int")).alias("high_ct"),
-            (F.floor(F.any_value(lo) * 10000 + F.lit(0.5)) / 10000).alias("fence_lo"),
-            (F.floor(F.any_value(hi) * 10000 + F.lit(0.5)) / 10000).alias("fence_hi"),
+            F.sum((c < F.col("lo")).cast("int")).alias("low_ct"),
+            F.sum((c > F.col("hi")).cast("int")).alias("high_ct"),
+            *_fence_cols(),
         )
         .orderBy(by)
     )
 
 
 def mad_outliers_grouped_sql(table: str, col: str, by: str, k: float = 3.5) -> str:
-    c = f"CAST({col} AS DOUBLE)"
+    x = f"CAST(t.{col} AS DOUBLE)"
     return f"""
-    WITH m AS (SELECT {by} AS g, quantile_cont({c}, 0.5) AS med FROM {table} GROUP BY {by}),
-    d AS (
-      SELECT m.g, quantile_cont(abs(CAST(t.{col} AS DOUBLE) - m.med), 0.5) AS mad,
-             any_value(m.med) AS med
-      FROM {table} t JOIN m ON t.{by} = m.g GROUP BY m.g)
+    WITH {_mad_fences_sql(table, col, k, by)}
     SELECT t.{by}, count(*) AS row_ct,
-           CAST(sum(CASE WHEN CAST(t.{col} AS DOUBLE) < d.med - {k} * 1.4826 * d.mad THEN 1 ELSE 0 END) AS BIGINT) AS low_ct,
-           CAST(sum(CASE WHEN CAST(t.{col} AS DOUBLE) > d.med + {k} * 1.4826 * d.mad THEN 1 ELSE 0 END) AS BIGINT) AS high_ct,
-           floor(any_value(d.med - {k} * 1.4826 * d.mad) * 10000 + 0.5) / 10000 AS fence_lo,
-           floor(any_value(d.med + {k} * 1.4826 * d.mad) * 10000 + 0.5) / 10000 AS fence_hi
-    FROM {table} t JOIN d ON t.{by} = d.g
+           CAST(sum(CASE WHEN {x} < f.lo THEN 1 ELSE 0 END) AS BIGINT) AS low_ct,
+           CAST(sum(CASE WHEN {x} > f.hi THEN 1 ELSE 0 END) AS BIGINT) AS high_ct,
+           floor(any_value(f.lo) * 10000 + 0.5) / 10000 AS fence_lo,
+           floor(any_value(f.hi) * 10000 + 0.5) / 10000 AS fence_hi
+    FROM {table} t JOIN f ON t.{by} = f.g
     GROUP BY t.{by} ORDER BY t.{by}
     """
 
@@ -1068,6 +1069,7 @@ def wasserstein_drift(
     col: str,
     side_expr: Column,
     bins: int = 256,
+    by: str | None = None,
 ) -> DataFrame:
     """Two-sample Wasserstein-1 (earth mover's) screen between two
     slices of one table — the AREA between the binned empirical CDFs,
@@ -1076,41 +1078,21 @@ def wasserstein_drift(
     until n is huge) still registers; together they answer 'did it
     move' (KS) and 'by how much' (W1).
 
-    Same two-pass plan as :func:`ks_drift` (min/max agg -> bins-sized
-    histogram, map-side partials), then an integer fold: w1_e6 =
+    ``by`` keys the screen — 'how far did each domain/segment move':
+    one row per ``by`` group (ordered by it) instead of one
+    ``column_name`` row. Each group bins over ITS OWN [min, max] span,
+    so w1_e6 is comparable across groups as a fraction-of-own-span;
+    rows with a NULL key drop out.
+
+    Plan: :func:`_two_sample_hist` (min/max agg -> bins-sized histogram
+    per key), then one integer array fold per key: w1_e6 =
     floor(1e6 * sum_bins |ca*n_b - cb*n_a| / (n_a*n_b*bins)) — W1 as a
     fraction of the observed span, in exact 1e-6 units. Cross products
     run in DECIMAL(38,0)/HUGEINT so the verdict is bit-identical
     cross-engine (n_a*n_b*bins < 1e38 — any realistic table). NULL
-    when either slice is empty (undefined, like ks_drift). A NULL
-    ``side_expr`` row lands in slice B on both engines (coalesced to
-    FALSE — ks_drift's normalization, round-7 ADVICE)."""
-    x = F.col(col).cast("double")
-    vals = df.select(x.alias("v"), F.coalesce(side_expr, F.lit(False)).alias("is_a")).filter(
-        F.col("v").isNotNull()
-    )
-    mm = vals.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    span = F.col("hi") - F.col("lo")
-    bin_ix = F.when(
-        span > 0,
-        F.least(
-            F.floor((F.col("v") - F.col("lo")) / span * bins).cast("int"),
-            F.lit(bins - 1),
-        ),
-    ).otherwise(F.lit(0))
-    binned = (
-        vals.join(F.broadcast(mm))
-        .groupBy(bin_ix.alias("bin"))
-        .agg(
-            F.sum(F.col("is_a").cast("long")).alias("ct_a"),
-            F.sum((~F.col("is_a")).cast("long")).alias("ct_b"),
-        )
-    )
-    hist = binned.agg(
-        F.sort_array(F.collect_list(F.struct("bin", "ct_a", "ct_b"))).alias("h"),
-        F.sum("ct_a").alias("tot_a"),
-        F.sum("ct_b").alias("tot_b"),
-    )
+    when either slice is empty (undefined, like ks_drift)."""
+    keys = [by] if by else []
+    hist = _two_sample_hist(df, col, side_expr, bins, keys)
     acc0 = F.struct(
         F.lit(0).cast("long").alias("ca"),
         F.lit(0).cast("long").alias("cb"),
@@ -1121,7 +1103,8 @@ def wasserstein_drift(
     # a groupBy histogram only materializes NON-empty bins, but the CDF
     # gap persists across empty ones — weight each cumulative gap by the
     # run of bins it spans (e.bin - lb) or the area under-counts comb
-    # distributions (trailing bins carry gap 0: both CDFs are complete)
+    # distributions (trailing bins carry gap 0: both CDFs are complete,
+    # so the fold needs no term past the last entry)
     def step(acc, e):
         gap = F.abs(
             acc["ca"].cast("decimal(38,0)") * F.col("tot_b")
@@ -1134,176 +1117,56 @@ def wasserstein_drift(
             (acc["s"] + gap * (e["bin"] - acc["lb"]).cast("decimal(38,0)")).alias("s"),
         )
 
-    # after the last entry both CDFs are complete (gap 0), so the final
-    # state needs one more term: the gap BEFORE the last entry's counts
-    # never applies past it — fold result is acc.s plus nothing
     s = F.aggregate(F.col("h"), acc0, step, lambda acc: acc["s"])
-    return (
-        hist.select(
-            F.col("tot_a").cast("long").alias("n_a"),
-            F.col("tot_b").cast("long").alias("n_b"),
-            s.alias("s"),
-        )
-        .selectExpr(
-            f"'{col}' AS column_name",
-            "n_a",
-            "n_b",
-            # integral divide of exact DECIMAL(38,0) integers == the
-            # twin's HUGEINT // — no decimal-division half-up rounding
+    out = hist.select(
+        *keys,
+        F.col("tot_a").cast("long").alias("n_a"),
+        F.col("tot_b").cast("long").alias("n_b"),
+        s.alias("s"),
+    ).select(
+        *(keys or [F.lit(col).alias("column_name")]),
+        "n_a",
+        "n_b",
+        # integral divide of exact DECIMAL(38,0) integers == the
+        # twin's HUGEINT // — no decimal-division half-up rounding
+        F.expr(
             f"""CASE WHEN n_a > 0 AND n_b > 0 THEN CAST(
                  (s * 1000000) DIV (CAST(n_a AS DECIMAL(38,0))
-                  * CAST(n_b AS DECIMAL(38,0)) * {bins}) AS BIGINT) END AS w1_e6""",
-        )
+                  * CAST(n_b AS DECIMAL(38,0)) * {bins}) AS BIGINT) END"""
+        ).alias("w1_e6"),
     )
+    return out.orderBy(by) if by else out
 
 
 def wasserstein_drift_sql(
-    table: str, col: str, side_sql: str, bins: int = 256
+    table: str, col: str, side_sql: str, bins: int = 256, by: str | None = None
 ) -> str:
-    """DuckDB twin of :func:`wasserstein_drift` (HUGEINT cross
-    products, same binning as ks_drift_sql)."""
+    """DuckDB twin of :func:`wasserstein_drift`: the shared histogram
+    CTEs, then window CDFs and HUGEINT cross products (per ``by`` group
+    when given)."""
+    g = "g, " if by else ""
+    part = "PARTITION BY g" if by else ""
     return f"""
-    WITH vals AS (
-      SELECT CAST({col} AS DOUBLE) AS v, coalesce(({side_sql}), FALSE) AS is_a
-      FROM {table} WHERE {col} IS NOT NULL),
-    mm AS (SELECT min(v) AS lo, max(v) AS hi FROM vals),
-    binned AS (
-      SELECT CASE WHEN hi > lo
-                  THEN least(CAST(floor((v - lo) / (hi - lo) * {bins}) AS INT), {bins - 1})
-                  ELSE 0 END AS bin,
-             CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ct_a,
-             CAST(sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS ct_b
-      FROM vals, mm GROUP BY 1),
-    tot AS (SELECT CAST(sum(ct_a) AS BIGINT) AS tot_a,
-                   CAST(sum(ct_b) AS BIGINT) AS tot_b FROM binned),
+    WITH {_two_sample_hist_sql(table, col, side_sql, bins, by)},
     cum AS (
-      SELECT sum(ct_a) OVER w AS ca, sum(ct_b) OVER w AS cb,
+      SELECT {g}sum(ct_a) OVER w AS ca, sum(ct_b) OVER w AS cb,
              -- the gap after this bin persists across empty bins up to
              -- the next materialized one (trailing run carries gap 0)
-             coalesce(lead(bin) OVER (ORDER BY bin), bin) - bin AS width
+             coalesce(lead(bin) OVER ({part} ORDER BY bin), bin) - bin AS width,
+             sum(ct_a) OVER ({part}) AS tot_a, sum(ct_b) OVER ({part}) AS tot_b
       FROM binned
-      WINDOW w AS (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+      WINDOW w AS ({part} ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
     area AS (
-      SELECT CAST(sum(abs(CAST(ca AS HUGEINT) * tot_b
-                          - CAST(cb AS HUGEINT) * tot_a) * width) AS HUGEINT) AS s
-      FROM cum, tot)
-    SELECT '{col}' AS column_name, tot_a AS n_a, tot_b AS n_b,
-           CASE WHEN tot_a > 0 AND tot_b > 0
-                THEN CAST(s * 1000000 // (CAST(tot_a AS HUGEINT) * tot_b * {bins})
-                          AS BIGINT)
-                END AS w1_e6
-    FROM area, tot
-    """
-
-
-def wasserstein_grouped(
-    df: DataFrame,
-    col: str,
-    side_expr: Column,
-    by: str,
-    bins: int = 128,
-) -> DataFrame:
-    """Per-group two-sample Wasserstein-1: :func:`wasserstein_drift`
-    keyed by ``by`` — 'how far did each domain/segment move', the
-    grouped face of the drift family (like mad_outliers_grouped for
-    fences). Each group bins over ITS OWN [min, max] span, so w1_e6 is
-    comparable across groups as a fraction-of-own-span.
-
-    Plan: one scan computes per-group min/max (groupBy + join back —
-    the group stats frame is key-cardinality-sized, AQE broadcasts
-    it), a second bins and counts per (group, side, bin); the area
-    fold is a per-group window over the bins frame. Same exact
-    DECIMAL(38,0)/HUGEINT cross products, same empty-bin run
-    weighting; a group with an empty side reports NULL."""
-    x = F.col(col).cast("double")
-    vals = df.select(
-        F.col(by).alias("g"), x.alias("v"), F.coalesce(side_expr, F.lit(False)).alias("is_a")
-    ).filter(F.col("v").isNotNull())
-    mm = vals.groupBy("g").agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    j = vals.join(mm, "g")
-    span = F.col("hi") - F.col("lo")
-    bin_ix = F.when(
-        span > 0,
-        F.least(
-            F.floor((F.col("v") - F.col("lo")) / span * bins).cast("int"),
-            F.lit(bins - 1),
-        ),
-    ).otherwise(F.lit(0))
-    binned = j.groupBy(F.col("g"), bin_ix.alias("bin")).agg(
-        F.sum(F.col("is_a").cast("long")).alias("ct_a"),
-        F.sum((~F.col("is_a")).cast("long")).alias("ct_b"),
-    )
-    ow = "(PARTITION BY g ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    cum = binned.selectExpr(
-        "g",
-        "bin",
-        f"sum(ct_a) OVER {ow} AS ca",
-        f"sum(ct_b) OVER {ow} AS cb",
-        f"coalesce(lead(bin) OVER (PARTITION BY g ORDER BY bin), bin) - bin AS width",
-        f"sum(ct_a) OVER (PARTITION BY g) AS tot_a",
-        f"sum(ct_b) OVER (PARTITION BY g) AS tot_b",
-    )
-    return (
-        cum.groupBy(F.col("g").alias(by))
-        .agg(
-            F.max("tot_a").cast("long").alias("n_a"),
-            F.max("tot_b").cast("long").alias("n_b"),
-            F.sum(
-                F.expr(
-                    "abs(CAST(ca AS DECIMAL(38,0)) * tot_b"
-                    " - CAST(cb AS DECIMAL(38,0)) * tot_a) * width"
-                )
-            ).alias("s"),
-        )
-        .selectExpr(
-            by,
-            "n_a",
-            "n_b",
-            f"""CASE WHEN n_a > 0 AND n_b > 0 THEN CAST(
-                 (s * 1000000) DIV (CAST(n_a AS DECIMAL(38,0))
-                  * CAST(n_b AS DECIMAL(38,0)) * {bins}) AS BIGINT) END AS w1_e6""",
-        )
-        .orderBy(by)
-    )
-
-
-def wasserstein_grouped_sql(
-    table: str, col: str, side_sql: str, by: str, bins: int = 128
-) -> str:
-    """DuckDB twin of :func:`wasserstein_grouped`."""
-    return f"""
-    WITH vals AS (
-      SELECT {by} AS g, CAST({col} AS DOUBLE) AS v, coalesce(({side_sql}), FALSE) AS is_a
-      FROM {table} WHERE {col} IS NOT NULL),
-    mm AS (SELECT g, min(v) AS lo, max(v) AS hi FROM vals GROUP BY g),
-    binned AS (
-      SELECT vals.g,
-             CASE WHEN hi > lo
-                  THEN least(CAST(floor((v - lo) / (hi - lo) * {bins}) AS INT), {bins - 1})
-                  ELSE 0 END AS bin,
-             CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ct_a,
-             CAST(sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS ct_b
-      FROM vals JOIN mm ON vals.g = mm.g GROUP BY 1, 2),
-    cum AS (
-      SELECT g, bin,
-             sum(ct_a) OVER w AS ca, sum(ct_b) OVER w AS cb,
-             coalesce(lead(bin) OVER (PARTITION BY g ORDER BY bin), bin) - bin AS width,
-             sum(ct_a) OVER (PARTITION BY g) AS tot_a,
-             sum(ct_b) OVER (PARTITION BY g) AS tot_b
-      FROM binned
-      WINDOW w AS (PARTITION BY g ORDER BY bin
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    area AS (
-      SELECT g, CAST(max(tot_a) AS BIGINT) AS n_a, CAST(max(tot_b) AS BIGINT) AS n_b,
+      SELECT {g}CAST(max(tot_a) AS BIGINT) AS n_a, CAST(max(tot_b) AS BIGINT) AS n_b,
              CAST(sum(abs(CAST(ca AS HUGEINT) * tot_b
                           - CAST(cb AS HUGEINT) * tot_a) * width) AS HUGEINT) AS s
-      FROM cum GROUP BY g)
-    SELECT g AS {by}, n_a, n_b,
+      FROM cum{" GROUP BY g" if by else ""})
+    SELECT {f"g AS {by}" if by else f"'{col}' AS column_name"}, n_a, n_b,
            CASE WHEN n_a > 0 AND n_b > 0
                 THEN CAST(s * 1000000 // (CAST(n_a AS HUGEINT) * n_b * {bins})
                           AS BIGINT)
                 END AS w1_e6
-    FROM area ORDER BY {by}
+    FROM area{f" ORDER BY {by}" if by else ""}
     """
 
 

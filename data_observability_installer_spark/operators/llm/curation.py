@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ...functions.pin import pin, pinned
+from ...functions.quantiles import join_keyed, quantiles
 
 BUCKETS = 10_000
 
@@ -505,22 +506,24 @@ def filter_by_quantile(
     above) the ``q``-quantile — the CCNet-style "drop the worst tail by
     LM perplexity" step, generalized to any score.
 
-    ``approx=True`` is the corpus-scale mode: the global (``per=None``)
-    exact quantile buffers EVERY score in one aggregate group, which is
-    O(corpus) executor memory at 100 TB; ``percentile_approx`` keeps a
-    mergeable O(accuracy) GK-sketch instead (rank error ≤ 1/accuracy —
-    for a tail-cut threshold that moves the cut by at most a
-    1/accuracy fraction of documents, which is noise next to choosing
-    q itself). Exact stays the default for the DuckDB oracle twin.
+    ``approx=True`` is the corpus-scale mode: the exact threshold
+    counts every distinct score of a group, O(distinct) state on the
+    task that ranks it; Spark's mergeable GK sketch keeps O(accuracy)
+    instead (rank error ≤ 1/accuracy — for a tail-cut threshold that
+    moves the cut by at most a 1/accuracy fraction of documents, which
+    is noise next to choosing q itself). Exact stays the default for
+    the DuckDB oracle twin.
 
     ``per`` makes the threshold group-relative (e.g. per source/
     language): small domains aren't wiped out by a global cut that one
-    verbose domain dominates.
+    verbose domain dominates. Rows with a NULL ``per`` key match no
+    threshold and drop out.
 
-    Plan: ONE pass computes the exact interpolated quantile (per group
-    or 1-row global); the threshold table is tiny and broadcasts back —
-    the corpus is scanned twice (score pass upstream, filter pass), no
-    corpus shuffle. The threshold rounds via floor(x*10^d + 0.5) rather
+    Plan: one keyed quantile frame (functions/quantiles.py — exact
+    value counts, bit-identical to percentile(), no driver collect)
+    gives the threshold per group, or one row globally, joined back on
+    the key (AQE broadcasts the tiny threshold table), so the corpus
+    never shuffles for the filter. The threshold rounds via floor(x*10^d + 0.5) rather
     than round(): Spark's round() rounds the shortest DECIMAL
     representation of the double while DuckDB rounds the binary value,
     and an interpolated quantile landing on a half-ulp boundary flips
@@ -530,25 +533,16 @@ def filter_by_quantile(
     if keep not in ("below", "above"):
         raise ValueError("keep must be 'below' or 'above'")
     scale = 10 ** round_to
-    pct = (
-        F.percentile_approx(score_col, q, accuracy)
-        if approx
-        else F.percentile(score_col, q)
+    keys = [per] if per is not None else []
+    thr = quantiles(scored, score_col, [q], keys, approx, accuracy).select(
+        *keys, (F.floor(F.col("q0") * scale + 0.5) / scale).alias("threshold")
     )
-    thr_expr = (F.floor(pct * scale + 0.5) / scale).alias("threshold")
-    if per is None:
-        thr = scored.agg(thr_expr)
-        joined = scored.crossJoin(F.broadcast(thr))
-    else:
-        thr = scored.groupBy(per).agg(thr_expr)
-        joined = scored.join(F.broadcast(thr), per)
     cond = (
         F.col(score_col) <= F.col("threshold")
         if keep == "below"
         else F.col(score_col) >= F.col("threshold")
     )
-    out_cols = [id_col, score_col, "threshold"] if per is None else [id_col, per, score_col, "threshold"]
-    return joined.filter(cond).select(*out_cols)
+    return join_keyed(scored, thr, keys).filter(cond).select(id_col, *keys, score_col, "threshold")
 
 
 def filter_by_quantile_sql(

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.driver import local_frame
 from ..functions.pin import pin, pinned
+from ..functions.quantiles import join_keyed, quantiles
 from ..functions.time import epoch_seconds
 from ..operators.dq.compiler import compile_suite, compile_suite_sql
 from .cache import DFCache, pinned_entry
@@ -2213,64 +2214,27 @@ def decile_report_orders(
 ) -> DataFrame:
     """Quantile bucketing WITHOUT a global sort: ntile(10) would funnel
     every row through one ordered window — the classic scale-killer —
-    so the decile edges come from ONE aggregate pass (interpolated
-    percentiles, identical doubles on both engines), broadcast back,
-    and each row's decile is 1 + count(edges strictly below it): a
-    map-side expression. Two passes total, shuffle only for the 10-row
-    final agg; the per-decile money total sums per-row-rounded integer
-    cents so it is order-independent.
+    so the nine decile edges come from ONE keyless quantile frame
+    (functions/quantiles.py: exact value counts, bit-identical to
+    percentile() and the quantile_cont twin), broadcast back, and each
+    row's decile is 1 + count(edges strictly below it): a map-side
+    expression. The whole report is one lazy plan — nothing collected,
+    nothing pinned; the per-decile money total sums per-row-rounded
+    integer cents so it is order-independent.
 
-    The exact edge pass runs the distributed value-counts rewrite
-    (functions/quantiles.py — codegen aggregation, distinct-value
-    shuffle, bit-identical to percentile()) — ``exact=False`` is the
-    100 TB mode: percentile_approx's mergeable GK-sketch, lazy plan,
-    edges within a 1e-4 rank fraction. Exact stays the registered
-    default because the quantile_cont oracle twin is exact (same split
+    ``exact=False`` is the 100 TB mode: the same frame from Spark's
+    mergeable GK sketch, edges within a 1e-4 rank fraction. Exact stays
+    the registered default because the oracle twin is exact (same split
     as mad_outliers)."""
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    if not exact:
-        # 100 TB mode: lazy GK-sketch edges, NOTHING pinned (the pin
-        # would put the whole projected column — O(rows) — on executor
-        # storage, the same trade mad_outliers' approx mode refuses;
-        # two scans of one narrow column is the cheaper side at scale)
-        o = load_table(spark, sf_dir, "orders").select("o_totalprice")
-        edges = o.agg(
-            *[
-                F.percentile_approx("o_totalprice", q, 10000).alias(f"e{i}")
-                for i, q in enumerate(_DECILE_QS, 1)
-            ]
-        )
-        decile = F.lit(1)
-        for i in range(1, 10):
-            decile = decile + (F.col("o_totalprice") > F.col(f"e{i}")).cast("int")
-        return (
-            o.crossJoin(F.broadcast(edges))
-            .groupBy(decile.cast("int").alias("decile"))
-            .agg(
-                F.count(F.lit(1)).alias("order_ct"),
-                F.round(F.min("o_totalprice"), 2).alias("lo"),
-                F.round(F.max("o_totalprice"), 2).alias("hi"),
-                F.round(F.sum(cents) / 100.0, 2).alias("total"),
-            )
-            .orderBy("decile")
-        )
-    from ..functions.quantiles import exact_percentiles
-
-    # EXACT mode: the nine edges come from the distributed value-counts
-    # rewrite (functions/quantiles.py — bit-identical to percentile(),
-    # tests/test_quantiles.py), replacing the one-task whole-column
-    # percentile buffer. The pin is O(rows) of ONE double column —
-    # exact mode's inherent size class (the old percentile buffer held
-    # the same values in one task's memory) — and feeds the value-count
-    # pass plus the per-decile rollup, so the table scans once.
-    o = pin(load_table(spark, sf_dir, "orders").select("o_totalprice"))
-    edges_v = exact_percentiles(o, "o_totalprice", list(_DECILE_QS))
+    o = load_table(spark, sf_dir, "orders").select("o_totalprice")
+    edges = quantiles(o, "o_totalprice", _DECILE_QS, approx=not exact)
     decile = F.lit(1)
-    for e in edges_v:
-        e_lit = F.lit(e) if e is not None else F.lit(None).cast("double")
-        decile = decile + (F.col("o_totalprice") > e_lit).cast("int")
+    for i in range(len(_DECILE_QS)):
+        decile = decile + (F.col("o_totalprice") > F.col(f"q{i}")).cast("int")
+    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     return (
-        o.groupBy(decile.cast("int").alias("decile"))
+        join_keyed(o, edges)
+        .groupBy(decile.cast("int").alias("decile"))
         .agg(
             F.count(F.lit(1)).alias("order_ct"),
             F.round(F.min("o_totalprice"), 2).alias("lo"),
@@ -2725,23 +2689,20 @@ def wasserstein_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wasserstein_drift(li, "l_extendedprice", F.col("l_returnflag") == "R")
 
 
-from ..operators.drift import wasserstein_grouped, wasserstein_grouped_sql  # noqa: E402
-
-
 @register(
     "wasserstein_by_status_lineitem",
-    wasserstein_grouped_sql(
-        "lineitem", "l_extendedprice", "l_returnflag = 'R'", "l_linestatus"
+    wasserstein_drift_sql(
+        "lineitem", "l_extendedprice", "l_returnflag = 'R'", bins=128, by="l_linestatus"
     ),
 )
 def wasserstein_by_status_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-linestatus Wasserstein-1 between returned and kept items on
-    extended price — 'how far did EACH segment move', the grouped face
+    extended price — 'how far did EACH segment move', the keyed face
     of the two-sample family. Each group bins over its own span; the
-    area fold is a per-group window over the bins frame."""
+    area is the same array fold as the global screen, once per group."""
     li = load_table(spark, sf_dir, "lineitem")
-    return wasserstein_grouped(
-        li, "l_extendedprice", F.col("l_returnflag") == "R", "l_linestatus"
+    return wasserstein_drift(
+        li, "l_extendedprice", F.col("l_returnflag") == "R", bins=128, by="l_linestatus"
     )
 
 
@@ -4171,10 +4132,10 @@ from ..operators.drift import (  # noqa: E402
 def mad_outliers_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust (median/MAD) outlier screen on l_extendedprice — the
     fence a few extreme rows cannot drag, unlike the mean/stddev
-    screens in the hygiene family. Two broadcast-scalar passes + one
-    map-side flag; fences floor-rounded for cross-engine bit
-    stability. Production 100 TB mode: approx=True (percentile_approx
-    sketch instead of the O(rows) exact buffer)."""
+    screens in the hygiene family. Two one-row quantile frames
+    broadcast back + one map-side flag; fences floor-rounded for
+    cross-engine bit stability. Production 100 TB mode: approx=True
+    (a GK sketch instead of exact value counts)."""
     return mad_outliers(load_table(spark, sf_dir, "lineitem"), "l_extendedprice")
 
 
@@ -4186,8 +4147,8 @@ def mad_outliers_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group robust screen: independent median/MAD fences for each
     order priority — the per-pipeline form of the global screen (a
     fence per key, so one loud group cannot widen another's). Two
-    grouped percentile passes + key joins; approx=True bounds
-    per-group state when one key dominates."""
+    keyed quantile frames joined back on the key;
+    approx=True bounds per-group state when one key dominates."""
     return mad_outliers_grouped(
         load_table(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
     )

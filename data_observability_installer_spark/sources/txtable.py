@@ -103,6 +103,8 @@ MANIFESTS only; ``merge_cdc`` re-derives its rewrite and the row-level
 operations (``delete_rows``, ``update_rows``, ``merge_dv``) re-derive
 their match, because their row content depends on the snapshot they
 read (merge_dv's appended batch rows do not, so they are written once).
+The losing attempt removes the sidecar and rewrite files only it wrote
+(:func:`_discard`): no manifest names them, so vacuum never would.
 
 Row-level deletes WITHOUT rewrite (deletion vectors): a GDPR-delete of
 a handful of rows on a 100 TB table must not re-pay whole files, so
@@ -389,6 +391,17 @@ def _write_data_files(
         if n > 0:
             rows[os.path.join(sub, f)] = int(n)
     return sorted(rows), df.schema.json(), rows
+
+
+def _discard(path: str, written: list[str | None]) -> None:
+    """Remove what a commit attempt that lost its CAS wrote and its
+    retry will not reuse: a DV sidecar directory, or the data files of a
+    re-derived rewrite (their ``data/<uuid>/`` directory). No manifest
+    ever referenced them, and :func:`vacuum` only walks manifests, so
+    nothing else would collect them."""
+    full = [os.path.join(path, w) for w in written if w]
+    for d in sorted({w if os.path.isdir(w) else os.path.dirname(w) for w in full}):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _file_rows(path: str, m: dict, f: str) -> int:
@@ -1265,7 +1278,7 @@ def _dv_frame(spark, path: str, dv: dict, files: list[str]):
 
 def _retire(
     spark, path: str, m: dict, hits: DataFrame | None
-) -> tuple[int, list[str], dict, dict]:
+) -> tuple[int, list[str], dict, dict, str | None]:
     """Retire the live rows ``hits`` (``__file``, ``__pos``) from
     snapshot ``m`` through deletion vectors — the commit half every
     row-level operation shares. The caller pins ``hits`` (one
@@ -1282,8 +1295,9 @@ def _retire(
     commit deleted — row counts come from the manifest, so a broad
     delete touching 10^5 files does no serial footer reads.
 
-    Returns ``(retired rows, files kept, dv entries, dv_dropped)``;
-    nothing is written when ``hits`` is None or empty."""
+    Returns ``(retired rows, files kept, dv entries, dv_dropped,
+    sidecar)``; nothing is written (sidecar None) when ``hits`` is None
+    or empty."""
     dv = dict(m.get("dv") or {})
     files = list(m["files"])
     dropped: dict[str, dict] = {}
@@ -1293,7 +1307,7 @@ def _retire(
         for r in hits.groupBy("__file").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     if not per_file:
-        return 0, files, dv, dropped
+        return 0, files, dv, dropped, None
     touched = sorted(per_file)
     new_dv = hits.select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
     old_touched = [f for f in touched if f in dv]
@@ -1307,7 +1321,7 @@ def _retire(
         if total >= _file_rows(path, m, f):
             dropped[f] = dv.pop(f)
             files.remove(f)
-    return int(sum(per_file.values())), files, dv, dropped
+    return int(sum(per_file.values())), files, dv, dropped, sub
 
 
 def _prune_from_condition(
@@ -1417,7 +1431,7 @@ def delete_rows(
             .select("__file", "__pos")
         )
         try:
-            n, files, dv, dropped = _retire(spark, path, m, hits)
+            n, files, dv, dropped, sidecar = _retire(spark, path, m, hits)
             if not n:
                 return 0  # nothing (newly) matched: no commit
             manifest = {
@@ -1431,6 +1445,7 @@ def delete_rows(
             _publish(path, manifest, m, backend)
             return n
         except VersionClaimedError:
+            _discard(path, [sidecar])
             continue  # snapshot basis stale: re-derive the whole delete
         finally:
             unpin(hits)
@@ -1593,12 +1608,18 @@ def vacuum(path: str, keep_last: int = 2) -> int:
     :class:`VacuumedVersionError`."""
     vs = _versions(path)
     keep, drop = vs[-keep_last:], vs[:-keep_last]
+
+    def sidecars(m: dict) -> set[str]:
+        # a file a commit deleted whole leaves "dv" for "dv_dropped",
+        # and its sidecar stays that commit's (the CDF face reads it)
+        return {e["dv"] for k in ("dv", "dv_dropped") for e in (m.get(k) or {}).values()}
+
     live: set[str] = set()
     live_dv: set[str] = set()
     for v in keep:
         km = read_manifest(path, v)
         live.update(km["files"])
-        live_dv.update(e["dv"] for e in (km.get("dv") or {}).values())
+        live_dv.update(sidecars(km))
     removed = 0
     dead_dv: set[str] = set()
     for v in drop:
@@ -1611,10 +1632,7 @@ def vacuum(path: str, keep_last: int = 2) -> int:
                     removed += 1
         # DV sidecars follow the same retention rule as data files:
         # referenced only by dropped manifests -> collected
-        dead_dv.update(
-            e["dv"] for e in (dm.get("dv") or {}).values()
-            if e["dv"] not in live_dv
-        )
+        dead_dv.update(sidecars(dm) - live_dv)
         os.unlink(_manifest_path(path, v))
     for d in dead_dv:
         full = os.path.join(path, d)
@@ -1679,6 +1697,7 @@ def merge_cdc(
         try:
             return _publish(path, manifest, base, backend)
         except VersionClaimedError:
+            _discard(path, files)
             continue  # stale snapshot basis: redo the merge on the new head
     raise CommitConflict(f"could not commit after {_RETRIES} attempts")
 
@@ -1750,6 +1769,7 @@ def merge_dv(
                 _publish(path, manifest, None, backend)
                 return 0
             except VersionClaimedError:
+                _discard(path, files)
                 continue  # a racer created the table: re-check the guard
         schema = StructType.fromJson(json.loads(m["schema"]))
         names = [f.name for f in schema.fields]
@@ -1789,13 +1809,14 @@ def merge_dv(
             .select("__file", "__pos")
         ) if candidates else None
         try:
-            n, files, dv, dropped = _retire(spark, path, m, matched)
+            n, files, dv, dropped, sidecar = _retire(spark, path, m, matched)
             if new_files is None or written_schema != m["schema"]:
                 # postimages = the surviving batch rows in the table's
                 # declared schema — snapshot-independent, written ONCE
-                # (re-written only if a racer evolved the schema between
-                # retries; the orphaned first attempt is unreferenced
-                # garbage, collected like any crashed writer's files)
+                # and carried across lost races (re-written only if a
+                # racer evolved the schema between retries, when the
+                # earlier attempt's files are removed as unreferenced)
+                _discard(path, new_files or [])
                 types = {f.name: f.dataType.simpleString() for f in schema.fields}
                 shaped = survivors.select(
                     *[F.col(c).cast(types[c]).alias(c) for c in names]
@@ -1817,6 +1838,7 @@ def merge_dv(
             _publish(path, manifest, m, backend)
             return n
         except VersionClaimedError:
+            _discard(path, [sidecar])
             continue  # stale snapshot basis: re-derive the match
         finally:
             if matched is not None:
@@ -1905,7 +1927,7 @@ def update_rows(
         )
         try:
             # (a) retire the matched positions
-            n, files, dv, dropped = _retire(spark, path, m, matched)
+            n, files, dv, dropped, sidecar = _retire(spark, path, m, matched)
             if not n:
                 return 0
             # (b) their updated versions, in the snapshot's exact schema
@@ -1933,6 +1955,7 @@ def update_rows(
             _publish(path, manifest, m, backend)
             return n
         except VersionClaimedError:
+            _discard(path, [sidecar, *new_files])
             continue  # snapshot basis stale: re-derive the whole update
         finally:
             unpin(matched)

@@ -285,6 +285,36 @@ def test_lineage_closure_leaves_no_persist_in_persist_mode(spark, sf_smoke):
         spark.catalog.clearCache()
 
 
+DRIFT_QUERIES = (
+    "mad_outliers_lineitem",
+    "mad_outliers_by_priority",
+    "decile_report_orders",
+    "ks_drift_lineitem",
+    "wasserstein_lineitem",
+    "wasserstein_by_status_lineitem",
+    "nll_tailcut_documents",
+)
+
+
+@pytest.mark.parametrize("name", DRIFT_QUERIES)
+def test_drift_queries_leave_no_persist_in_persist_mode(spark, sf_smoke, name):
+    """Under ``pin.mode=persist`` the drift screens hold nothing after
+    ``collect()``: their quantile frames are lazy plans, no value
+    column is pinned."""
+    from data_observability_installer_spark.functions.pin import PIN_MODE_CONF
+
+    registry.clear_caches()
+    spark.catalog.clearCache()
+    spark.conf.set(PIN_MODE_CONF, "persist")
+    try:
+        assert registry.QUERIES[name](spark, sf_smoke).collect()
+        assert _persisted_rdd_count(spark) == 0, f"{name} left a persist behind"
+    finally:
+        spark.conf.unset(PIN_MODE_CONF)
+        registry.clear_caches()
+        spark.catalog.clearCache()
+
+
 def test_near_dup_queries_persist_only_the_shared_shingles(spark, sf_smoke):
     """Under ``pin.mode=persist`` the driver-side overlap pins nothing:
     after minhash_pairs_documents and dedup_groups_documents the only

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from data_observability_installer_spark.operators.drift import (
     psi_categorical,
     psi_numeric,
@@ -346,7 +348,7 @@ def test_wasserstein_grouped_isolates_the_shifted_group(spark):
     groups score exactly 0; a one-sided group reports NULL."""
     from pyspark.sql import functions as F
 
-    from data_observability_installer_spark.operators.drift import wasserstein_grouped
+    from data_observability_installer_spark.operators.drift import wasserstein_drift
 
     rows = (
         [("moved", float(i % 100), True) for i in range(1000)]
@@ -356,7 +358,9 @@ def test_wasserstein_grouped_isolates_the_shifted_group(spark):
         + [("onesided", float(i % 100), True) for i in range(100)]
     )
     df = spark.createDataFrame(rows, "g string, v double, is_a boolean")
-    out = {r.g: r for r in wasserstein_grouped(df, "v", F.col("is_a"), "g").collect()}
+    out = {
+        r.g: r for r in wasserstein_drift(df, "v", F.col("is_a"), bins=128, by="g").collect()
+    }
     assert out["same"].w1_e6 == 0
     # uniform [0,100) vs [50,150): W1 = 50 over a 149-wide span
     assert abs(out["moved"].w1_e6 / 1e6 - 50 / 149) < 1 / 128 + 1e-3
@@ -414,3 +418,127 @@ def test_nullable_side_predicate_lands_in_b_both_engines(spark):
     k = ks_drift(df, "v", F.col("flag") == "a", bins=16).collect()[0]
     kk = con.sql(ks_drift_sql("t", "v", "flag = 'a'", bins=16)).fetchone()
     assert (k.n_a, k.n_b) == (kk[1], kk[2])
+
+
+def _edge_frame(spark):
+    """Group "a" is ordinary, "n" is all-NULL, "s" is a single row, and
+    two rows carry a NULL key."""
+    rows = (
+        [("a", float(v), v % 2 == 0, i) for i, v in enumerate([1, 2, 3, 4, 5, 6, 7, 100])]
+        + [("n", None, True, 20), ("n", None, False, 21)]
+        + [(None, 5.0, True, 30), (None, 50.0, False, 31)]
+        + [("s", 9.5, True, 40)]
+    )
+    return spark.createDataFrame(rows, "g string, x double, side boolean, doc_id long")
+
+
+# rows of the keyed screens over _edge_frame, and over its empty filter,
+# as the twin-per-shape implementations (F.percentile, window fold)
+# returned them: the keyed quantile frame and the one array fold must
+# reproduce them row for row
+EDGE_ROWS = {
+    "mad_grouped": [
+        ("a", 8, 0, 1, -5.8782, 14.8782),
+        ("n", 2, None, None, None, None),
+        ("s", 1, 0, 0, 9.5, 9.5),
+    ],
+    "mad": [
+        ("HIGH", 2, 50.0, 100.0, -5.3782, 15.3782),
+        ("INLIER", 11, 1.0, 9.5, -5.3782, 15.3782),
+    ],
+    "w1_grouped": [("a", 4, 4, 240234), ("s", 1, 0, None)],
+    "w1": [("x", 6, 5, 106901)],
+    "fq_per": [
+        (0, "a", 1.0, 4.5), (1, "a", 2.0, 4.5), (2, "a", 3.0, 4.5), (3, "a", 4.0, 4.5),
+        (40, "s", 9.5, 9.5),
+    ],
+    "fq": [
+        (0, 1.0, 5.0), (1, 2.0, 5.0), (2, 3.0, 5.0), (3, 4.0, 5.0), (4, 5.0, 5.0),
+        (30, 5.0, 5.0),
+    ],
+}
+EDGE_EMPTY = {"w1": [("x", None, None, None)]}
+
+
+def test_keyed_screens_edge_groups_row_identical(spark):
+    """An all-NULL group keeps its MAD row (NULL fences) and vanishes
+    from W1 and the tail-cut; a NULL key matches no group; a single-row
+    group gets zero-width fences and a NULL W1; empty input yields no
+    rows except the unkeyed W1's one NULL row."""
+    from pyspark.sql import functions as F
+
+    from data_observability_installer_spark.operators.drift import (
+        mad_outliers,
+        mad_outliers_grouped,
+        wasserstein_drift,
+    )
+    from data_observability_installer_spark.operators.llm.curation import filter_by_quantile
+
+    screens = {
+        "mad_grouped": lambda f: mad_outliers_grouped(f, "x", "g"),
+        "mad": lambda f: mad_outliers(f, "x"),
+        "w1_grouped": lambda f: wasserstein_drift(f, "x", F.col("side"), bins=128, by="g"),
+        "w1": lambda f: wasserstein_drift(f, "x", F.col("side")),
+        "fq_per": lambda f: filter_by_quantile(f, "x", q=0.5, per="g").orderBy("doc_id"),
+        "fq": lambda f: filter_by_quantile(f, "x", q=0.5).orderBy("doc_id"),
+    }
+    df = _edge_frame(spark)
+    empty = df.filter(F.lit(False))
+    for name, screen in screens.items():
+        assert [tuple(r) for r in screen(df).collect()] == EDGE_ROWS[name], name
+        assert [tuple(r) for r in screen(empty).collect()] == EDGE_EMPTY.get(name, []), name
+
+
+# cold-call Spark jobs at the smoke SF; the twin-per-shape code ran
+# 10 / 6 / 9 / 6 / 6 / 6 / 14 for these queries in the same harness
+DRIFT_JOB_BUDGET = {
+    "mad_outliers_lineitem": 9,
+    "mad_outliers_by_priority": 6,
+    "decile_report_orders": 8,
+    "ks_drift_lineitem": 6,
+    "wasserstein_lineitem": 6,
+    "wasserstein_by_status_lineitem": 6,
+    "nll_tailcut_documents": 14,
+}
+
+
+@pytest.mark.parametrize("name", sorted(DRIFT_JOB_BUDGET))
+def test_drift_queries_job_budget(spark, sf_smoke, name):
+    """The drift screens run an exact number of Spark jobs, the same on
+    two cold calls: no driver collect, no pin — one lazy plan each."""
+    from data_observability_installer_spark.plans import registry
+
+    sc, counts = spark.sparkContext, []
+    for call in range(2):
+        registry.clear_caches()
+        spark.catalog.clearCache()
+        group = f"{name}_budget_{call}"
+        sc.setJobGroup(group, "job-budget run")
+        try:
+            assert registry.queries()[name](spark, sf_smoke).collect()
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        finally:
+            sc.setJobGroup(None, None)
+    assert counts == [DRIFT_JOB_BUDGET[name]] * 2, counts
+
+
+def test_drift_core_written_once():
+    """Grep gate: no percentile aggregate is called from the drift or
+    curation screens (they read functions/quantiles.py's keyed frame),
+    the two-sample binning is written once per engine, and the
+    unkeyed/keyed twins are gone."""
+    import pathlib
+
+    import data_observability_installer_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    drift = (root / "operators" / "drift.py").read_text()
+    curation = (root / "operators" / "llm" / "curation.py").read_text()
+    for src in (drift, curation):
+        assert "F.percentile(" not in src and "percentile_approx" not in src
+    assert drift.count('F.floor((F.col("v") - F.col("lo")) / span * bins)') == 1  # Spark
+    assert drift.count("floor((v - lo) / (hi - lo) * {bins})") == 1  # DuckDB
+    for path in root.rglob("*.py"):
+        src = path.read_text()
+        assert "wasserstein_grouped" not in src, path
+        assert "exact_percentiles_multi" not in src, path

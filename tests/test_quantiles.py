@@ -1,17 +1,19 @@
-"""Bit-parity gate for the distributed exact-percentile rewrite.
+"""Bit-parity gate for the keyed exact-percentile frame.
 
-profile()'s exact+materialized path computes its five quantiles with
-functions/quantiles.py instead of the percentile() aggregate; the
-DuckDB oracle hash pins every profile value, so the rewrite must equal
-the aggregate BIT FOR BIT — including the round(x, 4) that follows it.
-These tests compare raw double bits (struct.pack) of
-round(percentile(CAST(c AS DOUBLE), q), 4) against the rewrite's
-values rounded through the same JVM round (F.round(F.lit(v), 4)
-constant-folds in Catalyst), over every numeric column of the profile
-tables at the smoke SF plus adversarial synthetic distributions
-(ties, exact rank positions, negatives, nulls, -0.0, single row,
-all-null). The standalone harness sweeping all three SFs lives in the
-round log; this pytest pins the rule so refactors can't drift.
+``functions/quantiles.quantiles`` replaces the ``percentile()``
+aggregate in the MAD fences, the decile edges and the quantile
+tail-cut, whose DuckDB twins pin those values, so the frame must equal
+the aggregate BIT FOR BIT. These tests compare the raw, unrounded double
+bits (struct.pack) of ``percentile(CAST(c AS DOUBLE), q)`` per key
+against the frame's ``q0…qn`` columns, over every numeric column of the
+smoke-SF tables (melted and keyed by column name) plus adversarial
+synthetic distributions (ties, exact rank positions, negatives, NULLs,
+signed zeros, single rows, all-NULL and NULL-keyed groups).
+
+One stated difference: ``-0.0 ≡ 0.0``. The frame groups on the value,
+and grouping normalizes the sign of zero, so a quantile that lands on
+a signed zero reads ``0.0`` where ``percentile()`` returns ``-0.0``;
+the comparison maps both to ``0.0``.
 """
 
 from __future__ import annotations
@@ -22,51 +24,42 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from data_observability_installer_spark.functions.quantiles import (
-    exact_percentiles,
-    exact_percentiles_multi,
-)
+from data_observability_installer_spark.functions.quantiles import quantiles
 
 QS = [0.05, 0.25, 0.5, 0.75, 0.95]
 NUMERIC = {"int", "bigint", "double", "float", "smallint", "tinyint", "decimal"}
 
 
 def _bits(x):
-    return None if x is None else struct.pack("<d", x)
+    # -0.0 ≡ 0.0 (see module docstring); every other bit must match
+    return None if x is None else struct.pack("<d", 0.0 if x == 0.0 else x)
 
 
-def _jvm_round4(spark, vals):
-    exprs = [
-        F.round(F.lit(v), 4).alias(f"r{i}")
-        if v is not None
-        else F.lit(None).cast("double").alias(f"r{i}")
-        for i, v in enumerate(vals)
-    ]
-    row = spark.range(1).select(*exprs).collect()[0]
-    return [row[f"r{i}"] for i in range(len(vals))]
-
-
-def _truth(df, cols):
+def _truth(df, col, keys):
     q_arr = "array(" + ", ".join(str(q) for q in QS) + ")"
-    aggs = [
-        F.expr(
-            f"round(percentile(CAST({c} AS DOUBLE), {q_arr})[{i}], 4)"
-        ).alias(f"{c}__{i}")
-        for c in cols
-        for i in range(len(QS))
-    ]
-    return df.agg(*aggs).collect()[0]
+    p = F.expr(f"percentile(CAST({col} AS DOUBLE), {q_arr})")
+    rows = df.groupBy(*keys).agg(p.alias("p")).collect()
+    return {tuple(r[k] for k in keys): [_bits(x) for x in (r["p"] or [None] * len(QS))]
+            for r in rows}
 
 
-def _assert_parity(spark, df, cols):
-    truth = _truth(df, cols)
-    got = exact_percentiles_multi(df, cols, QS)
-    for c in cols:
-        rounded = _jvm_round4(spark, got[c])
-        for i in range(len(QS)):
-            assert _bits(truth[f"{c}__{i}"]) == _bits(rounded[i]), (
-                f"{c} q={QS[i]}: {truth[f'{c}__{i}']!r} != {rounded[i]!r}"
-            )
+def _got(df, col, keys):
+    rows = quantiles(df, col, QS, keys).collect()
+    return {tuple(r[k] for k in keys): [_bits(r[f"q{i}"]) for i in range(len(QS))]
+            for r in rows}
+
+
+def _assert_parity(df, col, keys=()):
+    keys = list(keys)
+    truth, got = _truth(df, col, keys), _got(df, col, keys)
+    assert got == truth
+
+
+def _melt(df, cols):
+    """(c, x): one row per (numeric column, value) — keys the sweep by
+    column name, so one keyed frame covers every column of a table."""
+    structs = [F.struct(F.lit(c).alias("c"), F.col(c).cast("double").alias("x")) for c in cols]
+    return df.select(F.explode(F.array(*structs)).alias("p")).select("p.c", "p.x")
 
 
 @pytest.mark.parametrize("table", ["lineitem", "orders", "events", "documents"])
@@ -74,7 +67,7 @@ def test_parity_real_tables(spark, sf_smoke, table):
     df = spark.read.parquet(f"{sf_smoke}/{table}.parquet")
     cols = [c for c, d in df.dtypes if d.split("(")[0] in NUMERIC]
     assert cols, f"{table} has no numeric columns"
-    _assert_parity(spark, df, cols)
+    _assert_parity(_melt(df, cols), "x", ["c"])
 
 
 @pytest.mark.parametrize(
@@ -91,7 +84,7 @@ def test_parity_real_tables(spark, sf_smoke, table):
 )
 def test_parity_synthetic(spark, name, vals):
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    _assert_parity(spark, df, ["x"])
+    _assert_parity(df, "x")
 
 
 def test_parity_random_ties(spark):
@@ -99,23 +92,65 @@ def test_parity_random_ties(spark):
     vals = [float(rng.randint(0, 5)) for _ in range(10007)]
     vals += [rng.uniform(-1e6, 1e6) for _ in range(999)]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    _assert_parity(spark, df, ["x"])
+    _assert_parity(df, "x")
+
+
+def test_parity_keyed_random_groups(spark):
+    """Thirteen groups of different shapes — ties, NULLs, a single
+    row, an all-NULL group, signed zeros — plus a NULL key, one frame."""
+    rng = random.Random(13)
+    rows = []
+    for g in range(13):
+        n = [1, 2, 3, 50, 400][g % 5]
+        for _ in range(n):
+            if g == 4:
+                x = None  # all-NULL group
+            elif g % 3 == 0:
+                x = float(rng.randint(-2, 2)) * rng.choice([1.0, -0.0 + 0.0])
+            elif g % 3 == 1:
+                x = None if rng.random() < 0.2 else rng.uniform(-50, 50)
+            else:
+                x = rng.choice([-0.0, 0.0, 1.0, 2.5])
+            rows.append((f"g{g}", x))
+    rows += [(None, 3.0), (None, 9.0), (None, None)]
+    df = spark.createDataFrame(rows, "g string, x double")
+    _assert_parity(df, "x", ["g"])
+    got = _got(df, "x", ["g"])
+    assert got[("g4",)] == [None] * len(QS)  # all-NULL group keeps its row
+    assert (None,) in got  # a NULL key is a group of its own
 
 
 def test_all_null_and_empty(spark):
     df = spark.createDataFrame([(None,), (None,)], "x double")
-    assert exact_percentiles_multi(df, ["x"], QS) == {"x": [None] * len(QS)}
+    assert quantiles(df, "x", QS).collect()[0] == tuple([None] * len(QS))
     empty = df.filter(F.lit(False))
-    assert exact_percentiles_multi(empty, ["x"], QS) == {"x": [None] * len(QS)}
-    assert exact_percentiles(empty, "x", QS) == [None] * len(QS)
+    assert quantiles(empty, "x", QS).collect()[0] == tuple([None] * len(QS))
+    keyed_empty = spark.createDataFrame([], "g string, x double")
+    assert quantiles(keyed_empty, "x", QS, ["g"]).collect() == []
+    assert quantiles(empty, "x", QS, approx=True).collect()[0] == tuple([None] * len(QS))
 
 
 def test_single_column_matches_multi(spark):
+    """The unkeyed frame of one column equals that column's row of the
+    melted, keyed frame — one code path for both shapes."""
     rng = random.Random(7)
-    vals = [rng.uniform(-100, 100) for _ in range(501)]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    single = exact_percentiles(
-        df.select(F.col("x").cast("double").alias("x")), "x", QS
+    df = spark.createDataFrame(
+        [(rng.uniform(-100, 100), float(rng.randint(0, 9))) for _ in range(501)],
+        "x double, y double",
     )
-    multi = exact_percentiles_multi(df, ["x"], QS)["x"]
-    assert [_bits(a) for a in single] == [_bits(b) for b in multi]
+    single = [_bits(v) for v in quantiles(df, "x", QS).collect()[0]]
+    multi = _got(_melt(df, ["x", "y"]), "x", ["c"])
+    assert single == multi[("x",)]
+
+
+def test_approx_frame_is_percentile_approx(spark):
+    """``approx=True`` is ``percentile_approx`` per key, column for column."""
+    rng = random.Random(5)
+    df = spark.createDataFrame(
+        [(f"g{i % 3}", rng.uniform(0, 1000)) for i in range(3000)], "g string, x double"
+    )
+    got = {r["g"]: [r[f"q{i}"] for i in range(len(QS))]
+           for r in quantiles(df, "x", QS, ["g"], approx=True, accuracy=500).collect()}
+    want = {r["g"]: list(r["p"]) for r in df.groupBy("g").agg(
+        F.percentile_approx("x", QS, 500).alias("p")).collect()}
+    assert got == want

@@ -2548,3 +2548,78 @@ def test_dv_paths_go_through_the_shared_helpers():
     assert dv_scans == {"_live_scan", "_retire", "table_changes_cdf"}
     assert pos_scans == {"_live_scan"}
     assert dv_uses == ["_retire"]
+
+
+def _unreferenced(t):
+    """Files under table ``t`` that no manifest on disk references:
+    non-empty data part files outside every file list, and DV sidecar
+    directories outside every ``dv`` / ``dv_dropped`` entry. (Zero-row
+    part files never enter a manifest, by design, and are not counted.)"""
+    import pyarrow.parquet as pq
+
+    from data_observability_installer_spark.sources.txtable import _versions
+
+    files, dvs = set(), set()
+    for v in _versions(t):
+        m = read_manifest(t, v)
+        files.update(m["files"])
+        for k in ("dv", "dv_dropped"):
+            dvs.update(e["dv"] for e in (m.get(k) or {}).values())
+    data = {
+        os.path.relpath(os.path.join(d, f), t)
+        for d, _, fs in os.walk(os.path.join(t, "data"))
+        for f in fs
+        if f.endswith(".parquet") and pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+    }
+    dv_root = os.path.join(t, "_dv")
+    sidecars = {os.path.join("_dv", d) for d in os.listdir(dv_root)} if os.path.isdir(dv_root) else set()
+    return sorted(data - files) + sorted(sidecars - dvs)
+
+
+@pytest.mark.parametrize("op", ["delete_rows", "update_rows", "merge_dv"])
+def test_lost_race_leaves_no_file_vacuum_cannot_see(spark, tmp_path, op):
+    """A row-level commit that loses its CAS removes the sidecar (and,
+    for update, the postimage files) it wrote before re-deriving; after
+    ``vacuum(keep_last=1)`` every file left under the table and ``_dv/``
+    is referenced by the retained manifest."""
+    from data_observability_installer_spark.sources.txtable import (
+        delete_rows,
+        merge_dv,
+        update_rows,
+    )
+
+    t = str(tmp_path / "t")
+
+    def rng(lo, hi):
+        return spark.range(lo, hi, 1, 2).selectExpr("id AS k", "concat('v', id) AS v")
+
+    write_table(spark, t, rng(0, 40))
+    delete_rows(spark, t, "k = 1")  # an older sidecar the lost attempt unions with
+    racer = _RacerMidPublish(lambda: write_table(spark, t, rng(100, 110)))
+    if op == "delete_rows":
+        assert delete_rows(spark, t, "k < 5", backend=racer) == 4
+    elif op == "update_rows":
+        assert update_rows(spark, t, "k < 5", {"v": "upper(v)"}, backend=racer) == 4
+    else:
+        batch = spark.createDataFrame([(2, "U2"), (200, "I200")], "k bigint, v string")
+        assert merge_dv(spark, t, batch, ["k"], backend=racer) == 1
+    assert racer.fired and read_manifest(t)["version"] == 4
+    live = {"delete_rows": 45, "update_rows": 49, "merge_dv": 50}[op]
+    assert len(_rows(read_table(spark, t))) == live
+    vacuum(t, keep_last=1)
+    assert _unreferenced(t) == []
+
+
+def test_vacuum_collects_sidecars_of_whole_file_deletes(spark, tmp_path):
+    """A delete that empties a whole file records that file's sidecar
+    under ``dv_dropped`` only; vacuum collects it with its manifest."""
+    from data_observability_installer_spark.sources.txtable import delete_rows
+
+    t = str(tmp_path / "t")
+    write_table(spark, t, spark.range(0, 40, 1, 2).selectExpr("id AS k"))
+    assert delete_rows(spark, t, "k >= 20") == 20  # the whole second file
+    assert read_manifest(t).get("dv_dropped") and not read_manifest(t).get("dv")
+    write_table(spark, t, spark.range(50, 52, 1, 1).selectExpr("id AS k"))
+    vacuum(t, keep_last=1)
+    assert not os.listdir(os.path.join(t, "_dv"))
+    assert _unreferenced(t) == []
